@@ -198,14 +198,15 @@ object Bench {
     // then a COMPACT line LAST that fits the tail whole: per-query times
     // as a fixed-order array over the lexicographically sorted query
     // names (results is already sorted by name; errored queries read -1),
-    // 180 x ~6 chars ~ 1.2 KB. The complete name->time map remains in
-    // bench_out.json, the durable record.
+    // 180 x ~6 chars ~ 1.2 KB. `flagged` keeps only the first 10 names;
+    // `n_flagged` is the full count. The complete name->time map remains
+    // in bench_out.json, the durable record.
     println(json)
     val qsCompact = results.map { case (_, v, e, _) =>
       if (e) "-1" else (math.round(v * 1000) / 1000.0).toString
     }.mkString("[", ",", "]")
     val flaggedCompact = flagged.take(10).map("\"" + _ + "\"")
       .mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","errors":$errors,"iters":$iters,"load_avg_start":$loadStart,"n_queries":${results.size},"queries_order":"sorted_name","queries_sec":$qsCompact,"flagged":$flaggedCompact,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","errors":$errors,"iters":$iters,"load_avg_start":$loadStart,"n_queries":${results.size},"queries_order":"sorted_name","queries_sec":$qsCompact,"flagged":$flaggedCompact,"n_flagged":${flagged.size},"sf":"$sfDir"}""")
   }
 }

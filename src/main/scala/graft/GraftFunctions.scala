@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import graft.functions.{MinHashArray, PolyHash, SimHashBits, TimeBucket}
 
@@ -20,74 +21,53 @@ object GraftFunctions {
     }
   }
 
+  /** Registers graft's SQL functions in `spark`'s own function
+    * registry, skipping names it already holds, so repeated calls (every
+    * operator and query entry calls this) neither replace a builder nor
+    * log Spark's "replaced a previously registered function" warning. A
+    * new session starts from the built-in registry and registers afresh. */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "time_bucket", exprs => TimeBucket(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_array",
-      exprs => MinHashArray(exprs(0),
-        foldableNum(exprs(1), "minhash_array", "k").intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash_bits", exprs => SimHashBits(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "term_counts", exprs => graft.functions.TermCounts(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_cosine",
-      exprs => graft.functions.CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "lsh_bucket",
-      exprs => graft.functions.HyperplaneBucket(exprs(0),
+    val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+      "time_bucket" -> (exprs => TimeBucket(exprs(0), exprs(1))),
+      "poly_hash" -> (exprs => PolyHash(exprs(0))),
+      "minhash_array" -> (exprs => MinHashArray(exprs(0),
+        foldableNum(exprs(1), "minhash_array", "k").intValue())),
+      "simhash_bits" -> (exprs => SimHashBits(exprs(0))),
+      "term_counts" -> (exprs => graft.functions.TermCounts(exprs(0))),
+      "vec_cosine" ->
+        (exprs => graft.functions.CosineSimilarity(exprs(0), exprs(1))),
+      "lsh_bucket" -> (exprs => graft.functions.HyperplaneBucket(exprs(0),
         foldableNum(exprs(1), "lsh_bucket", "planes").intValue(),
-        foldableNum(exprs(2), "lsh_bucket", "offset").intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => graft.functions.ShingleHashes(exprs(0),
+        foldableNum(exprs(2), "lsh_bucket", "offset").intValue())),
+      "shingle_hashes" -> (exprs => graft.functions.ShingleHashes(exprs(0),
         foldableNum(exprs(1), "shingle_hashes", "n").intValue(),
-        foldableNum(exprs(2), "shingle_hashes", "seed").longValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes_pos",
-      exprs => graft.functions.ShingleHashes(exprs(0),
+        foldableNum(exprs(2), "shingle_hashes", "seed").longValue())),
+      "shingle_hashes_pos" -> (exprs => graft.functions.ShingleHashes(exprs(0),
         foldableNum(exprs(1), "shingle_hashes_pos", "n").intValue(),
         foldableNum(exprs(2), "shingle_hashes_pos", "seed").longValue(),
-        dedupe = false),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "winnow_select",
-      exprs => graft.functions.WinnowSelect(exprs(0),
-        foldableNum(exprs(1), "winnow_select", "w").intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "deflate_ratio", exprs => graft.functions.DeflateRatio(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => graft.functions.SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => graft.functions.BloomMightContain(exprs(0), {
+        dedupe = false)),
+      "winnow_select" -> (exprs => graft.functions.WinnowSelect(exprs(0),
+        foldableNum(exprs(1), "winnow_select", "w").intValue())),
+      "deflate_ratio" -> (exprs => graft.functions.DeflateRatio(exprs(0))),
+      "sorted_intersect_count" ->
+        (exprs => graft.functions.SortedIntersectCount(exprs(0), exprs(1))),
+      "bloom_might_contain" -> (exprs => graft.functions.BloomMightContain(exprs(0), {
         require(exprs(1).foldable,
           "bloom_might_contain: filter bytes must be a literal")
         exprs(1).eval().asInstanceOf[Array[Byte]]
-      }),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "bpe_encode",
-      exprs => graft.operators.BpeEncode(exprs(0), {
+      })),
+      "bpe_encode" -> (exprs => graft.operators.BpeEncode(exprs(0), {
         require(exprs(1).foldable, "bpe_encode: merge table must be a literal")
         graft.operators.Bpe.parseMerges(exprs(1).eval().toString)
-      }),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "rand_project",
-      exprs => graft.functions.RandProject(exprs(0),
+      })),
+      "rand_project" -> (exprs => graft.functions.RandProject(exprs(0),
         foldableNum(exprs(1), "rand_project", "k").intValue(),
-        foldableNum(exprs(2), "rand_project", "offset").intValue()),
-      "built-in")
+        foldableNum(exprs(2), "rand_project", "offset").intValue()))
+    )
+    for ((name, build) <- builders
+        if !reg.functionExists(FunctionIdentifier(name)))
+      reg.createOrReplaceTempFunction(name, build, "built-in")
     graft.plans.TimePartitionPruning.install(spark)
   }
 }

@@ -71,8 +71,7 @@ object BudgetSelect {
       keyName: String, weightCol: Column, budgetCol: Column,
       priorCol: String = "sel_prior", partitions: Int = 0,
       cutoverBytes: Long = GlobalRank.WindowCutoverBytes): DataFrame = {
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes >= 0 && estBytes < BigInt(cutoverBytes))
+    if (GlobalRank.fitsOneTask(df, cutoverBytes))
       windowSelect(df, groupCol, prefCols, keyName, weightCol, budgetCol, priorCol)
     else
       distributedSelect(df, groupCol, prefCols, keyName, weightCol,

@@ -203,8 +203,10 @@ object ContainmentDedup {
   }
 
   /** Driver-side log2 bucketing of an EXACT census (small vocabularies
-    * only) — bit-identical buckets to [[censusHistogram]]'s
-    * floor(log2(df)), then the same cumulation. */
+    * only) — integer floor(log2(df)), then the same cumulation as
+    * [[censusHistogram]]. Not bit-identical to that SQL
+    * `floor(log2(df))`: its double log2 can round, so a boundary df may
+    * land one bucket apart. */
   private[operators] def estimateFromDfs(dfs: Array[Long], nDocs: Long,
       minContainment: Double): StrategyEstimate = {
     val buckets = dfs.groupBy(d => 63L - java.lang.Long.numberOfLeadingZeros(d))

@@ -79,9 +79,7 @@ object DedupClusters {
     //    blocks, which also catches over-estimated tiny graphs cheaply
     //    (join-derived edge frames err huge).
     val cap = math.min(driverCutoverEdges, Int.MaxValue.toLong).toInt
-    val estBytes = deduped.queryExecution.optimizedPlan.stats.sizeInBytes
-    val estSmall = estBytes >= 0 &&
-      estBytes < BigInt(GlobalRank.WindowCutoverBytes)
+    val estSmall = GlobalRank.fitsOneTask(deduped, GlobalRank.WindowCutoverBytes)
     if (driverCutoverEdges > 0 && estSmall) {
       val probe = deduped.limit(cap).collect()
       if (probe.length < driverCutoverEdges)

@@ -82,8 +82,7 @@ object GlobalRank {
   def withRowNumber(df: DataFrame, sortCols: Seq[Column],
       rnCol: String = "rn", partitions: Int = 0,
       cutoverBytes: Long = WindowCutoverBytes): DataFrame = {
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes >= 0 && estBytes < BigInt(cutoverBytes)) {
+    if (fitsOneTask(df, cutoverBytes)) {
       val w = org.apache.spark.sql.expressions.Window.orderBy(sortCols: _*)
       df.withColumn(rnCol, row_number().over(w).cast("long"))
     } else stamp(rangeSorted(df, sortCols, partitions), rnCol)._1
@@ -104,6 +103,15 @@ object GlobalRank {
     * (ids, counts, weights), where the factor is small. */
   val WindowCutoverBytes: Long = 256L * 1024 * 1024
 
+  /** The size gate shared by every size-dispatched operator: true when
+    * `df`'s plan-estimated size is known and below `cutoverBytes`, i.e.
+    * the single-task arm is the cheaper one. An unknown (negative)
+    * estimate takes the large, distributed arm. */
+  def fitsOneTask(df: DataFrame, cutoverBytes: Long): Boolean = {
+    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    estBytes >= 0 && estBytes < BigInt(cutoverBytes)
+  }
+
   /** Exact NTILE(k) over a global ordering.
     *
     * Size-adaptive: inputs whose plan-estimated size fits comfortably in
@@ -116,8 +124,7 @@ object GlobalRank {
       bucketCol: String = "bucket", partitions: Int = 0,
       cutoverBytes: Long = WindowCutoverBytes): DataFrame = {
     require(k > 0, "k must be positive")
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes >= 0 && estBytes < BigInt(cutoverBytes)) {
+    if (fitsOneTask(df, cutoverBytes)) {
       val w = org.apache.spark.sql.expressions.Window.orderBy(sortCols: _*)
       df.withColumn(bucketCol, org.apache.spark.sql.functions.ntile(k).over(w))
     } else {

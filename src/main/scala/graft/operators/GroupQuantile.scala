@@ -48,8 +48,7 @@ object GroupQuantile {
       rnkCol: String = "_rnk", nCol: String = "_n",
       cutoverBytes: Long = GlobalRank.WindowCutoverBytes): DataFrame = {
     val g = groupCols.map(col)
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes >= 0 && estBytes < BigInt(cutoverBytes)) {
+    if (GlobalRank.fitsOneTask(df, cutoverBytes)) {
       val wOrd = Window.partitionBy(g: _*).orderBy(col(valueCol))
       val wAll = Window.partitionBy(g: _*)
       df.withColumn(rnkCol, row_number().over(wOrd))

@@ -77,8 +77,7 @@ object ShardPack {
     // exchange + checkpoint + per-partition counts job + broadcast
     // join; identical priors either way for a unique key
     // (ShardPackSpec pins both paths)
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes >= 0 && estBytes < BigInt(cutoverBytes)) {
+    if (GlobalRank.fitsOneTask(df, cutoverBytes)) {
       val w = Window.orderBy(col("_k"))
         .rowsBetween(Window.unboundedPreceding, -1)
       return df.select(keyCol.as("_k"),

@@ -22,11 +22,11 @@ import scala.collection.mutable
   *
   * Benched against Spark 4.1's `InferWindowGroupLimit` rewrite of the
   * plain `row_number() <= k` window (which inserts a partial map-side
-  * WindowGroupLimit): on sf0.1 lineitem (k=5 per returnflag,
-  * `examples.TopKBench`) this form runs 0.53 s vs 1.06 s — the
-  * WindowGroupLimit partial still SORTS each input partition before
-  * taking k, while the bounded heaps select in O(rows·log k) without a
-  * sort. The external-Row encoder round trip costs less than the sort
+  * WindowGroupLimit): on sf0.1 lineitem (k=5 per returnflag) this form
+  * runs 0.53 s vs 1.06 s (SCALE.md, "Retired probe mains", TopKBench
+  * row) — the WindowGroupLimit partial still SORTS each input
+  * partition before taking k, while the bounded heaps select in
+  * O(rows·log k) without a sort. The external-Row encoder round trip costs less than the sort
   * saves, so the hand-rolled form ships (VERDICT r2 #3).
   */
 object TopKPerGroup {

@@ -220,31 +220,17 @@ object RetrievalQueries {
   private[graft] def phraseSearch(docs: org.apache.spark.sql.DataFrame,
       cutoverBytes: Long = graft.operators.GlobalRank.WindowCutoverBytes)
       : org.apache.spark.sql.DataFrame = {
-    val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val small = est >= 0 && est < BigInt(cutoverBytes)
-    if (small) {
+    if (graft.operators.GlobalRank.fitsOneTask(docs, cutoverBytes)) {
       val toks = docs
         .select(col("doc_id"), posexplode(tokens(col("text"))))
         .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
         .materialize()
       val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val top = toks
+      phraseHits(toks, toks
         .withColumn("t2", lead(col("tok"), 1).over(w))
         .withColumn("t3", lead(col("tok"), 2).over(w))
         .where(col("t3").isNotNull)
-        .select(concat_ws(" ", col("tok"), col("t2"), col("t3")).as("phrase"))
-        .groupBy(col("phrase")).agg(count(lit(1)).as("c"))
-        .orderBy(col("c").desc, col("phrase")).limit(1)
-        .select(col("phrase"), split(col("phrase"), " ").as("ws"))
-      def plist(i: Int) = toks.crossJoin(broadcast(top))
-        .where(col("tok") === element_at(col("ws"), i))
-      plist(1).select(col("doc_id"), col("pos"), col("phrase"))
-        .join(plist(2).select(col("doc_id"), (col("pos") - 1).as("pos")),
-          Seq("doc_id", "pos"))
-        .join(plist(3).select(col("doc_id"), (col("pos") - 2).as("pos")),
-          Seq("doc_id", "pos"))
-        .select(col("doc_id"), col("pos"), col("phrase"))
-        .orderBy(col("doc_id"), col("pos"))
+        .select(concat_ws(" ", col("tok"), col("t2"), col("t3")).as("phrase")))
     } else {
       val tk = docs
         .select(col("doc_id"), tokens(col("text")).as("tk"))
@@ -259,20 +245,30 @@ object RetrievalQueries {
           (a, b) => concat(a, lit(" "), b)),
         slice(col("tk"), lit(3), greatest(n - 2, lit(0))),
         (ab, c) => concat(ab, lit(" "), c))
-      val top = tk.select(explode(tri).as("phrase"))
-        .groupBy(col("phrase")).agg(count(lit(1)).as("c"))
-        .orderBy(col("c").desc, col("phrase")).limit(1)
-        .select(col("phrase"), split(col("phrase"), " ").as("ws"))
-      def plist(i: Int) = toks.crossJoin(broadcast(top))
-        .where(col("tok") === element_at(col("ws"), i))
-      plist(1).select(col("doc_id"), col("pos"), col("phrase"))
-        .join(plist(2).select(col("doc_id"), (col("pos") - 1).as("pos")),
-          Seq("doc_id", "pos"))
-        .join(plist(3).select(col("doc_id"), (col("pos") - 2).as("pos")),
-          Seq("doc_id", "pos"))
-        .select(col("doc_id"), col("pos"), col("phrase"))
-        .orderBy(col("doc_id"), col("pos"))
+      phraseHits(toks, tk.select(explode(tri).as("phrase")))
     }
+  }
+
+  /** phraseSearch's arm-independent tail: pick the most frequent
+    * trigram of the census `trigrams` (one `phrase` row per occurrence),
+    * then find its positions with a 3-way positional join over the
+    * (doc_id, pos, tok) postings `toks`. */
+  private def phraseHits(toks: org.apache.spark.sql.DataFrame,
+      trigrams: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val top = trigrams
+      .groupBy(col("phrase")).agg(count(lit(1)).as("c"))
+      .orderBy(col("c").desc, col("phrase")).limit(1)
+      .select(col("phrase"), split(col("phrase"), " ").as("ws"))
+    def plist(i: Int) = toks.crossJoin(broadcast(top))
+      .where(col("tok") === element_at(col("ws"), i))
+    plist(1).select(col("doc_id"), col("pos"), col("phrase"))
+      .join(plist(2).select(col("doc_id"), (col("pos") - 1).as("pos")),
+        Seq("doc_id", "pos"))
+      .join(plist(3).select(col("doc_id"), (col("pos") - 2).as("pos")),
+        Seq("doc_id", "pos"))
+      .select(col("doc_id"), col("pos"), col("phrase"))
+      .orderBy(col("doc_id"), col("pos"))
   }
 
   /** Shared DuckDB CTE chain for the rational BM25 scorer (per-doc

@@ -94,10 +94,9 @@ class ContainmentDedupSpec extends SparkSpec {
     val denseEst = ContainmentDedup.estimate(dense, "doc_id", "text", 2, 0.8)
     assert(!denseEst.usePrefix,
       s"dense corpus must choose naive: $denseEst")
-    // sparse Zipfian corpus with planted superset twins (the profiler's
-    // generated fixture, small): the rare tail dominates, so the
-    // cardinality RATIO signals prefix...
-    val sparse = graft.examples.ProfileQ113.sparseCorpus(spark, 1500L, 100000L)
+    // sparse Zipfian corpus with planted superset twins (small): the
+    // rare tail dominates, so the cardinality RATIO signals prefix...
+    val sparse = SparseCorpus(spark, 1500L, 100000L)
       .localCheckpoint()
     val sparseEst = ContainmentDedup.estimate(sparse, "doc_id", "text", 2, 0.8)
     assert(sparseEst.prefixJoinRows < 0.25 * sparseEst.naiveJoinRows,

@@ -12,6 +12,9 @@ import scala.jdk.CollectionConverters._
   * whole-stage codegen for the entire stage containing it, which is a
   * silent 2-10× regression at 100 TB. The grep lives here so a future
   * expression can't quietly take the fallback shortcut.
+  *
+  * Every `def main` entry point is named in README.md, so one-off
+  * probe mains cannot pile up unlisted.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -37,5 +40,26 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"stub markers found in: ${offenders.mkString(", ")}")
+  }
+
+  test("every main in src/main is named in README.md's entry points") {
+    val readme = new String(Files.readAllBytes(Paths.get("README.md")))
+    val mains = mainSources.flatMap { p =>
+      val s = new String(Files.readAllBytes(p))
+      val at = s.indexOf("def main(")
+      if (at < 0) None
+      else {
+        val pkg = "(?m)^package ([\\w.]+)".r.findFirstMatchIn(s).map(_.group(1))
+        val obj = "object (\\w+)".r.findAllMatchIn(s.take(at)).map(_.group(1))
+          .toSeq.lastOption
+        Some(p -> (pkg.toSeq ++ obj).mkString("."))
+      }
+    }
+    assert(mains.nonEmpty, "no main found in src/main")
+    val unlisted = mains.filterNot { case (_, name) => readme.contains(name) }
+    assert(unlisted.isEmpty,
+      s"mains missing from README.md: ${unlisted.mkString(", ")} — " +
+        "list each in the Entry points table, or fold the measurement " +
+        "into PlanProbe or a spec")
   }
 }
