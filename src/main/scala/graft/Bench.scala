@@ -2,11 +2,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the documented target environment (local[32]); the
-    // env var remains the local-iteration override
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors).toString)
-    val spark = HarnessSession.builder(cpus).getOrCreate()
+    val spark = HarnessSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up codegen/JIT/file-index paths before timing; q90/q19 also
     // perform their one-time layout builds (engine write, bucket

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session construction shared by the driver-facing mains (Verify,
-  * Bench, the probe mains).
+  * Bench, PlanProbe, StreamBench, the probe mains).
   *
   * `SPARK_GRAFT_MASTER` overrides the default `local[cpus]` — the
   * multi-JVM gate runs the whole correctness suite under
@@ -36,7 +36,12 @@ object HarnessSession {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
 
-  def builder(cpus: String): SparkSession.Builder = {
+  /** `SPARK_GRAFT_CPUS`, else every core (at least 4): the `local[n]`
+    * width and shuffle-partition count of the entry-point mains. */
+  private def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.max(4, Runtime.getRuntime.availableProcessors).toString)
+
+  def builder(cpus: String = defaultCpus): SparkSession.Builder = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val b = SparkSession.builder()
       .master(master)

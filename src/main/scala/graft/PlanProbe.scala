@@ -18,11 +18,9 @@ object PlanProbe {
       case Some(f) => val pats = f.split(','); n => pats.exists(n.contains)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors).toString)
     val iters = sys.env.get("SPARK_GRAFT_PROBE_ITERS")
       .flatMap(_.toIntOption).getOrElse(2)
-    val spark = HarnessSession.builder(cpus).getOrCreate()
+    val spark = HarnessSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // per-query job/stage/task census: a tiny-data query spending its

@@ -1,5 +1,6 @@
 package graft.examples
 
+import graft.HarnessSession
 import graft.streaming.{StreamingCusum, StreamingHeavyHitters, StreamingNearDup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -20,7 +21,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Run: sbt "runMain graft.examples.StreamBench" — one line per
   * operator plus a summary line; STREAM_BENCH_ROWS scales the batch
-  * size (default 20000 rows x 5 batches).
+  * size (default 20000 rows x 5 batches). The session comes from
+  * [[graft.HarnessSession]]: `SPARK_GRAFT_CPUS` sets the `local[n]`
+  * width and shuffle partitions (default every core, at least 4).
   */
 object StreamBench {
 
@@ -29,12 +32,8 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[32]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark: SparkSession = HarnessSession.builder()
+      .appName("graft-stream-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

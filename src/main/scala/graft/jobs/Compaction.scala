@@ -1,8 +1,12 @@
 package graft.jobs
 
-import graft.catalog.GraftCatalog
+import graft.catalog.{GraftCatalog, TableMeta}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,14 +22,25 @@ import org.apache.spark.sql.functions._
   *    COALESCE(TRY_CAST...) — here `coalesce(try micros, try cast)`);
   *  - dedup: one row per (tags..., time), latest file wins (the
   *    reference orders by file recency; flush files are named by flush
-  *    nanos so `input_file_name()` sorts by recency lexically);
+  *    nanos, so the file NAME sorts by recency lexically, within one
+  *    hour directory and across the hours of a day);
   *  - output: one sorted ZSTD file per partition, sources atomically
   *    replaced (write to _compact_tmp, then swap).
   *
-  * Scale: each partition compacts independently — on a cluster the
-  * driver loops here become one job per partition (or a single job over
-  * many partitions); no cross-partition shuffle is ever needed because
-  * the dedup key (tags, time) is entirely inside one hour partition.
+  * Scale: a single-file output (every daily compaction, and hourly with
+  * the default maxFilesPerBatch = 0) is one Spark job with no exchange,
+  * like the reference's one `COPY (SELECT … ORDER BY …)` per hour. The
+  * read is coalesced to one partition BEFORE the dedup window, so the
+  * window, the sort and the write run in one task; the only other job
+  * is the `mergeSchema` footer read. Nothing parallel is given up: one
+  * output file is written by one task either way, and the partitions of
+  * one trigger run concurrently through [[inParallel]]. No
+  * cross-partition shuffle is ever needed because the dedup key (tags,
+  * time) is entirely inside one hour partition. Census at `local[4]`
+  * (CompactionPlanSpec, SCALE.md): a 30-file hour or a 25-file day took
+  * 5 jobs / 5 stages / 11 tasks with the old hash-exchange window and
+  * `orderBy(...).coalesce(1)`, and takes 2 / 2 / 5 now, 4 of those tasks
+  * being the footer job's.
   */
 object Compaction {
 
@@ -36,13 +51,19 @@ object Compaction {
     * reference counts the same way, dedup.go:261-271). Compaction runs
     * over thousands of partitions per tick; a count() job per partition
     * just for reporting would double the scheduler's work. */
-  private[graft] def footerRowCount(
-      conf: org.apache.hadoop.conf.Configuration, files: Seq[Path]): Long =
+  private[graft] def footerRowCount(conf: Configuration, files: Seq[Path]): Long =
     files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = openFooter(conf, f)
       try r.getRecordCount finally r.close()
     }.sum
+
+  /** Footer reader that reuses `conf`. The `open` overload that takes
+    * only the input file builds a fresh Hadoop `Configuration` per call
+    * and re-parses the XML defaults for every footer it opens, which
+    * made that parse most of the CPU compaction spent outside its tasks. */
+  private def openFooter(conf: Configuration, f: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+      HadoopReadOptions.builder(conf).build())
 
   /** (min, max) per requested numeric column across the files, from
     * footer row-group statistics only — ONE footer open per file
@@ -55,8 +76,7 @@ object Compaction {
     * a legacy file storing time as epoch millis/seconds (the mixed-type
     * fixture normalizeTime repairs) would otherwise contribute a range
     * off by 10^3+ — silently degenerating the quantization. */
-  private[graft] def footerColumnRanges(
-      conf: org.apache.hadoop.conf.Configuration, files: Seq[Path],
+  private[graft] def footerColumnRanges(conf: Configuration, files: Seq[Path],
       columns: Seq[String],
       requireMicrosTs: Set[String] = Set.empty): Map[String, Option[(Double, Double)]] = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -71,8 +91,7 @@ object Compaction {
         case _ => false
       }
     val perFile: Seq[Map[String, Option[(Double, Double)]]] = files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = openFooter(conf, f)
       try {
         import scala.jdk.CollectionConverters._
         columns.map { column =>
@@ -103,15 +122,15 @@ object Compaction {
     }.toMap
   }
 
-  private[graft] def footerColumnRange(
-      conf: org.apache.hadoop.conf.Configuration, files: Seq[Path],
+  private[graft] def footerColumnRange(conf: Configuration, files: Seq[Path],
       column: String): Option[(Double, Double)] =
     footerColumnRanges(conf, files, Seq(column))(column)
 
   def compactHour(catalog: GraftCatalog, db: String, m: String,
       partDir: Path, minFiles: Int = 2, maxFilesPerBatch: Int = 0): Result = {
     val spark = catalog.spark
-    val fs = partDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = partDir.getFileSystem(conf)
     val files = fs.listStatus(partDir)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getPath).sortBy(_.getName)
@@ -119,31 +138,6 @@ object Compaction {
       return Result(partDir.toString, files.length, 0, 0, compacted = false)
 
     val meta = catalog.readMeta(db, m)
-    // union-by-name with type coercion: a plain mergeSchema read fails when
-    // one file wrote `time` as string/int64 (the mixed-type fixture the
-    // reference repairs, dedup.go:238-259) — fall back to per-file reads,
-    // repair each, then unionByName.
-    val repaired =
-      try normalizeTime(
-        spark.read.option("mergeSchema", "true")
-          .parquet(files.map(_.toString): _*)
-          .withColumn("_src", input_file_name()))
-      catch {
-        case _: org.apache.spark.SparkException =>
-          files.map { f =>
-            normalizeTime(spark.read.parquet(f.toString)
-              .withColumn("_src", input_file_name()))
-          }.reduce(_.unionByName(_, allowMissingColumns = true))
-      }
-    val rowsIn = footerRowCount(spark.sparkContext.hadoopConfiguration, files)
-    val deduped =
-      if (meta.tagColumns.nonEmpty || meta.dedupTime) {
-        val keys = (meta.tagColumns.filter(repaired.columns.contains) :+ "time").map(col)
-        val w = Window.partitionBy(keys: _*).orderBy(col("_src").desc)
-        repaired.withColumn("_rn", row_number().over(w))
-          .where(col("_rn") === 1).drop("_rn")
-      } else repaired
-    val sortCols = (meta.sortKeys.filter(deduped.columns.contains) :+ "time").map(col)
     // maxFilesPerBatch mirrors the reference's compaction.max_files_per_batch
     // (tier.go:22-40) but inverts WHERE it applies: the reference batches
     // the INPUT because DuckDB's read_parquet crashes on thousands of
@@ -155,9 +149,12 @@ object Compaction {
     // each covering a disjoint sort-key range. 0 = one output file.
     val numOut = if (maxFilesPerBatch <= 0) 1
       else math.ceil(files.length.toDouble / maxFilesPerBatch).toInt
+    val deduped = readDeduped(spark, meta, files, onePartition = numOut <= 1)
+    val rowsIn = footerRowCount(conf, files)
+    val sortCols = (meta.sortKeys.filter(deduped.columns.contains) :+ "time").map(col)
     val out =
-      if (numOut <= 1) deduped.drop("_src").orderBy(sortCols: _*).coalesce(1)
-      else deduped.drop("_src")
+      if (numOut <= 1) deduped.sortWithinPartitions(sortCols: _*)
+      else deduped
         .repartitionByRange(numOut, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
 
@@ -175,7 +172,6 @@ object Compaction {
     fs.delete(tmp, true)
     val compactUs = System.currentTimeMillis() * 1000L
     val tablePath = catalog.tablePath(db, m)
-    val conf = spark.sparkContext.hadoopConfiguration
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     out.write.mode("overwrite").option("compression", "zstd")
       .options(graft.ingest.HourPartitionedWriter.bloomOptions(
@@ -242,30 +238,8 @@ object Compaction {
     val files = hourFiles ++ dailyFiles
 
     val meta = catalog.readMeta(db, m)
-    val repaired =
-      try normalizeTime(
-        spark.read.option("mergeSchema", "true")
-          .parquet(files.map(_.toString): _*)
-          .withColumn("_src", input_file_name()))
-      catch {
-        case _: org.apache.spark.SparkException =>
-          files.map { f =>
-            normalizeTime(spark.read.parquet(f.toString)
-              .withColumn("_src", input_file_name()))
-          }.reduce(_.unionByName(_, allowMissingColumns = true))
-      }
-    val rowsIn = footerRowCount(spark.sparkContext.hadoopConfiguration, files)
-    // recency across directories: order by file NAME (the zero-padded
-    // flush-time scheme sorts globally), not the full path
-    val withRecency = repaired
-      .withColumn("_src_name", substring_index(col("_src"), "/", -1))
-    val deduped =
-      if (meta.tagColumns.nonEmpty || meta.dedupTime) {
-        val keys = (meta.tagColumns.filter(withRecency.columns.contains) :+ "time").map(col)
-        val w = Window.partitionBy(keys: _*).orderBy(col("_src_name").desc)
-        withRecency.withColumn("_rn", row_number().over(w))
-          .where(col("_rn") === 1).drop("_rn")
-      } else withRecency
+    val deduped = readDeduped(spark, meta, files, onePartition = true)
+    val rowsIn = footerRowCount(conf, files)
     // Z-order at the daily rewrite when configured: these are the
     // long-lived files that absorb most scans, and the interleaved order
     // clusters EVERY z-key so row-group min/max stats prune range
@@ -298,11 +272,11 @@ object Compaction {
       if (zKeys.nonEmpty && zRanges.length == zKeys.length)
         Seq(graft.operators.ZOrder.zvalue(zRanges), col("time"))
       else (meta.sortKeys.filter(deduped.columns.contains) :+ "time").map(col)
-    val out = deduped.drop("_src", "_src_name")
+    val out = deduped
       // path segment -> data column; UTC like the writer's partition
       // derivation, NOT the session-TZ hour() function
       .withColumn("hour", graft.ingest.HourPartitionedWriter.utcHour(col("time")))
-      .orderBy(orderCols: _*).coalesce(1)
+      .sortWithinPartitions(orderCols: _*)
 
     val tmp = new Path(dailyDay.getParent, s"_compact_tmp_day_${dailyDay.getName}")
     fs.delete(tmp, true)
@@ -320,12 +294,10 @@ object Compaction {
       .options(graft.ingest.HourPartitionedWriter.bloomOptions(
         meta.tagColumns.filter(deduped.columns.contains)))
       .parquet(tmp.toString)
-    val rowsOut = footerRowCount(spark.sparkContext.hadoopConfiguration,
-      fs.listStatus(tmp).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath).toSeq)
     val newFiles = fs.listStatus(tmp)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)
-    require(newFiles.length == 1, s"coalesce(1) produced ${newFiles.length} files")
+    require(newFiles.length == 1, s"one-partition write produced ${newFiles.length} files")
+    val rowsOut = footerRowCount(conf, newFiles.toSeq)
     fs.mkdirs(dailyDay)
     if (!fs.rename(newFiles.head, new Path(dailyDay, finalName)))
       throw new java.io.IOException(
@@ -387,6 +359,40 @@ object Compaction {
       }
     }
     inParallel(due)(dayDir => compactDay(catalog, db, m, dayDir))
+  }
+
+  /** Read `files` as one time-repaired frame with one row per (tags...,
+    * time), the latest file winning. Recency is the file NAME, which
+    * sorts by flush time within an hour directory and across the hours
+    * of a day. With `onePartition` the read is coalesced to a single
+    * partition BEFORE the dedup window: the window then needs no
+    * exchange, and the caller's sort and write stay in that one task. */
+  private def readDeduped(spark: SparkSession, meta: TableMeta,
+      files: Seq[Path], onePartition: Boolean): DataFrame = {
+    val srcName = substring_index(input_file_name(), "/", -1)
+    // union-by-name with type coercion: a plain mergeSchema read fails when
+    // one file wrote `time` as string/int64 (the mixed-type fixture the
+    // reference repairs, dedup.go:238-259) — fall back to per-file reads,
+    // repair each, then unionByName.
+    val repaired =
+      try normalizeTime(
+        spark.read.option("mergeSchema", "true")
+          .parquet(files.map(_.toString): _*)
+          .withColumn("_src", srcName))
+      catch {
+        case _: org.apache.spark.SparkException =>
+          files.map { f =>
+            normalizeTime(spark.read.parquet(f.toString).withColumn("_src", srcName))
+          }.reduce(_.unionByName(_, allowMissingColumns = true))
+      }
+    val in = if (onePartition) repaired.coalesce(1) else repaired
+    if (meta.tagColumns.isEmpty && !meta.dedupTime) in.drop("_src")
+    else {
+      val keys = (meta.tagColumns.filter(in.columns.contains) :+ "time").map(col)
+      val w = Window.partitionBy(keys: _*).orderBy(col("_src").desc)
+      in.withColumn("_rn", row_number().over(w))
+        .where(col("_rn") === 1).drop("_rn", "_src")
+    }
   }
 
   /** Repair a `time` column that may arrive as int64 epoch (any unit) or

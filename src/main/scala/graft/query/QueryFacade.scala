@@ -1,5 +1,7 @@
 package graft.query
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.util.concurrent.atomic.AtomicLong
@@ -24,6 +26,10 @@ final class QueryFacade(spark: SparkSession) {
   graft.GraftFunctions.registerAll(spark)
 
   private val seq = new AtomicLong(0)
+  // job groups are unique per JVM, not per facade: a cancel aimed at one
+  // facade's query must not reach another facade's query of the same id
+  private val groupPrefix = s"graft-query-${QueryFacade.facades.incrementAndGet()}-"
+  QueryFacade.watchCancelled(spark.sparkContext)
   // id -> (job group, sql, start ns)
   private val active = TrieMap.empty[Long, (String, String, Long)]
 
@@ -224,7 +230,7 @@ final class QueryFacade(spark: SparkSession) {
     * query that thread runs next. */
   def submit(q: String, run: String => DataFrame): (Long, DataFrame) = {
     val id = seq.incrementAndGet()
-    val group = s"graft-query-$id"
+    val group = groupPrefix + id
     active.put(id, (group, q, System.nanoTime()))
     spark.sparkContext.setJobGroup(group, q, interruptOnCancel = true)
     // per-query FAIR pool from a FIXED hashed set: under
@@ -253,10 +259,18 @@ final class QueryFacade(spark: SparkSession) {
     }
   }
 
+  /** Cancel the query's running jobs AND any it starts later: a cancel
+    * that lands while the query is still planning finds no job yet, and
+    * a plain `cancelJobGroup` would let the query run on to completion. */
   def cancel(id: Long): Boolean =
     active.remove(id) match {
       case Some((group, sql, t0)) =>
-        spark.sparkContext.cancelJobGroup(group)
+        val sc = spark.sparkContext
+        QueryFacade.cancelledGroups.add(group)
+        sc.cancelJobGroup(group)
+        // the submitting thread keeps its job group until complete();
+        // when it cancels its own query, later jobs must not inherit it
+        if (sc.getLocalProperty("spark.jobGroup.id") == group) sc.clearJobGroup()
         addHistory(QueryFacade.HistoryEntry(id, sql, "cancelled",
           System.currentTimeMillis(), (System.nanoTime() - t0) / 1e6,
           rows = -1L, error = ""))
@@ -267,6 +281,7 @@ final class QueryFacade(spark: SparkSession) {
   /** Mark a submitted query finished; `rows` (when the caller knows it)
     * lands in the slow-query record like the reference's handler logs. */
   def complete(id: Long, rows: Long = -1L): Unit = {
+    QueryFacade.cancelledGroups.remove(groupPrefix + id)
     active.remove(id).foreach { case (_, sql, t0) =>
       val ms = (System.nanoTime() - t0) / 1e6
       addHistory(QueryFacade.HistoryEntry(id, sql, "completed",
@@ -490,6 +505,27 @@ final class QueryFacade(spark: SparkSession) {
 
 /** Serializable JSON scalar encoding (shared by driver + executors). */
 object QueryFacade {
+
+  private val facades = new AtomicLong(0)
+
+  /** Job groups of cancelled queries whose handlers have not completed.
+    * Spark's `cancelJobGroupAndFutureJobs` does not cover the map-stage
+    * jobs adaptive execution submits, so a listener cancels every job
+    * that starts in one of these groups. */
+  private val cancelledGroups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private var watched: SparkContext = _
+
+  private def watchCancelled(sc: SparkContext): Unit = synchronized {
+    if (watched ne sc) {
+      sc.addSparkListener(new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+            .filter(cancelledGroups.contains)
+            .foreach(g => sc.cancelJob(e.jobId, s"job group $g was cancelled"))
+      })
+      watched = sc
+    }
+  }
 
   /** Size of the fixed FAIR-pool set queries hash into. 16 > the
     * reference's 12-worker concurrency target, so simultaneous queries

@@ -1,0 +1,147 @@
+package graft.jobs
+
+import graft.SparkSpec
+import graft.catalog.{GraftCatalog, TableMeta}
+import graft.ingest.{ColumnarBatch, HourPartitionedWriter, LineProtocol}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+/** The plan shape of a single-file compaction: the whole hour (or day)
+  * is read, deduped, sorted and written in one job with no exchange.
+  * The only other job is the `mergeSchema` footer read. */
+class CompactionPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+  import CompactionPlanSpec.Census
+
+  private val H = 3600L * 1000000L
+  private val base = 1717200000000000L // 2024-06-01T00:00:00Z in µs
+
+  private def newCatalog(): GraftCatalog = {
+    val cat = new GraftCatalog(spark, tmpDir("graft_plan_cat"))
+    // sort order differs from the dedup key, so the output sort is real
+    cat.writeMeta("default", "cpu", TableMeta(sortKeys = Seq("region"),
+      tagColumns = Seq("host", "region")))
+    cat
+  }
+
+  private def lpIngest(cat: GraftCatalog, lines: Seq[String]): Unit = {
+    val (pts, errs) = LineProtocol.parse(lines.mkString("\n"), "us")
+    assert(errs.isEmpty, errs.mkString(";"))
+    ColumnarBatch.fromPoints(pts).foreach(HourPartitionedWriter.ingest(cat, "default", _))
+  }
+
+  /** One flush of `n` rows starting `hourStart`, hosts and regions spread
+    * so every file holds several keys. */
+  private def flush(cat: GraftCatalog, hourStart: Long, file: Int, n: Int): Unit =
+    lpIngest(cat, (0 until n).map { i =>
+      s"cpu,host=h${(file + i) % 7},region=r${(file * 3 + i) % 4} " +
+        s"v=$file.$i ${hourStart + (file * n + i) * 1000000L}"
+    })
+
+  /** Runs `f` and returns its result with the jobs, stages and tasks it
+    * started on this thread and the executed plans of its writes. */
+  private def census[A](f: => A): (A, Census) = {
+    val sc = spark.sparkContext
+    val group = s"compaction-plan-${System.nanoTime()}"
+    val jobs, tasks = new AtomicInteger(0)
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    def ours(p: java.util.Properties) =
+      p != null && p.getProperty("spark.jobGroup.id") == group
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+    }
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(qeListener)
+    sc.setJobGroup(group, "compaction plan census")
+    val result =
+      try f finally {
+        sc.clearJobGroup()
+        TestListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+        spark.listenerManager.unregister(qeListener)
+      }
+    (result, Census(jobs.get, stages.size, tasks.get, plans.asScala.toSeq))
+  }
+
+  private def assertOneJobNoExchange(c: Census): Unit = {
+    assert(c.jobs <= 2, s"expected the mergeSchema read and one write: $c")
+    assert(c.writes.length == 1, s"one write plan expected: ${c.writes.length}")
+    val exchanges = collect(c.writes.head) { case e: Exchange => e }
+    assert(exchanges.isEmpty, s"exchange in the write plan:\n${c.writes.head}")
+  }
+
+  /** Rows of the single output file in `dir`, in stored order. */
+  private def storedRows(dir: Path): Seq[(String, String, Long, Double)] = {
+    val files = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    assert(files.length == 1, s"one output file expected: ${files.mkString(", ")}")
+    spark.read.parquet(files.head.toString)
+      .selectExpr("host", "region", "unix_micros(time)", "v").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSeq
+  }
+
+  private def assertSortedByRegionTime(rows: Seq[(String, String, Long, Double)]): Unit = {
+    val keys = rows.map(r => (r._2, r._3))
+    assert(keys == keys.sorted, "rows must be stored in (sortKeys, time) order")
+  }
+
+  test("compactHour: 30 flushes compact in one exchange-free job, later write wins") {
+    val cat = newCatalog()
+    (0 until 29).foreach(i => flush(cat, base, i, 20))
+    // the 30th flush rewrites file 3's row 5 (host=h1, region=r2)
+    val dupTime = base + (3 * 20 + 5) * 1000000L
+    lpIngest(cat, Seq(s"cpu,host=h1,region=r2 v=-29.0 $dupTime"))
+    val part = cat.listHourPartitions("default", "cpu").head
+    val (res, c) = census(Compaction.compactHour(cat, "default", "cpu", part))
+    assert(res.compacted && res.filesIn == 30 && res.rowsIn == 581 && res.rowsOut == 580, res)
+    assertOneJobNoExchange(c)
+    val rows = storedRows(part)
+    assert(rows.length == 580)
+    assert(rows.filter(r => r._1 == "h1" && r._2 == "r2" && r._3 == dupTime).map(_._4) ==
+      Seq(-29.0), "the later write must win")
+    assertSortedByRegionTime(rows)
+  }
+
+  test("compactDay: a day of hour files compacts in one exchange-free job, later write wins") {
+    val cat = newCatalog()
+    (0 until 24).foreach(h => flush(cat, base + h * H, h, 10))
+    // a second flush into hour 5 rewrites its row 2 (host=h0, region=r1)
+    val dupTime = base + 5 * H + (5 * 10 + 2) * 1000000L
+    lpIngest(cat, Seq(s"cpu,host=h0,region=r1 v=-5.0 $dupTime"))
+    val dayDir = cat.listDayPartitions("default", "cpu").head
+    val (res, c) = census(Compaction.compactDay(cat, "default", "cpu", dayDir))
+    assert(res.compacted && res.filesIn == 25 && res.rowsIn == 241 && res.rowsOut == 240, res)
+    assertOneJobNoExchange(c)
+    val rows = storedRows(cat.listDailyTierDays("default", "cpu").head)
+    assert(rows.length == 240)
+    assert(rows.filter(r => r._1 == "h0" && r._2 == "r1" && r._3 == dupTime).map(_._4) ==
+      Seq(-5.0), "the later write must win")
+    assertSortedByRegionTime(rows)
+  }
+}
+
+object CompactionPlanSpec {
+  final case class Census(jobs: Int, stages: Int, tasks: Int, writes: Seq[SparkPlan])
+}

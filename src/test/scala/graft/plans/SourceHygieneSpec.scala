@@ -15,6 +15,9 @@ import scala.jdk.CollectionConverters._
   *
   * Every `def main` entry point is named in README.md, so one-off
   * probe mains cannot pile up unlisted.
+  *
+  * Parquet footers open with read options built from the caller's
+  * Hadoop conf, never through the overload that parses a new one.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -40,6 +43,37 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"stub markers found in: ${offenders.mkString(", ")}")
+  }
+
+  test("no single-argument ParquetFileReader.open in src/main") {
+    // open(InputFile) builds a fresh Hadoop Configuration per call and
+    // re-parses its XML defaults for every footer; pass read options
+    // built from the caller's conf instead
+    val call = "ParquetFileReader.open("
+    val offenders = mainSources.flatMap { p =>
+      val s = new String(Files.readAllBytes(p))
+      Iterator.iterate(s.indexOf(call))(i => s.indexOf(call, i + 1))
+        .takeWhile(_ >= 0)
+        .filter { at =>
+          // one argument: no comma at the call's own nesting level
+          var i = at + call.length
+          var depth = 1
+          var comma = false
+          while (depth > 0 && i < s.length) {
+            s(i) match {
+              case '(' | '[' | '{' => depth += 1
+              case ')' | ']' | '}' => depth -= 1
+              case ',' if depth == 1 => comma = true
+              case _ =>
+            }
+            i += 1
+          }
+          !comma
+        }
+        .map(at => s"$p:${s.take(at).count(_ == '\n') + 1}")
+    }
+    assert(offenders.isEmpty,
+      s"single-argument ParquetFileReader.open at: ${offenders.mkString(", ")}")
   }
 
   test("every main in src/main is named in README.md's entry points") {

@@ -247,6 +247,14 @@ class HttpServerSpec extends SparkSpec {
       assert(!resp.body().contains("\"row_count\":1"),
         "cancelled query must not deliver the full result")
     }
+    // the cancelled handler must end and give back its overload-gate
+    // slot; a cancel that lands before the count's job starts must still
+    // stop it, or the slot stays held for minutes into later tests
+    val drainBy = System.nanoTime() + 10L * 1000000000L
+    while (server.overloadGate.inFlight > 0 && System.nanoTime() < drainBy)
+      Thread.sleep(20)
+    assert(server.overloadGate.inFlight == 0,
+      s"${server.overloadGate.inFlight} query handler(s) still hold a gate slot after cancel")
   }
 
   test("TLE write lands typed orbital elements; GET measurement query reads back") {
