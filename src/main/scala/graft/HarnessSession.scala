@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session construction shared by the driver-facing mains (Verify,
-  * Bench, PlanProbe, StreamBench, the probe mains).
+  * Bench, PlanProbe, StreamBench, ThroughputBench, ServiceBench,
+  * StreamStateSoak, the probe mains).
   *
   * `SPARK_GRAFT_MASTER` overrides the default `local[cpus]` — the
   * multi-JVM gate runs the whole correctness suite under

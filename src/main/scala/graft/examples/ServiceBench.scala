@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.HarnessSession
 import graft.server.HttpServer
-import org.apache.spark.sql.SparkSession
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -32,7 +32,7 @@ object ServiceBench {
   }
 
   /** Warm once, then best of three timed runs (12 concurrent HTTP
-    * workers over a 32-thread JVM oversubscribe; min-of-3 absorbs the
+    * workers oversubscribe the session's cores; min-of-3 absorbs the
     * occasional GC/scheduling collision a min-of-2 still caught). */
   private def bench[A](f: => A): (A, Double) = {
     f
@@ -41,13 +41,10 @@ object ServiceBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = HarnessSession.builder()
       // FAIR: QueryFacade hashes each query into one of 16 pools so 12
       // concurrent readers round-robin task slots (the deployment shape)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.scheduler.mode", "FAIR").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // GRAFT_BENCH_ROOT relocates the data root (and the WAL below) —

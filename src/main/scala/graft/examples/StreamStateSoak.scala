@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.HarnessSession
 import graft.streaming.{StreamingLineDedup, StreamingNearDup}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -39,11 +39,10 @@ object StreamStateSoak {
   def main(args: Array[String]): Unit = {
     val nBatches = sys.env.get("SOAK_BATCHES").flatMap(_.toIntOption).getOrElse(40)
     val perBatch = sys.env.get("SOAK_DOCS_PER_BATCH").flatMap(_.toIntOption).getOrElse(2000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = HarnessSession.builder()
       .config("spark.sql.streaming.checkpointLocation",
         java.nio.file.Files.createTempDirectory("soak_ckpt").toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -1,13 +1,15 @@
 package graft.examples
 
+import graft.HarnessSession
 import graft.catalog.GraftCatalog
 import graft.ingest._
 import graft.query.{ArrowEncoder, MsgPackEncoder, QueryFacade}
-import org.apache.spark.sql.SparkSession
 
 /** Single-node throughput micro-benchmarks, comparable to the
   * reference's headline numbers (BASELINE.md): ingest decode rec/s and
-  * result-stream rows/s per wire format.
+  * result-stream rows/s per wire format: the driver-side encode and the
+  * streamed writer of each. The session comes from
+  * [[graft.HarnessSession]] (`SPARK_GRAFT_CPUS` sets the width).
   * Run: sbt "runMain graft.examples.ThroughputBench"
   */
 object ThroughputBench {
@@ -19,7 +21,7 @@ object ThroughputBench {
   }
 
   /** One warm-up invocation (JIT + task-dispatch paths), then the best
-    * of two timed runs — single cold measurements on a 32-thread JVM
+    * of two timed runs — single cold measurements on a many-thread JVM
     * swing ±50% from GC of the previous section's garbage. */
   private def bench[A](f: => A): (A, Double) = {
     f
@@ -29,10 +31,7 @@ object ThroughputBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = HarnessSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val n = 2000000
@@ -141,40 +140,33 @@ object ThroughputBench {
     // persist: encoders must measure result MARSHALLING (the reference
     // encodes from its in-memory Arrow buffers), not query re-execution.
     // repartition(32): a LIMIT plan caches as ONE partition, which would
-    // serialize the distributed encoders; a real big result is
+    // serialize the streamed writers; a real big result is
     // multi-partition (one per scan split).
     val result = spark.sql("SELECT time, host, value FROM cpu LIMIT 1000000")
       .repartition(32).persist()
     result.count() // materialize the cache
-    val (json, jSec) = bench(facade.toJsonEnvelope(result))
-    println(f"[tp] result_json: ${1000000 / jSec / 1e6}%.2f M rows/s (${json.length / 1e6}%.1f MB, $jSec%.2f s)")
-    // wire bytes (what an HTTP layer writes) — the String re-decode is a
-    // client-side convenience, not part of the serving path
-    val (jsonD, jdSec) = bench(facade.toJsonEnvelopeBytesDistributed(result, maxRows = 1000000, preserveOrder = false))
-    println(f"[tp] result_json_distributed: ${1000000 / jdSec / 1e6}%.2f M rows/s (${jsonD.length / 1e6}%.1f MB, $jdSec%.2f s)")
-    // streamed (bounded driver memory) variants: one wave of chunks
-    // resident at a time — should track the distributed numbers
     final class CountingNull extends java.io.OutputStream {
       var count = 0L
       override def write(b: Int): Unit = count += 1
       override def write(bs: Array[Byte], off: Int, n: Int): Unit = count += n
     }
-    val (jsBytes, jsSec) = bench {
-      val o = new CountingNull; facade.writeJsonEnvelope(result, o); o.count
+    def streamed(write: java.io.OutputStream => Long): Long = {
+      val o = new CountingNull; write(o); o.count
     }
-    println(f"[tp] result_json_streamed: ${1000000 / jsSec / 1e6}%.2f M rows/s (${jsBytes / 1e6}%.1f MB, $jsSec%.2f s)")
+    def report(name: String, bytes: Long, sec: Double): Unit =
+      println(f"[tp] $name: ${1000000 / sec / 1e6}%.2f M rows/s (${bytes / 1e6}%.1f MB, $sec%.2f s)")
+    val (json, jSec) = bench(facade.toJsonEnvelope(result))
+    report("result_json", json.length, jSec)
+    val (jsBytes, jsSec) = bench(streamed(facade.writeJsonEnvelope(result, _)))
+    report("result_json_streamed", jsBytes, jsSec)
     val (mp, mSec) = bench(MsgPackEncoder.encode(result))
-    println(f"[tp] result_msgpack: ${1000000 / mSec / 1e6}%.2f M rows/s (${mp.length / 1e6}%.1f MB, $mSec%.2f s)")
-    val (mpD, mdSec) = bench(MsgPackEncoder.encodeDistributed(result))
-    println(f"[tp] result_msgpack_distributed: ${1000000 / mdSec / 1e6}%.2f M rows/s (${mpD.length / 1e6}%.1f MB, $mdSec%.2f s)")
+    report("result_msgpack", mp.length, mSec)
+    val (msBytes, msSec) = bench(streamed(MsgPackEncoder.writeStream(result, _)))
+    report("result_msgpack_streamed", msBytes, msSec)
     val (ar, aSec) = bench(ArrowEncoder.encode(result))
-    println(f"[tp] result_arrow_ipc: ${1000000 / aSec / 1e6}%.2f M rows/s (${ar.length / 1e6}%.1f MB, $aSec%.2f s)")
-    val (arD, adSec) = bench(ArrowEncoder.encodeDistributed(result))
-    println(f"[tp] result_arrow_distributed: ${1000000 / adSec / 1e6}%.2f M rows/s (${arD.length / 1e6}%.1f MB, $adSec%.2f s)")
-    val (asBytes, asSec) = bench {
-      val o = new CountingNull; ArrowEncoder.writeStream(result, o); o.count
-    }
-    println(f"[tp] result_arrow_streamed: ${1000000 / asSec / 1e6}%.2f M rows/s (${asBytes / 1e6}%.1f MB, $asSec%.2f s)")
+    report("result_arrow_ipc", ar.length, aSec)
+    val (asBytes, asSec) = bench(streamed(ArrowEncoder.writeStream(result, _)))
+    report("result_arrow_streamed", asBytes, asSec)
 
     spark.stop()
     println("TP OK")

@@ -2,7 +2,8 @@ package graft.query
 
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
-import org.apache.arrow.vector.ipc.ArrowStreamWriter
+import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter, WriteChannel}
+import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}
 import org.apache.arrow.vector.types.FloatingPointPrecision
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
 import org.apache.spark.sql.DataFrame
@@ -15,8 +16,7 @@ import scala.jdk.CollectionConverters._
 /** Arrow IPC stream result sink — the reference's fastest wire format
   * (internal/api/query_arrow.go: 9.49M rows/s vs 2.99M JSON,
   * BASELINE.md). Encodes a result as an Arrow IPC stream of record
-  * batches of `batchRows`, consuming `toLocalIterator` so the driver
-  * holds one batch at a time.
+  * batches of at most 4096 rows.
   *
   * Covers the engine's six storable types (timestamp-µs/long/double/
   * string/bool/decimal — SURVEY §1.2); non-storable result types are
@@ -24,10 +24,15 @@ import scala.jdk.CollectionConverters._
   */
 object ArrowEncoder {
 
+  /** Rows per record batch. */
+  private val BatchRows = 4096
+
   private def arrowField(f: StructField): Field = {
     val t: ArrowType = f.dataType match {
       case TimestampType =>
         new ArrowType.Timestamp(types.TimeUnit.MICROSECOND, "UTC")
+      case TimestampNTZType =>
+        new ArrowType.Timestamp(types.TimeUnit.MICROSECOND, null)
       case LongType | IntegerType | ShortType | ByteType =>
         new ArrowType.Int(64, true)
       case DoubleType | FloatType =>
@@ -39,10 +44,12 @@ object ArrowEncoder {
     new Field(f.name, FieldType.nullable(t), List.empty[Field].asJava)
   }
 
-  def encode(df: DataFrame, batchRows: Int = 4096,
-      maxRows: Long = Long.MaxValue): Array[Byte] =
-    encodeInternal(RowCodec.internalRows(RowCodec.capped(df, maxRows)),
-      df.schema, batchRows, maxRows)
+  private def arrowSchema(s: StructType): ArrowSchema =
+    new ArrowSchema(s.fields.map(arrowField).toList.asJava)
+
+  /** Encode a result on the driver as one IPC stream. */
+  def encode(df: DataFrame, maxRows: Long = Long.MaxValue): Array[Byte] =
+    ipcStream(RowCodec.internalRows(RowCodec.capped(df, maxRows)), df.schema)
 
   /** Per-column setters resolved ONCE against the root's vectors — the
     * row loop then runs primitive reads straight from the internal row
@@ -54,6 +61,8 @@ object ArrowEncoder {
     schema.fields.zipWithIndex.map { case (f, c) =>
       val fn: (InternalRow, Int) => Unit = (f.dataType, root.getVector(c)) match {
         case (TimestampType, v: TimeStampMicroTZVector) =>
+          (r, i) => v.setSafe(i, r.getLong(c))
+        case (TimestampNTZType, v: TimeStampMicroVector) =>
           (r, i) => v.setSafe(i, r.getLong(c))
         case (LongType, v: BigIntVector) => (r, i) => v.setSafe(i, r.getLong(c))
         case (IntegerType, v: BigIntVector) => (r, i) => v.setSafe(i, r.getInt(c).toLong)
@@ -79,23 +88,21 @@ object ArrowEncoder {
       fn
     }
 
-  /** Encode internal rows to a complete standalone IPC stream (shared by
-    * the driver path and the per-partition executor path). */
-  private def encodeInternal(it: Iterator[InternalRow], sparkSchema: StructType,
-      batchRows: Int, maxRows: Long): Array[Byte] = {
-    val schema = new ArrowSchema(sparkSchema.fields.map(arrowField).toList.asJava)
+  /** Encode internal rows to a complete standalone IPC stream: the whole
+    * result on the driver, one partition on an executor. */
+  private def ipcStream(it: Iterator[InternalRow],
+      sparkSchema: StructType): Array[Byte] = {
     val alloc = new RootAllocator(Long.MaxValue)
-    val root = VectorSchemaRoot.create(schema, alloc)
+    val root = VectorSchemaRoot.create(arrowSchema(sparkSchema), alloc)
     val out = new ByteArrayOutputStream()
     val writer = new ArrowStreamWriter(root, null, out)
     try {
       writer.start()
       val set = setters(root, sparkSchema)
       val nCols = sparkSchema.length
-      var total = 0L
-      while (it.hasNext && total < maxRows) {
+      while (it.hasNext) {
         var n = 0
-        while (it.hasNext && n < batchRows && total < maxRows) {
+        while (it.hasNext && n < BatchRows) {
           val row = it.next()
           var c = 0
           while (c < nCols) {
@@ -104,7 +111,6 @@ object ArrowEncoder {
             c += 1
           }
           n += 1
-          total += 1
         }
         root.setRowCount(n)
         writer.writeBatch()
@@ -119,83 +125,45 @@ object ArrowEncoder {
     }
   }
 
-  /** Distributed variant: each partition encodes its own rows into an
-    * IPC chunk on the executors; the driver only re-frames the record
-    * batches into one stream (buffer-level copies via VectorUnloader,
-    * no per-row work). This moves the row→columnar conversion — the
-    * dominant cost — off the single driver thread. */
-  def encodeDistributed(df: DataFrame, batchRows: Int = 4096): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    // one wave = one fully-parallel job; the whole result is resident on
-    // the driver anyway since the caller wants a byte array
-    writeStream(df, out, batchRows, wave = Int.MaxValue)
-    out.toByteArray
-  }
-
   /** Stream an Arrow IPC stream to `out` with bounded driver memory:
-    * partitions encode IPC chunks on the executors; the driver fetches
-    * them in waves of `wave` partitions (one job per wave, ≤wave chunks
-    * resident) and re-frames the record batches into one stream —
-    * buffer-level copies, no per-row work. Driver memory is
-    * O(wave × chunk), independent of result size; the default wave
-    * (defaultParallelism) keeps every core busy. Returns rows written. */
+    * partitions encode IPC chunks on the executors, and the driver
+    * re-frames their record batches into one stream as each wave of
+    * chunks arrives ([[RowCodec.foreachPartitionChunk]]) — buffer-level
+    * copies, no per-row work. Record batches end at partition
+    * boundaries, so the bytes differ from [[encode]]'s while the rows
+    * are the same. Returns rows written. */
   def writeStream(df: DataFrame, out: java.io.OutputStream,
-      batchRows: Int = 4096, wave: Int = 0): Long = {
-    import org.apache.arrow.vector.ipc.ArrowStreamReader
-    import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}
-    import org.apache.arrow.vector.ipc.WriteChannel
-
-    val sc = df.sparkSession.sparkContext
-    val w =
-      if (wave == Int.MaxValue) Int.MaxValue
-      else if (wave > 0) wave
-      else math.max(1, sc.defaultParallelism)
-    val sparkSchema = df.schema
-    val chunkRdd = df.queryExecution.toRdd.mapPartitions { it =>
-      if (it.isEmpty) Iterator(Array.emptyByteArray)
-      else Iterator(encodeInternal(it, sparkSchema, batchRows, Long.MaxValue))
-    }
-
-    val schema = new ArrowSchema(sparkSchema.fields.map(arrowField).toList.asJava)
+      maxRows: Long = Long.MaxValue): Long = {
+    val capped = RowCodec.capped(df, maxRows)
+    val sparkSchema = capped.schema
     val ch = new WriteChannel(java.nio.channels.Channels.newChannel(out))
-    MessageSerializer.serialize(ch, schema)
+    MessageSerializer.serialize(ch, arrowSchema(sparkSchema))
     val alloc = new RootAllocator(Long.MaxValue)
     var rows = 0L
     try {
-      val nParts = chunkRdd.getNumPartitions
-      var start = 0
-      while (start < nParts) {
-        val end = if (w >= nParts - start) nParts else start + w
-        val res = sc.runJob(chunkRdd,
-          (it: Iterator[Array[Byte]]) => it.next(), (start until end).toSeq)
-        res.foreach { bytes =>
-          if (bytes.length > 0) {
-            val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), alloc)
-            try {
-              val root = reader.getVectorSchemaRoot
-              while (reader.loadNextBatch()) {
-                rows += root.getRowCount
-                val batch = new org.apache.arrow.vector.VectorUnloader(root).getRecordBatch
-                try MessageSerializer.serialize(ch, batch)
-                finally batch.close()
-              }
-            } finally reader.close()
-          }
+      RowCodec.foreachPartitionChunk(capped) { it =>
+        if (it.isEmpty) Array.emptyByteArray else ipcStream(it, sparkSchema)
+      } { bytes =>
+        if (bytes.length > 0) {
+          val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), alloc)
+          try {
+            val root = reader.getVectorSchemaRoot
+            while (reader.loadNextBatch()) {
+              rows += root.getRowCount
+              val batch = new VectorUnloader(root).getRecordBatch
+              try MessageSerializer.serialize(ch, batch)
+              finally batch.close()
+            }
+          } finally reader.close()
         }
-        start = end
       }
-      org.apache.arrow.vector.ipc.ArrowStreamWriter.writeEndOfStream(ch, IpcOption.DEFAULT)
+      ArrowStreamWriter.writeEndOfStream(ch, IpcOption.DEFAULT)
       rows
     } finally alloc.close()
   }
 
   private def setNull(v: FieldVector, i: Int): Unit = v match {
-    case x: TimeStampMicroTZVector => x.setNull(i)
-    case x: BigIntVector => x.setNull(i)
-    case x: Float8Vector => x.setNull(i)
-    case x: BitVector => x.setNull(i)
-    case x: DecimalVector => x.setNull(i)
-    case x: VarCharVector => x.setNull(i)
-    case _ =>
+    case x: BaseFixedWidthVector => x.setNull(i)
+    case x: BaseVariableWidthVector => x.setNull(i)
   }
 }

@@ -12,8 +12,8 @@ import java.nio.charset.StandardCharsets
   * with column-oriented value arrays (better compression and decode
   * locality than row tuples).
   *
-  * Values are collected once in internal-row form and packed per column
-  * with type-specialized loops (see [[RowCodec]]).
+  * Values are packed per column from internal rows with type-specialized
+  * loops (see [[RowCodec]]).
   */
 object MsgPackEncoder {
 
@@ -98,8 +98,7 @@ object MsgPackEncoder {
     }
   }
 
-  /** Type-specialized value packer for column `c` — shared by the
-    * driver-side and distributed encoders so both emit identical bytes. */
+  /** Type-specialized value packer for column `c`. */
   private def valuePacker(p: Packer, dt: org.apache.spark.sql.types.DataType,
       c: Int): org.apache.spark.sql.catalyst.InternalRow => Unit = {
     import org.apache.spark.sql.types._
@@ -125,19 +124,24 @@ object MsgPackEncoder {
     }
   }
 
-  /** Encode a result as the columnar msgpack envelope. Collects internal
-    * rows once, then packs each column with a type-specialized loop —
-    * no external-Row conversion and no per-value boxing for the
-    * engine's storable types (see [[RowCodec]]). Timestamps pack as
-    * epoch-µs int64, matching the previous wire format. */
+  /** Encode a result on the driver as the columnar msgpack envelope.
+    * Timestamps pack as epoch-µs int64. */
   def encode(df: DataFrame, maxRows: Long = Long.MaxValue): Array[Byte] = {
-    val cols = df.columns
-    val fields = df.schema.fields
-    val rows = RowCodec.internalRows(RowCodec.capped(df, maxRows)).toArray
-    val n = math.min(rows.length.toLong, maxRows).toInt
+    val capped = RowCodec.capped(df, maxRows)
+    val (runs, n) = partitionColumnRuns(capped.schema.fields,
+      RowCodec.internalRows(capped))
     // unsynchronized sink: BAOS.write locks per byte, and the packer
     // emits values byte-by-byte
-    val out = new MsgPackEncoder.FastByteBuffer()
+    val out = new FastByteBuffer()
+    writeEnvelope(out, capped.columns, n)(c => out.write(runs(c)))
+    out.toByteArray
+  }
+
+  /** The envelope `{columns, data: {name: [values…]…}, row_count}` around
+    * each column's packed values, which `column(c)` writes to `out`. */
+  private def writeEnvelope(out: java.io.OutputStream, cols: Array[String],
+      n: Long)(column: Int => Unit): Unit = {
+    require(n <= Int.MaxValue, s"result too large for one envelope: $n rows")
     val p = new Packer(out)
     p.packMapHeader(3)
     p.packString("columns")
@@ -148,19 +152,12 @@ object MsgPackEncoder {
     var c = 0
     while (c < cols.length) {
       p.packString(cols(c))
-      p.packArrayHeader(n)
-      val pack = valuePacker(p, fields(c).dataType, c)
-      var i = 0
-      while (i < n) {
-        val r = rows(i)
-        if (r.isNullAt(c)) p.packNil() else pack(r)
-        i += 1
-      }
+      p.packArrayHeader(n.toInt)
+      column(c)
       c += 1
     }
     p.packString("row_count")
-    p.packLong(n.toLong)
-    out.toByteArray
+    p.packLong(n)
   }
 
   /** One partition's msgpack element encodings, one byte run per column
@@ -189,126 +186,39 @@ object MsgPackEncoder {
     (bufs.map(_.toByteArray), n)
   }
 
-  /** Distributed encode: each partition packs its column runs on the
-    * executors (32-way parallel on local[32], fleet-wide on a cluster);
-    * the driver only concatenates byte runs. Identical wire bytes to
-    * [[encode]]; ~linear speedup in cores for the marshalling phase,
-    * which was the single-threaded floor of the collect-then-encode
-    * path. */
-  def encodeDistributed(df: DataFrame, maxRows: Long = Long.MaxValue): Array[Byte] = {
-    val capped = RowCodec.capped(df, maxRows)
-    val cols = capped.columns
-    val fields = capped.schema.fields
-    // toRdd, not executedPlan.execute(): the former wraps the plan in
-    // SQLExecutionRDD, which propagates session-local SQLConf (timezone,
-    // ANSI mode) to executor-side expression evaluation — same as the
-    // JSON and Arrow distributed paths
-    val parts = capped.queryExecution.toRdd
-      .mapPartitions(it => Iterator.single(partitionColumnRuns(fields, it)))
-      .collect()
-    val n = parts.map(_._2).sum
-    require(n <= Int.MaxValue, s"result too large for one envelope: $n rows")
-    val runBytes = parts.map(_._1.map(_.length.toLong).sum).sum
-    // same finite-envelope contract as the JSON path (QueryFacade): the
-    // serving routes always pass a row cap, but the BYTE total is what
-    // a single Array[Byte] envelope actually bounds
-    require(runBytes + 1024 <= Int.MaxValue - 16L,
-      s"msgpack envelope too large: $runBytes bytes")
-    val out = new FastByteBuffer((runBytes + 1024).toInt)
-    val p = new Packer(out)
-    p.packMapHeader(3)
-    p.packString("columns")
-    p.packArrayHeader(cols.length)
-    cols.foreach(p.packString)
-    p.packString("data")
-    p.packMapHeader(cols.length)
-    var c = 0
-    while (c < cols.length) {
-      p.packString(cols(c))
-      p.packArrayHeader(n.toInt)
-      var pi = 0
-      while (pi < parts.length) {
-        val run = parts(pi)._1(c)
-        out.write(run, 0, run.length)
-        pi += 1
-      }
-      c += 1
-    }
-    p.packString("row_count")
-    p.packLong(n)
-    out.toByteArray
-  }
-
   /** Stream the columnar msgpack envelope to `out` with driver memory
-    * BOUNDED at O(wave × partition chunk), independent of result size —
-    * the fix for the one wire format whose driver footprint scaled with
-    * the full result ([[encodeDistributed]] collects every partition's
-    * runs at once).
+    * bounded by one wave of partition chunks, whatever the result's size.
     *
     * The columnar envelope needs each column's array header (with the
     * TOTAL row count) before that column's values, so a single forward
     * pass can't write the socket directly. Instead of a count-first
     * second data pass (which would re-run the whole query per column),
-    * partitions stream their column runs to the driver in waves — one
-    * parallel job per wave, at most `wave` chunks resident — and the
-    * driver appends each column's run to its own driver-LOCAL spool
-    * file. After the single data pass, the spool files are spliced to
-    * the socket behind their headers and deleted. Disk holds the
-    * response once; memory never does. Byte-identical output to
-    * [[encode]] (parity-pinned in MsgPackEncoderSpec).
+    * partitions stream their column runs to the driver in waves
+    * ([[RowCodec.foreachPartitionChunk]]) and the driver appends each
+    * column's run to its own driver-LOCAL spool file. After the single
+    * data pass, the spool files are spliced to the socket behind their
+    * headers and deleted. Disk holds the response once; memory never
+    * does. Byte-identical output to [[encode]].
     *
     * Returns the row count written. */
   def writeStream(df: DataFrame, out: java.io.OutputStream,
-      maxRows: Long = Long.MaxValue, wave: Int = 0): Long = {
+      maxRows: Long = Long.MaxValue): Long = {
     val capped = RowCodec.capped(df, maxRows)
-    val cols = capped.columns
     val fields = capped.schema.fields
-    val sc = df.sparkSession.sparkContext
-    val w = if (wave > 0) wave else math.max(1, sc.defaultParallelism)
-    val chunkRdd = capped.queryExecution.toRdd
-      .mapPartitions(it => Iterator.single(partitionColumnRuns(fields, it)))
-    val nParts = chunkRdd.getNumPartitions
     val spool = java.nio.file.Files.createTempDirectory("graft_msgpack_spool")
-    val colFiles = Array.tabulate(cols.length)(c => spool.resolve(s"col$c.bin"))
+    val colFiles = Array.tabulate(fields.length)(c => spool.resolve(s"col$c.bin"))
     val streams = colFiles.map(f => new java.io.BufferedOutputStream(
       java.nio.file.Files.newOutputStream(f), 1 << 16))
     try {
       var n = 0L
-      var start = 0
-      while (start < nParts) {
-        val parts = (start until math.min(start + w, nParts)).toArray
-        val res = sc.runJob(chunkRdd,
-          (it: Iterator[(Array[Array[Byte]], Long)]) => it.next(), parts.toSeq)
-        res.foreach { case (runs, cnt) =>
+      RowCodec.foreachPartitionChunk(capped)(partitionColumnRuns(fields, _)) {
+        case (runs, cnt) =>
           var c = 0
           while (c < runs.length) { streams(c).write(runs(c)); c += 1 }
           n += cnt
-        }
-        start += w
       }
       streams.foreach(_.close())
-      require(n <= Int.MaxValue, s"result too large for one envelope: $n rows")
-      val p = new Packer(out)
-      p.packMapHeader(3)
-      p.packString("columns")
-      p.packArrayHeader(cols.length)
-      cols.foreach(p.packString)
-      p.packString("data")
-      p.packMapHeader(cols.length)
-      val buf = new Array[Byte](1 << 16)
-      var c = 0
-      while (c < cols.length) {
-        p.packString(cols(c))
-        p.packArrayHeader(n.toInt)
-        val in = java.nio.file.Files.newInputStream(colFiles(c))
-        try {
-          var r = in.read(buf)
-          while (r >= 0) { out.write(buf, 0, r); r = in.read(buf) }
-        } finally in.close()
-        c += 1
-      }
-      p.packString("row_count")
-      p.packLong(n)
+      writeEnvelope(out, capped.columns, n)(c => java.nio.file.Files.copy(colFiles(c), out))
       n
     } finally {
       streams.foreach(s => try s.close() catch { case _: Throwable => () })

@@ -346,161 +346,51 @@ final class QueryFacade(spark: SparkSession) {
     else (n, "none", s"Small query ($n rows).")
   }
 
-  /** Stream a result as the reference's JSON envelope. Rows stream in
-    * INTERNAL format (per-partition, the driver holds one partition at a
-    * time) and are encoded by schema-specialized appenders — no external
+  /** Encode a result on the driver as the reference's JSON envelope,
+    * from internal rows by schema-specialized appenders — no external
     * Row conversion, no per-value boxing (see [[RowCodec]]). */
   def toJsonEnvelope(df: DataFrame, maxRows: Long = Long.MaxValue): String = {
     val t0 = System.nanoTime()
-    val columns = df.columns
-    val apps = RowCodec.jsonAppenders(df.schema)
+    val capped = RowCodec.capped(df, maxRows)
     val sb = new StringBuilder(1 << 16)
-    sb.append("{\"columns\":[")
-    sb.append(columns.map(c => jsonStr(c)).mkString(","))
-    sb.append("],\"data\":[")
-    val it = RowCodec.internalRows(RowCodec.capped(df, maxRows))
-    var n = 0L
-    while (it.hasNext && n < maxRows) {
-      val row = it.next()
-      if (n > 0) sb.append(',')
-      sb.append('[')
-      var i = 0
-      while (i < apps.length) {
-        if (i > 0) sb.append(',')
-        if (row.isNullAt(i)) sb.append("null") else apps(i)(row, i, sb)
-        i += 1
-      }
-      sb.append(']')
-      n += 1
-    }
-    val ms = (System.nanoTime() - t0) / 1e6
-    sb.append(s"""],"row_count":$n,"execution_time_ms":${math.round(ms * 1000) / 1000.0}}""")
+    sb.append(QueryFacade.envelopeHead(capped.columns, ""))
+    val n = RowCodec.appendJsonRows(capped.schema, RowCodec.internalRows(capped), sb)
+    sb.append(QueryFacade.envelopeTail(n, t0))
     sb.toString
-  }
-
-  /** Distributed variant: rows are JSON-encoded on the executors
-    * (mapPartitions), the driver only concatenates partition chunks —
-    * the encode cost parallelizes across cores/executors instead of
-    * serializing through one driver thread. Preferred for large results;
-    * `toJsonEnvelope` remains the constant-memory streaming fallback. */
-  def toJsonEnvelopeDistributed(df: DataFrame, maxRows: Long,
-      preserveOrder: Boolean = true): String =
-    new String(toJsonEnvelopeBytesDistributed(df, maxRows, preserveOrder),
-      java.nio.charset.StandardCharsets.UTF_8)
-
-  /** Distributed JSON envelope as UTF-8 wire bytes: executors encode row
-    * chunks in parallel, the driver only splices byte runs (one memcpy
-    * each — no 50 MB String concat). HTTP layers write these bytes
-    * straight to the socket; [[toJsonEnvelopeDistributed]] re-decodes
-    * for callers that need text. */
-  def toJsonEnvelopeBytesDistributed(df: DataFrame, maxRows: Long,
-      preserveOrder: Boolean = true): Array[Byte] = {
-    import java.nio.charset.StandardCharsets.UTF_8
-    // this variant collects every encoded chunk on the driver before
-    // splicing — safe ONLY under a finite cap. The serving routes use
-    // the wave-streaming writeJsonEnvelope; callers here (bench, tests,
-    // embedded use) must state their bound explicitly.
-    require(maxRows > 0 && maxRows < Long.MaxValue,
-      "toJsonEnvelopeBytesDistributed requires a finite row cap; " +
-        "use writeJsonEnvelope for unbounded streaming")
-    val t0 = System.nanoTime()
-    val columns = df.columns
-    val nCols = columns.length
-    val limited = df.limit(maxRows.min(Int.MaxValue).toInt)
-    // a LIMIT/ORDER BY result is a single partition; when the caller
-    // doesn't need row order on the wire, spread the encode across cores.
-    // Only pay the shuffle when the plan is actually narrow — an
-    // unconditional repartition re-shuffles results that already span
-    // the cluster.
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
-    val capped =
-      if (preserveOrder ||
-        limited.queryExecution.toRdd.getNumPartitions >= math.max(2, parallelism / 2))
-        limited
-      else limited.repartition(parallelism)
-    val chunks = QueryFacade.jsonChunkRdd(capped).collect()
-    val rowCount = chunks.map(_._1).sum
-    val head = ("{\"columns\":[" + columns.map(QueryFacade.jsonStr).mkString(",") +
-      "],\"data\":[").getBytes(UTF_8)
-    val ms = (System.nanoTime() - t0) / 1e6
-    val tail =
-      s"""],"row_count":$rowCount,"execution_time_ms":${math.round(ms * 1000) / 1000.0}}"""
-        .getBytes(UTF_8)
-    val runs = chunks.map(_._2).filter(_.length > 0)
-    val total = head.length.toLong + tail.length +
-      runs.map(_.length.toLong).sum + math.max(0, runs.length - 1)
-    require(total <= Int.MaxValue, s"JSON envelope too large: $total bytes")
-    val out = new Array[Byte](total.toInt)
-    var at = 0
-    def put(b: Array[Byte]): Unit = {
-      System.arraycopy(b, 0, out, at, b.length); at += b.length
-    }
-    put(head)
-    var ri = 0
-    while (ri < runs.length) {
-      if (ri > 0) { out(at) = ','; at += 1 }
-      put(runs(ri))
-      ri += 1
-    }
-    put(tail)
-    out
   }
 
   /** Stream the JSON envelope to `out` without ever materializing the
     * result on the driver: partitions encode their rows on the
-    * executors, and the driver fetches the encoded chunks in waves of
-    * `wave` partitions — one parallel job per wave, at most `wave`
-    * chunks resident at a time. Driver memory is O(wave × chunk size),
-    * independent of the result's total size, which is what lets an
-    * uncapped 100M-row SELECT flow through a socket the way the
-    * reference streams it (internal/api/query.go:1745, fasthttp
-    * SetBodyStreamWriter). The default wave (defaultParallelism) keeps
-    * every core busy; smaller waves trade throughput for a tighter
-    * memory bound. Returns the row count written. */
+    * executors, and the driver writes each wave of encoded chunks as it
+    * arrives ([[RowCodec.foreachPartitionChunk]]). Driver memory is one
+    * wave of chunks, independent of the result's total size, which is
+    * what lets an uncapped 100M-row SELECT flow through a socket the way
+    * the reference streams it (internal/api/query.go:1745, fasthttp
+    * SetBodyStreamWriter). Same bytes as [[toJsonEnvelope]] apart from
+    * `execution_time_ms`. Returns the row count written. */
   def writeJsonEnvelope(df: DataFrame, out: java.io.OutputStream,
-      maxRows: Long = Long.MaxValue, wave: Int = 0,
-      headExtra: String = ""): Long = {
+      maxRows: Long = Long.MaxValue, headExtra: String = ""): Long = {
     import java.nio.charset.StandardCharsets.UTF_8
     val t0 = System.nanoTime()
-    val sc = spark.sparkContext
-    val w = if (wave > 0) wave else math.max(1, sc.defaultParallelism)
-    val columns = df.columns
-    val limited =
-      if (maxRows < Long.MaxValue) df.limit(maxRows.min(Int.MaxValue).toInt) else df
-    val chunkRdd = QueryFacade.jsonChunkRdd(limited)
+    val capped = RowCodec.capped(df, maxRows)
+    val schema = capped.schema
     // headExtra: pre-encoded `"k":v,` pairs the HTTP layer prepends
     // (success/timestamp in the reference envelope, query.go:660-675)
-    out.write(("{" + headExtra + "\"columns\":[" +
-      columns.map(QueryFacade.jsonStr).mkString(",") +
-      "],\"data\":[").getBytes(UTF_8))
+    out.write(QueryFacade.envelopeHead(capped.columns, headExtra).getBytes(UTF_8))
     var rows = 0L
-    var wroteAny = false
-    val nParts = chunkRdd.getNumPartitions
-    var start = 0
-    while (start < nParts) {
-      val parts = (start until math.min(start + w, nParts)).toArray
-      val res = sc.runJob(chunkRdd,
-        (it: Iterator[(Long, Array[Byte])]) => it.next(), parts.toSeq)
-      res.foreach { case (n, bytes) =>
-        if (bytes.length > 0) {
-          if (wroteAny) out.write(',')
-          out.write(bytes)
-          wroteAny = true
-          rows += n
-        }
+    RowCodec.foreachPartitionChunk(capped) { it =>
+      val sb = new StringBuilder(1 << 16)
+      (RowCodec.appendJsonRows(schema, it, sb), sb.toString.getBytes(UTF_8))
+    } { case (n, bytes) =>
+      if (n > 0) {
+        if (rows > 0) out.write(',')
+        out.write(bytes)
+        rows += n
       }
-      start += w
     }
-    val ms = (System.nanoTime() - t0) / 1e6
-    out.write(
-      s"""],"row_count":$rows,"execution_time_ms":${math.round(ms * 1000) / 1000.0}}"""
-        .getBytes(UTF_8))
+    out.write(QueryFacade.envelopeTail(rows, t0).getBytes(UTF_8))
     rows
   }
-
-  private def jsonStr(s: String): String = QueryFacade.jsonStr(s)
-
-  private def jsonValue(v: Any): String = QueryFacade.jsonValue(v)
 }
 
 /** Serializable JSON scalar encoding (shared by driver + executors). */
@@ -519,7 +409,7 @@ object QueryFacade {
     if (watched ne sc) {
       sc.addSparkListener(new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
             .filter(cancelledGroups.contains)
             .foreach(g => sc.cancelJob(e.jobId, s"job group $g was cancelled"))
       })
@@ -570,34 +460,16 @@ object QueryFacade {
     * when enabling slow-query logging (arc.toml:117: `1000`). */
   val RecommendedSlowQueryThresholdMs = 1000L
 
-  /** Per-partition UTF-8 JSON row runs: each element is one partition's
-    * `[v,…],[v,…]` bytes (comma-joined rows, no outer brackets) plus its
-    * row count. Runs splice with commas between non-empty ones. */
-  private[query] def jsonChunkRdd(capped: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.rdd.RDD[(Long, Array[Byte])] = {
-    val schema = capped.schema
-    val nCols = schema.length
-    capped.queryExecution.toRdd.mapPartitions { it =>
-      val apps = RowCodec.jsonAppenders(schema)
-      val sb = new StringBuilder(1 << 16)
-      var first = true
-      var n = 0L
-      while (it.hasNext) {
-        val row = it.next()
-        if (!first) sb.append(',')
-        first = false
-        sb.append('[')
-        var i = 0
-        while (i < nCols) {
-          if (i > 0) sb.append(',')
-          if (row.isNullAt(i)) sb.append("null") else apps(i)(row, i, sb)
-          i += 1
-        }
-        sb.append(']')
-        n += 1
-      }
-      Iterator((n, sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    }
+  /** The JSON envelope up to its first row; `headExtra` is spliced in
+    * after the opening brace. */
+  private def envelopeHead(columns: Array[String], headExtra: String): String =
+    "{" + headExtra + "\"columns\":[" + columns.map(jsonStr).mkString(",") +
+      "],\"data\":["
+
+  /** The JSON envelope after its last row, timed from `t0` (nanoTime). */
+  private def envelopeTail(rows: Long, t0: Long): String = {
+    val ms = (System.nanoTime() - t0) / 1e6
+    s"""],"row_count":$rows,"execution_time_ms":${math.round(ms * 1000) / 1000.0}}"""
   }
 
   private[graft] def jsonStr(s: String): String =
@@ -610,19 +482,4 @@ object QueryFacade {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-
-  private[query] def jsonValue(v: Any): String = v match {
-    case null => "null"
-    case s: String => jsonStr(s)
-    case b: Boolean => b.toString
-    case t: java.sql.Timestamp => jsonStr(t.toInstant.toString)
-    case d: java.sql.Date => jsonStr(d.toString)
-    case bd: java.math.BigDecimal => bd.toPlainString
-    case n: Number =>
-      val d = n.doubleValue()
-      if (d.isNaN || d.isInfinite) "null" else n.toString
-    case seq: scala.collection.Seq[_] =>
-      seq.map(jsonValue).mkString("[", ",", "]")
-    case other => jsonStr(String.valueOf(other))
-  }
 }

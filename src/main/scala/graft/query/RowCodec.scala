@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
 
+import scala.reflect.ClassTag
+
 /** Schema-specialized value encoding over Spark's internal row format.
   *
   * The result encoders used to iterate `df.toLocalIterator()` (external
@@ -21,13 +23,55 @@ private[query] object RowCodec {
 
   type JsonAppender = (SpecializedGetters, Int, StringBuilder) => Unit
 
-  /** Rows of the dataframe in internal format — no external-Row
-    * conversion. One parallel collect job (the encoders build an
-    * in-memory result anyway, so partition-at-a-time streaming buys no
-    * memory headroom and costs a sequential job per partition).
-    * `executeCollect` copies rows itself, so aliasing is safe. */
+  /** Rows of the dataframe in internal format, for the driver-side
+    * encoders that return the whole result as one value: no external-Row
+    * conversion, one parallel collect job, and none at all for a local
+    * relation. The streaming writers use [[foreachPartitionChunk]]
+    * instead. `executeCollect` copies rows itself, so aliasing is safe. */
   def internalRows(df: DataFrame): Iterator[InternalRow] =
     df.queryExecution.executedPlan.executeCollect().iterator
+
+  /** Streams a result without holding it on the driver: `encode` turns
+    * each partition's rows into one chunk on the executors, and `consume`
+    * gets the chunks on the driver in partition order. Partitions run in
+    * waves of `defaultParallelism`, one job per wave, so the driver holds
+    * at most one wave of chunks whatever the result's size. `toRdd` runs
+    * `encode` under the session's SQL conf (time zone, ANSI mode). */
+  def foreachPartitionChunk[U: ClassTag](df: DataFrame)(
+      encode: Iterator[InternalRow] => U)(consume: U => Unit): Unit = {
+    val rdd = df.queryExecution.toRdd
+    val sc = rdd.sparkContext
+    val wave = math.max(1, sc.defaultParallelism)
+    val nParts = rdd.getNumPartitions
+    var start = 0
+    while (start < nParts) {
+      val end = start + math.min(wave, nParts - start)
+      sc.runJob(rdd, encode, start until end).foreach(consume)
+      start = end
+    }
+  }
+
+  /** Appends `rows` as comma-joined `[v,…]` JSON arrays (no outer
+    * brackets); returns the row count. */
+  def appendJsonRows(schema: StructType, rows: Iterator[InternalRow],
+      sb: StringBuilder): Long = {
+    val apps = jsonAppenders(schema)
+    var n = 0L
+    while (rows.hasNext) {
+      val row = rows.next()
+      if (n > 0) sb.append(',')
+      sb.append('[')
+      var i = 0
+      while (i < apps.length) {
+        if (i > 0) sb.append(',')
+        if (row.isNullAt(i)) sb.append("null") else apps(i)(row, i, sb)
+        i += 1
+      }
+      sb.append(']')
+      n += 1
+    }
+    n
+  }
 
   /** Cap pushed into the plan — `executeCollect` on a LIMIT plan stops
     * early instead of collecting the full result and truncating. */

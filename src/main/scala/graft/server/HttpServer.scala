@@ -53,8 +53,8 @@ import scala.util.matching.Regex
   *    JSON by Accept, server.go:176) + per-source `…/stats`.
   *
   * Scale stance: the serving layer never materializes a result on the
-  * driver unless the wire format requires it — JSON and Arrow stream
-  * executor-encoded chunks in waves (driver memory O(wave × chunk),
+  * driver — JSON, Arrow and MessagePack stream executor-encoded
+  * chunks in waves (driver memory O(wave × chunk),
   * independent of result size), so an uncapped 100M-row SELECT flows
   * through the socket the way the reference streams via fasthttp's
   * SetBodyStreamWriter (query.go:1745). Auth is an optional static
@@ -639,14 +639,11 @@ final class HttpServer(
           ex.getResponseHeaders.set("Content-Type",
             "application/vnd.apache.arrow.stream")
           ex.sendResponseHeaders(200, 0)
-          val capped =
-            if (effMaxRows < Long.MaxValue) df.limit(effMaxRows.min(Int.MaxValue).toInt)
-            else df
           // buffer: the IPC writer emits each vector buffer piece as its
           // own write — unbuffered, every one becomes an HTTP chunk +
           // syscall (measured 7.4 s → 0.2 s for a 600k-row stream)
           val out = new java.io.BufferedOutputStream(ex.getResponseBody, 1 << 20)
-          rows = ArrowEncoder.writeStream(capped, out)
+          rows = ArrowEncoder.writeStream(df, out, effMaxRows)
           out.flush()
         case "msgpack" =>
           ex.getResponseHeaders.set("Content-Type", "application/x-msgpack")

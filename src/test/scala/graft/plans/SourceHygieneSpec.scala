@@ -18,6 +18,9 @@ import scala.jdk.CollectionConverters._
   *
   * Parquet footers open with read options built from the caller's
   * Hadoop conf, never through the overload that parses a new one.
+  *
+  * The result writers of `graft.query` fetch partitions through the one
+  * wave loop in `RowCodec`, so none of them can drift to its own.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -74,6 +77,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"single-argument ParquetFileReader.open at: ${offenders.mkString(", ")}")
+  }
+
+  test("runJob( appears in graft.query only inside RowCodec") {
+    val query = Paths.get("src/main/scala/graft/query")
+    val offenders = mainSources.filter { p =>
+      p.startsWith(query) && p.getFileName.toString != "RowCodec.scala" &&
+        new String(Files.readAllBytes(p)).contains("runJob(")
+    }
+    assert(offenders.isEmpty,
+      s"runJob( outside RowCodec in: ${offenders.mkString(", ")} — " +
+        "stream partitions through RowCodec.foreachPartitionChunk")
   }
 
   test("every main in src/main is named in README.md's entry points") {

@@ -19,16 +19,19 @@ class QueryFacadeSpec extends SparkSpec {
     assert(json.count(_ == '{') == json.count(_ == '}'))
   }
 
-  test("distributed JSON envelope matches the streamed one") {
+  private def stripTime(j: String) = j.replaceAll("\"execution_time_ms\":[0-9.]+", "")
+
+  test("driver JSON envelope matches the streamed one") {
     val f = facade
     val df = spark.sql(
       "SELECT id AS k, CONCAT('v', id) AS s FROM range(50) ORDER BY k")
     val a = f.toJsonEnvelope(df)
-    val b = f.toJsonEnvelopeDistributed(df, maxRows = 1000)
-    def stripTime(j: String) = j.replaceAll("\"execution_time_ms\":[0-9.]+", "")
-    assert(stripTime(a) == stripTime(b))
-    val capped = f.toJsonEnvelopeDistributed(df, maxRows = 5)
-    assert(capped.contains("\"row_count\":5"))
+    val b = new java.io.ByteArrayOutputStream()
+    assert(f.writeJsonEnvelope(df, b) == 50)
+    assert(stripTime(a) == stripTime(b.toString("UTF-8")))
+    val capped = new java.io.ByteArrayOutputStream()
+    assert(f.writeJsonEnvelope(df, capped, maxRows = 5) == 5)
+    assert(capped.toString("UTF-8").contains("\"row_count\":5"))
   }
 
   test("row cap truncates the stream") {
@@ -37,37 +40,13 @@ class QueryFacadeSpec extends SparkSpec {
     assert(json.contains("\"row_count\":7"))
   }
 
-  test("streamed JSON envelope: wave-bounded fetch, same bytes as distributed") {
+  test("streamed JSON envelope: wave-bounded fetch, same bytes as the driver encode") {
     val f = facade
-    val df = spark.sql(
-      "SELECT id AS k, CONCAT('v', id) AS s FROM range(2000)").repartition(7).persist()
-    try {
-      df.count()
-      // wave=2 over 7 partitions → 4 jobs: at most 2 encoded chunks are
-      // ever resident on the driver, so memory is O(wave × chunk) no
-      // matter how large the result — the uncapped-SELECT path
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val out = new java.io.ByteArrayOutputStream()
-      val rows =
-        try f.writeJsonEnvelope(df, out, wave = 2)
-        finally {
-          // listener delivery is async — settle before reading the count
-          Thread.sleep(500)
-          spark.sparkContext.removeSparkListener(listener)
-        }
-      assert(rows == 2000)
-      assert(jobs.get() == 4, s"expected 4 wave jobs, saw ${jobs.get()}")
-      val streamed = out.toString("UTF-8")
-      val collected = f.toJsonEnvelopeDistributed(df, maxRows = 1000000)
-      def stripTime(j: String) = j.replaceAll("\"execution_time_ms\":[0-9.]+", "")
-      assert(stripTime(streamed) == stripTime(collected))
-    } finally df.unpersist()
+    StreamWaves.check(
+      spark.sql("SELECT id AS k, CONCAT('v', id) AS s FROM range(2000)"), rows = 2000)(
+      f.writeJsonEnvelope(_, _)) { (frame, streamed) =>
+      assert(stripTime(new String(streamed, "UTF-8")) == stripTime(f.toJsonEnvelope(frame)))
+    }
   }
 
   test("estimate wraps the query in COUNT(*), reference warning ladder") {
@@ -163,43 +142,15 @@ class MsgPackEncoderSpec extends SparkSpec {
     assert(decoded("row_count") == 3L)
   }
 
-  test("distributed encode is byte-identical to the driver-side encode") {
-    val df = spark.sql(
-      """SELECT id AS k, CAST(id * 1.5 AS DOUBLE) AS v, CONCAT('s', id) AS s,
-        |  CASE WHEN id % 3 = 0 THEN NULL ELSE id END AS n
-        |FROM range(1000)""".stripMargin)
-      .repartition(7).persist()
-    try {
-      df.count() // pin partition contents so both encodes see the same order
-      val a = MsgPackEncoder.encode(df)
-      val b = MsgPackEncoder.encodeDistributed(df)
-      assert(java.util.Arrays.equals(a, b))
-    } finally df.unpersist()
-  }
-
-  test("distributed encode honors the row cap") {
-    val decoded = graft.ingest.MsgPack.decode(
-      MsgPackEncoder.encodeDistributed(spark.range(100).toDF("id"), maxRows = 9))
-      .asInstanceOf[Map[String, Any]]
-    assert(decoded("row_count") == 9L)
-  }
-
   test("spool-streamed encode is byte-identical to the driver-side encode") {
     val df = spark.sql(
       """SELECT id AS k, CAST(id * 1.5 AS DOUBLE) AS v, CONCAT('s', id) AS s,
         |  CASE WHEN id % 3 = 0 THEN NULL ELSE id END AS n
         |FROM range(1000)""".stripMargin)
-      .repartition(7).persist()
-    try {
-      df.count() // pin partition contents so both encodes see the same order
-      val a = MsgPackEncoder.encode(df)
-      val out = new java.io.ByteArrayOutputStream()
-      // wave=2 forces multiple spool waves over the 7 partitions — the
-      // bounded-memory path, not a one-wave degenerate case
-      val rows = MsgPackEncoder.writeStream(df, out, wave = 2)
-      assert(rows == 1000L)
-      assert(java.util.Arrays.equals(a, out.toByteArray))
-    } finally df.unpersist()
+    StreamWaves.check(df, rows = 1000)(MsgPackEncoder.writeStream(_, _)) {
+      (frame, streamed) =>
+        assert(java.util.Arrays.equals(MsgPackEncoder.encode(frame), streamed))
+    }
   }
 
   test("spool-streamed encode honors the row cap and cleans its spool") {
@@ -223,73 +174,114 @@ class MsgPackEncoderSpec extends SparkSpec {
 }
 
 class ArrowEncoderSpec extends SparkSpec {
+  import org.apache.arrow.memory.RootAllocator
+  import org.apache.arrow.vector.ipc.ArrowStreamReader
+  import scala.jdk.CollectionConverters._
+
+  /** Decodes an IPC stream; `onBatch` sees each loaded batch's root. */
+  private def readBatches(bytes: Array[Byte])(
+      onBatch: org.apache.arrow.vector.VectorSchemaRoot => Unit): Unit = {
+    val alloc = new RootAllocator(Long.MaxValue)
+    val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), alloc)
+    try {
+      val root = reader.getVectorSchemaRoot
+      while (reader.loadNextBatch()) onBatch(root)
+    } finally { reader.close(); alloc.close() }
+  }
+
+  private def decodedRows(bytes: Array[Byte]): Seq[Seq[AnyRef]] = {
+    val rows = Seq.newBuilder[Seq[AnyRef]]
+    readBatches(bytes) { root =>
+      val vs = root.getFieldVectors.asScala.toSeq
+      for (i <- 0 until root.getRowCount) rows += vs.map(_.getObject(i))
+    }
+    rows.result()
+  }
+
   test("arrow IPC stream round-trips rows and types") {
-    import org.apache.arrow.memory.RootAllocator
-    import org.apache.arrow.vector.ipc.ArrowStreamReader
+    import org.apache.arrow.vector.types.TimeUnit
+    import org.apache.arrow.vector.types.pojo.ArrowType
     val df = spark.sql(
       """SELECT id AS k, CAST(id * 0.5 AS DOUBLE) AS v, CONCAT('n', id) AS s,
-        |  id % 2 = 0 AS flag, TIMESTAMP '2024-06-01 00:00:00' + make_interval(0,0,0,0,0,0,id) AS t
-        |FROM range(10)""".stripMargin)
-    val bytes = ArrowEncoder.encode(df, batchRows = 4)
-    val alloc = new RootAllocator(Long.MaxValue)
-    val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), alloc)
-    try {
-      val root = reader.getVectorSchemaRoot
-      assert(root.getSchema.getFields.size() == 5)
-      var rows = 0L
-      var sumK = 0L
-      while (reader.loadNextBatch()) {
-        val kVec = root.getVector("k").asInstanceOf[org.apache.arrow.vector.BigIntVector]
-        for (i <- 0 until root.getRowCount) sumK += kVec.get(i)
-        rows += root.getRowCount
+        |  id % 2 = 0 AS flag, TIMESTAMP '2024-06-01 00:00:00' + make_interval(0,0,0,0,0,0,id) AS t,
+        |  IF(id = 3, NULL,
+        |    TIMESTAMP_NTZ '2024-06-01 00:00:00' + make_interval(0,0,0,0,0,0,id)) AS tn
+        |FROM range(5000)""".stripMargin)
+    var rows = 0L
+    var sumK = 0L
+    var batches = 0
+    readBatches(ArrowEncoder.encode(df)) { root =>
+      assert(root.getSchema.getFields.size() == 6)
+      // TIMESTAMP_NTZ is a zone-less µs timestamp, like JSON's ISO render
+      // and msgpack's epoch-µs int64 — not a digit string
+      assert(root.getSchema.findField("tn").getType ==
+        new ArrowType.Timestamp(TimeUnit.MICROSECOND, null))
+      val kVec = root.getVector("k").asInstanceOf[org.apache.arrow.vector.BigIntVector]
+      val tnVec = root.getVector("tn").asInstanceOf[org.apache.arrow.vector.TimeStampMicroVector]
+      for (i <- 0 until root.getRowCount) {
+        val k = kVec.get(i)
+        sumK += k
+        if (k == 3) assert(tnVec.isNull(i))
+        else assert(tnVec.get(i) == 1717200000000000L + k * 1000000L)
       }
-      assert(rows == 10 && sumK == 45)
-    } finally { reader.close(); alloc.close() }
+      rows += root.getRowCount
+      batches += 1
+    }
+    // 5000 rows span two 4096-row record batches
+    assert(rows == 5000 && sumK == 12497500L && batches == 2)
   }
 
-  test("distributed arrow encode stitches partition chunks into one stream") {
-    import org.apache.arrow.memory.RootAllocator
-    import org.apache.arrow.vector.ipc.ArrowStreamReader
-    val df = spark.range(1000).toDF("id").repartition(7)
-    val bytes = ArrowEncoder.encodeDistributed(df, batchRows = 100)
-    val alloc = new RootAllocator(Long.MaxValue)
-    val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), alloc)
-    try {
-      val root = reader.getVectorSchemaRoot
-      var rows = 0L
-      var sum = 0L
-      while (reader.loadNextBatch()) {
-        val v = root.getVector("id").asInstanceOf[org.apache.arrow.vector.BigIntVector]
-        for (i <- 0 until root.getRowCount) sum += v.get(i)
-        rows += root.getRowCount
-      }
-      assert(rows == 1000 && sum == 499500)
-    } finally { reader.close(); alloc.close() }
-  }
-
-  test("streamed arrow write: byte-identical to distributed, wave-bounded") {
-    val df = spark.range(1000).toDF("id").repartition(5).persist()
-    try {
-      df.count()
-      val full = ArrowEncoder.encodeDistributed(df, batchRows = 100)
-      val out = new java.io.ByteArrayOutputStream()
-      val rows = ArrowEncoder.writeStream(df, out, batchRows = 100, wave = 2)
-      assert(rows == 1000)
-      assert(java.util.Arrays.equals(full, out.toByteArray))
-    } finally df.unpersist()
+  test("streamed arrow write: same rows as the driver encode, wave-bounded") {
+    StreamWaves.check(spark.range(1000).toDF("id"), rows = 1000)(
+      ArrowEncoder.writeStream(_, _)) { (frame, streamed) =>
+      // record batches end at partition boundaries, so compare rows
+      val driver = decodedRows(ArrowEncoder.encode(frame))
+      assert(driver.length == 1000)
+      assert(decodedRows(streamed) == driver)
+    }
   }
 
   test("row cap limits arrow rows") {
-    import org.apache.arrow.memory.RootAllocator
-    import org.apache.arrow.vector.ipc.ArrowStreamReader
-    val bytes = ArrowEncoder.encode(spark.range(100).toDF("id"), maxRows = 5)
-    val alloc = new RootAllocator(Long.MaxValue)
-    val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), alloc)
+    val df = spark.range(100).toDF("id")
+    val streamed = new java.io.ByteArrayOutputStream()
+    assert(ArrowEncoder.writeStream(df, streamed, maxRows = 5) == 5)
+    for (bytes <- Seq(ArrowEncoder.encode(df, maxRows = 5), streamed.toByteArray))
+      assert(decodedRows(bytes).length == 5)
+  }
+}
+
+/** The wave check shared by the three streamed writers: `df` spread over
+  * 2 × defaultParallelism + 1 persisted partitions must stream in three
+  * jobs, one per wave of defaultParallelism partitions, so the driver
+  * never holds more than one wave of chunks. `compare` gets the
+  * persisted frame and the streamed bytes. */
+object StreamWaves extends org.scalatest.Assertions {
+  def check(df: org.apache.spark.sql.DataFrame, rows: Long)(
+      write: (org.apache.spark.sql.DataFrame, java.io.OutputStream) => Long)(
+      compare: (org.apache.spark.sql.DataFrame, Array[Byte]) => Unit): Unit = {
+    val sc = df.sparkSession.sparkContext
+    val frame = df.repartition(2 * sc.defaultParallelism + 1).persist()
     try {
-      var rows = 0
-      while (reader.loadNextBatch()) rows += reader.getVectorSchemaRoot.getRowCount
-      assert(rows == 5)
-    } finally { reader.close(); alloc.close() }
+      frame.count()
+      org.apache.spark.TestListenerBus.drain(sc)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      val out = new java.io.ByteArrayOutputStream()
+      val written =
+        try write(frame, out)
+        finally {
+          org.apache.spark.TestListenerBus.drain(sc)
+          sc.removeSparkListener(listener)
+        }
+      assert(written == rows)
+      assert(jobs.get() == 3, s"expected 3 wave jobs, saw ${jobs.get()}")
+      compare(frame, out.toByteArray)
+    } finally frame.unpersist()
   }
 }
 
