@@ -40,7 +40,7 @@ class QueryFacadeSpec extends SparkSpec {
     assert(json.contains("\"row_count\":7"))
   }
 
-  test("streamed JSON envelope: wave-bounded fetch, same bytes as the driver encode") {
+  test("streamed JSON envelope: wave-bounded, same bytes as the driver encode") {
     val f = facade
     StreamWaves.check(
       spark.sql("SELECT id AS k, CONCAT('v', id) AS s FROM range(2000)"), rows = 2000)(
