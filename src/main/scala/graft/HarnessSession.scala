@@ -58,6 +58,8 @@ object HarnessSession {
       // bench by exactly that tier). Scale-independent JVM-cache sizing,
       // not a data-size tunable; bounded by class count, not data.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // file modes set through java.nio, not a chmod process per file
+      .config(graft.catalog.NioLocalFileSystem.sparkConf)
     val isLocal = master == "local" || master.startsWith("local[")
     if (!isLocal) {
       b.config("spark.executor.extraClassPath",

@@ -1,5 +1,6 @@
 package graft
 
+import graft.catalog.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 /** Loads the driver-provided test tables (TESTDATA.md) and registers them
@@ -33,7 +34,7 @@ object Tables {
     if (name == "events") loadEvents(spark, s"$sfDir/$name.parquet")
     else {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      ParquetRead(spark, Seq(s"$sfDir/$name.parquet"), merge = false)
     }
 
   /** Read an events parquet (any path), normalizing `ts` from whichever of
@@ -43,7 +44,7 @@ object Tables {
     // Harmless for µs-encoded files; required so a NANOS-encoded `ts`
     // surfaces as LongType instead of failing the vectorized reader.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(path)
+    val df = ParquetRead(spark, Seq(path), merge = false)
     import org.apache.spark.sql.types.{LongType, TimestampType}
     df.schema("ts").dataType match {
       case LongType      => df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -52,8 +53,10 @@ object Tables {
     }
   }
 
-  /** Register all tables for `sfDir` as temp views (idempotent).
-    * Cheap: schema-only reads; data is scanned lazily per query. */
+  /** Register all tables for `sfDir` as temp views (idempotent). Each
+    * table's schema comes from its footer on the driver
+    * ([[graft.catalog.ParquetRead]]), so registering starts no Spark job;
+    * data is scanned lazily per query. */
   def registerAll(spark: SparkSession, sfDir: String): Unit = synchronized {
     val already = spark.conf.getOption("graft.registered.sfDir")
     if (!already.contains(sfDir)) {

@@ -37,7 +37,7 @@ object ZipfProbe {
     GraftFunctions.registerAll(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = graft.catalog.ParquetRead(spark, Seq(s"$dir/documents.parquet"), merge = false)
     val nDocs = docs.count()
 
     // ZIPF_ONLY: comma-separated substring filter for re-probing one

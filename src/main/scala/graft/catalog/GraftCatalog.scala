@@ -217,9 +217,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     }
     val tiers = Seq(tablePath(db, m), dailyPath(db, m)).filter(hasData)
     require(tiers.nonEmpty, s"measurement $db/$m has no data")
-    tiers.map { p =>
-      spark.read.option("mergeSchema", "true").option("basePath", p).parquet(p)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    tableMultiTier(tiers)
   }
 
   /** Register as a temp view so `spark.sql` resolves `m` directly. */
@@ -231,9 +229,12 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * read with its own basePath (partition-column discovery is per
     * tier — two roots share no common base) and union'd by name. */
   def tableMultiTier(paths: Seq[String]): DataFrame =
-    paths.map { p =>
-      spark.read.option("mergeSchema", "true").option("basePath", p).parquet(p)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    paths.map(tier).reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** One tier root read with union-by-name schema evolution, its
+    * partition columns discovered below `root`. */
+  def tier(root: String): DataFrame =
+    ParquetRead(spark, Seq(root), merge = true, Map("basePath" -> root))
 
   // ---- partition path helpers -----------------------------------------
 

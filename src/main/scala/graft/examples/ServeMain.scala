@@ -41,6 +41,7 @@ object ServeMain {
       // instead of FIFO-queueing behind the first long scan
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
+      .config(graft.catalog.NioLocalFileSystem.sparkConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val server = new HttpServer(spark, root, port,

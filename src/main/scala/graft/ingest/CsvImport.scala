@@ -76,7 +76,7 @@ object CsvImport {
   def parquet(catalog: GraftCatalog, db: String, measurement: String,
       path: String, timeCol: String = "time",
       timeFormat: Option[String] = None): Long = {
-    val raw = catalog.spark.read.option("mergeSchema", "true").parquet(path)
+    val raw = graft.catalog.ParquetRead(catalog.spark, Seq(path), merge = true)
     require(raw.columns.contains(timeCol),
       s"parquet import needs a '$timeCol' column; got ${raw.columns.mkString(",")}")
     val df = timeFormat match {

@@ -1,14 +1,16 @@
 package graft.jobs
 
-import graft.catalog.{GraftCatalog, TableMeta}
+import graft.catalog.{GraftCatalog, ParquetRead, TableMeta}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Hourly/daily compaction with last-write-wins dedup — the reference's
   * core maintenance operator (internal/compaction/hourly.go, daily.go,
@@ -31,16 +33,20 @@ import org.apache.spark.sql.functions._
   * the default maxFilesPerBatch = 0) is one Spark job with no exchange,
   * like the reference's one `COPY (SELECT … ORDER BY …)` per hour. The
   * read is coalesced to one partition BEFORE the dedup window, so the
-  * window, the sort and the write run in one task; the only other job
-  * is the `mergeSchema` footer read. Nothing parallel is given up: one
-  * output file is written by one task either way, and the partitions of
-  * one trigger run concurrently through [[inParallel]]. No
-  * cross-partition shuffle is ever needed because the dedup key (tags,
-  * time) is entirely inside one hour partition. Census at `local[4]`
-  * (CompactionPlanSpec, SCALE.md): a 30-file hour or a 25-file day took
-  * 5 jobs / 5 stages / 11 tasks with the old hash-exchange window and
-  * `orderBy(...).coalesce(1)`, and takes 2 / 2 / 5 now, 4 of those tasks
-  * being the footer job's.
+  * window, the sort and the write run in one task. That job is the only
+  * one: the read schema is merged on the driver from the input footers
+  * the compaction opens once for its row count ([[readFooters]],
+  * [[graft.catalog.ParquetRead.files]]), and an input list longer than
+  * Spark's parallel-listing threshold is read without a listing job.
+  * Nothing parallel is given up: one output file is written by one task
+  * either way, and the partitions of one trigger run concurrently
+  * through [[inParallel]]. No cross-partition shuffle is ever needed
+  * because the dedup key (tags, time) is entirely inside one hour
+  * partition. Census at `local[4]` (CompactionPlanSpec, SCALE.md): a
+  * 30-file hour or a 25-file day took 5 jobs / 5 stages / 11 tasks with
+  * the old hash-exchange window and `orderBy(...).coalesce(1)`, 2 / 2 / 5
+  * with Spark's footer job for the schema, and takes 1 / 1 / 1 now; so
+  * does a 40-file hour.
   */
 object Compaction {
 
@@ -52,10 +58,19 @@ object Compaction {
     * over thousands of partitions per tick; a count() job per partition
     * just for reporting would double the scheduler's work. */
   private[graft] def footerRowCount(conf: Configuration, files: Seq[Path]): Long =
+    rowCount(readFooters(conf, files))
+
+  /** Each file's full footer, row groups included, opened once: the
+    * compaction of a partition takes its input row count, column ranges
+    * and read schema from this one pass. */
+  private[graft] def readFooters(conf: Configuration, files: Seq[Path]): Seq[Footer] =
     files.map { f =>
       val r = openFooter(conf, f)
-      try r.getRecordCount finally r.close()
-    }.sum
+      try new Footer(f, r.getFooter) finally r.close()
+    }
+
+  private def rowCount(footers: Seq[Footer]): Long =
+    footers.iterator.flatMap(_.getParquetMetadata.getBlocks.asScala).map(_.getRowCount).sum
 
   /** Footer reader that reuses `conf`. The `open` overload that takes
     * only the input file builds a fresh Hadoop `Configuration` per call
@@ -66,17 +81,17 @@ object Compaction {
       HadoopReadOptions.builder(conf).build())
 
   /** (min, max) per requested numeric column across the files, from
-    * footer row-group statistics only — ONE footer open per file
-    * regardless of column count, no data pass. A column maps to None
-    * when any file lacks stats for it (missing column, all-null chunks,
-    * or a non-numeric physical type such as INT96).
+    * the row-group statistics of their footers ([[readFooters]]) — no
+    * data pass. A column maps to None when any file lacks stats for it
+    * (missing column, all-null chunks, or a non-numeric physical type
+    * such as INT96).
     *
     * Columns in `requireMicrosTs` must additionally be annotated
     * TIMESTAMP(MICROS) in EVERY file: stats are compared in one unit, and
     * a legacy file storing time as epoch millis/seconds (the mixed-type
     * fixture normalizeTime repairs) would otherwise contribute a range
     * off by 10^3+ — silently degenerating the quantization. */
-  private[graft] def footerColumnRanges(conf: Configuration, files: Seq[Path],
+  private[graft] def footerColumnRanges(footers: Seq[Footer],
       columns: Seq[String],
       requireMicrosTs: Set[String] = Set.empty): Map[String, Option[(Double, Double)]] = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -90,27 +105,23 @@ object Compaction {
           t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
         case _ => false
       }
-    val perFile: Seq[Map[String, Option[(Double, Double)]]] = files.map { f =>
-      val r = openFooter(conf, f)
-      try {
-        import scala.jdk.CollectionConverters._
-        columns.map { column =>
-          val ranges = r.getFooter.getBlocks.asScala.flatMap { b =>
-            b.getColumns.asScala
-              .find(_.getPath.toDotString == column)
-              .flatMap { c =>
-                val s = c.getStatistics
-                if (s == null || !s.hasNonNullValue) None
-                else if (requireMicrosTs.contains(column) && !isMicrosTs(c)) None
-                else for {
-                  mn <- num(s.genericGetMin()); mx <- num(s.genericGetMax())
-                } yield (mn, mx)
-              }
-          }
-          column -> (if (ranges.isEmpty) None
-                     else Some((ranges.map(_._1).min, ranges.map(_._2).max)))
-        }.toMap
-      } finally r.close()
+    val perFile: Seq[Map[String, Option[(Double, Double)]]] = footers.map { f =>
+      columns.map { column =>
+        val ranges = f.getParquetMetadata.getBlocks.asScala.flatMap { b =>
+          b.getColumns.asScala
+            .find(_.getPath.toDotString == column)
+            .flatMap { c =>
+              val s = c.getStatistics
+              if (s == null || !s.hasNonNullValue) None
+              else if (requireMicrosTs.contains(column) && !isMicrosTs(c)) None
+              else for {
+                mn <- num(s.genericGetMin()); mx <- num(s.genericGetMax())
+              } yield (mn, mx)
+            }
+        }
+        column -> (if (ranges.isEmpty) None
+                   else Some((ranges.map(_._1).min, ranges.map(_._2).max)))
+      }.toMap
     }
     columns.map { c =>
       val rs = perFile.map(_(c))
@@ -124,7 +135,7 @@ object Compaction {
 
   private[graft] def footerColumnRange(conf: Configuration, files: Seq[Path],
       column: String): Option[(Double, Double)] =
-    footerColumnRanges(conf, files, Seq(column))(column)
+    footerColumnRanges(readFooters(conf, files), Seq(column))(column)
 
   def compactHour(catalog: GraftCatalog, db: String, m: String,
       partDir: Path, minFiles: Int = 2, maxFilesPerBatch: Int = 0): Result = {
@@ -149,8 +160,9 @@ object Compaction {
     // each covering a disjoint sort-key range. 0 = one output file.
     val numOut = if (maxFilesPerBatch <= 0) 1
       else math.ceil(files.length.toDouble / maxFilesPerBatch).toInt
-    val deduped = readDeduped(spark, meta, files, onePartition = numOut <= 1)
-    val rowsIn = footerRowCount(conf, files)
+    val footers = readFooters(conf, files)
+    val deduped = readDeduped(spark, meta, footers, onePartition = numOut <= 1)
+    val rowsIn = rowCount(footers)
     val sortCols = (meta.sortKeys.filter(deduped.columns.contains) :+ "time").map(col)
     val out =
       if (numOut <= 1) deduped.sortWithinPartitions(sortCols: _*)
@@ -238,8 +250,9 @@ object Compaction {
     val files = hourFiles ++ dailyFiles
 
     val meta = catalog.readMeta(db, m)
-    val deduped = readDeduped(spark, meta, files, onePartition = true)
-    val rowsIn = footerRowCount(conf, files)
+    val footers = readFooters(conf, files)
+    val deduped = readDeduped(spark, meta, footers, onePartition = true)
+    val rowsIn = rowCount(footers)
     // Z-order at the daily rewrite when configured: these are the
     // long-lived files that absorb most scans, and the interleaved order
     // clusters EVERY z-key so row-group min/max stats prune range
@@ -251,7 +264,7 @@ object Compaction {
       org.apache.spark.sql.types.TimestampType).toSet
     val footerRanges =
       if (zKeys.isEmpty) Map.empty[String, Option[(Double, Double)]]
-      else footerColumnRanges(conf, files, zKeys, requireMicrosTs = tsKeys)
+      else footerColumnRanges(footers, zKeys, requireMicrosTs = tsKeys)
     val zRanges: Seq[(org.apache.spark.sql.Column, Double, Double)] =
       zKeys.flatMap { k =>
         import org.apache.spark.sql.types._
@@ -361,28 +374,25 @@ object Compaction {
     inParallel(due)(dayDir => compactDay(catalog, db, m, dayDir))
   }
 
-  /** Read `files` as one time-repaired frame with one row per (tags...,
-    * time), the latest file winning. Recency is the file NAME, which
-    * sorts by flush time within an hour directory and across the hours
-    * of a day. With `onePartition` the read is coalesced to a single
-    * partition BEFORE the dedup window: the window then needs no
-    * exchange, and the caller's sort and write stay in that one task. */
+  /** Read the files of `footers` as one time-repaired frame with one
+    * row per (tags..., time), the latest file winning. Recency is the
+    * file NAME, which sorts by flush time within an hour directory and
+    * across the hours of a day. With `onePartition` the read is coalesced
+    * to a single partition BEFORE the dedup window: the window then needs
+    * no exchange, and the caller's sort and write stay in that one task. */
   private def readDeduped(spark: SparkSession, meta: TableMeta,
-      files: Seq[Path], onePartition: Boolean): DataFrame = {
+      footers: Seq[Footer], onePartition: Boolean): DataFrame = {
     val srcName = substring_index(input_file_name(), "/", -1)
-    // union-by-name with type coercion: a plain mergeSchema read fails when
-    // one file wrote `time` as string/int64 (the mixed-type fixture the
-    // reference repairs, dedup.go:238-259) — fall back to per-file reads,
-    // repair each, then unionByName.
+    // union-by-name with type coercion: merging the footers' schemas fails
+    // when one file wrote `time` as string/int64 (the mixed-type fixture
+    // the reference repairs, dedup.go:238-259) — fall back to per-file
+    // reads, repair each, then unionByName.
     val repaired =
-      try normalizeTime(
-        spark.read.option("mergeSchema", "true")
-          .parquet(files.map(_.toString): _*)
-          .withColumn("_src", srcName))
+      try normalizeTime(ParquetRead.files(spark, footers).withColumn("_src", srcName))
       catch {
         case _: org.apache.spark.SparkException =>
-          files.map { f =>
-            normalizeTime(spark.read.parquet(f.toString).withColumn("_src", srcName))
+          footers.map { f =>
+            normalizeTime(ParquetRead.files(spark, Seq(f)).withColumn("_src", srcName))
           }.reduce(_.unionByName(_, allowMissingColumns = true))
       }
     val in = if (onePartition) repaired.coalesce(1) else repaired

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.catalog.GraftCatalog
+import graft.catalog.{GraftCatalog, ParquetRead}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -94,7 +94,7 @@ object TargetedDelete {
           .stripPrefix(new Path(base).toUri.getPath).stripPrefix("/")
         val pathCols = rel.split("/").filter(_.contains("="))
           .map(_.split("=")(0)).toSeq
-        spark.read.option("basePath", base).parquet(p.toString)
+        ParquetRead(spark, Seq(p.toString), merge = false, Map("basePath" -> base))
           .where(!coalesce(predicate, lit(false)))
           .drop(pathCols: _*)
           .coalesce(1)

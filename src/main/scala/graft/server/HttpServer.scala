@@ -1371,8 +1371,7 @@ final class HttpServer(
       cfs.globStatus(new Path(cold, "year=*")).nonEmpty
     if (!hasCold) dbCat.register(db, m)
     else {
-      val coldDf = dbCat.spark.read.option("mergeSchema", "true")
-        .option("basePath", cold.toString).parquet(cold.toString)
+      val coldDf = dbCat.tier(cold.toString)
       scala.util.Try(dbCat.table(db, m)).toOption match {
         case Some(hot) =>
           hot.unionByName(coldDf, allowMissingColumns = true)

@@ -18,6 +18,8 @@ object TestSpark {
       // live in tests — a long scan must not starve a concurrent small
       // query (FairSchedulerSpec)
       .config("spark.scheduler.mode", "FAIR")
+      // the server's local filesystem (no chmod process per file)
+      .config(graft.catalog.NioLocalFileSystem.sparkConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -17,8 +17,11 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** The plan shape of a single-file compaction: the whole hour (or day)
-  * is read, deduped, sorted and written in one job with no exchange.
-  * The only other job is the `mergeSchema` footer read. */
+  * is read, deduped, sorted and written in one job with no exchange, and
+  * that job is the only one. The read schema comes from the input
+  * footers the driver opens anyway, and an input list longer than
+  * Spark's parallel-listing threshold (32 paths) is listed on the driver
+  * too. */
 class CompactionPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import CompactionPlanSpec.Census
 
@@ -86,7 +89,8 @@ class CompactionPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   private def assertOneJobNoExchange(c: Census): Unit = {
-    assert(c.jobs <= 2, s"expected the mergeSchema read and one write: $c")
+    info(s"${c.jobs} jobs / ${c.stages} stages / ${c.tasks} tasks")
+    assert(c.jobs == 1, s"expected the write job alone: $c")
     assert(c.writes.length == 1, s"one write plan expected: ${c.writes.length}")
     val exchanges = collect(c.writes.head) { case e: Exchange => e }
     assert(exchanges.isEmpty, s"exchange in the write plan:\n${c.writes.head}")
@@ -122,6 +126,16 @@ class CompactionPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(rows.filter(r => r._1 == "h1" && r._2 == "r2" && r._3 == dupTime).map(_._4) ==
       Seq(-29.0), "the later write must win")
     assertSortedByRegionTime(rows)
+  }
+
+  test("compactHour: 40 flushes, more than Spark lists without a job, still one job") {
+    val cat = newCatalog()
+    (0 until 40).foreach(i => flush(cat, base, i, 5))
+    val part = cat.listHourPartitions("default", "cpu").head
+    val (res, c) = census(Compaction.compactHour(cat, "default", "cpu", part))
+    assert(res.compacted && res.filesIn == 40 && res.rowsIn == 200 && res.rowsOut == 200, res)
+    assertOneJobNoExchange(c)
+    assert(storedRows(part).length == 200)
   }
 
   test("compactDay: a day of hour files compacts in one exchange-free job, later write wins") {

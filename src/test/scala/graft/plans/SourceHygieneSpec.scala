@@ -21,6 +21,9 @@ import scala.jdk.CollectionConverters._
   *
   * The result writers of `graft.query` fetch partitions through the one
   * wave loop in `RowCodec`, so none of them can drift to its own.
+  *
+  * Parquet is read only through `ParquetRead`, which takes the schema
+  * from the footers on the driver instead of a Spark inference job.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -77,6 +80,48 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"single-argument ParquetFileReader.open at: ${offenders.mkString(", ")}")
+  }
+
+  /** Names of the calls chained after `from`: for `.a(x)\n  .b.c(y)`
+    * that is a, b, c. Arguments directly at `from` are skipped. */
+  private def chainedCalls(s: String, from: Int): Seq[String] = {
+    var i = from
+    def skipSpace(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
+    def skipArgs(): Unit = if (i < s.length && s(i) == '(') {
+      var depth = 0
+      do {
+        if (s(i) == '(') depth += 1 else if (s(i) == ')') depth -= 1
+        i += 1
+      } while (depth > 0 && i < s.length)
+    }
+    val calls = Seq.newBuilder[String]
+    skipArgs()
+    skipSpace()
+    while (i < s.length && s(i) == '.') {
+      val start = i + 1
+      i = start
+      while (i < s.length && s(i).isLetterOrDigit) i += 1
+      calls += s.substring(start, i)
+      skipSpace()
+      skipArgs()
+      skipSpace()
+    }
+    calls.result()
+  }
+
+  test("Parquet is read, and mergeSchema set, only inside ParquetRead") {
+    // a `.read … .parquet(` chain without a schema infers it in a Spark
+    // job; ParquetRead reads it from the footers on the driver
+    val home = Paths.get("src/main/scala/graft/catalog/ParquetRead.scala")
+    val offenders = mainSources.filterNot(_ == home).flatMap { p =>
+      val s = new String(Files.readAllBytes(p))
+      val reads = "\\.read\\b".r.findAllMatchIn(s).map(_.end)
+        .filter(chainedCalls(s, _).contains("parquet"))
+      val merges = "\"mergeSchema\"".r.findAllMatchIn(s).map(_.start)
+      (reads ++ merges).map(at => s"$p:${s.take(at).count(_ == '\n') + 1}")
+    }
+    assert(offenders.isEmpty,
+      s"Parquet read outside ParquetRead at: ${offenders.mkString(", ")}")
   }
 
   test("runJob( appears in graft.query only inside RowCodec") {
