@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session construction shared by the driver-facing mains (Verify,
-  * Bench, PlanProbe, StreamBench, ThroughputBench, ServiceBench,
-  * StreamStateSoak, the probe mains).
+/** Session construction shared by every main in `src/main` (Verify,
+  * Bench, PlanProbe, ZipfProbe and the `graft.examples` mains) and by
+  * perfbench. A main that serves concurrent queries adds FAIR
+  * scheduling on top.
   *
   * `SPARK_GRAFT_MASTER` overrides the default `local[cpus]` — the
   * multi-JVM gate runs the whole correctness suite under

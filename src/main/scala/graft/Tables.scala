@@ -1,6 +1,7 @@
 package graft
 
 import graft.catalog.ParquetRead
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 /** Loads the driver-provided test tables (TESTDATA.md) and registers them
@@ -32,18 +33,16 @@ object Tables {
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, s"$sfDir/$name.parquet")
-    else {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      ParquetRead(spark, Seq(s"$sfDir/$name.parquet"), merge = false)
-    }
+    else ParquetRead(spark, Seq(s"$sfDir/$name.parquet"), merge = false)
 
   /** Read an events parquet (any path), normalizing `ts` from whichever of
     * the three historical encodings it carries to microsecond
     * TimestampType. */
   def loadEvents(spark: SparkSession, path: String): DataFrame = {
-    // Harmless for µs-encoded files; required so a NANOS-encoded `ts`
-    // surfaces as LongType instead of failing the vectorized reader.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Spark reads a TIMESTAMP(NANOS) column only as a raw LONG, and only
+    // with this setting, which holds for the whole session and must stay
+    // set until the scan runs: set it only when the footer has one
+    if (nanosTs(spark, path)) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = ParquetRead(spark, Seq(path), merge = false)
     import org.apache.spark.sql.types.{LongType, TimestampType}
     df.schema("ts").dataType match {
@@ -52,6 +51,16 @@ object Tables {
       case _             => df.withColumn("ts", F.col("ts").cast("timestamp"))
     }
   }
+
+  /** Whether the footer of the events file at `path` stores `ts` as
+    * TIMESTAMP(NANOS). */
+  private def nanosTs(spark: SparkSession, path: String): Boolean =
+    ParquetRead.fileSchema(spark, path).filter(_.containsField("ts")).exists { schema =>
+      schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _ => false
+      }
+    }
 
   /** Register all tables for `sfDir` as temp views (idempotent). Each
     * table's schema comes from its footer on the driver

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dedup-family scale probe on the realistic Zipf-vocabulary corpus
@@ -26,13 +25,7 @@ object ZipfProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val label = if (args.length > 1) args(1) else dir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = HarnessSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.registerAll(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -3,6 +3,7 @@ package graft.catalog
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.types.StructType
@@ -36,6 +37,16 @@ object ParquetRead {
       case None =>
         spark.read.options(options).option("mergeSchema", merge).parquet(paths: _*)
     }
+  }
+
+  /** The Parquet schema in the footer of the first data file under
+    * `path`, the file Spark's inference reads; None for a missing root
+    * or no data file. */
+  def fileSchema(spark: SparkSession, path: String): Option[MessageType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    leafFiles(conf, Seq(path)).flatMap(_.headOption).flatMap { f =>
+      FooterSchema.footers(conf, Seq(f), ignoreCorruptFiles = false).headOption
+    }.map(_.getParquetMetadata.getFileMetaData.getSchema)
   }
 
   /** Read exactly the files of `footers`, which the caller has opened,

@@ -1,9 +1,9 @@
 package graft.examples
 
+import graft.HarnessSession
 import graft.catalog.{GraftCatalog, TableMeta}
 import graft.ingest.{ColumnarBatch, HourPartitionedWriter, LineProtocol}
 import graft.jobs.{Compaction, ContinuousQuery}
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end demo of the engine's write/lifecycle path (SURVEY §7.2):
   * Line Protocol ingest → sorted hour-partitioned ZSTD Parquet →
@@ -13,13 +13,7 @@ import org.apache.spark.sql.SparkSession
 object IngestDemo {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/graft_demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = HarnessSession.builder("4").appName("graft-demo").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.GraftFunctions.registerAll(spark)
 

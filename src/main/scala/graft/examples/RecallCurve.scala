@@ -1,6 +1,7 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.HarnessSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measure the recall curves that AnnRecallSpec pins (VERDICT r3 #1):
@@ -17,10 +18,7 @@ object RecallCurve {
   private val NQ = 20 // queries: vec_id < 20; corpus: the rest
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = HarnessSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))

@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.HarnessSession
 import graft.server.HttpServer
-import org.apache.spark.sql.SparkSession
 
 /** Start the engine as a standalone HTTP service (the reference's
   * `arc serve` shape):
@@ -19,29 +19,25 @@ import org.apache.spark.sql.SparkSession
   *   GRAFT_COMPACT_EVERY_SEC  start the in-process compaction
   *                        scheduler at this interval (unset = admin
   *                        trigger only)
-  *   SPARK_GRAFT_CPUS     local[N] parallelism (default all cores)
+  *   SPARK_GRAFT_CPUS     local[N] parallelism (default all cores,
+  *                        at least 4)
+  *   SPARK_GRAFT_MASTER   Spark master (default local[N])
   *
-  * On a real cluster, build the SparkSession against your cluster
-  * master instead — HttpServer only needs the session and a storage
-  * root (file://, s3a://, abfs://).
+  * The session is [[graft.HarnessSession]]'s with FAIR scheduling. On a
+  * real cluster, point SPARK_GRAFT_MASTER at the cluster master —
+  * HttpServer only needs the session and a storage root (file://,
+  * s3a://, abfs://).
   */
 object ServeMain {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("./graft-data")
     val port = args.lift(1).flatMap(_.toIntOption).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = HarnessSession.builder()
       .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       // FAIR scheduling: QueryFacade assigns each query a pool from a
       // fixed hashed set, so concurrent queries share task slots
       // instead of FIFO-queueing behind the first long scan
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .config(graft.catalog.NioLocalFileSystem.sparkConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val server = new HttpServer(spark, root, port,

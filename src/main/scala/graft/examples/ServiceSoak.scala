@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.HarnessSession
 import graft.server.HttpServer
-import org.apache.spark.sql.SparkSession
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -37,11 +37,7 @@ object ServiceSoak {
     // fully once the stampede drains (r10 verdict stretch #9: the
     // OverloadGateSpec contract under real traffic)
     val stampede = sys.env.get("SOAK_STAMPEDE").contains("1")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = HarnessSession.builder("16").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val root = java.nio.file.Files.createTempDirectory("graft_soak").toString
     val server = new HttpServer(spark, root)

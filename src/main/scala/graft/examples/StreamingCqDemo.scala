@@ -1,9 +1,9 @@
 package graft.examples
 
+import graft.HarnessSession
 import graft.catalog.{GraftCatalog, TableMeta}
 import graft.jobs.Compaction
 import graft.streaming.{IngestStream, StreamingCq}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -26,10 +26,7 @@ object StreamingCqDemo {
   private val base = 1717200000000000L
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = HarnessSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

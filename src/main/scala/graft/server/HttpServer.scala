@@ -13,7 +13,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, ScheduledFuture, TimeUnit}
 import java.util.zip.GZIPInputStream
 import scala.collection.concurrent.TrieMap
 import scala.util.matching.Regex
@@ -585,28 +585,10 @@ final class HttpServer(
     if (!checkResource(ex, refs, "read")) {
       mQueryErrors.incrementAndGet(); return
     }
-    // governance: rate limits then quotas (reference query.go:1443-1468);
-    // denials are 429 with the reference's Retry-After header, and the
-    // allow carries this token's per-query row/duration caps
-    val govCaps: Option[(Long, Int)] = tokenOf(ex) match {
-      case None => Some((0L, 0))
-      case Some(t) =>
-        val rate = governance.checkRateLimit(t.id)
-        if (!rate.allowed) {
-          ex.getResponseHeaders.set("Retry-After", rate.retryAfterSec.toString)
-          mQueryErrors.incrementAndGet()
-          sendJson(ex, 429, err(rate.reason, ts)); None
-        } else {
-          val quota = governance.checkQuota(t.id)
-          if (!quota.allowed) {
-            mQueryErrors.incrementAndGet()
-            sendJson(ex, 429, err(quota.reason, ts)); None
-          } else Some((quota.maxRows.toLong, quota.maxDurationSec))
-        }
+    val (effMaxRows, govTimeoutSec) = governed(ex, ts) match {
+      case Some(caps) => caps
+      case None => return
     }
-    if (govCaps.isEmpty) return
-    val (govMaxRows, govTimeoutSec) = govCaps.get
-    val effMaxRows = if (govMaxRows > 0) math.min(maxRows, govMaxRows) else maxRows
     withSession(sess) { // plan AND stream under the db session's conf
     val (id, df) =
       try {
@@ -624,14 +606,7 @@ final class HttpServer(
           sendJson(ex, 403, err(msg(e), ts)); return
       }
     ex.getResponseHeaders.set("X-Graft-Query-Id", id.toString)
-    // max-scan-duration: cancel the job group when the budget elapses
-    // (the reference attaches a deadline context, query.go governanceTimeout)
-    val timeoutTask =
-      if (govTimeoutSec > 0)
-        Some(timeoutScheduler.schedule(new Runnable {
-          def run(): Unit = { facade.cancel(id); () }
-        }, govTimeoutSec.toLong, java.util.concurrent.TimeUnit.SECONDS))
-      else None
+    val timeoutTask = scanDeadline(id, govTimeoutSec)
     var rows = -1L
     try {
       wire match {
@@ -677,6 +652,43 @@ final class HttpServer(
     }
     }
   }
+
+  /** Governance for one query request, shared by POST /api/v1/query and
+    * the simple read: the token's rate limit, then its quotas (reference
+    * query.go:1443-1468). A denial sends the 429 (a rate limit with the
+    * reference's Retry-After header) and returns None. An allow returns
+    * the request's row cap (the server's, lowered by the token's) and
+    * the token's max scan duration in seconds (0: none). */
+  private def governed(ex: HttpExchange, ts: String): Option[(Long, Int)] =
+    tokenOf(ex) match {
+      case None => Some((maxRows, 0))
+      case Some(t) =>
+        val rate = governance.checkRateLimit(t.id)
+        if (!rate.allowed) {
+          ex.getResponseHeaders.set("Retry-After", rate.retryAfterSec.toString)
+          mQueryErrors.incrementAndGet()
+          sendJson(ex, 429, err(rate.reason, ts)); None
+        } else {
+          val quota = governance.checkQuota(t.id)
+          if (!quota.allowed) {
+            mQueryErrors.incrementAndGet()
+            sendJson(ex, 429, err(quota.reason, ts)); None
+          } else {
+            val cap = quota.maxRows.toLong
+            Some((if (cap > 0) math.min(maxRows, cap) else maxRows, quota.maxDurationSec))
+          }
+        }
+    }
+
+  /** Max scan duration: cancel query `id` when `seconds` elapse (the
+    * reference attaches a deadline context, query.go governanceTimeout).
+    * The caller cancels the returned task when the query ends first. */
+  private def scanDeadline(id: Long, seconds: Int): Option[ScheduledFuture[_]] =
+    if (seconds > 0)
+      Some(timeoutScheduler.schedule(new Runnable {
+        def run(): Unit = { facade.cancel(id); () }
+      }, seconds.toLong, TimeUnit.SECONDS))
+    else None
 
   private def handleEstimate(ex: HttpExchange): Unit = {
     val t0 = System.nanoTime()
@@ -1118,25 +1130,13 @@ final class HttpServer(
     if (!checkResource(ex, Seq((db, meas)), "read")) {
       mQueryErrors.incrementAndGet(); return
     }
-    // governance shares the POST /api/v1/query path: rate limits, hour/
-    // day quotas (429 + Retry-After), and the token's per-query row cap
-    val govRowCap: Long = tokenOf(ex) match {
-      case None => 0L
-      case Some(t) =>
-        val rate = governance.checkRateLimit(t.id)
-        if (!rate.allowed) {
-          ex.getResponseHeaders.set("Retry-After", rate.retryAfterSec.toString)
-          mQueryErrors.incrementAndGet()
-          sendJson(ex, 429, err(rate.reason)); return
-        }
-        val quota = governance.checkQuota(t.id)
-        if (!quota.allowed) {
-          mQueryErrors.incrementAndGet()
-          sendJson(ex, 429, err(quota.reason)); return
-        }
-        quota.maxRows.toLong
+    // governance as on POST /api/v1/query: rate limits, hour/day quotas,
+    // and the token's per-query row and scan-duration caps
+    val ts = now()
+    val (effMaxRows, govTimeoutSec) = governed(ex, ts) match {
+      case Some(caps) => caps
+      case None => return
     }
-    val effMaxRows = if (govRowCap > 0) math.min(maxRows, govRowCap) else maxRows
     // backtick-quote identifiers: MeasName allows '-', which unquoted
     // would parse as subtraction
     val orderSql = orderBy.split(",").map(_.trim).map { part =>
@@ -1183,7 +1183,6 @@ final class HttpServer(
           return
       }
     }
-    val ts = now()
     // same registry/cancel path as POST /api/v1/query — a slow
     // simple-read must be listable, cancellable, and must never run
     // under a stale thread-local job group
@@ -1198,6 +1197,7 @@ final class HttpServer(
           sendJson(ex, 400, err(msg(e), ts)); return
       }
     ex.getResponseHeaders.set("X-Graft-Query-Id", id.toString)
+    val timeoutTask = scanDeadline(id, govTimeoutSec)
     var rows = -1L
     try {
       ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -1212,7 +1212,10 @@ final class HttpServer(
         mQueryErrors.incrementAndGet()
         try ex.getResponseBody.close() catch { case _: Throwable => () }
         throw e
-    } finally facade.complete(id, rows)
+    } finally {
+      timeoutTask.foreach(_.cancel(false))
+      facade.complete(id, rows)
+    }
     }
   }
 

@@ -28,8 +28,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (S⁺, S⁻) pair per CONFIGURED series — bounded by the limits map,
   * not by whatever keys appear in the stream (unconfigured series
   * pass through stateless); events apply in event-time order within
-  * each micro-batch, arrival order across batches (the watermark
-  * bounds the disorder — StreamingEwma's documented trade).
+  * each micro-batch, arrival order across batches. An event that
+  * arrives a batch after a later event of its series folds after it:
+  * the trade for alarming as each batch lands instead of holding
+  * events until the watermark passes them. The watermark bounds how
+  * far out of order such an event can be.
   */
 object StreamingCusum {
 

@@ -1,7 +1,11 @@
 package graft
 
+import graft.catalog.ParquetReadSpec
+import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{TimestampType, TimestampNTZType, LongType}
 import java.sql.Timestamp
+import scala.util.Try
 
 /** Schema-drift canary over the driver-generated testdata (TESTDATA.md).
   *
@@ -79,5 +83,18 @@ class TestdataCanarySpec extends SparkSpec {
         s"$enc: value drift through loader")
     }
     ev.unpersist()
+  }
+
+  test("registering the tables leaves a TIMESTAMP(NANOS) read elsewhere as in a fresh session") {
+    assume(have)
+    // the tables store µs; a NANOS file outside them must not start
+    // reading as raw LONG because the tables were registered
+    val path = tmpDir("canary_nanos") + "/other.parquet"
+    ParquetReadSpec.writeEvents(spark, path, utc = true, TimeUnit.NANOS)
+    def read(s: SparkSession) =
+      Try(s.read.parquet(path).collect().toSeq).toEither.left.map(_.getClass)
+    val registered = spark.newSession()
+    Tables.registerAll(registered, sfDir)
+    assert(read(registered) == read(spark.newSession()))
   }
 }

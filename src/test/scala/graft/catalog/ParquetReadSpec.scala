@@ -21,9 +21,9 @@ import java.util.concurrent.atomic.AtomicInteger
   * own inference gives it (run here as the oracle) and starts no Spark
   * job doing so. */
 class ParquetReadSpec extends SparkSpec {
+  import ParquetReadSpec.{base, writeEvents}
 
   private val H = 3600L * 1000000L
-  private val base = 1717200000000000L // 2024-06-01T00:00:00Z in µs
 
   /** `f`'s result and the Spark jobs it started on this thread. */
   private def jobs[A](f: => A): (A, Int) = {
@@ -74,29 +74,12 @@ class ParquetReadSpec extends SparkSpec {
       spark.read.option("mergeSchema", "true").parquet(dir))
   }
 
-  /** An `events` file whose `ts` has the given Parquet encoding, written
-    * without Spark's schema metadata so the footer's types are converted. */
-  private def writeEvents(path: String, utc: Boolean, unit: TimeUnit): Unit = {
-    val schema: MessageType = Types.buildMessage()
-      .required(INT64).named("event_id")
-      .required(INT64).as(LogicalTypeAnnotation.timestampType(utc, unit)).named("ts")
-      .named("events")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new Path(path), conf))
-      .withType(schema).withConf(conf).build()
-    val rows = new SimpleGroupFactory(schema)
-    val perUs = if (unit == TimeUnit.NANOS) 1000L else 1L
-    try (0 until 10).foreach { i =>
-      w.write(rows.newGroup().append("event_id", i.toLong).append("ts", (base + i) * perUs))
-    } finally w.close()
-  }
-
   test("events with each of its three ts encodings (NANOS, NTZ, UTC)") {
     val dir = tmpDir("pr_events")
     for ((name, utc, unit) <- Seq(("nanos", true, TimeUnit.NANOS),
         ("ntz", false, TimeUnit.MICROS), ("utc", true, TimeUnit.MICROS))) {
       val path = s"$dir/$name.parquet"
-      writeEvents(path, utc, unit)
+      writeEvents(spark, path, utc, unit)
       val s = spark.newSession()
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       assertParity(ParquetRead(s, Seq(path), merge = false), s.read.parquet(path))
@@ -176,5 +159,27 @@ class ParquetReadSpec extends SparkSpec {
       assert(fresh.table(t).count() == 3, t)
       if (t != "events") assert(fresh.table(t).schema == fresh.read.parquet(s"$sf/$t.parquet").schema)
     }
+  }
+}
+
+object ParquetReadSpec {
+  val base = 1717200000000000L // 2024-06-01T00:00:00Z in µs
+
+  /** An `events` file of ten rows from `base` whose `ts` has the given
+    * Parquet encoding, written without Spark's schema metadata so the
+    * footer's types are converted. */
+  def writeEvents(spark: SparkSession, path: String, utc: Boolean, unit: TimeUnit): Unit = {
+    val schema: MessageType = Types.buildMessage()
+      .required(INT64).named("event_id")
+      .required(INT64).as(LogicalTypeAnnotation.timestampType(utc, unit)).named("ts")
+      .named("events")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new Path(path), conf))
+      .withType(schema).withConf(conf).build()
+    val rows = new SimpleGroupFactory(schema)
+    val perUs = if (unit == TimeUnit.NANOS) 1000L else 1L
+    try (0 until 10).foreach { i =>
+      w.write(rows.newGroup().append("event_id", i.toLong).append("ts", (base + i) * perUs))
+    } finally w.close()
   }
 }

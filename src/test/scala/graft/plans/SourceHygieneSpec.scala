@@ -24,6 +24,10 @@ import scala.jdk.CollectionConverters._
   *
   * Parquet is read only through `ParquetRead`, which takes the schema
   * from the footers on the driver instead of a Spark inference job.
+  *
+  * Every operator object in `graft.streaming` and `graft.operators` is
+  * called from `src/main` outside its own file, so an operator whose
+  * only caller is its spec cannot pile up.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -133,6 +137,51 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"runJob( outside RowCodec in: ${offenders.mkString(", ")} — " +
         "stream partitions through RowCodec.foreachPartitionChunk")
+  }
+
+  /** `s` without its `//` and `/* */` comments. String and character
+    * literals are kept whole, so a `//` inside one is not a comment. */
+  private def code(s: String): String = {
+    val out = new StringBuilder
+    val charLiteral = "'(\\\\.|[^\\\\'\\n])'".r
+    var i = 0
+    def keep(end: Int): Unit = { out ++= s.substring(i, end); i = end }
+    while (i < s.length) {
+      if (s.startsWith("\"\"\"", i)) {
+        val end = s.indexOf("\"\"\"", i + 3)
+        keep(if (end < 0) s.length else end + 3)
+      } else if (s(i) == '"') {
+        var j = i + 1
+        while (j < s.length && s(j) != '"' && s(j) != '\n') j += (if (s(j) == '\\') 2 else 1)
+        keep(math.min(j + 1, s.length))
+      } else if (s(i) == '\'') {
+        keep(i + charLiteral.findPrefixOf(s.subSequence(i, math.min(i + 4, s.length)))
+          .fold(1)(_.length))
+      } else if (s.startsWith("//", i)) {
+        while (i < s.length && s(i) != '\n') i += 1
+      } else if (s.startsWith("/*", i)) {
+        val end = s.indexOf("*/", i + 2)
+        i = if (end < 0) s.length else end + 2
+        out += ' '
+      } else keep(i + 1)
+    }
+    out.result()
+  }
+
+  test("every object in graft.streaming and graft.operators has a caller in src/main") {
+    val dirs = Seq("streaming", "operators").map(d => Paths.get(s"src/main/scala/graft/$d"))
+    val sources = mainSources.map(p => p -> code(new String(Files.readAllBytes(p))))
+    val uncalled = sources.filter { case (p, _) => dirs.exists(p.startsWith) }.flatMap {
+      case (p, s) =>
+        "(?m)^(?:private\\S*\\s+)?(?:case\\s+)?object\\s+(\\w+)".r.findAllMatchIn(s)
+          .map(_.group(1)).filterNot { name =>
+            val named = s"\\b$name\\b".r
+            sources.exists { case (q, c) => q != p && named.findFirstIn(c).nonEmpty }
+          }.map(name => s"$name ($p)")
+    }
+    assert(uncalled.isEmpty,
+      s"objects named nowhere else in src/main: ${uncalled.mkString(", ")} — " +
+        "delete an operator that only its spec calls")
   }
 
   test("every main in src/main is named in README.md's entry points") {

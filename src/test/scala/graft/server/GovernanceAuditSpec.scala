@@ -116,6 +116,38 @@ class GovernanceAuditSpec extends SparkSpec {
     } finally req("DELETE", s"/api/v1/governance/policies/$id", Root)
   }
 
+  test("simple read: the policy's max scan duration cancels a slow read") {
+    val (tok, id) = fixture
+    assert(req("PUT", s"/api/v1/governance/policies/$id", Root,
+      jb("max_scan_duration_sec" -> 1)).statusCode() == 200)
+    // the subquery counts 400G generated rows: minutes uncancelled
+    val slow = "SELECT count(*) FROM range(0, 400000000000, 1, 4)"
+    val path = "/api/v1/query/gvm?where=" +
+      java.net.URLEncoder.encode(s"usage > ($slow)", UTF_8)
+    try {
+      val t0 = System.nanoTime()
+      val fut = client.sendAsync(
+        HttpRequest.newBuilder(URI.create(base + path))
+          .header("Authorization", s"Bearer $tok").GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      val outcome = scala.util.Try(fut.get(30, java.util.concurrent.TimeUnit.SECONDS))
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      assert(elapsed < 30, s"the read ran past its 1 s cap: $elapsed s")
+      outcome.foreach(r => assert(!r.body().contains("\"row_count\""),
+        s"a cancelled read must not deliver a complete envelope: ${r.body().take(300)}"))
+      val history = jsonOf(req("GET", "/api/v1/queries/history", Root)).get("queries")
+      val entry = (0 until history.size()).map(history.get)
+        .find(_.get("sql").asText().contains(slow))
+      assert(entry.map(_.get("status").asText()).contains("cancelled"), history.toString)
+    } finally {
+      req("DELETE", s"/api/v1/governance/policies/$id", Root)
+      // a read the cap missed must not run on into later tests
+      val active = jsonOf(req("GET", "/api/v1/queries", Root)).get("queries")
+      (0 until active.size()).map(active.get(_).get("query_id").asText())
+        .foreach(q => req("POST", s"/api/v1/query/$q/cancel", Root))
+    }
+  }
+
   test("partial policy PUT merges over the existing caps (no silent wipe)") {
     val (_, id) = fixture
     assert(req("PUT", s"/api/v1/governance/policies/$id", Root,

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 
 import java.io.File
 
-/** Forked-JVM worker for [[StreamingRestartSpec]]: runs one stateful
-  * streaming job (counter rate / near-dup / heavy hitters) against a
-  * parquet file source with a checkpoint, in one of two phases:
+/** Forked-JVM worker for [[StreamingRestartSpec]]: runs one of the two
+  * stateful streaming jobs (near-dup, heavy hitters) against a parquet
+  * file source with a checkpoint, in one of two phases:
   *
   *  - `crash`: start the query, wait until the first two file-batches
   *    are fully committed, then `Runtime.halt` — no `stop()`, no
@@ -17,9 +17,9 @@ import java.io.File
   *    gracefully, write a `_DONE` marker.
   *
   * The parent asserts exactly-once output across the two phases: the
-  * Append-mode jobs write through the transactional parquet file sink
-  * (its `_spark_metadata` manifest excludes any orphan files the crash
-  * left behind); the Update-mode job (heavy hitters) writes through an
+  * Append-mode job (near-dup) writes through the transactional parquet
+  * file sink (its `_spark_metadata` manifest excludes any orphan files
+  * the crash left behind); the Update-mode job (heavy hitters) writes through an
   * IDEMPOTENT foreachBatch — `overwrite` into a per-batchId directory,
   * so a replayed batch lands on top of its own partial output.
   *
@@ -43,14 +43,6 @@ object RestartChild {
     spark.sparkContext.setLogLevel("WARN")
 
     val query = job match {
-      case "counter" =>
-        val in = spark.readStream
-          .schema("series string, ts timestamp, id long, value double")
-          .option("maxFilesPerTrigger", "1").parquet(inputDir)
-        StreamingCounterRate.increments(in, "series", "ts", "id", "value")
-          .writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckptDir)
-          .outputMode("append").start()
       case "neardup" =>
         val in = spark.readStream
           .schema("id long, text string")

@@ -3,13 +3,13 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import java.io.File
 import scala.jdk.CollectionConverters._
 
-/** Cross-JVM checkpoint recovery for the flatMapGroupsWithState jobs:
-  * a FORKED child JVM runs the query, is `Runtime.halt`-killed with the
+/** Cross-JVM checkpoint recovery for the two flatMapGroupsWithState
+  * jobs a `StreamBench` row runs (near-dup and heavy hitters): a
+  * FORKED child JVM runs the query, is `Runtime.halt`-killed with the
   * query live after the first two file-batches commit, and a second
   * fork resumes from the checkpoint to drain the rest of the input.
   * The in-process streaming specs prove batch parity and bounded state;
@@ -75,53 +75,6 @@ class StreamingRestartSpec extends SparkSpec {
     val ckpt = new File(base, "ckpt")
     val out = new File(base, "out"); out.mkdirs()
     (input.getAbsolutePath, ckpt.getAbsolutePath, out.getAbsolutePath)
-  }
-
-  test("counter rate: halt mid-stream, resume from checkpoint, exactly-once") {
-    val (input, ckpt, out) = setup("counter")
-    // two series, monotone (ts, id) across files; series 'b' resets at
-    // row 5 (value drops -> inc = new value). Rows 0-5 in the pre-crash
-    // files, 6-11 after — the reset and its baseline STRADDLE the crash,
-    // so a correct increment for row 6+ REQUIRES recovered state.
-    val vals = Map(
-      "a" -> Seq(10.0, 12.0, 15.0, 15.5, 20.0, 21.0, 25.0, 30.0, 31.0, 40.0, 41.5, 50.0),
-      "b" -> Seq(100.0, 110.0, 120.0, 130.0, 140.0, 3.0, 9.0, 12.0, 20.0, 21.0, 22.0, 30.0))
-    def rows(lo: Int, hi: Int) = (lo until hi).flatMap { i =>
-      Seq("a", "b").map(s =>
-        (s, new java.sql.Timestamp(1700000000000L + i * 1000L), i.toLong, vals(s)(i)))
-    }
-    writeFile(rows(0, 3).toDF("series", "ts", "id", "value"), input, 0)
-    writeFile(rows(3, 6).toDF("series", "ts", "id", "value"), input, 1)
-    fork("counter", "crash", input, ckpt, out)
-    writeFile(rows(6, 9).toDF("series", "ts", "id", "value"), input, 2)
-    writeFile(rows(9, 12).toDF("series", "ts", "id", "value"), input, 3)
-    fork("counter", "resume", input, ckpt, out)
-
-    val got = spark.read.parquet(out)
-      .select("series", "id", "inc", "late")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)), r.getBoolean(3)))
-    // no duplication: one emission per input row
-    assert(got.length == 24, s"expected 24 increments, got ${got.length}")
-    assert(got.map(t => (t._1, t._2)).distinct.length == 24, "duplicate emissions")
-    assert(got.forall(!_._4), "no row may be marked late (input is monotone)")
-    // exact expected increments, computed independently
-    val expected = vals.flatMap { case (s, vs) =>
-      vs.zipWithIndex.map { case (v, i) =>
-        val inc = if (i == 0) 0.0
-          else if (v >= vs(i - 1)) v - vs(i - 1)
-          else v // counter reset
-        (s, i.toLong) -> inc
-      }
-    }
-    got.foreach { case (s, id, inc, _) =>
-      assert(inc.contains(expected((s, id))),
-        s"($s,$id): got $inc expected ${expected((s, id))}")
-    }
-    // the reset row (b,5) and its successor (b,6) sit on OPPOSITE sides
-    // of the crash — state recovery is what makes these exact
-    assert(expected(("b", 6L)) == 6.0)
   }
 
   test("near-dup: halt mid-stream, resume, pair set equals single-run backstop") {
