@@ -11,8 +11,8 @@ import scala.sys.process._
   * prove the job still completes with the exact no-kill result.
   *
   * The workload is the operator family's WORST case for executor loss:
-  * `DedupClusters.components` forced onto its distributed star-
-  * contraction path — every round barriers the edge frame and the NEXT
+  * `DedupClusters.starComponents`, the distributed star-contraction
+  * arm of `components` — every round barriers the edge frame and the NEXT
   * round re-reads those blocks, so state lives only in the barrier (a
   * broadcast-shielded operator like CoocLift survives a kill even with
   * localCheckpoint, because its barrier is read once into a broadcast
@@ -62,8 +62,7 @@ object ClusterKillProbe {
 
     def runOnce(): (Long, Long, Double) = {
       val t0 = System.nanoTime()
-      val comps = graft.operators.DedupClusters.components(
-        edges, "a", "b", driverCutoverEdges = 0)
+      val comps = graft.operators.DedupClusters.starComponents(edges, "a", "b")
       val Seq(c0, c1) = comps.columns.toSeq.take(2)
       // xxhash64 of every output row folded order-independently (XOR —
       // no ANSI overflow, commutative): a row-set fingerprint

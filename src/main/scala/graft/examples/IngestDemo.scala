@@ -54,7 +54,7 @@ object IngestDemo {
       """SELECT host, CAST(AVG(usage_idle) AS DOUBLE) AS avg_idle FROM cpu
         |WHERE time >= {start_time} AND time < {end_time} GROUP BY host""".stripMargin,
       "default", "cpu_hourly", tagColumns = Seq("host"))
-    val (exec, _) = ContinuousQuery.tick(cat, cq, base, base + H)
+    val exec = ContinuousQuery.execute(cat, cq, base, base + H)
     println(s"cq emitted ${exec.rows} rows")
     println("cpu_hourly rows: " + cat.table("default", "cpu_hourly").count())
     spark.stop()

@@ -64,18 +64,17 @@ object PinKillProbe {
     val shardBudget = math.max(1L, n * 499 / 256)
 
     val ops: Seq[(String, () => DataFrame)] = Seq(
-      // cutoverBytes=0 forces the distributed arms — the probe tests
-      // exactly the pin machinery, never the small-input window path
+      // each operator's distributed arm, called by name — the probe
+      // tests exactly the pin machinery, never the small-input window
       "shardpack" -> (() =>
-        ShardPack.assign(base, col("k"), col("w"), shardBudget,
-          cutoverBytes = 0L)),
+        ShardPack.shardIds(ShardPack.distributedPriors(base, col("k"), col("w")),
+          shardBudget)),
       "budgetselect" -> (() =>
         BudgetSelect.distributedSelect(base, col("g"),
           Seq((col("w"), false)), "k", col("w"), lit(n * 499 / 8192))
           .select(col("k"), col("sel_prior"))),
       "globalrank" -> (() =>
-        GlobalRank.withRowNumber(base, Seq(col("w"), col("k")), "rn",
-            cutoverBytes = 0L)
+        GlobalRank.stampedRowNumber(base, Seq(col("w"), col("k")), "rn")
           .select(col("k"), col("rn"))),
       "bestfitpack" -> (() =>
         BestFitPack.pack(base, col("g"), col("k"), col("w"),

@@ -72,11 +72,9 @@ object HourPartitionedWriter {
   /** Write one flush batch into `{root}/{db}/{measurement}`.
     *
     * The batch is written to a sibling tmp tree partitioned by
-    * year/month/day/hour/_salt — `_salt = pmod(hash(time), filesPerHour)`
-    * spreads each touched hour over exactly `filesPerHour` parallel
-    * writers/files (a large backfill would otherwise serialize each hour
-    * through one task) — then every leaf file is renamed into its real
-    * hour dir under the reference's recency-ordered scheme
+    * year/month/day/hour — one writer task and one file per touched
+    * hour — then every leaf file is renamed into its real hour dir
+    * under the reference's recency-ordered scheme
     * `{m}_{flushMicros}_{seq}.parquet` (arrow_writer.go:3504-3519):
     * compaction's last-write-wins dedup orders rows by source file name,
     * so names MUST sort by flush time (Spark's UUID part names don't).
@@ -88,7 +86,7 @@ object HourPartitionedWriter {
     *         parquet footers); 0 otherwise — hot-path writers that
     *         discard the count skip the per-file footer reads. */
   def write(catalog: GraftCatalog, db: String, measurement: String,
-      df: DataFrame, filesPerHour: Int = 1, countRows: Boolean = false): Long = {
+      df: DataFrame, countRows: Boolean = false): Long = {
     require(df.columns.contains("time"), "write batch must carry a 'time' column")
     // re-asserted at every engine write (not only in the catalog
     // constructor): the conf is session-global and other code may have
@@ -98,18 +96,14 @@ object HourPartitionedWriter {
     val meta = catalog.readMeta(db, measurement)
     val sortCols: Seq[Column] =
       (meta.sortKeys.filter(df.columns.contains) :+ "time").map(col)
-    val saltCols = PartitionCols :+ "_salt"
     // explicit partition count: repartition-by-column alone is an AQE
     // coalescing target, which would serialize the sort+encode of a large
     // flush through a handful of tasks
     val shufflePartitions = catalog.spark.conf
       .get("spark.sql.shuffle.partitions", "200").toInt
     val prepared = withPartitionColumns(applyDecimals(df, meta))
-      .withColumn("_salt",
-        if (filesPerHour <= 1) lit(0)
-        else pmod(hash(col("time")), lit(filesPerHour)))
-      .repartition(shufflePartitions, saltCols.map(col): _*)
-      .sortWithinPartitions(saltCols.map(col) ++ sortCols: _*)
+      .repartition(shufflePartitions, PartitionCols.map(col): _*)
+      .sortWithinPartitions(PartitionCols.map(col) ++ sortCols: _*)
 
     val conf = catalog.spark.sparkContext.hadoopConfiguration
     val tableDir = new org.apache.hadoop.fs.Path(catalog.tablePath(db, measurement))
@@ -119,7 +113,7 @@ object HourPartitionedWriter {
     try {
       prepared.write
         .mode("overwrite")
-        .partitionBy(saltCols: _*)
+        .partitionBy(PartitionCols: _*)
         .option("compression", "zstd")
         .options(bloomOptions(meta.tagColumns.filter(df.columns.contains)))
         .parquet(tmpBase.toString)
@@ -130,14 +124,13 @@ object HourPartitionedWriter {
           case f if f.isFile && f.getPath.getName.endsWith(".parquet") => Seq(f.getPath)
           case _ => Nil
         }
-      // group by hour dir (tmp path minus the _salt segment), move in —
-      // hundreds of per-partition metadata ops, done concurrently (an
-      // object store would want the same)
+      // group by hour dir, move in — hundreds of per-partition metadata
+      // ops, done concurrently (an object store would want the same)
       val qualTmp = fs.makeQualified(tmpBase).toString
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       val moves = leafFiles(tmpBase)
-        .groupBy(_.getParent.getParent) // .../hour=H/_salt=K/file -> hour dir
+        .groupBy(_.getParent) // .../hour=H/file -> hour dir
         .toSeq.map { case (tmpHourDir, files) =>
           Future {
             val rel = fs.makeQualified(tmpHourDir).toString

@@ -29,9 +29,9 @@ import scala.jdk.CollectionConverters._
   *  - output: one sorted ZSTD file per partition, sources atomically
   *    replaced (write to _compact_tmp, then swap).
   *
-  * Scale: a single-file output (every daily compaction, and hourly with
-  * the default maxFilesPerBatch = 0) is one Spark job with no exchange,
-  * like the reference's one `COPY (SELECT … ORDER BY …)` per hour. The
+  * Scale: every compaction, hourly or daily, writes one file in one
+  * Spark job with no exchange, like the reference's one
+  * `COPY (SELECT … ORDER BY …)` per hour. The
   * read is coalesced to one partition BEFORE the dedup window, so the
   * window, the sort and the write run in one task. That job is the only
   * one: the read schema is merged on the driver from the input footers
@@ -138,7 +138,7 @@ object Compaction {
     footerColumnRanges(readFooters(conf, files), Seq(column))(column)
 
   def compactHour(catalog: GraftCatalog, db: String, m: String,
-      partDir: Path, minFiles: Int = 2, maxFilesPerBatch: Int = 0): Result = {
+      partDir: Path, minFiles: Int = 2): Result = {
     val spark = catalog.spark
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = partDir.getFileSystem(conf)
@@ -149,26 +149,11 @@ object Compaction {
       return Result(partDir.toString, files.length, 0, 0, compacted = false)
 
     val meta = catalog.readMeta(db, m)
-    // maxFilesPerBatch mirrors the reference's compaction.max_files_per_batch
-    // (tier.go:22-40) but inverts WHERE it applies: the reference batches
-    // the INPUT because DuckDB's read_parquet crashes on thousands of
-    // files in one call; Spark reads any file count in one distributed
-    // job, so dedup stays GLOBAL (the reference's batch-scoped dedup
-    // cannot merge duplicates straddling two batches) and the knob
-    // bounds only the OUTPUT: ceil(inputs / N) range-partitioned files —
-    // the same "smaller, independently-transferable outputs" contract,
-    // each covering a disjoint sort-key range. 0 = one output file.
-    val numOut = if (maxFilesPerBatch <= 0) 1
-      else math.ceil(files.length.toDouble / maxFilesPerBatch).toInt
     val footers = readFooters(conf, files)
-    val deduped = readDeduped(spark, meta, footers, onePartition = numOut <= 1)
+    val deduped = readDeduped(spark, meta, footers)
     val rowsIn = rowCount(footers)
     val sortCols = (meta.sortKeys.filter(deduped.columns.contains) :+ "time").map(col)
-    val out =
-      if (numOut <= 1) deduped.sortWithinPartitions(sortCols: _*)
-      else deduped
-        .repartitionByRange(numOut, sortCols: _*)
-        .sortWithinPartitions(sortCols: _*)
+    val out = deduped.sortWithinPartitions(sortCols: _*)
 
     // crash-safe swap, journaled in the per-table manifest (protocol in
     // CompactionManifest's scaladoc): write tmp, record inputs + the
@@ -176,10 +161,10 @@ object Compaction {
     // Any crash point is repaired deterministically by recover(): a
     // crash before begin() leaves only untracked tmp garbage (removed
     // on the next pass). The entry must list actual — not planned —
-    // outputs: a range partition can come up empty, and a planned-but-
-    // never-created output would make recovery roll back a committed
-    // swap. Output uses the recency-ordered name scheme: it must sort
-    // OLDER than any flush that lands after this compaction.
+    // outputs: a planned-but-never-created output would make recovery
+    // roll back a committed swap. Output uses the recency-ordered name
+    // scheme: it must sort OLDER than any flush that lands after this
+    // compaction.
     val tmp = new Path(partDir.getParent, s"_compact_tmp_${partDir.getName}")
     fs.delete(tmp, true)
     val compactUs = System.currentTimeMillis() * 1000L
@@ -190,26 +175,21 @@ object Compaction {
         meta.tagColumns.filter(deduped.columns.contains)))
       .parquet(tmp.toString)
     val newFiles = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
-    require(newFiles.nonEmpty && newFiles.length <= numOut,
-      s"write produced ${newFiles.length} files, expected 1..$numOut")
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)
+    require(newFiles.length == 1, s"one-partition write produced ${newFiles.length} files")
     val rowsOut = footerRowCount(conf, newFiles.toSeq)
-    // part-file lexical order == range order; seq preserves it in the name
-    val finalNames = newFiles.indices.map(i =>
-      graft.ingest.HourPartitionedWriter.flushFileName(m, compactUs, i))
+    val finalPath = new Path(partDir,
+      graft.ingest.HourPartitionedWriter.flushFileName(m, compactUs, 0))
     CompactionManifest.begin(tablePath, conf, CompactionManifest.Entry(
       id = s"hourly:$partDir:$compactUs", tier = "hourly",
       partition = partDir.toString, tmpDir = tmp.toString,
       inputs = files.map(_.toString).toSeq,
-      outputs = finalNames.map(n => new Path(partDir, n).toString)))
-    newFiles.zip(finalNames).foreach { case (src, name) =>
-      // failing loudly (not proceeding to delete inputs) keeps the
-      // manifest entry in-flight, so recovery rolls the partial swap back
-      if (!fs.rename(src, new Path(partDir, name)))
-        throw new java.io.IOException(
-          s"compaction swap rename failed: $src -> $partDir/$name")
-    }
+      outputs = Seq(finalPath.toString)))
+    // failing loudly (not proceeding to delete inputs) keeps the
+    // manifest entry in-flight, so recovery rolls the partial swap back
+    if (!fs.rename(newFiles.head, finalPath))
+      throw new java.io.IOException(
+        s"compaction swap rename failed: ${newFiles.head} -> $finalPath")
     files.foreach(fs.delete(_, false))
     fs.delete(tmp, true)
     CompactionManifest.complete(tablePath, conf, s"hourly:$partDir:$compactUs")
@@ -251,7 +231,7 @@ object Compaction {
 
     val meta = catalog.readMeta(db, m)
     val footers = readFooters(conf, files)
-    val deduped = readDeduped(spark, meta, footers, onePartition = true)
+    val deduped = readDeduped(spark, meta, footers)
     val rowsIn = rowCount(footers)
     // Z-order at the daily rewrite when configured: these are the
     // long-lived files that absorb most scans, and the interleaved order
@@ -377,11 +357,11 @@ object Compaction {
   /** Read the files of `footers` as one time-repaired frame with one
     * row per (tags..., time), the latest file winning. Recency is the
     * file NAME, which sorts by flush time within an hour directory and
-    * across the hours of a day. With `onePartition` the read is coalesced
-    * to a single partition BEFORE the dedup window: the window then needs
-    * no exchange, and the caller's sort and write stay in that one task. */
+    * across the hours of a day. The read is coalesced to a single
+    * partition BEFORE the dedup window: the window then needs no
+    * exchange, and the caller's sort and write stay in that one task. */
   private def readDeduped(spark: SparkSession, meta: TableMeta,
-      footers: Seq[Footer], onePartition: Boolean): DataFrame = {
+      footers: Seq[Footer]): DataFrame = {
     val srcName = substring_index(input_file_name(), "/", -1)
     // union-by-name with type coercion: merging the footers' schemas fails
     // when one file wrote `time` as string/int64 (the mixed-type fixture
@@ -395,7 +375,7 @@ object Compaction {
             normalizeTime(ParquetRead.files(spark, Seq(f)).withColumn("_src", srcName))
           }.reduce(_.unionByName(_, allowMissingColumns = true))
       }
-    val in = if (onePartition) repaired.coalesce(1) else repaired
+    val in = repaired.coalesce(1)
     if (meta.tagColumns.isEmpty && !meta.dedupTime) in.drop("_src")
     else {
       val keys = (meta.tagColumns.filter(in.columns.contains) :+ "time").map(col)
@@ -441,13 +421,11 @@ object Compaction {
   def runHourly(catalog: GraftCatalog, db: String, m: String,
       minFiles: Int = 2, minAgeHours: Int = 1,
       nowMicros: () => Long = () => System.currentTimeMillis() * 1000L,
-      parallelism: Int = 8, maxFilesPerBatch: Int = 0)
-      : Seq[Result] = {
+      parallelism: Int = 8): Seq[Result] = {
     val cutoffHour = (nowMicros() / 1000000L / 3600L) - minAgeHours
     val due = catalog.listHourPartitions(db, m).filter(p =>
       partitionHourEpoch(p).exists(_ <= cutoffHour))
-    inParallel(due, parallelism)(p =>
-      compactHour(catalog, db, m, p, minFiles, maxFilesPerBatch))
+    inParallel(due, parallelism)(p => compactHour(catalog, db, m, p, minFiles))
   }
 
   /** Startup recovery (reference: internal/compaction/manifest.go +

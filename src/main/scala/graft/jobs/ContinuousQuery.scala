@@ -68,14 +68,6 @@ object ContinuousQuery {
     Execution(windowStartUs, windowEndUs, n)
   }
 
-  /** Advance a CQ from its stored `lastProcessed` up to `now`, one
-    * window per call (the scheduler tick). Returns the new watermark. */
-  def tick(catalog: GraftCatalog, cq: ContinuousQuery,
-      lastProcessedUs: Long, nowUs: Long): (Execution, Long) = {
-    val exec = execute(catalog, cq, lastProcessedUs, nowUs)
-    (exec, nowUs)
-  }
-
   /** Default first-run lookback when no watermark is stored — the
     * reference starts new CQs one hour back
     * (internal/api/continuous_query.go:531). */

@@ -1,11 +1,8 @@
 package graft.operators
 
-import graft.Materialize._
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Budgeted corpus selection: within each group (source, language,
   * domain, ...) rank rows by a preference order and keep rows while the
@@ -69,20 +66,17 @@ object BudgetSelect {
     */
   def select(df: DataFrame, groupCol: Column, prefCols: Seq[(Column, Boolean)],
       keyName: String, weightCol: Column, budgetCol: Column,
-      priorCol: String = "sel_prior", partitions: Int = 0,
-      cutoverBytes: Long = GlobalRank.WindowCutoverBytes): DataFrame = {
-    if (GlobalRank.fitsOneTask(df, cutoverBytes))
+      priorCol: String = "sel_prior"): DataFrame =
+    if (GlobalRank.fitsOneTask(df))
       windowSelect(df, groupCol, prefCols, keyName, weightCol, budgetCol, priorCol)
     else
-      distributedSelect(df, groupCol, prefCols, keyName, weightCol,
-        budgetCol, priorCol, partitions)
-  }
+      distributedSelect(df, groupCol, prefCols, keyName, weightCol, budgetCol, priorCol)
 
   private def dir(c: Column, asc: Boolean): Column = if (asc) c.asc else c.desc
 
   /** Single-window reference form (small inputs; parity oracle for the
     * distributed path). */
-  def windowSelect(df: DataFrame, groupCol: Column,
+  private[graft] def windowSelect(df: DataFrame, groupCol: Column,
       prefCols: Seq[(Column, Boolean)], keyName: String, weightCol: Column,
       budgetCol: Column, priorCol: String = "sel_prior"): DataFrame = {
     val w = Window.partitionBy(groupCol)
@@ -95,13 +89,9 @@ object BudgetSelect {
 
   /** ShardPack-shape distributed form: never sorts a whole group in one
     * task. */
-  def distributedSelect(df: DataFrame, groupCol: Column,
+  private[graft] def distributedSelect(df: DataFrame, groupCol: Column,
       prefCols: Seq[(Column, Boolean)], keyName: String, weightCol: Column,
-      budgetCol: Column, priorCol: String = "sel_prior",
-      partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-      else spark.sparkContext.defaultParallelism
+      budgetCol: Column, priorCol: String = "sel_prior"): DataFrame = {
     val narrow = df.select(groupCol.as("_g") +:
       prefCols.zipWithIndex.map { case ((c, _), i) => c.as(s"_s$i") } ++:
       Seq(col(keyName).as("_k"),
@@ -111,27 +101,9 @@ object BudgetSelect {
     val nOrd = prefCols.zipWithIndex.map { case ((_, asc), i) =>
       dir(col(s"_s$i"), asc)
     } :+ col("_k").asc
-    val sorted = narrow
-      .repartitionByRange(p, col("_g") +: nOrd: _*)
-      .sortWithinPartitions(col("_g") +: nOrd: _*)
-      .materialize() // pins partition contents across the two jobs
-    // one small job: weight per (physical partition, group) — p×G rows
-    val sums = sorted
-      .groupBy(spark_partition_id().as("_pid"), col("_g"))
-      .agg(sum(col("_w")).as("_s"))
-      .collect()
-    // exclusive offsets: scan partitions in order, accumulate per group
-    val acc = scala.collection.mutable.Map.empty[Any, Long]
-    val offsetRows = sums.sortBy(_.getInt(0)).map { r =>
-      val (pid, g, s) = (r.getInt(0), r.get(1), r.getLong(2))
-      val o = acc.getOrElse(g, 0L); acc(g) = o + s
-      Row(pid, g, o)
-    }.toSeq
-    val gField = sorted.schema("_g")
-    val offsets = spark.createDataFrame(
-      spark.sparkContext.parallelize(offsetRows, 1),
-      StructType(Seq(StructField("_pid", IntegerType, nullable = false),
-        gField, StructField("_off", LongType, nullable = false))))
+    val sorted = GlobalRank.rangeSorted(narrow, col("_g") +: nOrd)
+    // exclusive per-(partition, group) offsets — p×G rows
+    val (offsets, _) = GlobalRank.prefixOffsets(sorted, col("_w"), Seq("_g"))
     // local EXCLUSIVE running sum: each window group is one partition's
     // already-sorted slice of one group — bounded by partition size
     val w = Window.partitionBy(col("_pid"), col("_g")).orderBy(nOrd: _*)
@@ -139,8 +111,8 @@ object BudgetSelect {
     val kept = sorted
       .withColumn("_pid", spark_partition_id())
       .withColumn("_lprior", coalesce(sum(col("_w")).over(w), lit(0L)))
-      .join(broadcast(offsets), Seq("_pid", "_g"))
-      .withColumn(priorCol, col("_off") + col("_lprior"))
+      .join(offsets, Seq("_pid", "_g"))
+      .withColumn(priorCol, col("_offset") + col("_lprior"))
       .where(col(priorCol) + col("_w") <= col("_b"))
       .select(col("_k"), col(priorCol))
     // assignment table joins back on the unique key — the one corpus

@@ -107,29 +107,8 @@ object CoocLift {
     * a < b lexicographically, c_ab ≥ minSupport. `docs` must carry
     * `idCol` and `tkCol` — an already-distinct token array. */
   def pairs(docs: DataFrame, idCol: String, tkCol: String,
-      minSupport: Int): DataFrame =
-    pairs(docs, idCol, tkCol, minSupport, forceStringFallback = false)
-
-  /** [[pairs]] with the collision fallback forceable — the fallback arm
-    * is otherwise reachable only on an actual xxhash64 collision inside
-    * the kept vocab (never seen on test-sized vocabs), so its spec pins
-    * parity and the support floor through this hook. */
-  private[graft] def pairs(docs: DataFrame, idCol: String, tkCol: String,
-      minSupport: Int, forceStringFallback: Boolean): DataFrame = {
-    require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
-    val ex = docs.select(col(idCol).as("doc"), explode(col(tkCol)).as("w"))
-    val dfreq = ex.groupBy(col("w")).agg(count(lit(1)).as("c"))
-    // a-priori prune + hash dictionary; vocab-sized, reused three times
-    val keep = dfreq.where(col("c") >= minSupport)
-      .withColumn("h", xxhash64(col("w")))
-      .materialize()
-    val Array(nKeep, nHash) = keep
-      .agg(count(lit(1)), countDistinct(col("h"))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    val hashInjective = !forceStringFallback && nKeep == nHash
-    val bcast = nKeep <= BroadcastVocabCutover
-    def side(f: DataFrame): DataFrame = if (bcast) broadcast(f) else f
-
+      minSupport: Int): DataFrame = {
+    val (ex, keep, side, hashInjective) = prunedVocab(docs, idCol, tkCol, minSupport)
     if (!hashInjective) pairsFallback(ex, keep, side, minSupport)
     else {
       val exk = ex.join(side(keep.select(col("w"), col("h"))), Seq("w"))
@@ -155,6 +134,35 @@ object CoocLift {
           when(col("wx") < col("wy"), col("cx")).otherwise(col("cy")).as("c_a"),
           when(col("wx") < col("wy"), col("cy")).otherwise(col("cx")).as("c_b"))
     }
+  }
+
+  /** The exploded (doc, w) stream, the a-priori-pruned vocab with its
+    * hash dictionary (vocab-sized, reused three times), the
+    * broadcast-or-shuffle dispatch for vocab-sized frames, and whether
+    * xxhash64 is injective on the kept vocab. */
+  private def prunedVocab(docs: DataFrame, idCol: String, tkCol: String,
+      minSupport: Int): (DataFrame, DataFrame, DataFrame => DataFrame, Boolean) = {
+    require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
+    val ex = docs.select(col(idCol).as("doc"), explode(col(tkCol)).as("w"))
+    val dfreq = ex.groupBy(col("w")).agg(count(lit(1)).as("c"))
+    val keep = dfreq.where(col("c") >= minSupport)
+      .withColumn("h", xxhash64(col("w")))
+      .materialize()
+    val Array(nKeep, nHash) = keep
+      .agg(count(lit(1)), countDistinct(col("h"))).head()
+      .toSeq.map(_.asInstanceOf[Long]).toArray
+    val bcast = nKeep <= BroadcastVocabCutover
+    (ex, keep, f => if (bcast) broadcast(f) else f, nKeep == nHash)
+  }
+
+  /** [[pairs]]' collision-fallback arm on any vocab. In [[pairs]] it is
+    * reached only on an actual xxhash64 collision inside the kept vocab
+    * (never seen on test-sized vocabs), so CoocLiftSpec pins its parity
+    * and support floor here. */
+  private[graft] def stringFallbackPairs(docs: DataFrame, idCol: String,
+      tkCol: String, minSupport: Int): DataFrame = {
+    val (ex, keep, side, _) = prunedVocab(docs, idCol, tkCol, minSupport)
+    pairsFallback(ex, keep, side, minSupport)
   }
 
   /** The xxhash64-collision fallback: string pair keys — always exact.

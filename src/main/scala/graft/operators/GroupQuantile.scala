@@ -45,46 +45,43 @@ object GroupQuantile {
     * ties arbitrary — any tie order selects the same value at a given
     * rank) + per-group size (`nCol`). */
   def withGroupRank(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      rnkCol: String = "_rnk", nCol: String = "_n",
-      cutoverBytes: Long = GlobalRank.WindowCutoverBytes): DataFrame = {
+      rnkCol: String = "_rnk", nCol: String = "_n"): DataFrame =
+    if (GlobalRank.fitsOneTask(df)) windowGroupRank(df, groupCols, valueCol, rnkCol, nCol)
+    else stampedGroupRank(df, groupCols, valueCol, rnkCol, nCol)
+
+  /** [[withGroupRank]]'s small arm: one per-group window. */
+  private[graft] def windowGroupRank(df: DataFrame, groupCols: Seq[String],
+      valueCol: String, rnkCol: String = "_rnk", nCol: String = "_n"): DataFrame = {
     val g = groupCols.map(col)
-    if (GlobalRank.fitsOneTask(df, cutoverBytes)) {
-      val wOrd = Window.partitionBy(g: _*).orderBy(col(valueCol))
-      val wAll = Window.partitionBy(g: _*)
-      df.withColumn(rnkCol, row_number().over(wOrd))
-        .withColumn(nCol, count(lit(1)).over(wAll))
-    } else {
-      // cutoverBytes = 0: the inner rank must be FORCED onto the
-      // distributed stamp. Letting withRowNumber re-dispatch on the
-      // same plan estimate that routed us here is self-defeating: when
-      // THIS arm was chosen because the estimate lies low (compressed
-      // text scans read 3-10x under their in-memory size — ADVICE r14),
-      // withRowNumber would see the same low estimate and pick its
-      // empty-PARTITION-BY window = the whole table sorted in ONE task,
-      // duplicated once more under the offsets aggregate (no exchange
-      // reuse across differently-pruned consumers). Measured at sf1
-      // (35 MB estimate, forced big arm): 38.5 s as a doubled
-      // single-task global window vs 6.1 s with the stamp forced —
-      // back at parity with the per-group window arm locally, and the
-      // stamp arm is the only one that parallelizes past #groups tasks.
-      val stamped = GlobalRank.withRowNumber(df, g :+ col(valueCol), "_grn",
-        cutoverBytes = 0L)
-      // one row per group; AQE broadcasts it when it is small (it is,
-      // by the op's contract — the final report is per-group too).
-      // Null-safe join keys (<=>): a plain equi-join would DROP rows
-      // whose group key is null while the window shape above keeps
-      // them — results must not diverge by input size.
-      val offs = stamped.groupBy(g: _*)
-        .agg(min(col("_grn")).as("_off"), count(lit(1)).as(nCol))
-      val offsR = offs.select(
-        (groupCols.map(c => col(c).as(s"_r_$c")) :+
-          col("_off") :+ col(nCol)): _*)
-      val cond = groupCols.map(c => col(c) <=> col(s"_r_$c")).reduce(_ && _)
-      stamped.join(offsR, cond)
-        .withColumn(rnkCol, col("_grn") - col("_off") + lit(1L))
-        .drop(groupCols.map(c => s"_r_$c"): _*)
-        .drop("_grn", "_off")
-    }
+    val wOrd = Window.partitionBy(g: _*).orderBy(col(valueCol))
+    val wAll = Window.partitionBy(g: _*)
+    df.withColumn(rnkCol, row_number().over(wOrd))
+      .withColumn(nCol, count(lit(1)).over(wAll))
+  }
+
+  /** [[withGroupRank]]'s large arm: GlobalRank's distributed row-number
+    * arm over (group, value), called directly. Re-dispatching on the
+    * plan estimate that routed here would, when that estimate lies low,
+    * sort the whole table in one task (38.5 s vs 6.1 s at sf1). */
+  private[graft] def stampedGroupRank(df: DataFrame, groupCols: Seq[String],
+      valueCol: String, rnkCol: String = "_rnk", nCol: String = "_n"): DataFrame = {
+    val g = groupCols.map(col)
+    val stamped = GlobalRank.stampedRowNumber(df, g :+ col(valueCol), "_grn")
+    // one row per group; AQE broadcasts it when it is small (it is,
+    // by the op's contract — the final report is per-group too).
+    // Null-safe join keys (<=>): a plain equi-join would DROP rows
+    // whose group key is null while the window shape above keeps
+    // them — results must not diverge by input size.
+    val offs = stamped.groupBy(g: _*)
+      .agg(min(col("_grn")).as("_off"), count(lit(1)).as(nCol))
+    val offsR = offs.select(
+      (groupCols.map(c => col(c).as(s"_r_$c")) :+
+        col("_off") :+ col(nCol)): _*)
+    val cond = groupCols.map(c => col(c) <=> col(s"_r_$c")).reduce(_ && _)
+    stamped.join(offsR, cond)
+      .withColumn(rnkCol, col("_grn") - col("_off") + lit(1L))
+      .drop(groupCols.map(c => s"_r_$c"): _*)
+      .drop("_grn", "_off")
   }
 
   /** One row per group: groupCols, `nCol` = group size, and for each
@@ -92,11 +89,16 @@ object GroupQuantile {
     * Rank expressions must land in [1, n] (they do for the
     * (n + k − 1) div k family). */
   def selectRanks(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      picks: Seq[(String, Column => Column)], nCol: String = "n",
-      cutoverBytes: Long = GlobalRank.WindowCutoverBytes): DataFrame = {
+      picks: Seq[(String, Column => Column)], nCol: String = "n"): DataFrame =
+    pickRanks(withGroupRank(df, groupCols, valueCol), groupCols, valueCol,
+      picks, nCol)
+
+  /** [[selectRanks]] over an already-ranked frame (`_rnk`, `_n`), so
+    * specs can feed it either arm of [[withGroupRank]]. */
+  private[graft] def pickRanks(ranked: DataFrame, groupCols: Seq[String],
+      valueCol: String, picks: Seq[(String, Column => Column)],
+      nCol: String = "n"): DataFrame = {
     require(picks.nonEmpty, "at least one rank pick required")
-    val ranked = withGroupRank(df, groupCols, valueCol,
-      cutoverBytes = cutoverBytes)
     val tagged = picks.foldLeft(ranked) { case (d, (name, f)) =>
       d.withColumn(name,
         when(col("_rnk") === f(col("_n")), col(valueCol)))

@@ -33,29 +33,13 @@ object SegmentDedup {
     * lambda would re-tokenize per segment otherwise (no CSE through
     * generators).
     *
-    * `skewSafe`: the default window shape needs every copy of a segment
-    * in ONE task — a viral boilerplate segment (shared by millions of
-    * docs at corpus scale) makes a hot partition key that AQE cannot
-    * split a window over. A flags-join-back does NOT help either:
-    * OptimizeSkewedJoin only matches SMJ over two raw shuffle stages,
-    * and the aggregate under the flags side breaks the pattern (a
-    * post-shuffle-computed side cannot be re-read in slices), so the
-    * hot probe still lands on one task. skewSafe=true instead uses
-    * OWNER ATTRIBUTION, never joining on the segment key: a KEPT
-    * segment is by definition single-doc (min==max), so its instances
-    * can be reconstructed from min(struct(doc, positions)) inside the
-    * same algebraic groupBy(_seg) that computes the distinct-doc count
-    * — pre-aggregated per (segment, doc) first, so every shuffle
-    * carries map-side combine and the hot segment collapses BEFORE the
-    * wire. The only join merges per-doc totals with per-doc kept rows —
-    * keyed on the doc id, uniform by construction. Cost: the segs
-    * lineage is consumed twice (totals + owners; persisting the
-    * exploded stream at 100 TB would cost more than the re-read — same
-    * call as q97's bigram probe). Same output, proven by the parity
-    * property test. */
+    * Skew: the window needs every copy of a segment in ONE task, so a
+    * viral boilerplate segment (shared by millions of docs at corpus
+    * scale) is a hot partition key that AQE cannot split. The
+    * owner-attribution form that avoided it had no caller and was
+    * retired (SCALE.md, "Retired arm switches"). */
   def annotate(docs: DataFrame, idCol: String, textCol: String,
-      segTokens: Int, carryCols: Seq[String] = Nil,
-      skewSafe: Boolean = false): DataFrame = {
+      segTokens: Int, carryCols: Seq[String] = Nil): DataFrame = {
     val segs = docs
       .select((col(idCol) +: carryCols.map(col) :+
         TextFunctions.tokens(col(textCol)).as("_tk")): _*)
@@ -65,47 +49,17 @@ object SegmentDedup {
           i => array_join(slice(col("_tk"), i * segTokens + 1, lit(segTokens)), " "))
       )): _*)
       .withColumnRenamed("pos", "_i").withColumnRenamed("col", "_seg")
-    if (!skewSafe) {
-      val w = Window.partitionBy(col("_seg"))
-      val aggs = carryCols.map(c => max(col(c)).as(c)) ++ Seq(
-        count(lit(1)).as("n_segs"),
-        count(when(!col("_multi"), lit(1))).as("n_kept"),
-        // collect_list skips nulls -> kept segments only; array_sort on
-        // (_i, _seg) structs restores original order
-        coalesce(array_join(transform(array_sort(collect_list(
-          when(!col("_multi"), struct(col("_i"), col("_seg"))))),
-          x => x.getField("_seg")), " "), lit("")).as("text_clean"))
-      segs.withColumn("_multi",
-          min(col(idCol)).over(w) =!= max(col(idCol)).over(w))
-        .groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-    } else {
-      // owner attribution (see scaladoc): pre-aggregate per (segment,
-      // doc) — the hot segment becomes many DISTINCT keys at this grain
-      // — then one algebraic rollup per segment both counts distinct
-      // docs and carries the would-be owner's instance positions
-      // (min over struct(doc, positions); doc ids are unique per group,
-      // so the comparison never reaches the array)
-      val byDoc = segs.groupBy(col("_seg"), col(idCol))
-        .agg(sort_array(collect_list(col("_i"))).as("_is"))
-      val perSeg = byDoc.groupBy(col("_seg"))
-        .agg(count(lit(1)).as("_nd"),
-          min(struct(col(idCol).as("_d"), col("_is"))).as("_own"))
-      val keptAgg = perSeg.where(col("_nd") === 1)
-        .select(col("_own._d").as(idCol), col("_seg"),
-          explode(col("_own._is")).as("_i"))
-        .groupBy(col(idCol))
-        .agg(count(lit(1)).as("_n_kept"),
-          array_join(transform(array_sort(collect_list(
-            struct(col("_i"), col("_seg")))),
-            x => x.getField("_seg")), " ").as("_text_clean"))
-      val totalAggs = carryCols.map(c => max(col(c)).as(c)) :+
-        count(lit(1)).as("n_segs")
-      segs.groupBy(col(idCol)).agg(totalAggs.head, totalAggs.tail: _*)
-        .join(keptAgg, Seq(idCol), "left")
-        .select((col(idCol) +: carryCols.map(col)) ++ Seq(
-          col("n_segs"),
-          coalesce(col("_n_kept"), lit(0L)).as("n_kept"),
-          coalesce(col("_text_clean"), lit("")).as("text_clean")): _*)
-    }
+    val w = Window.partitionBy(col("_seg"))
+    val aggs = carryCols.map(c => max(col(c)).as(c)) ++ Seq(
+      count(lit(1)).as("n_segs"),
+      count(when(!col("_multi"), lit(1))).as("n_kept"),
+      // collect_list skips nulls -> kept segments only; array_sort on
+      // (_i, _seg) structs restores original order
+      coalesce(array_join(transform(array_sort(collect_list(
+        when(!col("_multi"), struct(col("_i"), col("_seg"))))),
+        x => x.getField("_seg")), " "), lit("")).as("text_clean"))
+    segs.withColumn("_multi",
+        min(col(idCol)).over(w) =!= max(col(idCol)).over(w))
+      .groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 }

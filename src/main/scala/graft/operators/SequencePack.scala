@@ -28,8 +28,9 @@ import org.apache.spark.sql.functions._
   *    in-sequence offset, in-document offset, and length;
   *  - zero-weight docs occupy no tokens and emit no segments.
   *
-  * Scale shape: the prefix sum is [[ShardPack.priors]] (range partition
-  * + per-partition offsets — never a single-task global window; driver
+  * Scale shape: the prefix sum is [[ShardPack.priors]] (one window below
+  * the GlobalRank size cutover; above it range partition +
+  * per-partition offsets, never a single-task global window, driver
   * state = p partition sums). The explode emits 1 + w/L rows per doc —
   * output is O(docs + total_tokens/L), linear in the corpus, and the
   * per-row `sequence()` array is bounded by the doc's own length. No
@@ -39,10 +40,10 @@ object SequencePack {
 
   /** Segment map (`seq_id`, `key`, `seq_off`, `doc_off`, `n_toks`). */
   def segments(docs: DataFrame, keyCol: Column, weightCol: Column,
-      seqLen: Long, partitions: Int = 0): DataFrame = {
+      seqLen: Long): DataFrame = {
     require(seqLen > 0, s"sequence length must be positive, got $seqLen")
     val L = lit(seqLen)
-    ShardPack.priors(docs, keyCol, weightCol, partitions)
+    ShardPack.priors(docs, keyCol, weightCol)
       .where(col("_w") > 0L)
       .select(col("_k"), col("_w"), col("_prior"),
         explode(expr(

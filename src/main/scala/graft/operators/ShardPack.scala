@@ -1,11 +1,8 @@
 package graft.operators
 
-import graft.Materialize._
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Training-shard assignment: pack rows into fixed-weight shards.
   *
@@ -54,57 +51,50 @@ object ShardPack {
     * @param budget  target weight per shard, > 0
     */
   def assign(df: DataFrame, keyCol: Column, weightCol: Column, budget: Long,
-      shardCol: String = "shard_id", partitions: Int = 0,
-      cutoverBytes: Long = GlobalRank.WindowCutoverBytes): DataFrame = {
+      shardCol: String = "shard_id"): DataFrame =
+    shardIds(priors(df, keyCol, weightCol), budget, shardCol)
+
+  /** [[assign]] over a priors frame from either arm of [[priors]]. */
+  private[graft] def shardIds(priors: DataFrame, budget: Long,
+      shardCol: String = "shard_id"): DataFrame = {
     require(budget > 0, s"shard budget must be positive, got $budget")
-    priors(df, keyCol, weightCol, partitions, cutoverBytes)
+    priors
       // exact integer division (double floor would wobble past 2^53)
       .withColumn(shardCol, expr(s"_prior div ${budget}L").cast("long"))
       .select(col("_k"), col("_w"), col(shardCol))
   }
 
-  /** The distributed EXCLUSIVE global prefix sum underneath [[assign]]
-    * (and [[SequencePack]]): per row, (`_k` key, `_w` weight, `_prior` =
-    * sum of all strictly-preceding weights in key order). Never a global
-    * single-task window — range partition + per-partition offsets; the
-    * only driver state is p partition sums. */
-  def priors(df: DataFrame, keyCol: Column, weightCol: Column,
-      partitions: Int = 0,
-      cutoverBytes: Long = GlobalRank.WindowCutoverBytes): DataFrame = {
-    val spark = df.sparkSession
-    // size-adaptive like GlobalRank (r14): below the cutover the plain
-    // running-sum window wins — one sort in one task beats a range
-    // exchange + checkpoint + per-partition counts job + broadcast
-    // join; identical priors either way for a unique key
-    // (ShardPackSpec pins both paths)
-    if (GlobalRank.fitsOneTask(df, cutoverBytes)) {
-      val w = Window.orderBy(col("_k"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      return df.select(keyCol.as("_k"),
-          coalesce(weightCol.cast("long"), lit(0L)).as("_w"))
-        .withColumn("_prior", coalesce(sum(col("_w")).over(w), lit(0L)))
-    }
-    val p = if (partitions > 0) partitions
-      else spark.sparkContext.defaultParallelism
-    val narrow = df.select(keyCol.as("_k"),
+  /** The EXCLUSIVE global prefix sum underneath [[assign]] (and
+    * [[SequencePack]]): per row, (`_k` key, `_w` weight, `_prior` = sum
+    * of all strictly-preceding weights in key order).
+    *
+    * Size-adaptive like GlobalRank (r14): below the cutover the plain
+    * running-sum window wins — one sort in one task beats a range
+    * exchange + checkpoint + per-partition sums job + broadcast join;
+    * identical priors either way for a unique key (ShardPackSpec pins
+    * both arms). */
+  def priors(df: DataFrame, keyCol: Column, weightCol: Column): DataFrame =
+    if (GlobalRank.fitsOneTask(df)) windowPriors(df, keyCol, weightCol)
+    else distributedPriors(df, keyCol, weightCol)
+
+  /** [[priors]]' small arm: one running-sum window in one task. */
+  private[graft] def windowPriors(df: DataFrame, keyCol: Column,
+      weightCol: Column): DataFrame = {
+    val w = Window.orderBy(col("_k"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    df.select(keyCol.as("_k"),
         coalesce(weightCol.cast("long"), lit(0L)).as("_w"))
-      .repartitionByRange(p, col("_k"))
-      .sortWithinPartitions(col("_k"))
-      .materialize() // pins partition contents across the two jobs
-    // one small job: total weight per physical partition (p result rows)
-    val sums: Map[Int, Long] = narrow
-      .groupBy(spark_partition_id().as("_pid"))
-      .agg(sum(col("_w")).as("_s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    var off = 0L
-    val offsetRows = (0 until narrow.queryExecution.toRdd.getNumPartitions)
-      .map { pid =>
-      val o = off; off += sums.getOrElse(pid, 0L); Row(pid, o)
-    }
-    val offsets = spark.createDataFrame(
-      spark.sparkContext.parallelize(offsetRows, 1),
-      StructType(Seq(StructField("_pid", IntegerType, nullable = false),
-        StructField("_off", LongType, nullable = false))))
+      .withColumn("_prior", coalesce(sum(col("_w")).over(w), lit(0L)))
+  }
+
+  /** [[priors]]' large arm: never a global single-task window — range
+    * partition + per-partition offsets; the only driver state is p
+    * partition sums. */
+  private[graft] def distributedPriors(df: DataFrame, keyCol: Column,
+      weightCol: Column): DataFrame = {
+    val narrow = GlobalRank.rangeSorted(df.select(keyCol.as("_k"),
+      coalesce(weightCol.cast("long"), lit(0L)).as("_w")), Seq(col("_k")))
+    val (offsets, _) = GlobalRank.prefixOffsets(narrow, col("_w"))
     // local EXCLUSIVE running sum: window over the partition id — the
     // exchange this window inserts carries only the narrow pairs, and
     // each window group is one already-sorted range partition
@@ -113,16 +103,16 @@ object ShardPack {
     narrow
       .withColumn("_pid", spark_partition_id())
       .withColumn("_local", coalesce(sum(col("_w")).over(w), lit(0L)))
-      .join(broadcast(offsets), "_pid")
+      .join(offsets, "_pid")
       .select(col("_k"), col("_w"),
-        (col("_off") + col("_local")).as("_prior"))
+        (col("_offset") + col("_local")).as("_prior"))
   }
 
   /** Per-shard manifest: doc count, total weight, key range — the
     * small frame a shard writer iterates to rebuild any shard. */
   def manifest(df: DataFrame, keyCol: Column, weightCol: Column,
-      budget: Long, partitions: Int = 0): DataFrame =
-    assign(df, keyCol, weightCol, budget, "shard_id", partitions)
+      budget: Long): DataFrame =
+    assign(df, keyCol, weightCol, budget)
       .groupBy(col("shard_id"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("_w")).as("shard_tokens"),

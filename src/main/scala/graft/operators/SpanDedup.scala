@@ -31,10 +31,10 @@ import org.apache.spark.sql.functions._
   * position holds exactly one span, so "this instance is not its
   * span's owner" is a LEFT ANTI join of the positioned stream against
   * the owner set, keyed on (doc, pos) — uniform by construction. A
-  * viral boilerplate span never becomes a hot join key (the skew
-  * problem PassageCoverage's skewSafe mode exists for does not arise
-  * here at all). An f==1 span's only instance IS its owner, so the
-  * f >= 2 condition is implied. Removals roll up per doc; the
+  * viral boilerplate span never becomes a hot join key (the hot
+  * window key PassageCoverage carries does not arise here at all).
+  * An f==1 span's only instance IS its owner, so the f >= 2
+  * condition is implied. Removals roll up per doc; the
   * reassembly is per-row HOF compute (no shuffle). Never pairwise in
   * documents; output linear in corpus size. The tokenizer runs twice
   * (span stream + reassembly) — at corpus scale re-reading beats

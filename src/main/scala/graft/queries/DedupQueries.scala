@@ -118,10 +118,8 @@ object DedupQueries {
     // dedup (Lee et al. 2021, "Deduplicating Training Data Makes LMs
     // Better") — per document, the fraction of its distinct k-token
     // shingles that also occur in at least one OTHER document. Shape and
-    // the skewSafe guard for viral-boilerplate shingles live on
-    // operators.PassageCoverage (one window shuffle here; the flag swaps
-    // in a groupBy + AQE-splittable join-back — SkewGuardSpec pins
-    // parity). Linear at 100 TB, no pairwise anything.
+    // its viral-boilerplate skew note live on operators.PassageCoverage
+    // (one window shuffle). Linear at 100 TB, no pairwise anything.
     "q86_dedup_passages" -> ((s, dir) =>
       graft.operators.PassageCoverage
         .stats(t(s, dir, "documents"), "doc_id", "text", PassageK)

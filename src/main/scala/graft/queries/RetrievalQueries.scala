@@ -199,7 +199,8 @@ object RetrievalQueries {
     * self-contained via a trigram census (the demo phrase is the
     * corpus's own most frequent trigram). SIZE-ADAPTIVE census (r15):
     *
-    *  - BELOW `cutoverBytes` (plan-estimated input size): tokenize into
+    *  - BELOW the GlobalRank cutover (plan-estimated input size,
+    *    [[graft.operators.GlobalRank.fitsOneTask]]): tokenize into
     *    the exploded postings once, census trigrams via a per-doc
     *    window (two leads). Measured the local winner — sf1 A/B in one
     *    session: window 3.36 s vs zip_with-over-arrays 4.20 s (min of
@@ -217,36 +218,43 @@ object RetrievalQueries {
     * parquet scans (ADVICE r14: text decompresses 3–10×) — a misroute
     * here costs only the local-winner margin, never a single-task sort,
     * since both arms are doc-partitioned. */
-  private[graft] def phraseSearch(docs: org.apache.spark.sql.DataFrame,
-      cutoverBytes: Long = graft.operators.GlobalRank.WindowCutoverBytes)
+  private[graft] def phraseSearch(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    if (graft.operators.GlobalRank.fitsOneTask(docs)) windowPhraseSearch(docs)
+    else arrayPhraseSearch(docs)
+
+  /** [[phraseSearch]]'s small arm: the per-doc window census. */
+  private[graft] def windowPhraseSearch(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    if (graft.operators.GlobalRank.fitsOneTask(docs, cutoverBytes)) {
-      val toks = docs
-        .select(col("doc_id"), posexplode(tokens(col("text"))))
-        .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
-        .materialize()
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      phraseHits(toks, toks
-        .withColumn("t2", lead(col("tok"), 1).over(w))
-        .withColumn("t3", lead(col("tok"), 2).over(w))
-        .where(col("t3").isNotNull)
-        .select(concat_ws(" ", col("tok"), col("t2"), col("t3")).as("phrase")))
-    } else {
-      val tk = docs
-        .select(col("doc_id"), tokens(col("text")).as("tk"))
-        .materialize()
-      val toks = tk.select(col("doc_id"),
-          posexplode(col("tk")))
-        .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
-      val n = size(col("tk"))
-      val tri = zip_with(
-        zip_with(slice(col("tk"), lit(1), greatest(n - 2, lit(0))),
-          slice(col("tk"), lit(2), greatest(n - 2, lit(0))),
-          (a, b) => concat(a, lit(" "), b)),
-        slice(col("tk"), lit(3), greatest(n - 2, lit(0))),
-        (ab, c) => concat(ab, lit(" "), c))
-      phraseHits(toks, tk.select(explode(tri).as("phrase")))
-    }
+    val toks = docs
+      .select(col("doc_id"), posexplode(tokens(col("text"))))
+      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
+      .materialize()
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    phraseHits(toks, toks
+      .withColumn("t2", lead(col("tok"), 1).over(w))
+      .withColumn("t3", lead(col("tok"), 2).over(w))
+      .where(col("t3").isNotNull)
+      .select(concat_ws(" ", col("tok"), col("t2"), col("t3")).as("phrase")))
+  }
+
+  /** [[phraseSearch]]'s large arm: the zip_with-over-arrays census. */
+  private[graft] def arrayPhraseSearch(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val tk = docs
+      .select(col("doc_id"), tokens(col("text")).as("tk"))
+      .materialize()
+    val toks = tk.select(col("doc_id"),
+        posexplode(col("tk")))
+      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
+    val n = size(col("tk"))
+    val tri = zip_with(
+      zip_with(slice(col("tk"), lit(1), greatest(n - 2, lit(0))),
+        slice(col("tk"), lit(2), greatest(n - 2, lit(0))),
+        (a, b) => concat(a, lit(" "), b)),
+      slice(col("tk"), lit(3), greatest(n - 2, lit(0))),
+      (ab, c) => concat(ab, lit(" "), c))
+    phraseHits(toks, tk.select(explode(tri).as("phrase")))
   }
 
   /** phraseSearch's arm-independent tail: pick the most frequent

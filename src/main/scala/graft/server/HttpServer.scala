@@ -1361,28 +1361,14 @@ final class HttpServer(
     }
   }
 
-  /** Register a measurement's temp view. When the admin tiering plane
-    * has migrated partitions to the cold root, the view is the hot∪cold
-    * union (both sides pruned — identical layout on both tiers), so
-    * queries keep seeing migrated data transparently, the reference's
-    * multi-tier scan behavior (query.go:2836-2921). A fully-migrated
-    * measurement (empty hot tree) registers as cold alone. */
-  private def registerView(dbCat: GraftCatalog, db: String, m: String): Unit = {
-    val cold = new Path(s"${admin.coldRoot}/$db/$m")
-    val cfs = cold.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasCold = cfs.exists(cold) &&
-      cfs.globStatus(new Path(cold, "year=*")).nonEmpty
-    if (!hasCold) dbCat.register(db, m)
-    else {
-      val coldDf = dbCat.tier(cold.toString)
-      scala.util.Try(dbCat.table(db, m)).toOption match {
-        case Some(hot) =>
-          hot.unionByName(coldDf, allowMissingColumns = true)
-            .createOrReplaceTempView(m)
-        case None => coldDf.createOrReplaceTempView(m)
-      }
-    }
-  }
+  /** Register a measurement's temp view over every tier it has data
+    * on: the hourly and daily layouts of the hot root and, once the
+    * admin tiering plane has migrated partitions, of the cold root
+    * ([[graft.jobs.Tiering.table]]). Queries keep seeing migrated data
+    * transparently, the reference's multi-tier scan behavior
+    * (query.go:2836-2921). */
+  private def registerView(dbCat: GraftCatalog, db: String, m: String): Unit =
+    graft.jobs.Tiering.table(dbCat, admin.coldRoot, db, m).createOrReplaceTempView(m)
 
   /** True when no credential source exists at all — the open OSS
     * deployment (reference: nil AuthManager → passthrough middleware,

@@ -103,12 +103,12 @@ class MaterializeSpec extends SparkSpec {
 
   test("iterative consumer (DedupClusters) is mode-identical") {
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (3L, 4L)).toDF("a", "b")
-    // driverCutoverEdges = 0: force the distributed star-contraction
-    // loop, whose per-round barrier is what reliable mode must survive
-    val local = DedupClusters.components(edges, "a", "b", driverCutoverEdges = 0)
+    // the distributed star-contraction arm, whose per-round barrier is
+    // what reliable mode must survive
+    val local = DedupClusters.starComponents(edges, "a", "b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val reliable = withMode("reliable") {
-      DedupClusters.components(edges, "a", "b", driverCutoverEdges = 0)
+      DedupClusters.starComponents(edges, "a", "b")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     assert(local == reliable)

@@ -76,23 +76,6 @@ class LpBulkImportSpec extends SparkSpec {
     assert(df.where(col("v").isNull).count() == 1)
   }
 
-  test("backfill with filesPerHour > 1 spreads an hour over parallel files") {
-    val cat = newCatalog()
-    import spark.implicits._
-    val df = (0 until 200)
-      .map(i => 1717200000000000L + i * 1000L)
-      .toDF("us")
-      .select(org.apache.spark.sql.functions.timestamp_micros(
-        org.apache.spark.sql.functions.col("us")).as("time"),
-        org.apache.spark.sql.functions.col("us").as("v"))
-    HourPartitionedWriter.write(cat, "default", "bf", df, filesPerHour = 4)
-    val part = cat.listHourPartitions("default", "bf").head
-    val files = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(part).filter(_.getPath.getName.endsWith(".parquet"))
-    assert(files.length == 4, s"expected 4 files, got ${files.length}")
-    assert(cat.table("default", "bf").count() == 200) // no rows lost
-  }
-
   test("100-measurement payload: metadata jobs independent of measurement count") {
     val cat = newCatalog()
     val m = 100

@@ -74,43 +74,6 @@ class LifecycleSpec extends SparkSpec {
     assert(files.length == 1)
   }
 
-  test("compaction maxFilesPerBatch: ceil(in/N) range-split outputs, dedup still global") {
-    val cat = newCatalog()
-    cat.writeMeta("default", "cpu", TableMeta(sortKeys = Seq("host"),
-      tagColumns = Seq("host")))
-    // 5 input files into one hour; a duplicate key pair lands in DIFFERENT
-    // flush files — batch-scoped dedup (the reference's semantics) could
-    // miss it, global dedup must not
-    val t0 = base + 10
-    (0 until 4).foreach { i =>
-      lpIngest(cat, s"cpu,host=h$i v=$i.0 ${t0 + i}")
-    }
-    lpIngest(cat, s"cpu,host=h0 v=9.0 $t0") // duplicate of file 0's key
-    val part = cat.listHourPartitions("default", "cpu").head
-    val res = Compaction.compactHour(cat, "default", "cpu", part,
-      minFiles = 2, maxFilesPerBatch = 2)
-    assert(res.compacted && res.filesIn == 5)
-    assert(res.rowsIn == 5 && res.rowsOut == 4, s"dup must collapse: $res")
-    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val outFiles = fs.listStatus(part).filter(_.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
-    assert(outFiles.length == 3, s"ceil(5/2) = 3 outputs: ${outFiles.mkString(",")}")
-    // outputs cover disjoint sort-key ranges in file-name order
-    val perFile = outFiles.map(f =>
-      spark.read.parquet(f.toString).select("host").collect().map(_.getString(0)).sorted.toSeq)
-    assert(perFile.forall(_.nonEmpty))
-    val flat = perFile.flatten.toSeq
-    assert(flat.length == 4 && flat.distinct.length == 4)
-    assert(flat == flat.sorted, s"range split must order by sort key: $perFile")
-    // last write won across files
-    val v = cat.table("default", "cpu").where(col("host") === "h0")
-      .select("v").head.getDouble(0)
-    assert(v == 9.0)
-    // manifest cleared (swap completed)
-    assert(CompactionManifest.load(cat.tablePath("default", "cpu"),
-      spark.sparkContext.hadoopConfiguration).isEmpty)
-  }
-
   test("retention: partitions older than cutoff removed, paths only") {
     val cat = newCatalog()
     val now = base + 10L * 24 * H

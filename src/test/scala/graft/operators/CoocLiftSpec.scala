@@ -69,7 +69,7 @@ class CoocLiftSpec extends SparkSpec {
     "the driver fold") {
     for (support <- Seq(2, 3)) {
       val got = asMap(
-        CoocLift.pairs(docs, "doc_id", "tk", support, forceStringFallback = true))
+        CoocLift.stringFallbackPairs(docs, "doc_id", "tk", support))
       // the fixture has pairs of df≥support tokens whose co-count sits
       // BELOW the floor (e.g. mat+ran co-occur once, both df≥2) — the
       // r12 ADVICE bug returned those from this branch

@@ -73,17 +73,6 @@ class CorpusKernelsPropsSpec extends AnyFunSuite {
     }
   }
 
-  test("SegmentDedup skew-safe path is row-identical to the window path") {
-    val n = 4
-    val docs = sample(doc, 150).zipWithIndex
-      .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }.toDF("id", "text")
-    def rows(skewSafe: Boolean) =
-      SegmentDedup.annotate(docs, "id", "text", n, skewSafe = skewSafe)
-        .collect().map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    assert(rows(skewSafe = true) == rows(skewSafe = false))
-  }
-
   test("bigram LM score matches an exact integer reference model") {
     val docs = sample(doc, 100).zipWithIndex.map { case (ts, i) => (i.toLong, ts) }
 

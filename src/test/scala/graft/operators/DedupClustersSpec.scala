@@ -27,13 +27,12 @@ class DedupClustersSpec extends SparkSpec {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  // force the DISTRIBUTED star contraction — the size cutover would
+  // the DISTRIBUTED star contraction by name — the size cutover would
   // otherwise route every test-sized graph to the driver union-find,
   // and these tests exist to pin the contraction itself
   private def run(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    DedupClusters.components(edges.toDF("a", "b"), "a", "b",
-        driverCutoverEdges = 0L)
+    DedupClusters.starComponents(edges.toDF("a", "b"), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

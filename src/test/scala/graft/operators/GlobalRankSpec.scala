@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,13 +22,12 @@ class GlobalRankSpec extends SparkSpec {
     val w = Window.orderBy(col("v"), col("id"))
     val want = d.withColumn("rn", row_number().over(w))
       .orderBy("rn").collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    // cutoverBytes=0 forces the distributed offset-stamping path; the
-    // default takes the small-input window path (r14 size cutover)
-    for (cutover <- Seq(0L, GlobalRank.WindowCutoverBytes)) {
-      val got = GlobalRank.withRowNumber(d, Seq(col("v"), col("id")),
-          cutoverBytes = cutover)
+    // the distributed offset-stamping arm and the small-input window arm
+    for ((arm, rank) <- Seq[(String, (DataFrame, Seq[Column], String) => DataFrame)](
+        "stamped" -> GlobalRank.stampedRowNumber, "window" -> GlobalRank.windowRowNumber)) {
+      val got = rank(d, Seq(col("v"), col("id")), "rn")
         .orderBy("rn").collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      assert(got == want, s"cutover=$cutover")
+      assert(got == want, s"arm=$arm")
     }
   }
 
@@ -38,21 +38,19 @@ class GlobalRankSpec extends SparkSpec {
       val want = d.withColumn("bucket", ntile(k).over(w))
         .groupBy("bucket").count().orderBy("bucket")
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      // cutoverBytes=0 forces the distributed offset-stamping path;
-      // the default takes the small-input window path
-      for (cutover <- Seq(0L, GlobalRank.WindowCutoverBytes)) {
-        val got = GlobalRank.ntile(d, Seq(col("v"), col("id")), k,
-            cutoverBytes = cutover)
+      // the distributed offset-stamping arm and the small-input window arm
+      for ((arm, tile) <- Seq[(String, (DataFrame, Seq[Column], Int, String) => DataFrame)](
+          "stamped" -> GlobalRank.stampedNtile, "window" -> GlobalRank.windowNtile)) {
+        val got = tile(d, Seq(col("v"), col("id")), k, "bucket")
           .groupBy("bucket").count().orderBy("bucket")
           .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-        assert(got == want, s"n=$n k=$k cutover=$cutover")
+        assert(got == want, s"n=$n k=$k arm=$arm")
       }
     }
   }
 
   test("fewer rows than buckets: one bucket per row") {
-    val got = GlobalRank.ntile(df(3), Seq(col("v"), col("id")), 10,
-        cutoverBytes = 0L)
+    val got = GlobalRank.stampedNtile(df(3), Seq(col("v"), col("id")), 10, "bucket")
       .select("bucket").collect().map(_.getInt(0)).sorted.toSeq
     assert(got == Seq(1, 2, 3))
   }

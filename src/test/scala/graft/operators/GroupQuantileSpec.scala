@@ -14,6 +14,17 @@ class GroupQuantileSpec extends SparkSpec {
   private val medPick =
     Seq("med" -> ((n: org.apache.spark.sql.Column) => GroupQuantile.rank(n, 2L)))
 
+  private type Picks = Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)]
+
+  /** selectRanks over group "g" and value "v" through one named arm. */
+  private def stampedRanks(df: org.apache.spark.sql.DataFrame, picks: Picks) =
+    GroupQuantile.pickRanks(GroupQuantile.stampedGroupRank(df, Seq("g"), "v"),
+      Seq("g"), "v", picks)
+  private def windowRanks(df: org.apache.spark.sql.DataFrame, picks: Picks) =
+    GroupQuantile.pickRanks(GroupQuantile.windowGroupRank(df, Seq("g"), "v"),
+      Seq("g"), "v", picks)
+  private val arms = Seq(stampedRanks _, windowRanks _)
+
   test("nearest-rank median matches the sorted-array idiom (window path)") {
     val got = GroupQuantile.selectRanks(sample, Seq("g"), "v", medPick)
       .orderBy("g").collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -39,8 +50,7 @@ class GroupQuantileSpec extends SparkSpec {
   }
 
   test("GlobalRank path (cutover 0) agrees with the window path") {
-    val big = GroupQuantile.selectRanks(sample, Seq("g"), "v", medPick,
-      cutoverBytes = 0L).orderBy("g").collect()
+    val big = stampedRanks(sample, medPick).orderBy("g").collect()
     val small = GroupQuantile.selectRanks(sample, Seq("g"), "v", medPick)
       .orderBy("g").collect()
     assert(big.toSeq == small.toSeq)
@@ -51,13 +61,12 @@ class GroupQuantileSpec extends SparkSpec {
     // estimate lies"): when withGroupRank's cutover routes to the large
     // arm — which in production happens precisely because the plan
     // estimate may LIE low (compressed text scans read 3-10x under
-    // their in-memory size) — the inner GlobalRank.withRowNumber must
-    // be FORCED onto the distributed stamp, not allowed to re-read the
-    // same low estimate and pick its empty-PARTITION-BY window (the
+    // their in-memory size) — the inner rank must be GlobalRank's
+    // stamped arm, never a re-dispatch that re-reads the same low
+    // estimate and picks its empty-PARTITION-BY window (the
     // whole table sorted in one task, duplicated under the offsets
     // aggregate: measured 38.5 s vs 6.1 s at sf1).
-    val plan = GroupQuantile.selectRanks(sample, Seq("g"), "v", medPick,
-      cutoverBytes = 0L).queryExecution.explainString(
+    val plan = stampedRanks(sample, medPick).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
     assert(!plan.contains("windowspecdefinition"),
       s"forced large arm must stamp, never window:\n$plan")
@@ -73,9 +82,8 @@ class GroupQuantileSpec extends SparkSpec {
       "lo" -> ((n: org.apache.spark.sql.Column) => GroupQuantile.rank(n, 20L)),
       "hi" -> ((n: org.apache.spark.sql.Column) =>
         GroupQuantile.idiv(lit(19L) * n + lit(19L), lit(20L))))
-    for (cut <- Seq(0L, GlobalRank.WindowCutoverBytes)) {
-      val r = GroupQuantile.selectRanks(df, Seq("g"), "v", picks,
-        cutoverBytes = cut).collect().head
+    for (arm <- arms) {
+      val r = arm(df, picks).collect().head
       assert(r.getLong(1) == 100L) // n
       assert(r.getLong(2) == 5L)   // rank (100+19) div 20 = 5
       assert(r.getLong(3) == 95L)  // rank (1900+19) div 20 = 95
@@ -95,9 +103,8 @@ class GroupQuantileSpec extends SparkSpec {
   test("duplicate values: any tie order selects the same rank value") {
     val df = Seq.fill(6)(("g", 4L)).toDF("g", "v")
       .unionAll(Seq(("g", 1L), ("g", 9L)).toDF("g", "v"))
-    for (cut <- Seq(0L, GlobalRank.WindowCutoverBytes)) {
-      val r = GroupQuantile.selectRanks(df, Seq("g"), "v", medPick,
-        cutoverBytes = cut).collect().head
+    for (arm <- arms) {
+      val r = arm(df, medPick).collect().head
       assert(r.getLong(1) == 8L && r.getLong(2) == 4L)
     }
   }
@@ -110,8 +117,8 @@ class GroupQuantileSpec extends SparkSpec {
       (Option("a"), 5L), (Option("a"), 1L), (Option("a"), 9L),
       (Option.empty[String], 10L), (Option.empty[String], 30L),
       (Option.empty[String], 20L)).toDF("g", "v")
-    val shapes = Seq(0L, GlobalRank.WindowCutoverBytes).map { cut =>
-      GroupQuantile.selectRanks(df, Seq("g"), "v", medPick, cutoverBytes = cut)
+    val shapes = arms.map { arm =>
+      arm(df, medPick)
         .collect().map(r =>
           (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSet
     }

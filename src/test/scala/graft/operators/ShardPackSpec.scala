@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,16 +31,16 @@ class ShardPackSpec extends SparkSpec {
   }
 
   test("assignment equals the global-window form (both paths)") {
-    // cutoverBytes=0 forces the distributed offset path; the default
-    // takes the small-input window path (r14 size cutover)
-    for (n <- Seq(10, 1000); cutover <- Seq(0L, 256L * 1024 * 1024)) {
-      val got = ShardPack.assign(docs(n), col("k"), col("w"), 1000L,
-          cutoverBytes = cutover)
+    // the distributed offset arm and the small-input window arm
+    val arms = Seq[(String, (DataFrame, Column, Column) => DataFrame)](
+      "distributed" -> ShardPack.distributedPriors, "window" -> ShardPack.windowPriors)
+    for (n <- Seq(10, 1000); (arm, priors) <- arms) {
+      val got = ShardPack.shardIds(priors(docs(n), col("k"), col("w")), 1000L)
         .select(col("_k").as("k"), col("shard_id"))
         .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       val want = windowForm(n)
         .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(got == want, s"n=$n cutover=$cutover")
+      assert(got == want, s"n=$n arm=$arm")
     }
   }
 

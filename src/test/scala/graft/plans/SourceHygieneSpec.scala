@@ -28,6 +28,9 @@ import scala.jdk.CollectionConverters._
   * Every operator object in `graft.streaming` and `graft.operators` is
   * called from `src/main` outside its own file, so an operator whose
   * only caller is its spec cannot pile up.
+  *
+  * No parameter lets a caller force an operator's arm: operators pick
+  * their arm from the input alone, and specs call each arm by name.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -182,6 +185,18 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(uncalled.isEmpty,
       s"objects named nowhere else in src/main: ${uncalled.mkString(", ")} — " +
         "delete an operator that only its spec calls")
+  }
+
+  test("no src/main parameter exists only to force an operator's arm") {
+    val switch = ("\\b(?:cutoverBytes|skewSafe|maxFilesPerBatch|filesPerHour|" +
+      "forceStringFallback|driverCutoverEdges)\\s*:\\s*\\w+|" +
+      "\\bpartitions\\s*:\\s*Int\\s*=\\s*0\\b").r
+    val offenders = mainSources.flatMap { p =>
+      switch.findAllIn(code(new String(Files.readAllBytes(p)))).map(m => s"$p: $m")
+    }
+    assert(offenders.isEmpty,
+      s"${offenders.size} arm-forcing parameters: ${offenders.mkString(", ")} — " +
+        "dispatch from the input and give each arm a named def instead")
   }
 
   test("every main in src/main is named in README.md's entry points") {

@@ -12,25 +12,22 @@ class PhraseSearchSpec extends SparkSpec {
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   test("window and array census arms produce identical rows") {
-    // force each arm regardless of the fixture's size
-    val win = RetrievalQueries.phraseSearch(docs, cutoverBytes = Long.MaxValue)
-      .collect().toSeq
-    val arr = RetrievalQueries.phraseSearch(docs, cutoverBytes = 0L)
-      .collect().toSeq
+    // each arm by name, regardless of the fixture's size
+    val win = RetrievalQueries.windowPhraseSearch(docs).collect().toSeq
+    val arr = RetrievalQueries.arrayPhraseSearch(docs).collect().toSeq
     assert(win.nonEmpty, "fixture must exercise the phrase probe")
     assert(win == arr)
   }
 
   test("dispatch: window arm below the cutover, array arm above") {
     import org.apache.spark.sql.execution.FormattedMode
-    def planOf(cutover: Long): String =
-      RetrievalQueries.phraseSearch(docs, cutoverBytes = cutover)
-        .queryExecution.explainString(FormattedMode)
+    def planOf(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.explainString(FormattedMode)
     // the window arm's census runs two leads over a per-doc window; the
     // array arm has no Window operator anywhere in its lineage
-    assert(planOf(Long.MaxValue).contains("Window"),
+    assert(planOf(RetrievalQueries.windowPhraseSearch(docs)).contains("Window"),
       "small input must take the window census")
-    assert(!planOf(0L).contains("Window"),
+    assert(!planOf(RetrievalQueries.arrayPhraseSearch(docs)).contains("Window"),
       "large input must take the window-free array census")
     // default cutover on the tiny fixture routes to the window arm
     assert(RetrievalQueries.phraseSearch(docs)

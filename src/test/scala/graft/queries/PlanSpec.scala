@@ -135,9 +135,10 @@ class PlanSpec extends SparkSpec {
       s"small input should take the window arm:\n$plan")
     val d = graft.Tables.load(spark, dir, "documents")
       .selectExpr("doc_id", "size(split(text, ' ')) AS w")
-    val big = graft.operators.ShardPack.assign(d,
-      org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.col("w"), 4096L, cutoverBytes = 0L)
+    val big = graft.operators.ShardPack.shardIds(
+      graft.operators.ShardPack.distributedPriors(d,
+        org.apache.spark.sql.functions.col("doc_id"),
+        org.apache.spark.sql.functions.col("w")), 4096L)
     big.collect()
     val bigPlan = big.queryExecution.explainString(
       ExplainMode.fromString("formatted"))
@@ -682,9 +683,9 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
     val d = graft.Tables.load(spark, dir, "documents")
       .selectExpr("doc_id", "size(split(text, ' ')) AS w")
-    val big = graft.operators.ShardPack.priors(d,
+    val big = graft.operators.ShardPack.distributedPriors(d,
       org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.col("w"), cutoverBytes = 0L)
+      org.apache.spark.sql.functions.col("w"))
     big.collect()
     val bigPlan = big.queryExecution.explainString(
       ExplainMode.fromString("formatted"))
@@ -744,14 +745,13 @@ class PlanSpec extends SparkSpec {
       s"small input should take the window arm:\n$plan")
     assert(!plan.contains("monotonically_increasing_id"),
       s"small input should skip the stamp machinery:\n$plan")
-    // ...and the LARGE arm (forced via cutoverBytes=0) keeps the scale
+    // ...and the LARGE arm (called by name) keeps the scale
     // shape: range partition + broadcast offsets + mid stamping, no
     // empty-partition window sorting the corpus in one task
     val d = graft.Tables.load(spark, dir, "documents")
       .select(org.apache.spark.sql.functions.col("doc_id"))
-    val big = graft.operators.GlobalRank.withRowNumber(d,
-      Seq(org.apache.spark.sql.functions.col("doc_id")), "rn",
-      cutoverBytes = 0L)
+    val big = graft.operators.GlobalRank.stampedRowNumber(d,
+      Seq(org.apache.spark.sql.functions.col("doc_id")), "rn")
     big.collect()
     val bigPlan = big.queryExecution.explainString(
       ExplainMode.fromString("formatted"))

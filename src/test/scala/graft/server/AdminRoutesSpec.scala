@@ -350,6 +350,26 @@ class AdminRoutesSpec extends SparkSpec {
     assert(tmRow.exists(_.get("hot_files").asInt() >= 1))
   }
 
+  test("tiering: a migrated daily-compacted day stays queryable") {
+    // two flushes into one old day, so daily compaction merges them into
+    // the daily tier; migration then moves that day to the cold daily tier
+    post("/api/v1/write/msgpack", payload("tmd", (0 until 3).map(OldUs + _ * 1000000L)))
+    post("/api/v1/write/msgpack", payload("tmd", (3 until 5).map(OldUs + _ * 1000000L)))
+    post("/api/v1/write/msgpack", payload("tmd", (0 until 3).map(nowUs + _ * 1000000L)))
+    assert(queryCount("SELECT count(*) FROM tmd") == 8)
+
+    val trig = json(post("/api/v1/compaction/trigger",
+      j("database" -> "default", "measurement" -> "tmd", "tier" -> "daily",
+        "min_files" -> 2, "min_age_hours" -> 0)))
+    assert(trig.get("count").asInt() == 1, trig.toString)
+    assert(queryCount("SELECT count(*) FROM tmd") == 8)
+
+    val mig = json(post("/api/v1/tiering/migrate",
+      j("database" -> "default", "measurement" -> "tmd", "after_days" -> 30)))
+    assert(mig.get("results").get(0).get("migrated").asInt() == 1, mig.toString)
+    assert(queryCount("SELECT count(*) FROM tmd") == 8)
+  }
+
   test("tiering policies: CRUD + effective fallback") {
     assert(json(get("/api/v1/tiering/policies/somedb/effective"))
       .get("source").asText() == "default")
