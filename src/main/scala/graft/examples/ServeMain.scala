@@ -16,12 +16,13 @@ import graft.server.HttpServer
   *                        default: disabled, config.go:1438)
   *   GRAFT_COLD_ROOT      cold-tier root for /api/v1/tiering (default
   *                        {root}/_cold)
-  *   GRAFT_COMPACT_EVERY_SEC  start the in-process compaction
-  *                        scheduler at this interval (unset = admin
-  *                        trigger only)
   *   SPARK_GRAFT_CPUS     local[N] parallelism (default all cores,
   *                        at least 4)
   *   SPARK_GRAFT_MASTER   Spark master (default local[N])
+  *
+  * The lifecycle tick ([[graft.server.Lifecycle]]) always runs, once a
+  * minute: due continuous-query windows, active retention policies, and
+  * hourly and daily compaction of every database.
   *
   * The session is [[graft.HarnessSession]]'s with FAIR scheduling. On a
   * real cluster, point SPARK_GRAFT_MASTER at the cluster master —
@@ -47,10 +48,6 @@ object ServeMain {
     if (sys.env.get("GRAFT_DELETE_ENABLED").exists(_.toBoolean))
       server.admin.deleteEnabled = true
     sys.env.get("GRAFT_COLD_ROOT").foreach(server.admin.coldRoot = _)
-    sys.env.get("GRAFT_COMPACT_EVERY_SEC").flatMap(_.toLongOption).foreach { s =>
-      new graft.jobs.CompactionScheduler(server.catalog,
-        intervalMillis = s * 1000L).start()
-    }
     // buffered-accept ingest (the reference's ArrowBuffer+WAL regime):
     // GRAFT_INGEST_WAL_DIR=<dir> turns it on; GRAFT_INGEST_FLUSH_MS and
     // GRAFT_INGEST_FLUSH_ROWS tune the flush cadence;
@@ -70,6 +67,7 @@ object ServeMain {
       if (recovered > 0) println(s"replayed $recovered WAL rows from a previous run")
     }
     val bound = server.start()
+    server.admin.lifecycle.start(60000L)
     println(s"graft serving on http://127.0.0.1:$bound  (root=$root)")
     println(s"  POST /api/v1/query            {\"sql\": \"...\"}  (Accept: arrow/msgpack negotiates)")
     println(s"  POST /write?db=mydb           InfluxDB line protocol")

@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.catalog.{GraftCatalog, ParquetRead, TableMeta}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -142,9 +142,7 @@ object Compaction {
     val spark = catalog.spark
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = partDir.getFileSystem(conf)
-    val files = fs.listStatus(partDir)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
+    val files = parquetFiles(fs, partDir).sortBy(_.getName)
     if (files.length < minFiles)
       return Result(partDir.toString, files.length, 0, 0, compacted = false)
 
@@ -174,10 +172,9 @@ object Compaction {
       .options(graft.ingest.HourPartitionedWriter.bloomOptions(
         meta.tagColumns.filter(deduped.columns.contains)))
       .parquet(tmp.toString)
-    val newFiles = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)
+    val newFiles = parquetFiles(fs, tmp)
     require(newFiles.length == 1, s"one-partition write produced ${newFiles.length} files")
-    val rowsOut = footerRowCount(conf, newFiles.toSeq)
+    val rowsOut = footerRowCount(conf, newFiles)
     val finalPath = new Path(partDir,
       graft.ingest.HourPartitionedWriter.flushFileName(m, compactUs, 0))
     CompactionManifest.begin(tablePath, conf, CompactionManifest.Entry(
@@ -287,10 +284,9 @@ object Compaction {
       .options(graft.ingest.HourPartitionedWriter.bloomOptions(
         meta.tagColumns.filter(deduped.columns.contains)))
       .parquet(tmp.toString)
-    val newFiles = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)
+    val newFiles = parquetFiles(fs, tmp)
     require(newFiles.length == 1, s"one-partition write produced ${newFiles.length} files")
-    val rowsOut = footerRowCount(conf, newFiles.toSeq)
+    val rowsOut = footerRowCount(conf, newFiles)
     fs.mkdirs(dailyDay)
     if (!fs.rename(newFiles.head, new Path(dailyDay, finalName)))
       throw new java.io.IOException(
@@ -320,11 +316,11 @@ object Compaction {
     *
     * A day qualifies when it has fully elapsed (`now > dayStart +
     * minAgeHours`), and either carries ≥ minFiles hour-level files or
-    * already has a daily file (late backfill re-merge). Days younger than
-    * skipFileAgeCheckDays additionally require the newest file to be ≥1h
+    * already has a daily file (late backfill re-merge). Days less than 7
+    * days old (SkipFileAgeCheckDays) also need their newest file ≥1h
     * old, so an in-progress backfill is never merged under it. */
   def runDaily(catalog: GraftCatalog, db: String, m: String,
-      minFiles: Int = 12, minAgeHours: Int = 24, skipFileAgeCheckDays: Int = 7,
+      minFiles: Int = 12, minAgeHours: Int = 24,
       nowMicros: () => Long = () => System.currentTimeMillis() * 1000L)
       : Seq[Result] = {
     val conf = catalog.spark.sparkContext.hadoopConfiguration
@@ -340,11 +336,9 @@ object Compaction {
             .flatMap(h => fs.listStatus(h.getPath))
             .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
           val dailyDay = new Path(catalog.dailyDayPath(db, m, y, mo, d))
-          val hasDaily = fs.exists(dailyDay) && fs.listStatus(dailyDay)
-            .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+          val hasDaily = fs.exists(dailyDay) && parquetFiles(fs, dailyDay).nonEmpty
           val enoughFiles = hourFiles.length >= minFiles || hasDaily
-          val veryOld = nowUs > dayStartUs +
-            skipFileAgeCheckDays.toLong * 24L * 3600L * 1000000L
+          val veryOld = nowUs > dayStartUs + 7L * 24L * 3600L * 1000000L
           val settled = veryOld || (hourFiles.nonEmpty &&
             hourFiles.map(_.getModificationTime).max * 1000L <= nowUs - 3600L * 1000000L)
           hourFiles.nonEmpty && enoughFiles && settled
@@ -519,6 +513,11 @@ object Compaction {
     } yield (y, mo, d)
   }
 
+  /** The parquet files directly in `dir`. */
+  private[graft] def parquetFiles(fs: FileSystem, dir: Path): Seq[Path] =
+    fs.listStatus(dir).toSeq.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath)
+
   /** Epoch hour of a .../year=Y/month=M/day=D/hour=H path. */
   private[jobs] def partitionHourEpoch(p: Path): Option[Long] = {
     def v(seg: String): Option[Int] = {
@@ -532,5 +531,39 @@ object Compaction {
       y <- v(p.getParent.getParent.getParent.getName)
     } yield java.time.LocalDateTime.of(y, mo, d, h, 0)
       .toEpochSecond(java.time.ZoneOffset.UTC) / 3600L
+  }
+
+  /** The partitions of `db/m` wholly before `cutoffHour` — hour
+    * partitions, and daily-tier days whose LAST hour is — and how many
+    * partitions stay. Retention deletes them; tiering moves them. */
+  private[jobs] def partitionsBefore(catalog: GraftCatalog, db: String, m: String,
+      cutoffHour: Long): (Seq[Path], Seq[Path], Int) = {
+    val (hours, keptHours) = catalog.listHourPartitions(db, m)
+      .partition(partitionHourEpoch(_).exists(_ < cutoffHour))
+    // a stray month=13 / day=32 directory is skipped, not fatal
+    val (days, keptDays) = catalog.listDailyTierDays(db, m).partition(p =>
+      partitionDayValues(p).flatMap { case (y, mo, d) =>
+        scala.util.Try(java.time.LocalDate.of(y, mo, d).toEpochDay).toOption
+      }.exists(_ * 24L + 23L < cutoffHour))
+    (hours, days, keptHours.length + keptDays.length)
+  }
+
+  /** Delete the `year=/month=/day=` parents a removed partition left
+    * empty: a hollow `year=*` chain passes a table's has-data glob and
+    * fails its read. Concurrent ingest can repopulate a directory
+    * between the empty check and the non-recursive delete ("Directory
+    * is not empty"); that is a re-population, not an error, so the walk
+    * stops there and the next run reconsiders. */
+  private[jobs] def pruneEmptyParents(fs: FileSystem, removed: Path): Unit = {
+    var parent = removed.getParent
+    while (parent != null && parent.getName.contains("=") &&
+      fs.exists(parent) && fs.listStatus(parent).isEmpty) {
+      try {
+        fs.delete(parent, false)
+        parent = parent.getParent
+      } catch {
+        case _: java.io.IOException => parent = null
+      }
+    }
   }
 }

@@ -142,53 +142,11 @@ object CqState {
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
     fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
-}
 
-/** Interval scheduler for continuous queries (reference:
-  * internal/scheduler/cq_scheduler.go — one ticker per CQ at its own
-  * interval). Each tick drives [[ContinuousQuery.catchUp]], so a
-  * scheduler that was down for N intervals runs the N missed windows in
-  * order on its first tick back. `tick()` is deterministic and callable
-  * directly; `start()` wraps it in a daemon interval loop. */
-final class CqScheduler(
-    catalog: GraftCatalog,
-    cqs: Seq[(ContinuousQuery, Long)], // (cq, interval µs)
-    tickMillis: Long = 60000L,
-    nowMicros: () => Long = () => System.currentTimeMillis() * 1000L) {
-
-  def tick(): Map[String, Seq[ContinuousQuery.Execution]] =
-    cqs.map { case (cq, intervalUs) =>
-      cq.name -> (
-        try ContinuousQuery.catchUp(catalog, cq, intervalUs, nowMicros())
-        catch {
-          case e: Exception =>
-            org.slf4j.LoggerFactory.getLogger(getClass)
-              .warn(s"CQ '${cq.name}' tick failed: ${e.getMessage}")
-            Nil // watermark not advanced — the window re-runs next tick
-        })
-    }.toMap
-
-  private val running = new java.util.concurrent.atomic.AtomicBoolean(false)
-  @volatile private var thread: Option[Thread] = None
-
-  def start(): Unit = {
-    if (!running.compareAndSet(false, true)) return
-    val t = new Thread(() => {
-      while (running.get()) {
-        try tick()
-        catch { case _: InterruptedException => () }
-        try Thread.sleep(tickMillis)
-        catch { case _: InterruptedException => () }
-      }
-    }, "graft-cq-scheduler")
-    t.setDaemon(true)
-    thread = Some(t)
-    t.start()
-  }
-
-  def stop(): Unit = {
-    running.set(false)
-    thread.foreach(_.interrupt())
-    thread = None
+  /** Forget a CQ's watermark, so a new CQ of the same name starts from
+    * the first-run lookback. */
+  def clear(catalog: GraftCatalog, name: String): Unit = {
+    val p = stateFile(catalog, name)
+    p.getFileSystem(catalog.spark.sparkContext.hadoopConfiguration).delete(p, false)
   }
 }

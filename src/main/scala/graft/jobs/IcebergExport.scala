@@ -53,6 +53,10 @@ object IcebergExport {
 
   final case class Result(version: Int, snapshotId: Long, files: Int, rows: Long)
 
+  /** Where a measurement's Iceberg table lives once it is exported. */
+  def tableRoot(catalog: GraftCatalog, db: String, m: String): Path =
+    new Path(catalog.root, s"_iceberg/$db/$m")
+
   /** Reconcile the Iceberg table for `{db}/{measurement}` with the
     * measurement's current parquet files. Creates the table on first
     * call; subsequent calls append a new snapshot + metadata version. */
@@ -68,7 +72,7 @@ object IcebergExport {
     // discovery); data file paths in manifests are absolute, so the
     // table location and the data can live apart — same split as the
     // reference's warehouse prefix (exporter.go NewExporter(warehouse)).
-    val icebergDir = new Path(catalog.root, s"_iceberg/$db/$m")
+    val icebergDir = tableRoot(catalog, db, m)
     val metaDir = new Path(icebergDir, "metadata")
     fs.mkdirs(metaDir)
 

@@ -5,66 +5,48 @@ import org.apache.hadoop.fs.Path
 
 /** Retention policy — scheduled deletion of partitions whose event-time
   * hour is older than `retentionDays` (+ a safety buffer), per
-  * db/measurement. Pure path arithmetic, no data scan — the Spark
-  * mirror of the reference's retention scheduler
+  * db/measurement. Path arithmetic plus parquet footers, no data scan —
+  * the Spark mirror of the reference's retention scheduler
   * (internal/api/retention.go:54-67, :407).
   */
 object Retention {
 
-  final case class Result(deleted: Seq[String], keptCount: Int)
+  /** The expired partitions, the parquet files and footer rows inside
+    * them, and how many partitions stay. */
+  final case class Result(deleted: Seq[String], files: Int, rows: Long, keptCount: Int)
 
   /** Cutoff hour (epoch-hours) for a policy evaluated at `nowMicros`. */
   def cutoffHour(retentionDays: Int, bufferDays: Int, nowMicros: Long): Long =
     nowMicros / 1000000L / 3600L - (retentionDays + bufferDays).toLong * 24L
 
   /** The expired partition set WITHOUT deleting anything — the dry-run
-    * surface (retention.go's ExecuteRetentionRequest.DryRun). Returns
-    * (expiredPaths, keptCount). Hour partitions expire when their hour
-    * is past the cutoff; day-compacted partitions when their LAST hour
-    * is. */
+    * surface (retention.go's ExecuteRetentionRequest.DryRun). Hour
+    * partitions expire when their hour is past the cutoff;
+    * day-compacted partitions when their LAST hour is. */
   def expired(catalog: GraftCatalog, db: String, m: String,
       retentionDays: Int, bufferDays: Int = 0,
       nowMicros: () => Long = () => System.currentTimeMillis() * 1000L)
-      : (Seq[Path], Int) = {
-    val cutoff = cutoffHour(retentionDays, bufferDays, nowMicros())
-    val parts = catalog.listHourPartitions(db, m)
-    val (old, kept) = parts.partition(p =>
-      Compaction.partitionHourEpoch(p).exists(_ < cutoff))
-    val (oldDays, keptDays) = catalog.listDailyTierDays(db, m).partition(p =>
-      Compaction.partitionDayValues(p).exists { case (y, mo, d) =>
-        java.time.LocalDate.of(y, mo, d).atStartOfDay
-          .toEpochSecond(java.time.ZoneOffset.UTC) / 3600L + 23 < cutoff
-      })
-    (old ++ oldDays, kept.length + keptDays.length)
+      : Result = {
+    val (hours, days, kept) = Compaction.partitionsBefore(catalog, db, m,
+      cutoffHour(retentionDays, bufferDays, nowMicros()))
+    val conf = catalog.spark.sparkContext.hadoopConfiguration
+    val parquets = (hours ++ days).flatMap(p => Compaction.parquetFiles(p.getFileSystem(conf), p))
+    Result((hours ++ days).map(_.toString), parquets.size,
+      Compaction.footerRowCount(conf, parquets), kept)
   }
 
+  /** Delete the set [[expired]] lists, and return that set. */
   def apply(catalog: GraftCatalog, db: String, m: String,
       retentionDays: Int, bufferDays: Int = 0,
       nowMicros: () => Long = () => System.currentTimeMillis() * 1000L)
       : Result = {
-    val (old, keptCount) = expired(catalog, db, m, retentionDays, bufferDays, nowMicros)
+    val res = expired(catalog, db, m, retentionDays, bufferDays, nowMicros)
     val conf = catalog.spark.sparkContext.hadoopConfiguration
-    old.foreach { p =>
+    res.deleted.map(new Path(_)).foreach { p =>
       val fs = p.getFileSystem(conf)
       fs.delete(p, true)
-      // prune now-empty day/month/year parents. The isEmpty check and
-      // the non-recursive delete race concurrent ingest into the same
-      // old partition (live traffic can legally write event times here
-      // until retention's NEXT tick): a write landing in the gap makes
-      // delete throw "Directory is not empty" — that's a concurrent
-      // re-population, not an error; stop the upward walk and let the
-      // next tick reconsider.
-      var parent = p.getParent
-      while (parent != null && parent.getName.contains("=") &&
-        fs.exists(parent) && fs.listStatus(parent).isEmpty) {
-        try {
-          fs.delete(parent, false)
-          parent = parent.getParent
-        } catch {
-          case _: java.io.IOException => parent = null
-        }
-      }
+      Compaction.pruneEmptyParents(fs, p)
     }
-    Result(old.map(_.toString), keptCount)
+    res
   }
 }

@@ -100,8 +100,7 @@ object TargetedDelete {
           .coalesce(1)
           .write.mode("overwrite").option("compression", "zstd")
           .parquet(tmp.toString)
-        val rewritten = fs.listStatus(tmp)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        val rewritten = Compaction.parquetFiles(fs, tmp)
         require(rewritten.length == 1,
           s"delete rewrite produced ${rewritten.length} files, expected 1")
         // the new name keeps the original's RELATIVE recency position
@@ -118,9 +117,9 @@ object TargetedDelete {
           id = entryId, tier = "delete", partition = p.getParent.toString,
           tmpDir = tmp.toString, inputs = Seq(p.toString),
           outputs = Seq(finalPath.toString)))
-        if (!fs.rename(rewritten.head.getPath, finalPath))
+        if (!fs.rename(rewritten.head, finalPath))
           throw new java.io.IOException(
-            s"delete-rewrite rename failed: ${rewritten.head.getPath} -> " +
+            s"delete-rewrite rename failed: ${rewritten.head} -> " +
               s"$finalPath (recover() will roll back; original intact)")
         fs.delete(p, false)
         fs.delete(tmp, true)

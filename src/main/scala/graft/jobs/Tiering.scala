@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.catalog.GraftCatalog
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
 
 /** Tiered storage — age-based migration of hour partitions from the hot
@@ -41,56 +41,14 @@ object Tiering {
       dstFs.mkdirs(dst.getParent)
       FileUtil.copy(srcFs, src, dstFs, dst, false, true, conf)
       srcFs.delete(src, true)
-      // prune now-empty day/month/year parents: a hollow year=* chain
-      // makes catalog.table's hasData glob pass and the parquet read
-      // fail with 'Unable to infer schema'
-      var cur = src.getParent
-      val stop = new Path(hotBase).toUri.getPath
-      var walking = true
-      while (walking && cur != null && cur.toUri.getPath != stop &&
-        srcFs.exists(cur) && srcFs.listStatus(cur).isEmpty) {
-        // same isEmpty/delete race as Retention.apply: concurrent ingest
-        // can repopulate the dir between the check and the non-recursive
-        // delete ("Directory is not empty") — that's a stop-the-walk
-        // signal, not a migration failure
-        try srcFs.delete(cur, false)
-        catch { case _: java.io.IOException => walking = false }
-        cur = cur.getParent
-      }
+      Compaction.pruneEmptyParents(srcFs, src)
     }
 
-    val hotBase = catalog.tablePath(db, m)
-    val parts = catalog.listHourPartitions(db, m)
-    val (old, kept) = parts.partition(p =>
-      Compaction.partitionHourEpoch(p).exists(_ < cutoffHour))
-    old.foreach(move(_, hotBase, s"$coldRoot/$db/$m"))
-
-    // daily tier: a day is strictly older than the cutoff when even its
-    // LAST hour (23) predates it
-    val dailyBase = catalog.dailyPath(db, m)
-    val (oldDays, keptDays) = catalog.listDailyTierDays(db, m).partition(d =>
-      partitionDayEpoch(d).exists(_ * 24L + 23L < cutoffHour))
-    oldDays.foreach(move(_, dailyBase,
+    val (old, oldDays, kept) = Compaction.partitionsBefore(catalog, db, m, cutoffHour)
+    old.foreach(move(_, catalog.tablePath(db, m), s"$coldRoot/$db/$m"))
+    oldDays.foreach(move(_, catalog.dailyPath(db, m),
       s"$coldRoot/$db/$m${GraftCatalog.DailySuffix}"))
-
-    Result((old ++ oldDays).map(_.toString), kept.length + keptDays.length)
-  }
-
-  /** Epoch day of a `year=/month=/day=` directory. */
-  private def partitionDayEpoch(p: Path): Option[Long] = {
-    def v(seg: String): Option[Int] = {
-      val i = seg.indexOf('=')
-      if (i < 0) None else seg.substring(i + 1).toIntOption
-    }
-    for {
-      d <- v(p.getName)
-      mo <- v(p.getParent.getName)
-      y <- v(p.getParent.getParent.getName)
-      // a stray month=13 / day=32 directory must be skipped like a
-      // non-numeric one, not crash the whole migrate() pass
-      epoch <- scala.util.Try(
-        java.time.LocalDate.of(y, mo, d).toEpochDay).toOption
-    } yield epoch
+    Result((old ++ oldDays).map(_.toString), kept)
   }
 
   /** One logical table over both storage tiers AND both layout tiers

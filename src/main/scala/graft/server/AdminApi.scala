@@ -5,15 +5,17 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.HttpExchange
 import graft.catalog.GraftCatalog
 import graft.ingest.MqttSubscriber
-import graft.jobs.{Compaction, ContinuousQuery, Retention, TargetedDelete, Tiering}
+import graft.jobs.{Compaction, ContinuousQuery, CqState, IcebergExport, Retention,
+  TargetedDelete, Tiering}
 import graft.query.QueryFacade
+import graft.server.Lifecycle.{Gate, RetentionRun, TableCompaction}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{expr, lit}
 
 import java.time.Instant
 import java.util.concurrent.ConcurrentLinkedDeque
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import scala.collection.concurrent.TrieMap
 import scala.util.matching.Regex
 
@@ -54,11 +56,12 @@ import scala.util.matching.Regex
   */
 final class AdminApi(srv: HttpServer) {
 
-  private def catalog: GraftCatalog = srv.catalog
+  private[server] def catalog: GraftCatalog = srv.catalog
   private def hconf = srv.spark.sparkContext.hadoopConfiguration
   private def mapper = srv.mapper
   private def q(s: String) = srv.q(s)
   private def nowIso(): String = Instant.now().toString
+  private def nowUs(): Long = System.currentTimeMillis() * 1000L
 
   // ---- delete config (reference defaults, config.go:1438-1440) ---------
   /** Reference default is DISABLED for safety (`delete.enabled=false`). */
@@ -91,6 +94,7 @@ final class AdminApi(srv: HttpServer) {
     }
 
     def ids(): Seq[Long] = keys().flatMap(_.toLongOption).sorted
+    def all(): Seq[ObjectNode] = ids().flatMap(i => get(i.toString))
 
     def get(key: String): Option[ObjectNode] =
       RecordFiles.read(hconf, new Path(dir, s"$key.json"))
@@ -115,14 +119,6 @@ final class AdminApi(srv: HttpServer) {
   }
 
   private val retentionStore = new Store("retention")
-
-  // retention executions are single-flight (the reference's scheduler
-  // runs them serially): concurrent trigger-all calls raced each other's
-  // deletes — one tick's footer census read files another tick had just
-  // deleted (FileNotFound 500s under the lifecycle soak), and concurrent
-  // last-execution writes to the same policy record raced readers into
-  // checksum errors. Contended calls get 409, like compaction's trigger.
-  private val retentionBusy = new java.util.concurrent.atomic.AtomicBoolean(false)
   private val cqStore = new Store("cq")
   private val tierPolicyStore = new Store("tiering_policies")
   private val mqttStore = new Store("mqtt")
@@ -140,6 +136,37 @@ final class AdminApi(srv: HttpServer) {
       case None => "[]"
       case Some(ring) => historyJson(ring)
     }
+
+  // ---- lifecycle jobs ------------------------------------------------------
+
+  /** The tick that runs the jobs below on a schedule; see [[Lifecycle]]. */
+  val lifecycle = new Lifecycle(this)
+
+  // Each job kind is single-flight, shared by its HTTP routes and the
+  // tick: a contended route gets 409, a contended tick skips the kind.
+  // Concurrent retention runs raced each other's deletes — one run's
+  // footer census read files another had just deleted (FileNotFound
+  // 500s under the lifecycle soak), and concurrent last-execution writes
+  // to one policy record raced readers into checksum errors. Two
+  // concurrent compactions of one scope plan the same merge twice — the
+  // second's inputs vanish under it mid-write. The manifest's per-table
+  // lock makes the SWAP safe; the guard makes the PLAN safe.
+  private[server] val retentionBusy = new AtomicBoolean(false)
+  private[server] val cqBusy = new AtomicBoolean(false)
+  private[server] val compBusy = new AtomicBoolean(false)
+
+  /** `body`'s value, or None when another run holds `busy`. */
+  private[server] def exclusive[T](busy: AtomicBoolean)(body: => T): Option[T] =
+    if (!busy.compareAndSet(false, true)) None
+    else try Some(body) finally busy.set(false)
+
+  /** Active records of a store whose database exists. */
+  private def active(store: Store): Seq[ObjectNode] = {
+    val dbs = catalog.listDatabases().toSet
+    store.all().filter(r => oBool(r, "is_active", d = true) && dbs(r.get("database").asText))
+  }
+  private[server] def activeCqs(): Seq[ObjectNode] = active(cqStore)
+  private[server] def activePolicies(): Seq[ObjectNode] = active(retentionStore)
 
   // ---- compaction bookkeeping -------------------------------------------
   private val compActive = TrieMap.empty[Long, String]
@@ -198,20 +225,24 @@ final class AdminApi(srv: HttpServer) {
       case ("GET", "/api/v1/delete/config") => handleDeleteConfig(ex)
 
       case ("GET", "/api/v1/retention") => handleRetentionList(ex)
-      case ("POST", "/api/v1/retention") => handleRetentionCreate(ex)
+      case ("POST", "/api/v1/retention") => handleCreate(ex, retentionStore,
+        "retention policy", RetentionRunFields, validateRetention(body(ex)))
       case ("GET", RetExecs(id)) => ok(ex, 200, execList(s"retention/$id"))
       case ("POST", RetExec(id)) => handleRetentionExecute(ex, id.toLong)
       case ("GET", RetId(id)) => handleGet(ex, retentionStore, id, "retention policy")
-      case ("PUT", RetId(id)) => handleRetentionUpdate(ex, id.toLong)
+      case ("PUT", RetId(id)) => handleUpdate(ex, retentionStore, id.toLong,
+        "retention policy", RetentionRunFields, validateRetention)
       case ("DELETE", RetId(id)) => handleRemove(ex, retentionStore, id, "retention policy")
 
       case ("GET", "/api/v1/continuous_queries") => handleCqList(ex)
-      case ("POST", "/api/v1/continuous_queries") => handleCqCreate(ex)
+      case ("POST", "/api/v1/continuous_queries") => handleCreate(ex, cqStore,
+        "continuous query", CqRunFields, validateCq(body(ex)))
       case ("GET", CqExecs(id)) => ok(ex, 200, execList(s"cq/$id"))
       case ("POST", CqExec(id)) => handleCqExecute(ex, id.toLong)
       case ("GET", CqId(id)) => handleGet(ex, cqStore, id, "continuous query")
-      case ("PUT", CqId(id)) => handleCqUpdate(ex, id.toLong)
-      case ("DELETE", CqId(id)) => handleRemove(ex, cqStore, id, "continuous query")
+      case ("PUT", CqId(id)) => handleUpdate(ex, cqStore, id.toLong,
+        "continuous query", CqRunFields, validateCq)
+      case ("DELETE", CqId(id)) => handleCqRemove(ex, id)
 
       case ("GET", "/api/v1/compaction/status") => handleCompactionStatus(ex)
       case ("GET", "/api/v1/compaction/stats") => handleCompactionStatus(ex)
@@ -264,6 +295,47 @@ final class AdminApi(srv: HttpServer) {
     store.get(key) match {
       case Some(n) => ok(ex, 200, render(n))
       case None => fail(ex, 404, s"$what not found: $key")
+    }
+
+  /** The fields a retention policy's or CQ's executions fill in. */
+  private val RetentionRunFields =
+    Seq("last_execution_time", "last_execution_status", "last_deleted_count")
+  private val CqRunFields = Seq("last_execution_time", "last_execution_status",
+    "last_processed_time", "last_records_written")
+
+  /** POST of a retention policy or CQ under a new name, its run fields
+    * empty until it first executes. */
+  private def handleCreate(ex: HttpExchange, store: Store, what: String,
+      runFields: Seq[String], validated: Either[String, ObjectNode]): Unit =
+    validated match {
+      case Left(e) => fail(ex, 400, e)
+      case Right(node) =>
+        val name = node.get("name").asText
+        if (store.all().exists(_.get("name").asText == name)) {
+          fail(ex, 400, s"$what '$name' already exists"); return
+        }
+        runFields.foreach(node.putNull)
+        node.put("created_at", nowIso())
+        node.put("updated_at", nowIso())
+        store.create(node)
+        ok(ex, 201, render(node))
+    }
+
+  /** PUT of a retention policy or CQ: new fields, the run fields and
+    * creation time kept. */
+  private def handleUpdate(ex: HttpExchange, store: Store, id: Long, what: String,
+      runFields: Seq[String], validate: JsonNode => Either[String, ObjectNode]): Unit =
+    store.get(id.toString) match {
+      case None => fail(ex, 404, s"$what not found: $id")
+      case Some(old) => validate(body(ex)) match {
+        case Left(e) => fail(ex, 400, e)
+        case Right(node) =>
+          node.put("id", id)
+          (runFields :+ "created_at").foreach(f => node.set[ObjectNode](f, old.get(f)))
+          node.put("updated_at", nowIso())
+          store.put(id.toString, node)
+          ok(ex, 200, render(node))
+      }
     }
 
   private def handleRemove(ex: HttpExchange, store: Store, key: String,
@@ -403,9 +475,7 @@ final class AdminApi(srv: HttpServer) {
   // ---- retention ----------------------------------------------------------
 
   private def handleRetentionList(ex: HttpExchange): Unit =
-    ok(ex, 200, retentionStore.ids()
-      .flatMap(id => retentionStore.get(id.toString))
-      .map(render).mkString("[", ",", "]"))
+    ok(ex, 200, retentionStore.all().map(render).mkString("[", ",", "]"))
 
   private def validateRetention(b: JsonNode): Either[String, ObjectNode] = {
     val name = oText(b, "name").getOrElse(return Left("name is required"))
@@ -430,40 +500,6 @@ final class AdminApi(srv: HttpServer) {
     Right(node)
   }
 
-  private def handleRetentionCreate(ex: HttpExchange): Unit =
-    validateRetention(body(ex)) match {
-      case Left(e) => fail(ex, 400, e)
-      case Right(node) =>
-        val name = node.get("name").asText
-        val dup = retentionStore.ids().flatMap(i => retentionStore.get(i.toString))
-          .exists(_.get("name").asText == name)
-        if (dup) { fail(ex, 400, s"retention policy '$name' already exists"); return }
-        node.putNull("last_execution_time")
-        node.putNull("last_execution_status")
-        node.putNull("last_deleted_count")
-        node.put("created_at", nowIso())
-        node.put("updated_at", nowIso())
-        retentionStore.create(node)
-        ok(ex, 201, render(node))
-    }
-
-  private def handleRetentionUpdate(ex: HttpExchange, id: Long): Unit =
-    retentionStore.get(id.toString) match {
-      case None => fail(ex, 404, s"retention policy not found: $id")
-      case Some(old) => validateRetention(body(ex)) match {
-        case Left(e) => fail(ex, 400, e)
-        case Right(node) =>
-          node.put("id", id)
-          node.set[ObjectNode]("last_execution_time", old.get("last_execution_time"))
-          node.set[ObjectNode]("last_execution_status", old.get("last_execution_status"))
-          node.set[ObjectNode]("last_deleted_count", old.get("last_deleted_count"))
-          node.set[ObjectNode]("created_at", old.get("created_at"))
-          node.put("updated_at", nowIso())
-          retentionStore.put(id.toString, node)
-          ok(ex, 200, render(node))
-      }
-    }
-
   /** POST /api/v1/retention/:id/execute — dry-run lists what would
     * expire (partition paths + footer row counts, no data scan); the
     * real run deletes and records the execution (retention.go's
@@ -474,67 +510,58 @@ final class AdminApi(srv: HttpServer) {
       case None => fail(ex, 404, s"retention policy not found: $id"); return
       case Some(p) => p
     }
-    if (!retentionBusy.compareAndSet(false, true)) {
-      fail(ex, 409, "retention execution already in progress"); return
-    }
-    try handleRetentionExecuteLocked(ex, id, pol, t0)
-    finally retentionBusy.set(false)
-  }
-
-  private def handleRetentionExecuteLocked(ex: HttpExchange, id: Long,
-      pol: ObjectNode, t0: Long): Unit = {
     val b = body(ex)
     val dryRun = oBool(b, "dry_run")
-    val confirm = oBool(b, "confirm")
-    if (!dryRun && !confirm) {
+    if (!dryRun && !oBool(b, "confirm")) {
       fail(ex, 400, "Confirmation required. Set confirm=true or use dry_run=true.")
       return
     }
+    val run = exclusive(retentionBusy)(runRetention(pol, dryRun, nowUs())).getOrElse {
+      fail(ex, 409, "retention execution already in progress"); return
+    }
+    ok(ex, 200,
+      s"""{"policy_id":$id,"policy_name":${q(pol.get("name").asText)},""" +
+        s""""deleted_count":${run.rows},"files_deleted":${run.files},""" +
+        s""""execution_time_ms":${(System.nanoTime() - t0) / 1e6},"dry_run":$dryRun,""" +
+        s""""cutoff_date":${q(run.cutoffIso)},""" +
+        s""""affected_measurements":${run.measurements.map(q).mkString("[", ",", "]")}}""")
+  }
+
+  /** One run of a retention policy, for its execute route, the
+    * trigger-all route and the tick; the caller holds `retentionBusy`.
+    * A real run that deleted anything records the execution. */
+  private[server] def runRetention(pol: ObjectNode, dryRun: Boolean,
+      nowUs: Long): RetentionRun = {
+    val t0 = System.nanoTime()
+    val id = pol.get("id").asLong
     val db = pol.get("database").asText
     val days = pol.get("retention_days").asInt
     val buffer = pol.get("buffer_days").asInt
-    val measurements = oText(pol, "measurement").map(Seq(_))
-      .getOrElse(catalog.listTables(db))
-    val cutoff = Retention.cutoffHour(days, buffer, System.currentTimeMillis() * 1000L)
-    val cutoffIso = Instant.ofEpochSecond(cutoff * 3600L).toString
-    var filesDeleted = 0
-    var rowsDeleted = 0L
-    val affected = Seq.newBuilder[String]
-    measurements.foreach { m =>
-      val (exp, _) = Retention.expired(catalog, db, m, days, buffer)
-      if (exp.nonEmpty) {
-        affected += m
-        val parquets = exp.flatMap { p =>
-          val fs = p.getFileSystem(hconf)
-          fs.listStatus(p).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath).toSeq
-        }
-        filesDeleted += parquets.size
-        rowsDeleted += Compaction.footerRowCount(hconf, parquets)
-        if (!dryRun) {
-          Retention(catalog, db, m, days, buffer)
-          srv.invalidateView(db, m)
-        }
-      }
-    }
-    val ms = (System.nanoTime() - t0) / 1e6
-    if (!dryRun) {
+    val cutoffIso = Instant.ofEpochSecond(
+      Retention.cutoffHour(days, buffer, nowUs) * 3600L).toString
+    val expired = oText(pol, "measurement").map(Seq(_)).getOrElse(catalog.listTables(db))
+      .map { m =>
+        val res =
+          if (dryRun) Retention.expired(catalog, db, m, days, buffer, () => nowUs)
+          else Retention(catalog, db, m, days, buffer, () => nowUs)
+        if (!dryRun && res.deleted.nonEmpty) srv.invalidateView(db, m)
+        m -> res
+      }.filter(_._2.deleted.nonEmpty)
+    val run = RetentionRun(cutoffIso, expired.map(_._1),
+      expired.map(_._2.files).sum, expired.map(_._2.rows).sum)
+    if (!dryRun && run.measurements.nonEmpty) {
       pol.put("last_execution_time", nowIso())
       pol.put("last_execution_status", "success")
-      pol.put("last_deleted_count", rowsDeleted)
+      pol.put("last_deleted_count", run.rows)
       pol.put("updated_at", nowIso())
       retentionStore.put(id.toString, pol)
       recordExec(s"retention/$id",
         s"""{"policy_id":$id,"execution_time":${q(nowIso())},""" +
-          s""""status":"success","deleted_count":$rowsDeleted,""" +
-          s""""cutoff_date":${q(cutoffIso)},"execution_duration_ms":$ms}""")
+          s""""status":"success","deleted_count":${run.rows},""" +
+          s""""cutoff_date":${q(cutoffIso)},""" +
+          s""""execution_duration_ms":${(System.nanoTime() - t0) / 1e6}}""")
     }
-    ok(ex, 200,
-      s"""{"policy_id":$id,"policy_name":${q(pol.get("name").asText)},""" +
-        s""""deleted_count":$rowsDeleted,"files_deleted":$filesDeleted,""" +
-        s""""execution_time_ms":$ms,"dry_run":$dryRun,""" +
-        s""""cutoff_date":${q(cutoffIso)},""" +
-        s""""affected_measurements":${affected.result().map(q).mkString("[", ",", "]")}}""")
+    run
   }
 
   // ---- continuous queries ---------------------------------------------------
@@ -608,46 +635,17 @@ final class AdminApi(srv: HttpServer) {
 
   private def handleCqList(ex: HttpExchange): Unit = {
     val dbFilter = srv.queryParams(ex).get("database")
-    ok(ex, 200, cqStore.ids().flatMap(i => cqStore.get(i.toString))
+    ok(ex, 200, cqStore.all()
       .filter(n => dbFilter.forall(_ == n.get("database").asText))
       .map(render).mkString("[", ",", "]"))
   }
 
-  private def handleCqCreate(ex: HttpExchange): Unit =
-    validateCq(body(ex)) match {
-      case Left(e) => fail(ex, 400, e)
-      case Right(node) =>
-        val name = node.get("name").asText
-        val dup = cqStore.ids().flatMap(i => cqStore.get(i.toString))
-          .exists(_.get("name").asText == name)
-        if (dup) {
-          fail(ex, 400, s"Continuous query with name '$name' already exists"); return
-        }
-        node.putNull("last_execution_time")
-        node.putNull("last_execution_status")
-        node.putNull("last_processed_time")
-        node.putNull("last_records_written")
-        node.put("created_at", nowIso())
-        node.put("updated_at", nowIso())
-        cqStore.create(node)
-        ok(ex, 201, render(node))
-    }
-
-  private def handleCqUpdate(ex: HttpExchange, id: Long): Unit =
-    cqStore.get(id.toString) match {
-      case None => fail(ex, 404, s"continuous query not found: $id")
-      case Some(old) => validateCq(body(ex)) match {
-        case Left(e) => fail(ex, 400, e)
-        case Right(node) =>
-          node.put("id", id)
-          Seq("last_execution_time", "last_execution_status",
-            "last_processed_time", "last_records_written", "created_at")
-            .foreach(f => node.set[ObjectNode](f, old.get(f)))
-          node.put("updated_at", nowIso())
-          cqStore.put(id.toString, node)
-          ok(ex, 200, render(node))
-      }
-    }
+  /** DELETE /api/v1/continuous_queries/:id — the record and its
+    * watermark, so a new CQ of the same name starts fresh. */
+  private def handleCqRemove(ex: HttpExchange, id: String): Unit = {
+    cqStore.get(id).foreach(rec => CqState.clear(catalog, rec.get("name").asText))
+    handleRemove(ex, cqStore, id, "continuous query")
+  }
 
   /** POST /api/v1/continuous_queries/:id/execute — explicit-window or
     * catch-up execution over the library CQ job; dry-run counts the
@@ -660,20 +658,10 @@ final class AdminApi(srv: HttpServer) {
       case Some(r) => r
     }
     val b = body(ex)
-    val dryRun = oBool(b, "dry_run")
     val db = rec.get("database").asText
-    val dest = rec.get("destination_measurement").asText
-    val query = rec.get("query").asText
-    val name = rec.get("name").asText
-    val intervalUs = parseIntervalUs(rec.get("interval").asText).get
     if (!catalog.listDatabases().contains(db)) {
       fail(ex, 404, s"database not found: $db"); return
     }
-    srv.ensureViews(db)
-    val (_, dbCat) = srv.sessionFor(db)
-    val tags = (0 until rec.get("tag_columns").size())
-      .map(rec.get("tag_columns").get(_).asText)
-    val cqJob = ContinuousQuery(name, query, db, dest, tags)
     val explicit = (oText(b, "start_time"), oText(b, "end_time")) match {
       case (Some(s), Some(e)) =>
         (parseInstantUs(s), parseInstantUs(e)) match {
@@ -684,48 +672,70 @@ final class AdminApi(srv: HttpServer) {
       case _ => fail(ex, 400, "start_time and end_time must be given together"); return
     }
     def ms = (System.nanoTime() - t0) / 1e6
-    if (dryRun) {
+    if (oBool(b, "dry_run")) {
       val (su, eu) = explicit.getOrElse {
-        val now = System.currentTimeMillis() * 1000L
-        (now - intervalUs, now)
+        (nowUs() - parseIntervalUs(rec.get("interval").asText).get, nowUs())
       }
-      // withSession: CQ SQL executes on an HTTP pool thread — the db
-      // session must be ACTIVE there (see HttpServer.withSession)
-      val rows = srv.withSession(dbCat.spark) {
-        dbCat.spark.sql(ContinuousQuery.substitute(query, su, eu)).count()
-      }
+      val rows = inDbSession(db)(
+        _.spark.sql(ContinuousQuery.substitute(rec.get("query").asText, su, eu)).count())
       ok(ex, 200,
         s"""{"success":true,"dry_run":true,"records_written":0,""" +
           s""""window_rows":$rows,"window_start":${q(isoOfUs(su))},""" +
           s""""window_end":${q(isoOfUs(eu))},"execution_time_ms":$ms}""")
       return
     }
-    val execs = srv.withSession(dbCat.spark) {
-      explicit match {
-        case Some((su, eu)) => Seq(ContinuousQuery.execute(dbCat, cqJob, su, eu))
-        case None =>
-          ContinuousQuery.catchUp(dbCat, cqJob, intervalUs,
-            System.currentTimeMillis() * 1000L)
-      }
+    val execs = exclusive(cqBusy)(runCq(rec, explicit, nowUs())).getOrElse {
+      fail(ex, 409, "continuous query execution already in progress"); return
     }
-    srv.invalidateView(db, dest)
-    val written = execs.map(_.rows).sum
     val lastEnd = execs.lastOption.map(_.windowEndMicros)
-    rec.put("last_execution_time", nowIso())
-    rec.put("last_execution_status", "success")
-    lastEnd.foreach(e => rec.put("last_processed_time", isoOfUs(e)))
-    rec.put("last_records_written", written)
-    rec.put("updated_at", nowIso())
-    cqStore.put(id.toString, rec)
-    recordExec(s"cq/$id",
-      s"""{"cq_id":$id,"execution_time":${q(nowIso())},"status":"success",""" +
-        s""""windows":${execs.size},"records_written":$written,""" +
-        s""""execution_duration_ms":$ms}""")
     ok(ex, 200,
       s"""{"success":true,"dry_run":false,"windows":${execs.size},""" +
-        s""""records_written":$written,""" +
+        s""""records_written":${execs.map(_.rows).sum},""" +
         s""""last_processed_time":${lastEnd.map(e => q(isoOfUs(e))).getOrElse("null")},""" +
         s""""execution_time_ms":$ms}""")
+  }
+
+  /** One run of a continuous query, for its execute route and the tick:
+    * the explicit `window`, or every window due by `nowUs` since the
+    * watermark. The caller holds `cqBusy`. A run that executed a window
+    * records the execution. */
+  private[server] def runCq(rec: ObjectNode, window: Option[(Long, Long)],
+      nowUs: Long): Seq[ContinuousQuery.Execution] = {
+    val t0 = System.nanoTime()
+    val id = rec.get("id").asLong
+    val db = rec.get("database").asText
+    val dest = rec.get("destination_measurement").asText
+    val cq = ContinuousQuery(rec.get("name").asText, rec.get("query").asText, db, dest,
+      oArr(rec, "tag_columns"))
+    val execs = inDbSession(db)(dbCat => window match {
+      case Some((su, eu)) => Seq(ContinuousQuery.execute(dbCat, cq, su, eu))
+      case None => ContinuousQuery.catchUp(dbCat, cq,
+        parseIntervalUs(rec.get("interval").asText).get, nowUs)
+    })
+    if (execs.nonEmpty) {
+      srv.invalidateView(db, dest)
+      val written = execs.map(_.rows).sum
+      rec.put("last_execution_time", nowIso())
+      rec.put("last_execution_status", "success")
+      rec.put("last_processed_time", isoOfUs(execs.last.windowEndMicros))
+      rec.put("last_records_written", written)
+      rec.put("updated_at", nowIso())
+      cqStore.put(id.toString, rec)
+      recordExec(s"cq/$id",
+        s"""{"cq_id":$id,"execution_time":${q(nowIso())},"status":"success",""" +
+          s""""windows":${execs.size},"records_written":$written,""" +
+          s""""execution_duration_ms":${(System.nanoTime() - t0) / 1e6}}""")
+    }
+    execs
+  }
+
+  /** `f` over the database's views, with its session ACTIVE on this
+    * thread: CQ SQL runs on HTTP pool and lifecycle threads (see
+    * HttpServer.withSession). */
+  private def inDbSession[T](db: String)(f: GraftCatalog => T): T = {
+    srv.ensureViews(db)
+    val dbCat = srv.sessionFor(db)._2
+    srv.withSession(dbCat.spark)(f(dbCat))
   }
 
   private def isoOfUs(us: Long): String =
@@ -738,7 +748,9 @@ final class AdminApi(srv: HttpServer) {
     ok(ex, 200,
       s"""{"manager":{"active_jobs":${compActive.size},""" +
         s""""total_completed":${compCompleted.get},""" +
-        s""""total_failed":${compFailed.get}},"schedulers":{}}""")
+        s""""total_failed":${compFailed.get}},"schedulers":{"lifecycle":{""" +
+        s""""running":${lifecycle.running},"last_tick_time":${lifecycle.lastTickTimeJson},""" +
+        s""""last_tick":${lifecycle.lastTickJson("compaction")}}}}""")
 
   /** GET /api/v1/compaction/candidates — hour partitions with enough
     * small files to merit a merge (compaction.go getCandidates). Pure
@@ -751,8 +763,7 @@ final class AdminApi(srv: HttpServer) {
       db <- dbs
       m <- catalog.listTables(db)
       p <- catalog.listHourPartitions(db, m)
-      n = p.getFileSystem(hconf).listStatus(p)
-        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      n = Compaction.parquetFiles(p.getFileSystem(hconf), p).size
       if n >= minFiles
     } yield s"""{"database":${q(db)},"measurement":${q(m)},""" +
       s""""partition":${q(p.toString)},"file_count":$n}"""
@@ -766,26 +777,18 @@ final class AdminApi(srv: HttpServer) {
       .map { case (id, desc) => s"""{"job_id":$id,"description":${q(desc)}}""" }
       .mkString("""{"jobs":[""", ",", s"""],"count":${compActive.size}}"""))
 
-  // one trigger at a time: two concurrent triggers over the same scope
-  // would plan the same merge twice — the second's inputs vanish under
-  // it mid-write. The manifest's per-table lock makes the SWAP safe;
-  // this makes the PLAN safe. 409 mirrors "already running".
-  private val compTriggerBusy = new java.util.concurrent.atomic.AtomicBoolean(false)
-
   /** POST /api/v1/compaction/trigger — run the hourly and/or daily tier
     * NOW for the selected scope (compaction.go triggerCompaction). Runs
     * synchronously; per-partition merges fan out inside the job. */
   private def handleCompactionTrigger(ex: HttpExchange): Unit = {
-    val t0 = System.nanoTime()
     val b = body(ex)
     val tier = oText(b, "tier").getOrElse("hourly")
     if (!Set("hourly", "daily", "all").contains(tier)) {
       fail(ex, 400, s"invalid tier: $tier (hourly|daily|all)"); return
     }
-    val minFiles = oInt(b, "min_files", 2)
-    // admin trigger forces NOW: age gates default off (the scheduler's
-    // periodic ticks keep the conservative defaults)
-    val minAgeHours = oInt(b, "min_age_hours", 0)
+    // admin trigger forces NOW: age gates default off (the lifecycle
+    // tick keeps the conservative defaults)
+    val gate = Gate(oInt(b, "min_files", 2), oInt(b, "min_age_hours", 0))
     val scope = oText(b, "database") match {
       case Some(db) =>
         if (!catalog.listDatabases().contains(db)) {
@@ -803,43 +806,54 @@ final class AdminApi(srv: HttpServer) {
         for (db <- catalog.listDatabases(); m <- catalog.listTables(db))
           yield (db, m)
     }
-    if (!compTriggerBusy.compareAndSet(false, true)) {
-      fail(ex, 409, "compaction trigger already running"); return
+    exclusive(compBusy)(runCompaction(scope, Some(gate).filter(_ => tier != "daily"),
+        Some(gate).filter(_ => tier != "hourly"), nowUs())) match {
+      case Some((_, resp)) => ok(ex, 200, resp)
+      case None => fail(ex, 409, "compaction trigger already running")
     }
+  }
+
+  /** One compaction job over `scope`, for the trigger route and the tick:
+    * per table, replay the manifest, then merge the tiers whose gate is
+    * given, then reconcile the Iceberg snapshot of a table that has one.
+    * The caller holds `compBusy`. Returns each table's work and the
+    * job's JSON, which is also the history entry. */
+  private[server] def runCompaction(scope: Seq[(String, String)], hourly: Option[Gate],
+      daily: Option[Gate], nowUs: Long): (Seq[TableCompaction], String) = {
+    val t0 = System.nanoTime()
+    val tier = if (hourly.isEmpty) "daily" else if (daily.isEmpty) "hourly" else "all"
     val jobId = compSeq.incrementAndGet()
-    compActive.put(jobId, s"trigger tier=$tier scope=${scope.size} tables")
+    compActive.put(jobId, s"tier=$tier scope=${scope.size} tables")
     try {
-      val results = scope.flatMap { case (db, m) =>
+      val now = () => nowUs
+      val tables = scope.map { case (db, m) =>
         val recovered = Compaction.recover(catalog, db, m)
-        val hourly =
-          if (tier == "hourly" || tier == "all")
-            Compaction.runHourly(catalog, db, m, minFiles, minAgeHours)
-          else Nil
-        val daily =
-          if (tier == "daily" || tier == "all")
-            Compaction.runDaily(catalog, db, m, minFiles, minAgeHours)
-          else Nil
-        val rs = hourly ++ daily
-        if (rs.exists(_.compacted) || recovered.nonEmpty) srv.invalidateView(db, m)
-        rs.filter(_.compacted).map(r =>
-          s"""{"database":${q(db)},"measurement":${q(m)},""" +
-            s""""partition":${q(r.partition)},"files_in":${r.filesIn},""" +
-            s""""rows_in":${r.rowsIn},"rows_out":${r.rowsOut}}""")
+        val h = hourly.toSeq.flatMap(g =>
+          Compaction.runHourly(catalog, db, m, g.minFiles, g.minAgeHours, now))
+        val d = daily.toSeq.flatMap(g =>
+          Compaction.runDaily(catalog, db, m, g.minFiles, g.minAgeHours, nowMicros = now))
+        if ((h ++ d).exists(_.compacted) || recovered.nonEmpty) srv.invalidateView(db, m)
+        // after the merges, so the snapshot holds the merged file set
+        val root = IcebergExport.tableRoot(catalog, db, m)
+        val ice =
+          if (root.getFileSystem(hconf).exists(root)) Some(IcebergExport.reconcile(catalog, db, m))
+          else None
+        TableCompaction(db, m, recovered, h, d, ice)
       }
+      val compacted = for (t <- tables; r <- t.hourly ++ t.daily if r.compacted)
+        yield s"""{"database":${q(t.db)},"measurement":${q(t.measurement)},""" +
+          s""""partition":${q(r.partition)},"files_in":${r.filesIn},""" +
+          s""""rows_in":${r.rowsIn},"rows_out":${r.rowsOut}}"""
       compCompleted.incrementAndGet()
-      val ms = (System.nanoTime() - t0) / 1e6
       val resp = s"""{"success":true,"job_id":$jobId,"tier":${q(tier)},""" +
-        s""""compacted":${results.mkString("[", ",", "]")},""" +
-        s""""count":${results.size},"execution_time_ms":$ms}"""
+        s""""compacted":${compacted.mkString("[", ",", "]")},""" +
+        s""""count":${compacted.size},"execution_time_ms":${(System.nanoTime() - t0) / 1e6}}"""
       compHistory.addLast(resp)
       while (compHistory.size() > ExecRingCap) compHistory.pollFirst()
-      ok(ex, 200, resp)
+      (tables, resp)
     } catch {
       case e: Throwable => compFailed.incrementAndGet(); throw e
-    } finally {
-      compActive.remove(jobId)
-      compTriggerBusy.set(false)
-    }
+    } finally compActive.remove(jobId)
   }
 
   // ---- tiering ---------------------------------------------------------------
@@ -974,13 +988,12 @@ final class AdminApi(srv: HttpServer) {
 
   // ---- schedulers (scheduler.go:53-66) -------------------------------------
 
-  /** GET /api/v1/schedulers — per-scheduler status built from the policy
-    * stores (the reference reports its in-process scheduler objects;
-    * here the definitions ARE the stores, so status = definition census
-    * + last-execution fields persisted on the records). */
+  /** GET /api/v1/schedulers — each kind's definition census and last
+    * execution, the lifecycle loop's state, and each kind's outcome in
+    * its last tick (scheduler.go:53-66). */
   private def handleSchedulers(ex: HttpExchange): Unit = {
     def census(store: Store): (Int, Int, String) = {
-      val recs = store.ids().flatMap(i => store.get(i.toString))
+      val recs = store.all()
       val active = recs.count(r => oBool(r, "is_active", d = true))
       val last = recs.flatMap(r => oText(r, "last_execution_time"))
         .sorted.lastOption.map(q).getOrElse("null")
@@ -989,17 +1002,21 @@ final class AdminApi(srv: HttpServer) {
     val (cqN, cqA, cqLast) = census(cqStore)
     val (rN, rA, rLast) = census(retentionStore)
     ok(ex, 200,
-      s"""{"cq_scheduler":{"enabled":${cqA > 0},"job_count":$cqN,""" +
-        s""""active":$cqA,"last_execution_time":$cqLast},""" +
+      s"""{"running":${lifecycle.running},"last_tick_time":${lifecycle.lastTickTimeJson},""" +
+        s""""cq_scheduler":{"enabled":${cqA > 0},"job_count":$cqN,""" +
+        s""""active":$cqA,"last_execution_time":$cqLast,""" +
+        s""""last_tick":${lifecycle.lastTickJson("cq")}},""" +
         s""""retention_scheduler":{"enabled":${rA > 0},"policy_count":$rN,""" +
-        s""""active":$rA,"last_execution_time":$rLast},""" +
+        s""""active":$rA,"last_execution_time":$rLast,""" +
+        s""""last_tick":${lifecycle.lastTickJson("retention")}},""" +
         s""""compaction_scheduler":{"active_jobs":${compActive.size},""" +
         s""""total_completed":${compCompleted.get},""" +
-        s""""total_failed":${compFailed.get}}}""")
+        s""""total_failed":${compFailed.get},""" +
+        s""""last_tick":${lifecycle.lastTickJson("compaction")}}}""")
   }
 
-  /** POST /api/v1/schedulers/cq/reload — definitions are re-read from
-    * the store on every execute, so reload = re-census (scheduler.go
+  /** POST /api/v1/schedulers/cq/reload — the tick re-reads definitions
+    * from the store every time, so reload = re-census (scheduler.go
     * handleCQReload's envelope). */
   private def handleCqReload(ex: HttpExchange): Unit =
     ok(ex, 200,
@@ -1008,57 +1025,14 @@ final class AdminApi(srv: HttpServer) {
 
   /** POST /api/v1/schedulers/retention/trigger — run every ACTIVE
     * retention policy now (scheduler.go handleRetentionTrigger). */
-  private def handleRetentionTriggerAll(ex: HttpExchange): Unit = {
-    if (!retentionBusy.compareAndSet(false, true)) {
-      fail(ex, 409, "retention execution already in progress"); return
+  private def handleRetentionTriggerAll(ex: HttpExchange): Unit =
+    exclusive(retentionBusy)(activePolicies().map(runRetention(_, dryRun = false, nowUs()))) match {
+      case Some(runs) =>
+        ok(ex, 200,
+          s"""{"message":"Retention triggered successfully",""" +
+            s""""policies_executed":${runs.size},"deleted_count":${runs.map(_.rows).sum}}""")
+      case None => fail(ex, 409, "retention execution already in progress")
     }
-    try handleRetentionTriggerAllLocked(ex)
-    finally retentionBusy.set(false)
-  }
-
-  private def handleRetentionTriggerAllLocked(ex: HttpExchange): Unit = {
-    var deleted = 0L
-    var executed = 0
-    retentionStore.ids().flatMap(i => retentionStore.get(i.toString))
-      .filter(r => oBool(r, "is_active", d = true))
-      .foreach { pol =>
-        val db = pol.get("database").asText
-        if (catalog.listDatabases().contains(db)) {
-          val days = pol.get("retention_days").asInt
-          val buffer = pol.get("buffer_days").asInt
-          val measurements = oText(pol, "measurement").map(Seq(_))
-            .getOrElse(catalog.listTables(db))
-          // per-policy delta: last_deleted_count records THIS policy's
-          // rows, like the single-policy execute path — not the running
-          // cross-policy total (r8 advice)
-          var polDeleted = 0L
-          measurements.foreach { m =>
-            val (exp, _) = Retention.expired(catalog, db, m, days, buffer)
-            if (exp.nonEmpty) {
-              val parquets = exp.flatMap { p =>
-                val fs = p.getFileSystem(hconf)
-                fs.listStatus(p)
-                  .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-                  .map(_.getPath).toSeq
-              }
-              polDeleted += Compaction.footerRowCount(hconf, parquets)
-              Retention(catalog, db, m, days, buffer)
-              srv.invalidateView(db, m)
-            }
-          }
-          deleted += polDeleted
-          executed += 1
-          pol.put("last_execution_time", nowIso())
-          pol.put("last_execution_status", "success")
-          pol.put("last_deleted_count", polDeleted)
-          pol.put("updated_at", nowIso())
-          retentionStore.put(pol.get("id").asLong.toString, pol)
-        }
-      }
-    ok(ex, 200,
-      s"""{"message":"Retention triggered successfully",""" +
-        s""""policies_executed":$executed,"deleted_count":$deleted}""")
-  }
 
   // ---- MQTT ---------------------------------------------------------------
 
@@ -1081,7 +1055,7 @@ final class AdminApi(srv: HttpServer) {
   }
 
   private def handleMqttStats(ex: HttpExchange): Unit = {
-    val subs = mqttStore.ids().flatMap(i => mqttStore.get(i.toString))
+    val subs = mqttStore.all()
     var totalMsgs = 0L; var totalFailed = 0L
     var running = 0; var stopped = 0; var errored = 0
     val items = subs.map { n =>
@@ -1132,8 +1106,7 @@ final class AdminApi(srv: HttpServer) {
   }
 
   private def handleSubList(ex: HttpExchange): Unit =
-    ok(ex, 200, mqttStore.ids().flatMap(i => mqttStore.get(i.toString))
-      .map(n => render(subWithStatus(n))).mkString("[", ",", "]"))
+    ok(ex, 200, mqttStore.all().map(n => render(subWithStatus(n))).mkString("[", ",", "]"))
 
   private def handleSubGet(ex: HttpExchange, id: Long): Unit =
     mqttStore.get(id.toString) match {
@@ -1146,9 +1119,7 @@ final class AdminApi(srv: HttpServer) {
       case Left(e) => fail(ex, 400, e)
       case Right(node) =>
         val name = node.get("name").asText
-        val dup = mqttStore.ids().flatMap(i => mqttStore.get(i.toString))
-          .exists(_.get("name").asText == name)
-        if (dup) { fail(ex, 409, s"subscription '$name' already exists"); return }
+        if (mqttStore.all().exists(_.get("name").asText == name)) { fail(ex, 409, s"subscription '$name' already exists"); return }
         node.put("created_at", nowIso())
         node.put("updated_at", nowIso())
         val id = mqttStore.create(node)

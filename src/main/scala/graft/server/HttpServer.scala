@@ -265,6 +265,7 @@ final class HttpServer(
   }
 
   def stop(): Unit = {
+    admin.lifecycle.stop()
     server.stop(0); pool.shutdownNow(); obs.stop()
     try audit.close() catch { case _: Throwable => () } // final segment
     bufferedIngest.foreach { ing =>

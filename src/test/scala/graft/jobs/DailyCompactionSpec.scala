@@ -3,12 +3,14 @@ package graft.jobs
 import graft.SparkSpec
 import graft.catalog.{GraftCatalog, TableMeta}
 import graft.ingest.{ColumnarBatch, HourPartitionedWriter, LineProtocol}
+import graft.server.HttpServer
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 /** Daily compaction tier (reference internal/compaction/daily.go) +
   * manifest-journaled crash recovery (manifest.go, watcher.go) +
-  * scheduler tick (scheduler.go).
+  * scheduler tick (scheduler.go), driven through the server's lifecycle
+  * tick.
   */
 class DailyCompactionSpec extends SparkSpec {
 
@@ -21,6 +23,13 @@ class DailyCompactionSpec extends SparkSpec {
     val (pts, errs) = LineProtocol.parse(lines, "us")
     assert(errs.isEmpty, errs.mkString(";"))
     ColumnarBatch.fromPoints(pts).foreach(HourPartitionedWriter.ingest(cat, "default", _))
+  }
+
+  /** A server over a fresh root: its lifecycle tick is the compaction
+    * scheduler, and `cat` is its catalog. */
+  private def withServer(f: (HttpServer, GraftCatalog) => Unit): Unit = {
+    val server = new HttpServer(spark, tmpDir("graft_daily_cat"))
+    try f(server, server.catalog) finally server.stop()
   }
 
   private def hadoopFs(p: Path) =
@@ -140,108 +149,111 @@ class DailyCompactionSpec extends SparkSpec {
   }
 
   test("scheduler tick: recover + hourly + daily across measurements") {
-    val cat = newCatalog()
-    cat.writeMeta("default", "cpu", TableMeta(tagColumns = Seq("host")))
-    (0 until 12).foreach { h =>
-      lpIngest(cat, s"cpu,host=c$h v=1.0 ${base + h * H + 5}")
+    withServer { (server, cat) =>
+      cat.writeMeta("default", "cpu", TableMeta(tagColumns = Seq("host")))
+      (0 until 12).foreach { h =>
+        lpIngest(cat, s"cpu,host=c$h v=1.0 ${base + h * H + 5}")
+      }
+      lpIngest(cat, s"mem,host=a used=1.0 ${base + 5}")
+      lpIngest(cat, s"mem,host=a used=2.0 ${base + 6}")
+      val now = base + 8L * 24 * H
+      val sched = server.admin.lifecycle
+      val reports = sched.tick(now).compaction
+      assert(reports.map(_.measurement).sorted == Seq("cpu", "mem"))
+      val cpu = reports.find(_.measurement == "cpu").get
+      // hourly tier compacts nothing (1 file/hour), daily tier merges the day
+      assert(cpu.daily.length == 1 && cpu.daily.head.filesIn == 12)
+      val mem = reports.find(_.measurement == "mem").get
+      assert(mem.hourly.count(_.compacted) == 1)
+      // second tick is a no-op (idempotent)
+      val again = sched.tick(now).compaction
+      assert(again.forall(r => r.hourly.forall(!_.compacted) && r.daily.isEmpty))
+      // daily tier dirs never leak into SHOW TABLES
+      assert(cat.listTables("default") == Seq("cpu", "mem"))
     }
-    lpIngest(cat, s"mem,host=a used=1.0 ${base + 5}")
-    lpIngest(cat, s"mem,host=a used=2.0 ${base + 6}")
-    val now = base + 8L * 24 * H
-    val sched = new CompactionScheduler(cat, Some("default"), nowMicros = () => now)
-    val reports = sched.tick()
-    assert(reports.map(_.measurement).sorted == Seq("cpu", "mem"))
-    val cpu = reports.find(_.measurement == "cpu").get
-    // hourly tier compacts nothing (1 file/hour), daily tier merges the day
-    assert(cpu.daily.length == 1 && cpu.daily.head.filesIn == 12)
-    val mem = reports.find(_.measurement == "mem").get
-    assert(mem.hourly.count(_.compacted) == 1)
-    // second tick is a no-op (idempotent)
-    val again = sched.tick()
-    assert(again.forall(r => r.hourly.forall(!_.compacted) && r.daily.isEmpty))
-    // daily tier dirs never leak into SHOW TABLES
-    assert(cat.listTables("default") == Seq("cpu", "mem"))
   }
 
   test("scheduler with db=None covers every database in one tick") {
-    val cat = newCatalog()
-    def ingest(db: String, lines: String): Unit = {
-      val (pts, errs) = LineProtocol.parse(lines, "us")
-      assert(errs.isEmpty, errs.mkString(";"))
-      ColumnarBatch.fromPoints(pts).foreach(HourPartitionedWriter.ingest(cat, db, _))
+    withServer { (server, cat) =>
+      def ingest(db: String, lines: String): Unit = {
+        val (pts, errs) = LineProtocol.parse(lines, "us")
+        assert(errs.isEmpty, errs.mkString(";"))
+        ColumnarBatch.fromPoints(pts).foreach(HourPartitionedWriter.ingest(cat, db, _))
+      }
+      // two databases, each with a 2-file hour due for compaction
+      ingest("metrics", s"cpu,host=a v=1.0 ${base + 5}")
+      ingest("metrics", s"cpu,host=b v=2.0 ${base + 6}")
+      ingest("logs", s"app,host=a n=1.0 ${base + 5}")
+      ingest("logs", s"app,host=b n=2.0 ${base + 6}")
+      val now = base + 8L * 24 * H
+      val sched = server.admin.lifecycle
+      val reports = sched.tick(now).compaction
+      assert(reports.map(r => (r.db, r.measurement)).sorted ==
+        Seq(("logs", "app"), ("metrics", "cpu")))
+      assert(reports.forall(_.hourly.count(_.compacted) == 1))
+      // a database created AFTER construction is picked up on the next tick
+      ingest("late", s"m,host=a v=1.0 ${base + 5}")
+      ingest("late", s"m,host=b v=2.0 ${base + 6}")
+      val second = sched.tick(now).compaction
+      assert(second.exists(r => r.db == "late" && r.hourly.count(_.compacted) == 1))
+      // already-compacted dbs are no-ops in the same tick
+      assert(second.filter(_.db != "late")
+        .forall(r => r.hourly.forall(!_.compacted)))
     }
-    // two databases, each with a 2-file hour due for compaction
-    ingest("metrics", s"cpu,host=a v=1.0 ${base + 5}")
-    ingest("metrics", s"cpu,host=b v=2.0 ${base + 6}")
-    ingest("logs", s"app,host=a n=1.0 ${base + 5}")
-    ingest("logs", s"app,host=b n=2.0 ${base + 6}")
-    val now = base + 8L * 24 * H
-    val sched = new CompactionScheduler(cat, db = None, nowMicros = () => now)
-    val reports = sched.tick()
-    assert(reports.map(r => (r.db, r.measurement)).sorted ==
-      Seq(("logs", "app"), ("metrics", "cpu")))
-    assert(reports.forall(_.hourly.count(_.compacted) == 1))
-    // a database created AFTER construction is picked up on the next tick
-    ingest("late", s"m,host=a v=1.0 ${base + 5}")
-    ingest("late", s"m,host=b v=2.0 ${base + 6}")
-    val second = sched.tick()
-    assert(second.exists(r => r.db == "late" && r.hourly.count(_.compacted) == 1))
-    // already-compacted dbs are no-ops in the same tick
-    assert(second.filter(_.db != "late")
-      .forall(r => r.hourly.forall(!_.compacted)))
   }
 
   test("scheduler with iceberg export reconciles the post-compaction file set") {
-    val cat = newCatalog()
-    lpIngest(cat, s"m,host=a v=1.0 ${base + 5}")
-    lpIngest(cat, s"m,host=b v=2.0 ${base + 6}")
-    val now = base + 8L * 24 * H
-    val sched = new CompactionScheduler(cat, Some("default"),
-      icebergExport = true, nowMicros = () => now)
-    val reports = sched.tick()
-    val ice = reports.head.iceberg
-    assert(ice.nonEmpty, "iceberg export did not run")
-    // snapshot taken AFTER compaction: the 2-file hour merged to 1 file
-    assert(reports.head.hourly.count(_.compacted) == 1)
-    assert(ice.get.files == 1 && ice.get.rows == 2, ice.get.toString)
-    // second tick: file set unchanged ⇒ reconcile is a no-op (no new
-    // snapshot published, no metadata churn), same state reported
-    val second = sched.tick().head.iceberg.get
-    assert(second.version == 1 && second.files == 1 && second.rows == 2)
-    // new data makes the next tick publish again
-    lpIngest(cat, s"m,host=c v=3.0 ${base + 7}")
-    val third = sched.tick().head.iceberg.get
-    assert(third.version == 2 && third.rows == 3, third.toString)
+    withServer { (server, cat) =>
+      lpIngest(cat, s"m,host=a v=1.0 ${base + 5}")
+      lpIngest(cat, s"m,host=b v=2.0 ${base + 6}")
+      val now = base + 8L * 24 * H
+      // the tick reconciles a table that is already exported: seed it
+      IcebergExport.reconcile(cat, "default", "m")
+      val sched = server.admin.lifecycle
+      val reports = sched.tick(now).compaction
+      val ice = reports.head.iceberg
+      assert(ice.nonEmpty, "iceberg export did not run")
+      // snapshot taken AFTER compaction: the 2-file hour merged to 1 file
+      assert(reports.head.hourly.count(_.compacted) == 1)
+      assert(ice.get.files == 1 && ice.get.rows == 2, ice.get.toString)
+      // second tick: file set unchanged ⇒ reconcile is a no-op (no new
+      // snapshot published, no metadata churn), same state reported
+      val second = sched.tick(now).compaction.head.iceberg.get
+      assert(second.version == 2 && second.files == 1 && second.rows == 2)
+      // new data makes the next tick publish again
+      lpIngest(cat, s"m,host=c v=3.0 ${base + 7}")
+      val third = sched.tick(now).compaction.head.iceberg.get
+      assert(third.version == 3 && third.rows == 3, third.toString)
+    }
   }
 
   test("scheduler start/stop: interval thread runs ticks and terminates") {
-    val cat = newCatalog()
-    lpIngest(cat, s"m,host=a v=1.0 ${base + 5}")
-    lpIngest(cat, s"m,host=b v=2.0 ${base + 6}")
-    val now = base + 8L * 24 * H
-    val sched = new CompactionScheduler(cat, Some("default"),
-      intervalMillis = 100L, nowMicros = () => now)
-    sched.start()
-    sched.start() // idempotent
-    // generous: under full-suite parallelism on a loaded box the first
-    // background tick's Spark job can take tens of seconds (observed
-    // flake at 15 s with external load avg ~4); the poll exits the
-    // moment compaction lands, so a healthy run never waits this long
-    val deadline = System.currentTimeMillis() + 60000
-    def oneFile = {
-      val parts = cat.listHourPartitions("default", "m")
-      parts.nonEmpty && {
-        val fs = parts.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // daily tier may have consumed the hour; either way exactly 1 file total
-        val hourFiles = parts.flatMap(p => fs.listStatus(p).toSeq)
-          .count(_.getPath.getName.endsWith(".parquet"))
-        hourFiles == 1
-      } || cat.listDailyTierDays("default", "m").nonEmpty
+    withServer { (server, cat) =>
+      lpIngest(cat, s"m,host=a v=1.0 ${base + 5}")
+      lpIngest(cat, s"m,host=b v=2.0 ${base + 6}")
+      val sched = server.admin.lifecycle
+      sched.start(100L)
+      sched.start(100L) // idempotent
+      // generous: under full-suite parallelism on a loaded box the first
+      // background tick's Spark job can take tens of seconds (observed
+      // flake at 15 s with external load avg ~4); the poll exits the
+      // moment compaction lands, so a healthy run never waits this long
+      val deadline = System.currentTimeMillis() + 60000
+      def oneFile = {
+        val parts = cat.listHourPartitions("default", "m")
+        parts.nonEmpty && {
+          val fs = parts.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          // daily tier may have consumed the hour; either way exactly 1 file total
+          val hourFiles = parts.flatMap(p => fs.listStatus(p).toSeq)
+            .count(_.getPath.getName.endsWith(".parquet"))
+          hourFiles == 1
+        } || cat.listDailyTierDays("default", "m").nonEmpty
+      }
+      while (!oneFile && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(oneFile, "background tick never compacted")
+      sched.stop()
+      assert(cat.table("default", "m").count() == 2)
     }
-    while (!oneFile && System.currentTimeMillis() < deadline) Thread.sleep(100)
-    assert(oneFile, "background tick never compacted")
-    sched.stop()
-    assert(cat.table("default", "m").count() == 2)
   }
 
   test("targeted delete reaches rows inside day-compacted files") {

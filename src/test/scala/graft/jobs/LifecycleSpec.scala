@@ -126,18 +126,35 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("CQ scheduler: downtime catch-up re-runs missed windows in order") {
-    val cat = newCatalog()
+    val server = new graft.server.HttpServer(spark, tmpDir("graft_cat"))
+    try catchUpOnTicks(server)
+    finally server.stop()
+  }
+
+  /** The CQ is defined over HTTP, and the server's lifecycle tick runs
+    * it at the clock `now`. */
+  private def catchUpOnTicks(server: graft.server.HttpServer): Unit = {
+    val cat = server.catalog
     // one source row per hour, distinct values -> distinguishable windows
     lpIngest(cat,
       (0 until 4).map(h => s"cqsrc,host=a v=${h * 10}.0 ${base + h * H + 5}")
         .mkString("\n"))
     cat.register("default", "cqsrc")
-    val cq = ContinuousQuery("hourly_avg",
-      """SELECT host, CAST(AVG(v) AS DOUBLE) AS avg_v FROM cqsrc
-        |WHERE time >= {start_time} AND time < {end_time} GROUP BY host""".stripMargin,
-      "default", "cq_out", tagColumns = Seq("host"))
+    val created = java.net.http.HttpClient.newHttpClient().send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+        s"http://127.0.0.1:${server.start()}/api/v1/continuous_queries"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
+          """{"name":"hourly_avg","database":"default",
+            |"source_measurement":"cqsrc","destination_measurement":"cq_out",
+            |"query":"SELECT host, CAST(AVG(v) AS DOUBLE) AS avg_v FROM cqsrc WHERE time >= {start_time} AND time < {end_time} GROUP BY host",
+            |"interval":"1h","tag_columns":["host"]}""".stripMargin)).build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+    assert(created.statusCode() == 201, created.body())
     @volatile var now = base + H
-    val sched = new CqScheduler(cat, Seq(cq -> H), nowMicros = () => now)
+    object sched {
+      def tick(): Map[String, Seq[ContinuousQuery.Execution]] =
+        server.admin.lifecycle.tick(now).cq
+    }
 
     // first tick: no watermark -> one-hour lookback, window [base, base+H)
     val first = sched.tick()("hourly_avg")

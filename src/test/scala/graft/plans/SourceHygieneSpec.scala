@@ -31,6 +31,10 @@ import scala.jdk.CollectionConverters._
   *
   * No parameter lets a caller force an operator's arm: operators pick
   * their arm from the input alone, and specs call each arm by name.
+  *
+  * Each lifecycle job step has one caller outside `graft.examples`: the
+  * server's job body that both its HTTP route and the lifecycle tick
+  * run. `graft.jobs` holds no sleeping scheduler loop of its own.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -142,8 +146,9 @@ class SourceHygieneSpec extends AnyFunSuite {
         "stream partitions through RowCodec.foreachPartitionChunk")
   }
 
-  /** `s` without its `//` and `/* */` comments. String and character
-    * literals are kept whole, so a `//` inside one is not a comment. */
+  /** `s` without its `//` and `/* */` comments, on the same lines.
+    * String and character literals are kept whole, so a `//` inside one
+    * is not a comment. */
   private def code(s: String): String = {
     val out = new StringBuilder
     val charLiteral = "'(\\\\.|[^\\\\'\\n])'".r
@@ -164,8 +169,10 @@ class SourceHygieneSpec extends AnyFunSuite {
         while (i < s.length && s(i) != '\n') i += 1
       } else if (s.startsWith("/*", i)) {
         val end = s.indexOf("*/", i + 2)
-        i = if (end < 0) s.length else end + 2
+        val next = if (end < 0) s.length else end + 2
         out += ' '
+        out ++= s.substring(i, next).filter(_ == '\n') // keeps line numbers
+        i = next
       } else keep(i + 1)
     }
     out.result()
@@ -197,6 +204,30 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"${offenders.size} arm-forcing parameters: ${offenders.mkString(", ")} — " +
         "dispatch from the input and give each arm a named def instead")
+  }
+
+  test("each lifecycle job step has one caller; graft.jobs has no sleep loop") {
+    val examples = Paths.get("src/main/scala/graft/examples")
+    val jobs = Paths.get("src/main/scala/graft/jobs")
+    val sources = mainSources.filterNot(_.startsWith(examples))
+      .map(p => p -> code(new String(Files.readAllBytes(p))))
+    val steps = Seq("Compaction\\.recover", "Compaction\\.runHourly",
+      "Compaction\\.runDaily", "Retention\\.expired", "Retention(?:\\.apply)?\\(",
+      "ContinuousQuery\\.catchUp")
+    val copied = steps.flatMap { step =>
+      val sites = sources.flatMap { case (p, s) =>
+        s"\\b$step".r.findAllMatchIn(s).map(m => s"$p:${s.take(m.start).count(_ == '\n') + 1}")
+      }
+      if (sites.size > 1) Some(s"$step at ${sites.mkString(", ")}") else None
+    }
+    assert(copied.isEmpty,
+      s"lifecycle steps called from more than one place: ${copied.mkString("; ")} — " +
+        "call the job body in AdminApi that the route and the tick share")
+    val sleeps = sources.collect {
+      case (p, s) if p.startsWith(jobs) && s.contains("Thread.sleep") => p
+    }
+    assert(sleeps.isEmpty,
+      s"Thread.sleep in graft.jobs: ${sleeps.mkString(", ")} — schedule on the server's tick")
   }
 
   test("every main in src/main is named in README.md's entry points") {

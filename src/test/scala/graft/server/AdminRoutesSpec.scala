@@ -286,6 +286,30 @@ class AdminRoutesSpec extends SparkSpec {
     assert(get(s"/api/v1/continuous_queries/$id").statusCode() == 404)
   }
 
+  test("continuous query: a deleted CQ's watermark goes with it") {
+    val hourUs = 3600L * 1000000L
+    val lookback = nowUs - Math.floorMod(nowUs, hourUs) - hourUs
+    post("/api/v1/write/msgpack",
+      payload("wmsrc", (0 until 4).map(lookback + 60000000L + _ * 1000000L)))
+    def create(): Long = json(post("/api/v1/continuous_queries",
+      j("name" -> "wm-cq", "database" -> "default",
+        "source_measurement" -> "wmsrc", "destination_measurement" -> "wm_out",
+        "query" -> ("SELECT host, count(*) AS n FROM wmsrc " +
+          "WHERE time >= {start_time} AND time < {end_time} GROUP BY host"),
+        "interval" -> "1h"))).get("id").asLong()
+    def catchUp(id: Long) = json(post(s"/api/v1/continuous_queries/$id/execute", j()))
+
+    // first run: the 1-hour lookback is one window, and it stores a watermark
+    val first = create()
+    assert(catchUp(first).get("windows").asInt() == 1)
+    assert(delete(s"/api/v1/continuous_queries/$first").statusCode() == 200)
+    // a new CQ of the same name starts at the lookback again, not at the
+    // deleted CQ's watermark (which would leave no window due)
+    val second = create()
+    assert(catchUp(second).get("windows").asInt() == 1)
+    assert(delete(s"/api/v1/continuous_queries/$second").statusCode() == 200)
+  }
+
   // ---- compaction ---------------------------------------------------------
 
   test("compaction: candidates surface small files; trigger merges them") {
