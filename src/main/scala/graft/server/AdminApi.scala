@@ -202,92 +202,89 @@ final class AdminApi(srv: HttpServer) {
     srv.sendJson(ex, status, s"""{"success":false,"error":${q(m)}}""")
   private def render(node: JsonNode): String = mapper.writeValueAsString(node)
 
-  // ---- routing ------------------------------------------------------------
+  // ---- routes -------------------------------------------------------------
 
-  private val BackupId: Regex = "/api/v1/backup/([A-Za-z0-9_-]+)".r
-  private val RetId: Regex = "/api/v1/retention/([0-9]+)".r
-  private val RetExec: Regex = "/api/v1/retention/([0-9]+)/execute".r
-  private val RetExecs: Regex = "/api/v1/retention/([0-9]+)/executions".r
-  private val CqId: Regex = "/api/v1/continuous_queries/([0-9]+)".r
-  private val CqExec: Regex = "/api/v1/continuous_queries/([0-9]+)/execute".r
-  private val CqExecs: Regex = "/api/v1/continuous_queries/([0-9]+)/executions".r
-  private val TierPol: Regex = "/api/v1/tiering/policies/([A-Za-z0-9_-]+)".r
-  private val TierPolEff: Regex = "/api/v1/tiering/policies/([A-Za-z0-9_-]+)/effective".r
-  private val SubId: Regex = "/api/v1/mqtt/subscriptions/([0-9]+)".r
-  private val SubAct: Regex = "/api/v1/mqtt/subscriptions/([0-9]+)/(start|stop|pause|restart|stats)".r
+  /** This plane's slice of the server's route table, all admin-only.
+    * Handlers may throw: the dispatcher maps exceptions to 400/500. */
+  private[server] val routes: Seq[Route] = {
+    import Perm.Admin
+    Seq(
+      Route("POST", "/api/v1/delete", Admin)((ex, _) => handleDelete(ex)),
+      Route("GET", "/api/v1/delete/config", Admin)((ex, _) => handleDeleteConfig(ex)),
 
-  /** Dispatch an admin route; false = not an admin path (caller 404s).
-    * Handlers may throw — the server's route() wrapper maps exceptions
-    * to 400/500 like every other endpoint. */
-  private[server] def route(method: String, path: String, ex: HttpExchange): Boolean = {
-    (method, path) match {
-      case ("POST", "/api/v1/delete") => handleDelete(ex)
-      case ("GET", "/api/v1/delete/config") => handleDeleteConfig(ex)
+      Route("GET", "/api/v1/retention", Admin)((ex, _) => handleRetentionList(ex)),
+      Route("POST", "/api/v1/retention", Admin)((ex, _) => handleCreate(ex, retentionStore,
+        "retention policy", RetentionRunFields, validateRetention(body(ex)))),
+      Route("GET", "/api/v1/retention/:id/executions", Admin)((ex, p) =>
+        ok(ex, 200, execList(s"retention/${p("id")}"))),
+      Route("POST", "/api/v1/retention/:id/execute", Admin)((ex, p) => handleRetentionExecute(ex, p("id").toLong)),
+      Route("GET", "/api/v1/retention/:id", Admin)((ex, p) =>
+        handleGet(ex, retentionStore, p("id"), "retention policy")),
+      Route("PUT", "/api/v1/retention/:id", Admin)((ex, p) => handleUpdate(ex, retentionStore,
+        p("id").toLong, "retention policy", RetentionRunFields, validateRetention)),
+      Route("DELETE", "/api/v1/retention/:id", Admin)((ex, p) =>
+        handleRemove(ex, retentionStore, p("id"), "retention policy")),
 
-      case ("GET", "/api/v1/retention") => handleRetentionList(ex)
-      case ("POST", "/api/v1/retention") => handleCreate(ex, retentionStore,
-        "retention policy", RetentionRunFields, validateRetention(body(ex)))
-      case ("GET", RetExecs(id)) => ok(ex, 200, execList(s"retention/$id"))
-      case ("POST", RetExec(id)) => handleRetentionExecute(ex, id.toLong)
-      case ("GET", RetId(id)) => handleGet(ex, retentionStore, id, "retention policy")
-      case ("PUT", RetId(id)) => handleUpdate(ex, retentionStore, id.toLong,
-        "retention policy", RetentionRunFields, validateRetention)
-      case ("DELETE", RetId(id)) => handleRemove(ex, retentionStore, id, "retention policy")
+      Route("GET", "/api/v1/continuous_queries", Admin)((ex, _) => handleCqList(ex)),
+      Route("POST", "/api/v1/continuous_queries", Admin)((ex, _) => handleCreate(ex, cqStore,
+        "continuous query", CqRunFields, validateCq(body(ex)))),
+      Route("GET", "/api/v1/continuous_queries/:id/executions", Admin)((ex, p) =>
+        ok(ex, 200, execList(s"cq/${p("id")}"))),
+      Route("POST", "/api/v1/continuous_queries/:id/execute", Admin)((ex, p) => handleCqExecute(ex, p("id").toLong)),
+      Route("GET", "/api/v1/continuous_queries/:id", Admin)((ex, p) =>
+        handleGet(ex, cqStore, p("id"), "continuous query")),
+      Route("PUT", "/api/v1/continuous_queries/:id", Admin)((ex, p) => handleUpdate(ex, cqStore,
+        p("id").toLong, "continuous query", CqRunFields, validateCq)),
+      Route("DELETE", "/api/v1/continuous_queries/:id", Admin)((ex, p) => handleCqRemove(ex, p("id"))),
 
-      case ("GET", "/api/v1/continuous_queries") => handleCqList(ex)
-      case ("POST", "/api/v1/continuous_queries") => handleCreate(ex, cqStore,
-        "continuous query", CqRunFields, validateCq(body(ex)))
-      case ("GET", CqExecs(id)) => ok(ex, 200, execList(s"cq/$id"))
-      case ("POST", CqExec(id)) => handleCqExecute(ex, id.toLong)
-      case ("GET", CqId(id)) => handleGet(ex, cqStore, id, "continuous query")
-      case ("PUT", CqId(id)) => handleUpdate(ex, cqStore, id.toLong,
-        "continuous query", CqRunFields, validateCq)
-      case ("DELETE", CqId(id)) => handleCqRemove(ex, id)
+      Route("GET", "/api/v1/compaction/status", Admin)((ex, _) => handleCompactionStatus(ex)),
+      Route("GET", "/api/v1/compaction/stats", Admin)((ex, _) => handleCompactionStatus(ex)),
+      Route("GET", "/api/v1/compaction/candidates", Admin)((ex, _) => handleCompactionCandidates(ex)),
+      Route("GET", "/api/v1/compaction/jobs", Admin)((ex, _) => handleCompactionJobs(ex)),
+      Route("GET", "/api/v1/compaction/history", Admin)((ex, _) => ok(ex, 200, historyJson(compHistory))),
+      Route("POST", "/api/v1/compaction/trigger", Admin)((ex, _) => handleCompactionTrigger(ex)),
 
-      case ("GET", "/api/v1/compaction/status") => handleCompactionStatus(ex)
-      case ("GET", "/api/v1/compaction/stats") => handleCompactionStatus(ex)
-      case ("GET", "/api/v1/compaction/candidates") => handleCompactionCandidates(ex)
-      case ("GET", "/api/v1/compaction/jobs") => handleCompactionJobs(ex)
-      case ("GET", "/api/v1/compaction/history") =>
-        ok(ex, 200, historyJson(compHistory))
-      case ("POST", "/api/v1/compaction/trigger") => handleCompactionTrigger(ex)
+      Route("GET", "/api/v1/tiering/status", Admin)((ex, _) => handleTieringStatus(ex)),
+      Route("GET", "/api/v1/tiering/stats", Admin)((ex, _) => handleTieringStatus(ex)),
+      Route("GET", "/api/v1/tiering/files", Admin)((ex, _) => handleTieringFiles(ex)),
+      Route("POST", "/api/v1/tiering/migrate", Admin)((ex, _) => handleTieringMigrate(ex)),
+      Route("POST", "/api/v1/tiering/scan", Admin)((ex, _) => handleTieringScan(ex)),
+      Route("GET", "/api/v1/tiering/policies", Admin)((ex, _) => handleTierPolicyList(ex)),
+      Route("GET", "/api/v1/tiering/policies/:name/effective", Admin)((ex, p) =>
+        handleTierPolicyEffective(ex, p("name"))),
+      Route("GET", "/api/v1/tiering/policies/:name", Admin)((ex, p) =>
+        handleGet(ex, tierPolicyStore, p("name"), "tiering policy")),
+      Route("PUT", "/api/v1/tiering/policies/:name", Admin)((ex, p) => handleTierPolicySet(ex, p("name"))),
+      Route("DELETE", "/api/v1/tiering/policies/:name", Admin)((ex, p) =>
+        handleRemove(ex, tierPolicyStore, p("name"), "tiering policy")),
 
-      case ("GET", "/api/v1/tiering/status") | ("GET", "/api/v1/tiering/stats") =>
-        handleTieringStatus(ex)
-      case ("GET", "/api/v1/tiering/files") => handleTieringFiles(ex)
-      case ("POST", "/api/v1/tiering/migrate") => handleTieringMigrate(ex)
-      case ("POST", "/api/v1/tiering/scan") => handleTieringScan(ex)
-      case ("GET", "/api/v1/tiering/policies") => handleTierPolicyList(ex)
-      case ("GET", TierPolEff(db)) => handleTierPolicyEffective(ex, db)
-      case ("GET", TierPol(db)) => handleGet(ex, tierPolicyStore, db, "tiering policy")
-      case ("PUT", TierPol(db)) => handleTierPolicySet(ex, db)
-      case ("DELETE", TierPol(db)) => handleRemove(ex, tierPolicyStore, db, "tiering policy")
+      Route("POST", "/api/v1/backup", Admin)((ex, _) => handleBackupCreate(ex)),
+      Route("GET", "/api/v1/backup", Admin)((ex, _) => handleBackupList(ex)),
+      Route("GET", "/api/v1/backup/status", Admin)((ex, _) => handleBackupStatus(ex)),
+      Route("POST", "/api/v1/backup/restore", Admin)((ex, _) => handleBackupRestore(ex)),
+      Route("GET", "/api/v1/backup/:name", Admin)((ex, p) => handleBackupGet(ex, p("name"))),
+      Route("DELETE", "/api/v1/backup/:name", Admin)((ex, p) => handleBackupDelete(ex, p("name"))),
 
-      case ("POST", "/api/v1/backup") => handleBackupCreate(ex)
-      case ("GET", "/api/v1/backup") => handleBackupList(ex)
-      case ("GET", "/api/v1/backup/status") => handleBackupStatus(ex)
-      case ("POST", "/api/v1/backup/restore") => handleBackupRestore(ex)
-      case ("GET", BackupId(id)) => handleBackupGet(ex, id)
-      case ("DELETE", BackupId(id)) => handleBackupDelete(ex, id)
+      Route("GET", "/api/v1/schedulers", Admin)((ex, _) => handleSchedulers(ex)),
+      Route("POST", "/api/v1/schedulers/cq/reload", Admin)((ex, _) => handleCqReload(ex)),
+      Route("POST", "/api/v1/schedulers/retention/trigger", Admin)((ex, _) => handleRetentionTriggerAll(ex)),
 
-      case ("GET", "/api/v1/schedulers") => handleSchedulers(ex)
-      case ("POST", "/api/v1/schedulers/cq/reload") => handleCqReload(ex)
-      case ("POST", "/api/v1/schedulers/retention/trigger") =>
-        handleRetentionTriggerAll(ex)
-
-      case ("GET", "/api/v1/mqtt/health") => handleMqttHealth(ex)
-      case ("GET", "/api/v1/mqtt/stats") => handleMqttStats(ex)
-      case ("GET", "/api/v1/mqtt/subscriptions") => handleSubList(ex)
-      case ("POST", "/api/v1/mqtt/subscriptions") => handleSubCreate(ex)
-      case ("GET", SubAct(id, "stats")) => handleSubStats(ex, id.toLong)
-      case ("POST", SubAct(id, act)) => handleSubLifecycle(ex, id.toLong, act)
-      case ("GET", SubId(id)) => handleSubGet(ex, id.toLong)
-      case ("PUT", SubId(id)) => handleSubUpdate(ex, id.toLong)
-      case ("DELETE", SubId(id)) => handleSubDelete(ex, id.toLong)
-
-      case _ => return false
-    }
-    true
+      Route("GET", "/api/v1/mqtt/health", Admin)((ex, _) => handleMqttHealth(ex)),
+      Route("GET", "/api/v1/mqtt/stats", Admin)((ex, _) => handleMqttStats(ex)),
+      Route("GET", "/api/v1/mqtt/subscriptions", Admin)((ex, _) => handleSubList(ex)),
+      Route("POST", "/api/v1/mqtt/subscriptions", Admin)((ex, _) => handleSubCreate(ex)),
+      Route("GET", "/api/v1/mqtt/subscriptions/:id/stats", Admin)((ex, p) => handleSubStats(ex, p("id").toLong)),
+      Route("POST", "/api/v1/mqtt/subscriptions/:id/start", Admin)((ex, p) =>
+        handleSubLifecycle(ex, p("id").toLong, "start")),
+      Route("POST", "/api/v1/mqtt/subscriptions/:id/stop", Admin)((ex, p) =>
+        handleSubLifecycle(ex, p("id").toLong, "stop")),
+      Route("POST", "/api/v1/mqtt/subscriptions/:id/pause", Admin)((ex, p) =>
+        handleSubLifecycle(ex, p("id").toLong, "pause")),
+      Route("POST", "/api/v1/mqtt/subscriptions/:id/restart", Admin)((ex, p) =>
+        handleSubLifecycle(ex, p("id").toLong, "restart")),
+      Route("GET", "/api/v1/mqtt/subscriptions/:id", Admin)((ex, p) => handleSubGet(ex, p("id").toLong)),
+      Route("PUT", "/api/v1/mqtt/subscriptions/:id", Admin)((ex, p) => handleSubUpdate(ex, p("id").toLong)),
+      Route("DELETE", "/api/v1/mqtt/subscriptions/:id", Admin)((ex, p) => handleSubDelete(ex, p("id").toLong)))
   }
 
   private def handleGet(ex: HttpExchange, store: Store, key: String,

@@ -182,13 +182,19 @@ final class Audit(root: String, hconf: Configuration) {
 }
 
 object Audit {
-  /** middleware.go:84 classifyEvent, ported verbatim. */
+  /** middleware.go:84 classifyEvent, with each token sub-route (revoke,
+    * team membership add/remove) labelled by its own action rather than
+    * as a token create or delete. */
   def classify(method: String, path: String, statusCode: Int): String = {
     if (statusCode == 401 || statusCode == 403) return "auth.failed"
     if (path.startsWith("/api/v1/auth/tokens")) method match {
       case "POST" =>
-        return if (path.endsWith("/rotate")) "token.rotated" else "token.created"
-      case "DELETE" => return "token.deleted"
+        return if (path.endsWith("/rotate")) "token.rotated"
+          else if (path.endsWith("/revoke")) "token.revoked"
+          else if (path.endsWith("/teams")) "token.team_added"
+          else "token.created"
+      case "DELETE" =>
+        return if (path.contains("/teams/")) "token.team_removed" else "token.deleted"
       case _ => ()
     }
     if (path.startsWith("/api/v1/rbac/")) {

@@ -3,8 +3,6 @@ package graft.server
 import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.HttpExchange
 
-import scala.util.matching.Regex
-
 /** Token + RBAC HTTP plane — the reference's auth_routes.go /
   * rbac_routes.go surface over [[AuthStore]]/[[Rbac]]:
   *
@@ -41,17 +39,6 @@ final class AuthApi(srv: HttpServer) {
     Option(n.get(f)).filterNot(_.isNull).filter(_.isArray)
       .map(a => (0 until a.size()).map(a.get(_).asText))
 
-  /** Admin coarse gate (reference auth.RequireAdmin): OSS admin
-    * permission only — RBAC grants never confer admin-plane access. */
-  private def adminGate(ex: HttpExchange): Boolean =
-    if (srv.authDisabled || srv.tokenOf(ex).exists(_.has("admin"))) true
-    else { fail(ex, 403, "Permission denied: admin required"); false }
-
-  /** RBAC feature gate (reference rbac_routes.go requireRBACLicense). */
-  private def rbacGate(ex: HttpExchange): Boolean =
-    if (srv.rbac.enabled) true
-    else { fail(ex, 403, "RBAC is not enabled"); false }
-
   // ---- JSON renderers -----------------------------------------------------
 
   private def orgJson(o: srv.rbac.Org): String =
@@ -72,56 +59,38 @@ final class AuthApi(srv: HttpServer) {
       s""""permissions":${m.permissions.map(q).mkString("[", ",", "]")},""" +
       s""""created_at":${q(m.createdAt)}}"""
 
-  // ---- routing --------------------------------------------------------------
+  // ---- routes -------------------------------------------------------------
 
-  private val TokId: Regex = "/api/v1/auth/tokens/([0-9]+)".r
-  private val TokAct: Regex = "/api/v1/auth/tokens/([0-9]+)/(rotate|revoke|teams|permissions)".r
-  private val TokTeam: Regex = "/api/v1/auth/tokens/([0-9]+)/teams/([0-9]+)".r
-  private val OrgId: Regex = "/api/v1/rbac/organizations/([0-9]+)".r
-  private val OrgTeams: Regex = "/api/v1/rbac/organizations/([0-9]+)/teams".r
-  private val TeamId: Regex = "/api/v1/rbac/teams/([0-9]+)".r
-  private val TeamRoles: Regex = "/api/v1/rbac/teams/([0-9]+)/roles".r
-  private val RoleId: Regex = "/api/v1/rbac/roles/([0-9]+)".r
-  private val RoleMeas: Regex = "/api/v1/rbac/roles/([0-9]+)/measurements".r
-  private val MeasId: Regex = "/api/v1/rbac/measurement-permissions/([0-9]+)".r
-
-  /** Dispatch; false = not an auth/rbac path. */
-  private val GovTok: Regex = "/api/v1/governance/policies/([0-9]+)".r
-  private val GovUse: Regex = "/api/v1/governance/usage/([0-9]+)".r
-
-  private[server] def route(method: String, path: String,
-      ex: HttpExchange): Boolean = {
-    if (!path.startsWith("/api/v1/auth") && !path.startsWith("/api/v1/rbac") &&
-      !path.startsWith("/api/v1/governance") && !path.startsWith("/api/v1/audit"))
-      return false
-    (method, path) match {
-      case ("GET", "/api/v1/auth/verify") => handleVerify(ex)
+  /** This plane's slice of the server's route table: all but `verify`
+    * admin-only, as RBAC grants never confer admin (auth_routes.go:41-47). */
+  private[server] val routes: Seq[Route] = {
+    import Perm._
+    Seq(
+      Route("GET", "/api/v1/auth/verify", Authenticated)((ex, _) => handleVerify(ex)),
 
       // ---- governance (internal/api/governance.go) -----------------------
-      case ("GET", "/api/v1/governance/policies") => if (adminGate(ex)) {
+      Route("GET", "/api/v1/governance/policies", Admin) { (ex, _) =>
         val ps = srv.governance.list().map(_.json)
         ok(ex, 200, s"""{"success":true,"policies":${ps.mkString("[", ",", "]")},"count":${ps.size}}""")
-      }
-      case ("POST", "/api/v1/governance/policies") => if (adminGate(ex))
-        handleGovSet(ex, None)
-      case ("PUT", GovTok(id)) => if (adminGate(ex))
-        handleGovSet(ex, Some(id.toLong))
-      case ("GET", GovTok(id)) => if (adminGate(ex)) {
-        srv.governance.get(id.toLong) match {
-          case Some(p) => ok(ex, 200, s"""{"success":true,"policy":${p.json}}""")
+      },
+      Route("POST", "/api/v1/governance/policies", Admin)((ex, _) => handleGovSet(ex, None)),
+      Route("PUT", "/api/v1/governance/policies/:id", Admin)((ex, p) => handleGovSet(ex, Some(p("id").toLong))),
+      Route("GET", "/api/v1/governance/policies/:id", Admin) { (ex, p) =>
+        srv.governance.get(p("id").toLong) match {
+          case Some(pol) => ok(ex, 200, s"""{"success":true,"policy":${pol.json}}""")
           case None => fail(ex, 404, "Policy not found")
         }
-      }
-      case ("DELETE", GovTok(id)) => if (adminGate(ex)) {
-        if (srv.governance.delete(id.toLong))
+      },
+      Route("DELETE", "/api/v1/governance/policies/:id", Admin) { (ex, p) =>
+        if (srv.governance.delete(p("id").toLong))
           ok(ex, 200, """{"success":true,"message":"Policy deleted"}""")
         else fail(ex, 404, "Policy not found")
-      }
-      case ("GET", GovUse(id)) => if (adminGate(ex))
-        ok(ex, 200, s"""{"success":true,"usage":${srv.governance.usageJson(id.toLong)}}""")
+      },
+      Route("GET", "/api/v1/governance/usage/:id", Admin)((ex, p) =>
+        ok(ex, 200, s"""{"success":true,"usage":${srv.governance.usageJson(p("id").toLong)}}""")),
 
       // ---- audit (internal/api/audit_routes.go) --------------------------
-      case ("GET", "/api/v1/audit/logs") => if (adminGate(ex)) {
+      Route("GET", "/api/v1/audit/logs", Admin) { (ex, _) =>
         val params = srv.queryParams(ex)
         val logs = srv.audit.query(
           eventType = params.get("event_type"),
@@ -130,71 +99,73 @@ final class AuthApi(srv: HttpServer) {
           limit = params.get("limit").flatMap(_.toIntOption).getOrElse(100))
         ok(ex, 200,
           s"""{"success":true,"logs":${logs.mkString("[", ",", "]")},"count":${logs.size}}""")
-      }
-      case ("GET", "/api/v1/audit/stats") => if (adminGate(ex)) {
+      },
+      Route("GET", "/api/v1/audit/stats", Admin) { (ex, _) =>
         val st = srv.audit.stats().toSeq.sortBy(_._1)
           .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
         ok(ex, 200, s"""{"success":true,"stats":$st}""")
-      }
+      },
 
-      case ("GET", "/api/v1/auth/tokens") => if (adminGate(ex)) {
+      Route("GET", "/api/v1/auth/tokens", Admin) { (ex, _) =>
         val ts = srv.tokens.list().map(_.json)
         ok(ex, 200, s"""{"success":true,"tokens":${ts.mkString("[", ",", "]")},"count":${ts.size}}""")
-      }
-      case ("POST", "/api/v1/auth/tokens") => if (adminGate(ex)) handleCreate(ex)
-      case ("GET", TokId(id)) => if (adminGate(ex)) {
-        srv.tokens.get(id.toLong) match {
+      },
+      Route("POST", "/api/v1/auth/tokens", Admin)((ex, _) => handleCreate(ex)),
+      Route("GET", "/api/v1/auth/tokens/:id", Admin) { (ex, p) =>
+        srv.tokens.get(p("id").toLong) match {
           case Some(t) => ok(ex, 200, s"""{"success":true,"token":${t.json}}""")
           case None => fail(ex, 404, "Token not found")
         }
-      }
-      case ("PATCH", TokId(id)) => if (adminGate(ex)) handleUpdate(ex, id.toLong)
-      case ("DELETE", TokId(id)) => if (adminGate(ex)) {
-        if (srv.tokens.delete(id.toLong)) {
+      },
+      Route("PATCH", "/api/v1/auth/tokens/:id", Admin)((ex, p) => handleUpdate(ex, p("id").toLong)),
+      Route("DELETE", "/api/v1/auth/tokens/:id", Admin) { (ex, p) =>
+        val id = p("id").toLong
+        if (srv.tokens.delete(id)) {
           // cascade: RBAC memberships and the governance policy are
           // keyed by token id — left behind they'd transfer to any
           // future token reusing the id
-          srv.rbac.removeAllMemberships(id.toLong)
-          srv.governance.delete(id.toLong)
+          srv.rbac.removeAllMemberships(id)
+          srv.governance.delete(id)
           ok(ex, 200, """{"success":true,"message":"Token deleted"}""")
         } else fail(ex, 404, "Token not found")
-      }
-      case ("POST", TokAct(id, "rotate")) => if (adminGate(ex)) {
-        srv.tokens.rotate(id.toLong) match {
+      },
+      Route("POST", "/api/v1/auth/tokens/:id/rotate", Admin) { (ex, p) =>
+        srv.tokens.rotate(p("id").toLong) match {
           case Some(v) => ok(ex, 200,
             s"""{"success":true,"token":${q(v)},"message":"Token rotated successfully. Store this token securely - it cannot be retrieved again."}""")
           case None => fail(ex, 404, "Token not found")
         }
-      }
-      case ("POST", TokAct(id, "revoke")) => if (adminGate(ex)) {
-        if (srv.tokens.revoke(id.toLong))
+      },
+      Route("POST", "/api/v1/auth/tokens/:id/revoke", Admin) { (ex, p) =>
+        if (srv.tokens.revoke(p("id").toLong))
           ok(ex, 200, """{"success":true,"message":"Token revoked"}""")
         else fail(ex, 404, "Token not found")
-      }
-      case ("GET", TokAct(id, "teams")) => if (adminGate(ex)) {
-        val ts = srv.rbac.tokenTeams(id.toLong).map(teamJson)
+      },
+      Route("GET", "/api/v1/auth/tokens/:id/teams", Admin) { (ex, p) =>
+        val ts = srv.rbac.tokenTeams(p("id").toLong).map(teamJson)
         ok(ex, 200, s"""{"success":true,"teams":${ts.mkString("[", ",", "]")},"count":${ts.size}}""")
-      }
-      case ("POST", TokAct(id, "teams")) => if (adminGate(ex) && rbacGate(ex)) {
+      },
+      Route("POST", "/api/v1/auth/tokens/:id/teams", RbacAdmin) { (ex, p) =>
+        val id = p("id").toLong
         val n = body(ex)
         oLong(n, "team_id") match {
           case None => fail(ex, 400, "team_id is required")
           case Some(teamId) =>
-            if (srv.tokens.get(id.toLong).isEmpty) fail(ex, 404, "Token not found")
+            if (srv.tokens.get(id).isEmpty) fail(ex, 404, "Token not found")
             else {
-              val m = srv.rbac.addMembership(id.toLong, teamId)
+              val m = srv.rbac.addMembership(id, teamId)
               ok(ex, 201,
                 s"""{"success":true,"membership":{"id":${m.id},"token_id":${m.tokenId},"team_id":${m.teamId},"created_at":${q(m.createdAt)}}}""")
             }
         }
-      }
-      case ("DELETE", TokTeam(id, teamId)) => if (adminGate(ex) && rbacGate(ex)) {
-        if (srv.rbac.removeMembership(id.toLong, teamId.toLong))
+      },
+      Route("DELETE", "/api/v1/auth/tokens/:id/teams/:teamId", RbacAdmin) { (ex, p) =>
+        if (srv.rbac.removeMembership(p("id").toLong, p("teamId").toLong))
           ok(ex, 200, """{"success":true,"message":"Token removed from team"}""")
         else fail(ex, 404, "Membership not found")
-      }
-      case ("GET", TokAct(id, "permissions")) => if (adminGate(ex)) {
-        srv.tokens.get(id.toLong) match {
+      },
+      Route("GET", "/api/v1/auth/tokens/:id/permissions", Admin) { (ex, p) =>
+        srv.tokens.get(p("id").toLong) match {
           case None => fail(ex, 404, "Token not found")
           case Some(t) =>
             val ps = srv.rbac.effectivePermissions(t).map {
@@ -205,14 +176,14 @@ final class AuthApi(srv: HttpServer) {
             ok(ex, 200,
               s"""{"success":true,"permissions":${ps.mkString("[", ",", "]")},"rbac_enabled":${srv.rbac.enabled}}""")
         }
-      }
+      },
 
       // ---- RBAC resources (rbac_routes.go) --------------------------------
-      case ("GET", "/api/v1/rbac/organizations") => if (adminGate(ex) && rbacGate(ex)) {
+      Route("GET", "/api/v1/rbac/organizations", RbacAdmin) { (ex, _) =>
         val os = srv.rbac.listOrgs().map(orgJson)
         ok(ex, 200, s"""{"success":true,"organizations":${os.mkString("[", ",", "]")},"count":${os.size}}""")
-      }
-      case ("POST", "/api/v1/rbac/organizations") => if (adminGate(ex) && rbacGate(ex)) {
+      },
+      Route("POST", "/api/v1/rbac/organizations", RbacAdmin) { (ex, _) =>
         val n = body(ex)
         oText(n, "name") match {
           case None => fail(ex, 400, "Organization name is required")
@@ -220,116 +191,112 @@ final class AuthApi(srv: HttpServer) {
             val o = srv.rbac.createOrg(name, oText(n, "description").getOrElse(""))
             ok(ex, 201, s"""{"success":true,"organization":${orgJson(o)}}""")
         }
-      }
-      case ("GET", OrgId(id)) => if (adminGate(ex) && rbacGate(ex)) {
-        srv.rbac.getOrg(id.toLong) match {
+      },
+      Route("GET", "/api/v1/rbac/organizations/:id", RbacAdmin) { (ex, p) =>
+        srv.rbac.getOrg(p("id").toLong) match {
           case Some(o) => ok(ex, 200, s"""{"success":true,"organization":${orgJson(o)}}""")
           case None => fail(ex, 404, "Organization not found")
         }
-      }
-      case ("PATCH", OrgId(id)) => if (adminGate(ex) && rbacGate(ex)) {
+      },
+      Route("PATCH", "/api/v1/rbac/organizations/:id", RbacAdmin) { (ex, p) =>
         val n = body(ex)
-        srv.rbac.updateOrg(id.toLong, oText(n, "name"),
+        srv.rbac.updateOrg(p("id").toLong, oText(n, "name"),
           oText(n, "description"), oBool(n, "enabled")) match {
           case Some(o) => ok(ex, 200, s"""{"success":true,"organization":${orgJson(o)}}""")
           case None => fail(ex, 404, "Organization not found")
         }
-      }
-      case ("DELETE", OrgId(id)) => if (adminGate(ex) && rbacGate(ex)) {
-        if (srv.rbac.deleteOrg(id.toLong))
+      },
+      Route("DELETE", "/api/v1/rbac/organizations/:id", RbacAdmin) { (ex, p) =>
+        if (srv.rbac.deleteOrg(p("id").toLong))
           ok(ex, 200, """{"success":true,"message":"Organization deleted"}""")
         else fail(ex, 404, "Organization not found")
-      }
+      },
 
-      case ("GET", OrgTeams(orgId)) => if (adminGate(ex) && rbacGate(ex)) {
-        val ts = srv.rbac.listTeams(orgId.toLong).map(teamJson)
+      Route("GET", "/api/v1/rbac/organizations/:id/teams", RbacAdmin) { (ex, p) =>
+        val ts = srv.rbac.listTeams(p("id").toLong).map(teamJson)
         ok(ex, 200, s"""{"success":true,"teams":${ts.mkString("[", ",", "]")},"count":${ts.size}}""")
-      }
-      case ("POST", OrgTeams(orgId)) => if (adminGate(ex) && rbacGate(ex)) {
+      },
+      Route("POST", "/api/v1/rbac/organizations/:id/teams", RbacAdmin) { (ex, p) =>
         val n = body(ex)
         oText(n, "name") match {
           case None => fail(ex, 400, "Team name is required")
           case Some(name) =>
-            val t = srv.rbac.createTeam(orgId.toLong, name,
+            val t = srv.rbac.createTeam(p("id").toLong, name,
               oText(n, "description").getOrElse(""))
             ok(ex, 201, s"""{"success":true,"team":${teamJson(t)}}""")
         }
-      }
-      case ("GET", TeamId(id)) => if (adminGate(ex) && rbacGate(ex)) {
-        srv.rbac.getTeam(id.toLong) match {
+      },
+      Route("GET", "/api/v1/rbac/teams/:id", RbacAdmin) { (ex, p) =>
+        srv.rbac.getTeam(p("id").toLong) match {
           case Some(t) => ok(ex, 200, s"""{"success":true,"team":${teamJson(t)}}""")
           case None => fail(ex, 404, "Team not found")
         }
-      }
-      case ("PATCH", TeamId(id)) => if (adminGate(ex) && rbacGate(ex)) {
+      },
+      Route("PATCH", "/api/v1/rbac/teams/:id", RbacAdmin) { (ex, p) =>
         val n = body(ex)
-        srv.rbac.updateTeam(id.toLong, oText(n, "name"),
+        srv.rbac.updateTeam(p("id").toLong, oText(n, "name"),
           oText(n, "description"), oBool(n, "enabled")) match {
           case Some(t) => ok(ex, 200, s"""{"success":true,"team":${teamJson(t)}}""")
           case None => fail(ex, 404, "Team not found")
         }
-      }
-      case ("DELETE", TeamId(id)) => if (adminGate(ex) && rbacGate(ex)) {
-        if (srv.rbac.deleteTeam(id.toLong))
+      },
+      Route("DELETE", "/api/v1/rbac/teams/:id", RbacAdmin) { (ex, p) =>
+        if (srv.rbac.deleteTeam(p("id").toLong))
           ok(ex, 200, """{"success":true,"message":"Team deleted"}""")
         else fail(ex, 404, "Team not found")
-      }
+      },
 
-      case ("GET", TeamRoles(teamId)) => if (adminGate(ex) && rbacGate(ex)) {
-        val rs = srv.rbac.listRoles(teamId.toLong).map(roleJson)
+      Route("GET", "/api/v1/rbac/teams/:id/roles", RbacAdmin) { (ex, p) =>
+        val rs = srv.rbac.listRoles(p("id").toLong).map(roleJson)
         ok(ex, 200, s"""{"success":true,"roles":${rs.mkString("[", ",", "]")},"count":${rs.size}}""")
-      }
-      case ("POST", TeamRoles(teamId)) => if (adminGate(ex) && rbacGate(ex)) {
+      },
+      Route("POST", "/api/v1/rbac/teams/:id/roles", RbacAdmin) { (ex, p) =>
         val n = body(ex)
         (oText(n, "database_pattern"), oArr(n, "permissions")) match {
           case (Some(pat), Some(perms)) =>
-            val r = srv.rbac.createRole(teamId.toLong, pat, perms)
+            val r = srv.rbac.createRole(p("id").toLong, pat, perms)
             ok(ex, 201, s"""{"success":true,"role":${roleJson(r)}}""")
           case _ => fail(ex, 400, "database_pattern and permissions are required")
         }
-      }
-      case ("GET", RoleId(id)) => if (adminGate(ex) && rbacGate(ex)) {
-        srv.rbac.getRole(id.toLong) match {
+      },
+      Route("GET", "/api/v1/rbac/roles/:id", RbacAdmin) { (ex, p) =>
+        srv.rbac.getRole(p("id").toLong) match {
           case Some(r) => ok(ex, 200, s"""{"success":true,"role":${roleJson(r)}}""")
           case None => fail(ex, 404, "Role not found")
         }
-      }
-      case ("PATCH", RoleId(id)) => if (adminGate(ex) && rbacGate(ex)) {
+      },
+      Route("PATCH", "/api/v1/rbac/roles/:id", RbacAdmin) { (ex, p) =>
         val n = body(ex)
-        srv.rbac.updateRole(id.toLong, oText(n, "database_pattern"),
+        srv.rbac.updateRole(p("id").toLong, oText(n, "database_pattern"),
           oArr(n, "permissions")) match {
           case Some(r) => ok(ex, 200, s"""{"success":true,"role":${roleJson(r)}}""")
           case None => fail(ex, 404, "Role not found")
         }
-      }
-      case ("DELETE", RoleId(id)) => if (adminGate(ex) && rbacGate(ex)) {
-        if (srv.rbac.deleteRole(id.toLong))
+      },
+      Route("DELETE", "/api/v1/rbac/roles/:id", RbacAdmin) { (ex, p) =>
+        if (srv.rbac.deleteRole(p("id").toLong))
           ok(ex, 200, """{"success":true,"message":"Role deleted"}""")
         else fail(ex, 404, "Role not found")
-      }
+      },
 
-      case ("GET", RoleMeas(roleId)) => if (adminGate(ex) && rbacGate(ex)) {
-        val ms = srv.rbac.listMeasPerms(roleId.toLong).map(measJson)
+      Route("GET", "/api/v1/rbac/roles/:id/measurements", RbacAdmin) { (ex, p) =>
+        val ms = srv.rbac.listMeasPerms(p("id").toLong).map(measJson)
         ok(ex, 200, s"""{"success":true,"measurement_permissions":${ms.mkString("[", ",", "]")},"count":${ms.size}}""")
-      }
-      case ("POST", RoleMeas(roleId)) => if (adminGate(ex) && rbacGate(ex)) {
+      },
+      Route("POST", "/api/v1/rbac/roles/:id/measurements", RbacAdmin) { (ex, p) =>
         val n = body(ex)
         (oText(n, "measurement_pattern"), oArr(n, "permissions")) match {
           case (Some(pat), Some(perms)) =>
-            val m = srv.rbac.createMeasPerm(roleId.toLong, pat, perms)
+            val m = srv.rbac.createMeasPerm(p("id").toLong, pat, perms)
             ok(ex, 201, s"""{"success":true,"measurement_permission":${measJson(m)}}""")
           case _ => fail(ex, 400, "measurement_pattern and permissions are required")
         }
-      }
-      case ("DELETE", MeasId(id)) => if (adminGate(ex) && rbacGate(ex)) {
-        if (srv.rbac.deleteMeasPerm(id.toLong))
+      },
+      Route("DELETE", "/api/v1/rbac/measurement-permissions/:id", RbacAdmin) { (ex, p) =>
+        if (srv.rbac.deleteMeasPerm(p("id").toLong))
           ok(ex, 200, """{"success":true,"message":"Measurement permission deleted"}""")
         else fail(ex, 404, "Measurement permission not found")
-      }
-
-      case _ => fail(ex, 404, s"no route: $method $path")
-    }
-    true
+      })
   }
 
   /** reference auth_routes.go:55 verifyToken: identity echo for the
@@ -339,10 +306,8 @@ final class AuthApi(srv: HttpServer) {
       case Some(t) =>
         ok(ex, 200, s"""{"valid":true,"token_info":${t.json},""" +
           s""""permissions":${t.permissions.map(q).mkString("[", ",", "]")}}""")
-      case None if srv.authDisabled =>
+      case None => // auth disabled: the dispatcher answered 401 otherwise
         ok(ex, 200, """{"valid":true,"token_info":null,"permissions":[]}""")
-      case None =>
-        srv.sendJson(ex, 401, """{"valid":false,"error":"No token provided"}""")
     }
 
   /** reference auth_routes.go:91 createToken, incl. the permissions

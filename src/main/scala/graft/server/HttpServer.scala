@@ -57,9 +57,8 @@ import scala.util.matching.Regex
   * chunks in waves (driver memory O(wave × chunk),
   * independent of result size), so an uncapped 100M-row SELECT flows
   * through the socket the way the reference streams via fasthttp's
-  * SetBodyStreamWriter (query.go:1745). Auth is an optional static
-  * bearer token; the reference's multi-token RBAC store is ops-plane
-  * (SURVEY §2.J11, excluded).
+  * SetBodyStreamWriter (query.go:1745). Every route, with the
+  * permission it requires, is one row of [[routes]].
   */
 final class HttpServer(
     val spark: SparkSession,
@@ -253,7 +252,7 @@ final class HttpServer(
     val t = new Thread(r, "graft-http"); t.setDaemon(true); t
   })
   server.setExecutor(pool)
-  server.createContext("/", (ex: HttpExchange) => route(ex))
+  server.createContext("/", (ex: HttpExchange) => dispatch(ex))
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -276,18 +275,105 @@ final class HttpServer(
 
   // ---- routing ---------------------------------------------------------
 
-  private val CancelPath: Regex = "/api/v1/query/([0-9]+)/cancel".r
-  private val DbPath: Regex = "/api/v1/databases/([A-Za-z0-9_-]+)".r
-  private val DbMeasPath: Regex = "/api/v1/databases/([A-Za-z0-9_-]+)/measurements".r
-  // GET-only: POSTs to /api/v1/query/{arrow,msgpack,estimate} match first
-  private val MeasQueryPath: Regex = "/api/v1/query/([A-Za-z][A-Za-z0-9_-]*)".r
+  /** Every route the server answers, matched in declaration order: a
+    * literal precedes a template that would also match it. */
+  private[server] val routes: Seq[Route] = {
+    import Perm._
+    Seq(
+      Route("POST", "/api/v1/query", Read, gated = true)((ex, _) => handleQuery(ex, negotiated(ex))),
+      Route("POST", "/api/v1/query/arrow", Read, gated = true)((ex, _) => handleQuery(ex, "arrow")),
+      Route("POST", "/api/v1/query/msgpack", Read, gated = true)((ex, _) => handleQuery(ex, "msgpack")),
+      Route("POST", "/api/v1/query/estimate", Read, gated = true)((ex, _) => handleEstimate(ex)),
+      // registry listing + cancel are admin (reference
+      // query_management.go:36 RequireAdmin): a low-privilege token
+      // sweeping sequential ids could otherwise cancel other tenants'
+      // in-flight queries
+      Route("POST", "/api/v1/query/:id/cancel", Admin)((ex, p) => handleCancel(ex, p("id").toLong)),
+      Route("GET", "/api/v1/queries", Admin)((ex, _) => handleActive(ex)),
+      Route("GET", "/api/v1/queries/history", Admin)((ex, _) => handleHistory(ex)),
+      Route("POST", "/api/v1/write/msgpack", Write)((ex, _) => handleWriteMsgPack(ex)),
+      Route("POST", "/write", Write)((ex, _) => handleWriteLp(ex)),
+      Route("POST", "/api/v2/write", Write)((ex, _) => handleWriteLp(ex)),
+      Route("POST", "/api/v1/write/line-protocol", Write)((ex, _) => handleWriteLp(ex)),
+      Route("POST", "/api/v1/write/tle", Write)((ex, _) => handleWriteTle(ex)),
+      Route("POST", "/api/v1/import/csv", Write)((ex, _) => handleImport(ex, "csv")),
+      Route("POST", "/api/v1/import/parquet", Write)((ex, _) => handleImport(ex, "parquet")),
+      Route("POST", "/api/v1/import/lp", Write)((ex, _) => handleImport(ex, "lp")),
+      Route("POST", "/api/v1/import/tle", Write)((ex, _) => handleImport(ex, "tle")),
+      Route("GET", "/api/v1/query/:measurement", Read, gated = true)((ex, p) =>
+        handleQueryMeasurement(ex, p("measurement"))),
+      Route("GET", "/api/v1/measurements", Read)((ex, _) => handleMeasurements(ex)),
+      Route("GET", "/api/v1/databases", Authenticated)((ex, _) => handleListDatabases(ex)),
+      Route("POST", "/api/v1/databases", Admin)((ex, _) => handleCreateDatabase(ex)),
+      Route("GET", "/api/v1/databases/:name/measurements", Authenticated)((ex, p) =>
+        handleDbMeasurements(ex, p("name"))),
+      Route("GET", "/api/v1/databases/:name", Authenticated)((ex, p) => handleGetDatabase(ex, p("name"))),
+      Route("DELETE", "/api/v1/databases/:name", Admin)((ex, p) => handleDeleteDatabase(ex, p("name"))),
+      Route("GET", "/health", Authenticated) { (ex, _) =>
+        val up = (System.nanoTime() - startedAt) / 1e9
+        sendJson(ex, 200,
+          s"""{"status":"ok","time":${q(now())},"uptime_sec":$up}""")
+      },
+      Route("GET", "/ready", Authenticated)((ex, _) => sendJson(ex, 200, """{"ready":true}""")),
+      Route("GET", "/metrics", Authenticated)((ex, _) => handleMetrics(ex)),
+      Route("GET", "/api/v1/metrics", Authenticated)((ex, _) => handleMetrics(ex)),
+      Route("GET", "/api/v1/metrics/memory", Authenticated)((ex, _) => sendJson(ex, 200, obs.memoryJson(q))),
+      Route("GET", "/api/v1/metrics/query-pool", Authenticated)((ex, _) => handleQueryPoolMetrics(ex)),
+      Route("GET", "/api/v1/metrics/endpoints", Authenticated)((ex, _) => handleEndpointMetrics(ex)),
+      Route("GET", "/api/v1/metrics/timeseries/:type", Authenticated)((ex, p) =>
+        handleTimeseriesMetrics(ex, p("type"))),
+      // the log ring exposes internals — admin-gated like the reference
+      // (server.go:203 withAdminAuth; its note: deliberately not a
+      // default-open route)
+      Route("GET", "/api/v1/logs", Admin)((ex, _) => handleLogs(ex)),
+      Route("POST", "/api/v1/write/line-protocol/flush", Admin) { (ex, _) =>
+        bufferedIngest match {
+          case Some(ing) =>
+            val pending = ing.pendingRows
+            ing.flush()
+            sendJson(ex, 200,
+              s"""{"status":"success","message":"All buffers flushed","rows_flushed":$pending}""")
+          case None =>
+            // the synchronous path is durable before the 204 — the
+            // reference's FlushAll contract holds vacuously
+            sendJson(ex, 200, """{"status":"success","message":"All buffers flushed","note":"writes are synchronously durable; nothing is ever buffered"}""")
+        }
+      },
+      Route("GET", "/api/v1/write/line-protocol/health", Authenticated) { (ex, _) =>
+        val pending = bufferedIngest.map(_.pendingRows).getOrElse(0)
+        sendJson(ex, 200,
+          s"""{"status":"healthy","service":"line_protocol_writer",""" +
+            s""""buffered":${bufferedIngest.isDefined},"pending_rows":$pending}""")
+      },
+      Route("GET", "/api/v1/write/msgpack/spec", Authenticated) { (ex, _) =>
+        // the reference's self-describing wire doc (msgpack.go:411-460)
+        sendJson(ex, 200,
+          """{"version":"2.0","protocol":"MessagePack","endpoint":"/api/v1/write/msgpack",""" +
+            """"content_type":"application/msgpack","compression":"gzip or zstd (optional)",""" +
+            """"format":{"columnar (RECOMMENDED)":{"m":"measurement (string)",""" +
+            """"columns":"dict of column_name: [array of values]",""" +
+            """"note":"zero-copy fast path; time column in int64 ms/us/s"},""" +
+            """"row (LEGACY)":{"m":"measurement (string)","t":"timestamp (int64)",""" +
+            """"h":"host (string, optional)","fields":"dict of field_name: value",""" +
+            """"tags":"dict of tag_name: value (optional)"},""" +
+            """"batch":{"batch":"array of measurements (columnar or row)"}}}""")
+      },
+      Route("GET", "/api/v1/write/msgpack/stats", Authenticated)((ex, _) => sendStats(ex, "msgpack")),
+      Route("GET", "/api/v1/write/line-protocol/stats", Authenticated)((ex, _) => sendStats(ex, "lp")),
+      Route("GET", "/api/v1/write/tle/stats", Authenticated)((ex, _) => sendStats(ex, "tle")),
+      Route("GET", "/api/v1/import/stats", Authenticated)((ex, _) => sendStats(ex, "import"))
+    ) ++ authApi.routes ++ admin.routes
+  }
 
-  private val TsPath: Regex = "/api/v1/metrics/timeseries/([a-z]+)".r
-
-  private def route(ex: HttpExchange): Unit = {
+  /** CORS and the OPTIONS preflight; then the route match,
+    * authentication (401), the route's permission (403), the RBAC
+    * feature gate, the overload gate and the handler. No match is 404. */
+  private def dispatch(ex: HttpExchange): Unit = {
     val method = ex.getRequestMethod.toUpperCase
     val path = ex.getRequestURI.getPath
     val t0 = System.nanoTime()
+    val hit = routes.iterator.flatMap(r => r.captures(method, path).map(r -> _)).nextOption()
+    val statsKey = if (method == "OPTIONS") "OPTIONS *" else hit.fold("UNMATCHED")(_._1.key)
     try {
       // CORS, mirroring the reference's middleware (server.go:132-136);
       // response compression stays off there too (manual body handling)
@@ -301,111 +387,32 @@ final class HttpServer(
         return
       }
       authenticate(ex) match {
-        case Left(status) =>
-          sendJson(ex, status, err("unauthorized")); return
-        case Right(tok) =>
-          currentToken.set(tok)
-          // coarse route-class gate (reference RequireRead/Write/Admin);
-          // RBAC-only tokens pass read/write here and are enforced
-          // per-resource (Rbac.passesCoarse scaladoc)
-          val coarseDenied = (for {
-            t <- tok
-            perm <- requiredPerm(method, path)
-          } yield (t, perm)).exists { case (t, perm) =>
-            if (rbac.passesCoarse(t, perm)) false
-            else {
-              sendJson(ex, 403, err(s"Permission denied: $perm required"))
-              true
-            }
-          }
-          if (coarseDenied) return
+        case Left(status) => sendJson(ex, status, err("unauthorized")); return
+        case Right(tok) => currentToken.set(tok)
       }
-      (method, path) match {
-        case ("POST", "/api/v1/query") => gated(ex)(handleQuery(ex, negotiated(ex)))
-        case ("POST", "/api/v1/query/arrow") => gated(ex)(handleQuery(ex, "arrow"))
-        case ("POST", "/api/v1/query/msgpack") => gated(ex)(handleQuery(ex, "msgpack"))
-        case ("POST", "/api/v1/query/estimate") => gated(ex)(handleEstimate(ex))
-        case ("POST", CancelPath(id)) => handleCancel(ex, id.toLong)
-        case ("GET", "/api/v1/queries") => handleActive(ex)
-        case ("GET", "/api/v1/queries/history") => handleHistory(ex)
-        case ("POST", "/api/v1/write/msgpack") => handleWriteMsgPack(ex)
-        case ("POST", "/write") | ("POST", "/api/v2/write") |
-             ("POST", "/api/v1/write/line-protocol") => handleWriteLp(ex)
-        case ("POST", "/api/v1/write/tle") => handleWriteTle(ex)
-        case ("POST", "/api/v1/import/csv") => handleImport(ex, "csv")
-        case ("POST", "/api/v1/import/parquet") => handleImport(ex, "parquet")
-        case ("POST", "/api/v1/import/lp") => handleImport(ex, "lp")
-        case ("POST", "/api/v1/import/tle") => handleImport(ex, "tle")
-        case ("GET", MeasQueryPath(m)) => gated(ex)(handleQueryMeasurement(ex, m))
-        case ("GET", "/api/v1/measurements") => handleMeasurements(ex)
-        case ("GET", "/api/v1/databases") => handleListDatabases(ex)
-        case ("POST", "/api/v1/databases") => handleCreateDatabase(ex)
-        case ("GET", DbMeasPath(name)) => handleDbMeasurements(ex, name)
-        case ("GET", DbPath(name)) => handleGetDatabase(ex, name)
-        case ("DELETE", DbPath(name)) => handleDeleteDatabase(ex, name)
-        case ("GET", "/health") =>
-          val up = (System.nanoTime() - startedAt) / 1e9
-          sendJson(ex, 200,
-            s"""{"status":"ok","time":${q(now())},"uptime_sec":$up}""")
-        case ("GET", "/ready") => sendJson(ex, 200, """{"ready":true}""")
-        case ("GET", "/metrics") | ("GET", "/api/v1/metrics") =>
-          val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
-          if (path == "/api/v1/metrics" || accept.contains("application/json"))
-            sendJson(ex, 200, metricPairs
-              .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}"))
-          else {
-            val body = metricPairs.map { case (k, v) =>
-              s"# TYPE $k ${if (k.endsWith("_total")) "counter" else "gauge"}\n$k $v"
-            }.mkString("", "\n", "\n").getBytes(UTF_8)
-            ex.getResponseHeaders.set("Content-Type",
-              "text/plain; version=0.0.4; charset=utf-8")
-            ex.sendResponseHeaders(200, body.length)
-            ex.getResponseBody.write(body)
-            ex.getResponseBody.close()
-          }
-        case ("GET", "/api/v1/metrics/memory") =>
-          sendJson(ex, 200, obs.memoryJson(q))
-        case ("GET", "/api/v1/metrics/query-pool") => handleQueryPoolMetrics(ex)
-        case ("GET", "/api/v1/metrics/endpoints") => handleEndpointMetrics(ex)
-        case ("GET", TsPath(tpe)) => handleTimeseriesMetrics(ex, tpe)
-        case ("GET", "/api/v1/logs") => handleLogs(ex)
-        case ("POST", "/api/v1/write/line-protocol/flush") =>
-          bufferedIngest match {
-            case Some(ing) =>
-              val pending = ing.pendingRows
-              ing.flush()
-              sendJson(ex, 200,
-                s"""{"status":"success","message":"All buffers flushed","rows_flushed":$pending}""")
+      hit match {
+        case None => sendJson(ex, 404, err(s"no route: $method $path"))
+        case Some((r, c)) =>
+          if (r.perm != Perm.Authenticated && tokenOf(ex).exists(!rbac.passesCoarse(_, r.perm.name)))
+            sendJson(ex, 403, err(s"Permission denied: ${r.perm.name} required"))
+          else if (r.perm == Perm.RbacAdmin && !rbac.enabled)
+            sendJson(ex, 403, err("RBAC is not enabled"))
+          else if (!r.gated) r.handler(ex, c)
+          // reject-fast 503 with Retry-After when saturated; release on
+          // ANY exit path so a thrown handler can't leak an in-flight slot
+          else overloadGate.tryAcquire() match {
+            case Some(reason) =>
+              // deliberately NOT mQueries/mQueryErrors: the reference's gate
+              // tracks sheds in its own counter (gate503Total), keeping the
+              // query success/error arithmetic intact
+              if (overloadGate.shouldWarn())
+                org.slf4j.LoggerFactory.getLogger(classOf[HttpServer]).warn(
+                  s"query gate fired (shed_total=${overloadGate.shedTotal.get}): $reason")
+              ex.getResponseHeaders.set("Retry-After", "5")
+              sendJson(ex, 503, err(reason))
             case None =>
-              // the synchronous path is durable before the 204 — the
-              // reference's FlushAll contract holds vacuously
-              sendJson(ex, 200, """{"status":"success","message":"All buffers flushed","note":"writes are synchronously durable; nothing is ever buffered"}""")
+              try r.handler(ex, c) finally overloadGate.release()
           }
-        case ("GET", "/api/v1/write/line-protocol/health") =>
-          val pending = bufferedIngest.map(_.pendingRows).getOrElse(0)
-          sendJson(ex, 200,
-            s"""{"status":"healthy","service":"line_protocol_writer",""" +
-              s""""buffered":${bufferedIngest.isDefined},"pending_rows":$pending}""")
-        case ("GET", "/api/v1/write/msgpack/spec") =>
-          // the reference's self-describing wire doc (msgpack.go:411-460)
-          sendJson(ex, 200,
-            """{"version":"2.0","protocol":"MessagePack","endpoint":"/api/v1/write/msgpack",""" +
-              """"content_type":"application/msgpack","compression":"gzip or zstd (optional)",""" +
-              """"format":{"columnar (RECOMMENDED)":{"m":"measurement (string)",""" +
-              """"columns":"dict of column_name: [array of values]",""" +
-              """"note":"zero-copy fast path; time column in int64 ms/us/s"},""" +
-              """"row (LEGACY)":{"m":"measurement (string)","t":"timestamp (int64)",""" +
-              """"h":"host (string, optional)","fields":"dict of field_name: value",""" +
-              """"tags":"dict of tag_name: value (optional)"},""" +
-              """"batch":{"batch":"array of measurements (columnar or row)"}}}""")
-        case ("GET", "/api/v1/write/msgpack/stats") => sendStats(ex, "msgpack")
-        case ("GET", "/api/v1/write/line-protocol/stats") => sendStats(ex, "lp")
-        case ("GET", "/api/v1/write/tle/stats") => sendStats(ex, "tle")
-        case ("GET", "/api/v1/import/stats") => sendStats(ex, "import")
-        case _ =>
-          if (!authApi.route(method, path, ex) &&
-              !admin.route(method, path, ex))
-            sendJson(ex, 404, err(s"no route: $method $path"))
       }
     } catch {
       case e: IllegalArgumentException => sendJson(ex, 400, err(msg(e)))
@@ -418,7 +425,7 @@ final class HttpServer(
         sendJson(ex, 500, err(msg(e)))
     } finally {
       ex.close()
-      obs.record(method, path, math.max(ex.getResponseCode, 0),
+      obs.record(statsKey, math.max(ex.getResponseCode, 0),
         (System.nanoTime() - t0) / 1000L)
       // audit off the response path: record is an O(1) enqueue, the
       // flush drains whatever accumulated (batching under load, like
@@ -437,13 +444,27 @@ final class HttpServer(
             .orElse(auditParams(ex).get("database")).getOrElse(""),
           measurement =
             Option(ex.getRequestHeaders.getFirst("x-arc-measurement"))
-              .getOrElse(path match {
-                case MeasQueryPath(m) => m
-                case _ => ""
-              }))
+              .orElse(hit.flatMap(_._2.get("measurement"))).getOrElse(""))
         audit.flush()
       } catch { case _: Throwable => ()
       } finally currentToken.remove()
+    }
+  }
+
+  private def handleMetrics(ex: HttpExchange): Unit = {
+    val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
+    if (ex.getRequestURI.getPath == "/api/v1/metrics" || accept.contains("application/json"))
+      sendJson(ex, 200, metricPairs
+        .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}"))
+    else {
+      val body = metricPairs.map { case (k, v) =>
+        s"# TYPE $k ${if (k.endsWith("_total")) "counter" else "gauge"}\n$k $v"
+      }.mkString("", "\n", "\n").getBytes(UTF_8)
+      ex.getResponseHeaders.set("Content-Type",
+        "text/plain; version=0.0.4; charset=utf-8")
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body)
+      ex.getResponseBody.close()
     }
   }
 
@@ -469,7 +490,7 @@ final class HttpServer(
   }
 
   /** Per-endpoint request statistics (server.go:375-460): requests,
-    * errors, average latency per id-normalized route, plus the ingest
+    * errors, average latency per route template, plus the ingest
     * and query counter families. */
   private def handleEndpointMetrics(ex: HttpExchange): Unit = {
     val rows = obs.endpointRows.map { case (k, req, errs, latUs) =>
@@ -1100,7 +1121,7 @@ final class HttpServer(
     val db = params.getOrElse("database", headerDb(ex))
     if (meas.length > 128) {
       reject("Invalid measurement name: name too long (max 128 characters)")
-      return // pattern chars are enforced by the route regex
+      return // pattern chars are enforced by the route template
     }
     val limit = params.getOrElse("limit", "100").toIntOption.getOrElse(-1)
     if (limit < 0 || limit > 1000000) {
@@ -1371,12 +1392,6 @@ final class HttpServer(
   private def registerView(dbCat: GraftCatalog, db: String, m: String): Unit =
     graft.jobs.Tiering.table(dbCat, admin.coldRoot, db, m).createOrReplaceTempView(m)
 
-  /** True when no credential source exists at all — the open OSS
-    * deployment (reference: nil AuthManager → passthrough middleware,
-    * internal/api/auth_middleware.go). */
-  private[server] def authDisabled: Boolean =
-    authToken.isEmpty && !tokens.hasTokens
-
   /** Token extraction order mirrors the reference
     * (internal/auth/middleware.go:222-243 ExtractTokenFromRequest):
     * Authorization Bearer / Token / plain, x-api-key, ?p= (InfluxDB 1.x
@@ -1391,13 +1406,15 @@ final class HttpServer(
       .orElse(queryParams(ex).get("p").filter(_.nonEmpty))
   }
 
-  /** Resolve the caller's identity. Right(None) = auth disabled;
-    * Right(Some(info)) = authenticated; Left(401) = denied. The static
-    * `authToken` authenticates as a synthetic full-admin
-    * ([[Auth.StaticAdmin]]) so pre-RBAC deployments keep their exact
-    * behavior. */
+  /** Resolve the caller's identity. Right(None) = auth disabled, when no
+    * credential source exists at all — the open OSS deployment
+    * (reference: nil AuthManager → passthrough middleware,
+    * internal/api/auth_middleware.go); Right(Some(info)) = authenticated;
+    * Left(401) = denied. The static `authToken` authenticates as a
+    * synthetic full-admin ([[Auth.StaticAdmin]]) so pre-RBAC deployments
+    * keep their exact behavior. */
   private def authenticate(ex: HttpExchange): Either[Int, Option[TokenInfo]] =
-    if (authDisabled) Right(None)
+    if (authToken.isEmpty && !tokens.hasTokens) Right(None)
     else presentedToken(ex) match {
       case None => Left(401)
       case Some(value) =>
@@ -1429,72 +1446,10 @@ final class HttpServer(
   private[server] def tokenOf(ex: HttpExchange): Option[TokenInfo] =
     currentToken.get()
 
-  /** Coarse route-class permission (the reference's RequireRead /
-    * RequireWrite / RequireAdmin wiring in internal/api route files): query
-    * surfaces need read, ingest needs write, the lifecycle/admin plane
-    * needs admin. None = any authenticated caller (health, metrics,
-    * registry listings — parity with the repo's pre-RBAC single-token
-    * gate, which required the token for everything). */
-  private def requiredPerm(method: String, path: String): Option[String] = {
-    if (path.startsWith("/api/v1/query/estimate")) Some("read")
-    // registry listing + cancel are admin (reference
-    // query_management.go:36 RequireAdmin): a low-privilege token
-    // sweeping sequential ids could otherwise cancel other tenants'
-    // in-flight queries
-    else if (path.endsWith("/cancel") && path.startsWith("/api/v1/query/"))
-      Some("admin")
-    else if (path == "/api/v1/queries" ||
-      path == "/api/v1/queries/history") Some("admin")
-    else if (path.startsWith("/api/v1/query") && method == "POST") Some("read")
-    else if (path.startsWith("/api/v1/query/") && method == "GET") Some("read")
-    else if (path == "/api/v1/measurements") Some("read")
-    else if (path == "/api/v1/write/line-protocol/flush") Some("admin")
-    else if (path.startsWith("/api/v1/write") &&
-      !path.endsWith("/stats") && !path.endsWith("/health") &&
-      !path.endsWith("/spec")) Some("write")
-    else if (path == "/write" || path == "/api/v2/write") Some("write")
-    else if (path.startsWith("/api/v1/import/") && path != "/api/v1/import/stats")
-      Some("write")
-    // the log ring exposes internals — admin-gated like the reference
-    // (server.go:203 withAdminAuth; its note: deliberately not a
-    // default-open route)
-    else if (path == "/api/v1/logs") Some("admin")
-    else if (path == "/api/v1/databases" && method == "POST") Some("admin")
-    else if (path.startsWith("/api/v1/databases/") && method == "DELETE")
-      Some("admin")
-    else if (path.startsWith("/api/v1/delete") ||
-      path.startsWith("/api/v1/backup") ||
-      path.startsWith("/api/v1/retention") ||
-      path.startsWith("/api/v1/continuous_queries") ||
-      path.startsWith("/api/v1/compaction") ||
-      path.startsWith("/api/v1/tiering") ||
-      path.startsWith("/api/v1/schedulers") ||
-      path.startsWith("/api/v1/mqtt")) Some("admin")
-    else None // /api/v1/auth + /api/v1/rbac gate themselves (AuthApi)
-  }
-
   /** Overload shed on the query surfaces (reference circuitbreaker.go +
     * the catch-up gate's 503 envelope, query.go:968). Exposed for specs
     * and ops tuning. */
   val overloadGate = new OverloadGate()
-
-  /** Run a query-route handler under the overload gate: reject-fast 503
-    * with Retry-After when the server is saturated, release on ANY exit
-    * path so a thrown handler can't leak an in-flight slot. */
-  private def gated(ex: HttpExchange)(handler: => Unit): Unit =
-    overloadGate.tryAcquire() match {
-      case Some(reason) =>
-        // deliberately NOT mQueries/mQueryErrors: the reference's gate
-        // tracks sheds in its own counter (gate503Total), keeping the
-        // query success/error arithmetic intact
-        if (overloadGate.shouldWarn())
-          org.slf4j.LoggerFactory.getLogger(classOf[HttpServer]).warn(
-            s"query gate fired (shed_total=${overloadGate.shedTotal.get}): $reason")
-        ex.getResponseHeaders.set("Retry-After", "5")
-        sendJson(ex, 503, err(reason))
-      case None =>
-        try handler finally overloadGate.release()
-    }
 
   /** Table refs for the per-table RBAC gate. Fails CLOSED for scoped
     * callers: when extraction throws (StackOverflowError on a

@@ -13,9 +13,9 @@ import scala.jdk.CollectionConverters._
   * time-series sampler.
   *
   *  - endpoint stats feed `/api/v1/metrics/endpoints` — recorded by the
-  *    server's router on EVERY request (count, errors, latency sum),
-  *    keyed by method + id-normalized path so `/query/123/cancel` and
-  *    `/query/456/cancel` share one row;
+  *    server's dispatcher on EVERY request (count, errors, latency sum),
+  *    keyed by the matched route's method and template so
+  *    `/query/123/cancel` and `/query/456/cancel` share one row;
   *  - the log ring feeds `/api/v1/logs` — a log4j2 appender attached to
   *    the root logger at runtime captures genuine application events
   *    (the reference buffers its zerolog stream the same way,
@@ -40,24 +40,10 @@ final class Observability {
 
   private val endpoints = TrieMap.empty[String, EndpointStat]
 
-  /** Collapse id-bearing segments so route cardinality stays bounded. */
-  private[server] def normalizePath(path: String): String =
-    path.split('/').map { seg =>
-      if (seg.nonEmpty && seg.forall(_.isDigit)) ":id" else seg
-    }.mkString("/")
-
-  /** Bounded endpoint cardinality: real routes number a few dozen; an
-    * open internet port also receives arbitrary 404 paths, which must
-    * not grow this map without limit. Past the cap, unseen keys fold
-    * into one OTHER bucket. */
-  private val EndpointCap = 256
-
-  private[server] def record(method: String, path: String, status: Int,
-      latencyUs: Long): Unit = {
-    val norm = s"$method ${normalizePath(path)}"
-    val key =
-      if (endpoints.contains(norm) || endpoints.size < EndpointCap) norm
-      else "OTHER"
+  /** Count one request under `key`: the matched route's
+    * `"$method $template"`, `UNMATCHED` or `OPTIONS *` — so the map holds
+    * at most one entry per route plus two. */
+  private[server] def record(key: String, status: Int, latencyUs: Long): Unit = {
     val s = endpoints.getOrElseUpdate(key, new EndpointStat)
     s.requests.incrementAndGet()
     if (status >= 400) s.errors.incrementAndGet()

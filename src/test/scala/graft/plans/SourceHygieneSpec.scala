@@ -35,6 +35,10 @@ import scala.jdk.CollectionConverters._
   * Each lifecycle job step has one caller outside `graft.examples`: the
   * server's job body that both its HTTP route and the lifecycle tick
   * run. `graft.jobs` holds no sleeping scheduler loop of its own.
+  *
+  * Every HTTP route is a row of the server's one route table, which
+  * declares its permission; one dispatcher reads the exchange's method
+  * and matches it.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -228,6 +232,23 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(sleeps.isEmpty,
       s"Thread.sleep in graft.jobs: ${sleeps.mkString(", ")} — schedule on the server's tick")
+  }
+
+  test("HTTP routes live in the one route table; one dispatcher reads the exchange") {
+    val sources = mainSources.map(p => p -> code(new String(Files.readAllBytes(p))))
+    def sites(re: scala.util.matching.Regex): Seq[String] = sources.flatMap { case (p, s) =>
+      re.findAllMatchIn(s).map(m => s"$p:${s.take(m.start).count(_ == '\n') + 1}")
+    }
+    val cases = sites("""case\s*\(\s*"(?:GET|POST|PUT|PATCH|DELETE)"\s*,""".r)
+    assert(cases.isEmpty,
+      s"route pattern outside the table at: ${cases.mkString(", ")} — declare a Route row")
+    val gates = sites("\\b(?:requiredPerm|adminGate)\\b".r)
+    assert(gates.isEmpty,
+      s"per-handler permission gate at: ${gates.mkString(", ")} — declare the Route's perm")
+    val dispatchers = sites("\\bgetRequestMethod\\b".r) ++
+      sites("def\\s+\\w+\\s*\\(\\s*method\\s*:\\s*String\\s*,\\s*path\\s*:\\s*String\\s*,\\s*\\w+\\s*:\\s*HttpExchange".r)
+    assert(dispatchers.size == 1,
+      s"HttpExchange-level dispatch at: ${dispatchers.mkString(", ")} — route through the one dispatcher")
   }
 
   test("every main in src/main is named in README.md's entry points") {

@@ -285,4 +285,39 @@ class GovernanceAuditSpec extends SparkSpec {
     assert(req("PUT", s"/api/v1/governance/policies/$id", Some(tok),
       jb("rate_limit_per_minute" -> 1)).statusCode() == 403)
   }
+
+  test("audit measurement is the route's :measurement capture, not a path segment") {
+    fixture
+    def event(path: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
+      val deadline = System.nanoTime() + 5L * 1000000000L
+      var found: Option[com.fasterxml.jackson.databind.JsonNode] = None
+      while (found.isEmpty && System.nanoTime() < deadline) {
+        val logs = jsonOf(req("GET", "/api/v1/audit/logs?limit=1000", Root)).get("logs")
+        found = (0 until logs.size()).map(logs.get).find(_.get("path").asText() == path)
+        if (found.isEmpty) Thread.sleep(50)
+      }
+      found
+    }
+    val sql = mapper.writeValueAsBytes(java.util.Collections.singletonMap("sql", "SELECT 1 AS one"))
+    for (wire <- Seq("arrow", "msgpack", "estimate")) {
+      assert(req("POST", s"/api/v1/query/$wire", Root, sql).statusCode() == 200)
+      val e = event(s"/api/v1/query/$wire")
+      assert(e.nonEmpty, s"no audit event for $wire")
+      assert(!e.get.has("measurement"), e.get.toString)
+    }
+    server.audit.includeReads = true
+    try {
+      assert(req("GET", "/api/v1/query/gvm?limit=1", Root).statusCode() == 200)
+      assert(event("/api/v1/query/gvm").map(_.get("measurement").asText()).contains("gvm"))
+    } finally server.audit.includeReads = false
+  }
+
+  test("token sub-routes are audited by their own action") {
+    assert(Audit.classify("POST", "/api/v1/auth/tokens/7/revoke", 200) == "token.revoked")
+    assert(Audit.classify("POST", "/api/v1/auth/tokens/7/teams", 201) == "token.team_added")
+    assert(Audit.classify("DELETE", "/api/v1/auth/tokens/7/teams/3", 200) == "token.team_removed")
+    assert(Audit.classify("POST", "/api/v1/auth/tokens", 201) == "token.created")
+    assert(Audit.classify("POST", "/api/v1/auth/tokens/7/rotate", 200) == "token.rotated")
+    assert(Audit.classify("DELETE", "/api/v1/auth/tokens/7", 200) == "token.deleted")
+  }
 }

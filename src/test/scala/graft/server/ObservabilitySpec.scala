@@ -65,6 +65,20 @@ class ObservabilitySpec extends SparkSpec {
     assert(health.get("latency_avg_ms").asDouble() >= 0)
   }
 
+  test("endpoint keys are route templates: names share a key, unknown paths one") {
+    def keys = {
+      val eps = json(get("/api/v1/metrics/endpoints")).get("endpoints")
+      (0 until eps.size()).map(eps.get(_).get("endpoint").asText()).toSet
+    }
+    get("/api/v1/query/cpu"); get("/api/v1/query/mem")
+    val named = keys
+    assert(named.contains("GET /api/v1/query/:measurement"))
+    assert(!named.exists(k => k.endsWith("/cpu") || k.endsWith("/mem")), named)
+    (1 to 300).foreach(i => get(s"/no/such/path/n$i"))
+    val after = keys
+    assert(after -- named == Set("UNMATCHED"), after -- named)
+  }
+
   test("time-series rings sample system/application/api; bad type is 400") {
     server.obs.sampleNow()
     val sys = json(get("/api/v1/metrics/timeseries/system?duration_minutes=5"))
