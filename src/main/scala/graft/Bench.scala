@@ -185,24 +185,42 @@ object Bench {
       System.err.println(s"[bench] $errors/${results.size} queries ERRORED — total covers ${ok.size} only")
     spark.stop()
     // the bare JSON line is the LAST stdout line (after spark.stop's noise
-    // lands on stderr) so a tail-based parser still finds it.
-    //
-    // r15 measurement-output fix (VERDICT r14 #3): the full-map line is
-    // ~8 KB — five rounds of BENCH_r*.json carried "parsed": null because
-    // the driver's ~2000-char stdout tail cuts off its head. Print the
-    // full old-format line first (numbers unchanged, still harvestable),
-    // then a COMPACT line LAST that fits the tail whole: per-query times
-    // as a fixed-order array over the lexicographically sorted query
-    // names (results is already sorted by name; errored queries read -1),
-    // 180 x ~6 chars ~ 1.2 KB. `flagged` keeps only the first 10 names;
-    // `n_flagged` is the full count. The complete name->time map remains
-    // in bench_out.json, the durable record.
+    // lands on stderr) so a tail-based parser still finds it. The full
+    // line above is ~8 KB, longer than a ~2000-char stdout tail, so the
+    // summary line printed last is bounded (see summaryLine); the
+    // complete name->time map remains in bench_out.json.
     println(json)
-    val qsCompact = results.map { case (_, v, e, _) =>
-      if (e) "-1" else (math.round(v * 1000) / 1000.0).toString
-    }.mkString("[", ",", "]")
-    val flaggedCompact = flagged.take(10).map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","errors":$errors,"iters":$iters,"load_avg_start":$loadStart,"n_queries":${results.size},"queries_order":"sorted_name","queries_sec":$qsCompact,"flagged":$flaggedCompact,"n_flagged":${flagged.size},"sf":"$sfDir"}""")
+    println(summaryLine(total, errors, iters, sfDir,
+      results.map { case (name, v, e, _) => name -> (if (e) None else Some(v)) }))
+  }
+
+  /** Longest summary line, in bytes: a stdout tail of ~2000 characters
+    * must hold it whole. */
+  val SummaryMaxBytes = 2048
+
+  /** A query's short id: its name up to the first `_` (`q01`, `q89b`). */
+  def shortId(name: String): String = name.takeWhile(_ != '_')
+
+  /** The bench's last stdout line: the total, and each query's best time
+    * in seconds keyed by short id (an errored query reads -1). The 180
+    * keys alone take ~1.35 KB, which leaves about three characters per
+    * time, so the times keep the most decimals, from 3 down to 0, that
+    * hold the line within [[SummaryMaxBytes]]; `sec_decimals` says how
+    * many. The full-precision map is the line before it. */
+  def summaryLine(total: Double, errors: Int, iters: Int, sf: String,
+      perQuery: Seq[(String, Option[Double])]): String = {
+    def num(v: Double, decimals: Int): String =
+      BigDecimal(v).setScale(decimals, BigDecimal.RoundingMode.HALF_UP)
+        .bigDecimal.stripTrailingZeros.toPlainString
+    def line(decimals: Int): String = {
+      val qs = perQuery.map { case (name, v) =>
+        "\"" + shortId(name) + "\":" + v.fold("-1")(num(_, decimals))
+      }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","errors":$errors,""" +
+        s""""iters":$iters,"sf":"$sf","sec_decimals":$decimals,"queries_sec":$qs}"""
+    }
+    (3 to 1 by -1).iterator.map(line)
+      .find(_.getBytes("UTF-8").length <= SummaryMaxBytes)
+      .getOrElse(line(0))
   }
 }

@@ -25,7 +25,9 @@ object GraftFunctions {
     * registry, skipping names it already holds, so repeated calls (every
     * operator and query entry calls this) neither replace a builder nor
     * log Spark's "replaced a previously registered function" warning. A
-    * new session starts from the built-in registry and registers afresh. */
+    * new session starts from the built-in registry and registers afresh.
+    * Installs the engine's optimizer rules ([[graft.plans.OptimizerRules]])
+    * the same way. */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -68,6 +70,6 @@ object GraftFunctions {
     for ((name, build) <- builders
         if !reg.functionExists(FunctionIdentifier(name)))
       reg.createOrReplaceTempFunction(name, build, "built-in")
-    graft.plans.TimePartitionPruning.install(spark)
+    graft.plans.OptimizerRules.install(spark)
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -28,11 +27,12 @@ import java.time.{LocalDateTime, ZoneOffset}
   * LIMIT preallocation, parallel partition fan-out) is already native in
   * Catalyst/Tungsten (SURVEY §4.1).
   *
-  * Bounds must be literals by the time the rule runs; it is registered in
-  * `experimental.extraOptimizations`, which runs after constant folding
-  * and current_timestamp resolution, so `now() - INTERVAL 7 DAYS` prunes
-  * too. The added conjunct is redundant with the time filter (hour
-  * granularity ⊇ time range), so row-level semantics are unchanged.
+  * Bounds must be literals by the time the rule runs; [[OptimizerRules]]
+  * installs it in `experimental.extraOptimizations`, which runs after
+  * constant folding and current_timestamp resolution, so
+  * `now() - INTERVAL 7 DAYS` prunes too. The added conjunct is redundant
+  * with the time filter (hour granularity ⊇ time range), so row-level
+  * semantics are unchanged.
   */
 object TimePartitionPruning extends Rule[LogicalPlan] {
 
@@ -156,14 +156,5 @@ object TimePartitionPruning extends Rule[LogicalPlan] {
       else Or(strictOp(a, c), And(EqualTo(a, c), build(i + 1)))
     }
     build(0)
-  }
-
-  /** Idempotently install into a session (runs after the built-in
-    * optimizer batches, i.e. post constant folding). Synchronized:
-    * concurrent sessions/suites would otherwise race the list update. */
-  def install(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_ eq this))
-      spark.experimental.extraOptimizations = cur :+ this
   }
 }

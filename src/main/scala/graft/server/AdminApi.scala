@@ -59,7 +59,7 @@ final class AdminApi(srv: HttpServer) {
   private[server] def catalog: GraftCatalog = srv.catalog
   private def hconf = srv.spark.sparkContext.hadoopConfiguration
   private def mapper = srv.mapper
-  private def q(s: String) = srv.q(s)
+  import srv.{body, fail, oText, q, sendJson => ok}
   private def nowIso(): String = Instant.now().toString
   private def nowUs(): Long = System.currentTimeMillis() * 1000L
 
@@ -181,8 +181,6 @@ final class AdminApi(srv: HttpServer) {
 
   // ---- JSON helpers -------------------------------------------------------
 
-  private def oText(n: JsonNode, f: String): Option[String] =
-    Option(n.get(f)).filterNot(_.isNull).map(_.asText).filter(_.nonEmpty)
   private def oInt(n: JsonNode, f: String, d: Int): Int =
     Option(n.get(f)).filterNot(_.isNull).map(_.asInt).getOrElse(d)
   private def oBool(n: JsonNode, f: String, d: Boolean = false): Boolean =
@@ -191,15 +189,6 @@ final class AdminApi(srv: HttpServer) {
     Option(n.get(f)).filterNot(_.isNull).toSeq
       .flatMap(a => (0 until a.size()).map(a.get(_).asText))
 
-  private def body(ex: HttpExchange): JsonNode = {
-    val raw = srv.readBody(ex)
-    if (raw.isEmpty) mapper.createObjectNode() else mapper.readTree(raw)
-  }
-
-  private def ok(ex: HttpExchange, status: Int, json: String): Unit =
-    srv.sendJson(ex, status, json)
-  private def fail(ex: HttpExchange, status: Int, m: String): Unit =
-    srv.sendJson(ex, status, s"""{"success":false,"error":${q(m)}}""")
   private def render(node: JsonNode): String = mapper.writeValueAsString(node)
 
   // ---- routes -------------------------------------------------------------

@@ -19,18 +19,8 @@ import com.sun.net.httpserver.HttpExchange
   * created = 201, missing = 404, validation = 400). */
 final class AuthApi(srv: HttpServer) {
 
-  private def q(s: String) = graft.query.QueryFacade.jsonStr(s)
-  private def ok(ex: HttpExchange, status: Int, json: String): Unit =
-    srv.sendJson(ex, status, json)
-  private def fail(ex: HttpExchange, status: Int, m: String): Unit =
-    srv.sendJson(ex, status, s"""{"success":false,"error":${q(m)}}""")
+  import srv.{body, fail, oText, q, sendJson => ok}
 
-  private def body(ex: HttpExchange): JsonNode = {
-    val raw = srv.readBody(ex)
-    if (raw.isEmpty) srv.mapper.createObjectNode() else srv.mapper.readTree(raw)
-  }
-  private def oText(n: JsonNode, f: String): Option[String] =
-    Option(n.get(f)).filterNot(_.isNull).map(_.asText).filter(_.nonEmpty)
   private def oBool(n: JsonNode, f: String): Option[Boolean] =
     Option(n.get(f)).filterNot(_.isNull).map(_.asBoolean)
   private def oLong(n: JsonNode, f: String): Option[Long] =

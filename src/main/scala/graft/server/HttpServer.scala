@@ -1,5 +1,6 @@
 package graft.server
 
+import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer => JdkHttpServer}
 import graft.catalog.GraftCatalog
 import graft.ingest.{ColumnarBatch, DirectParquetWriter, LineProtocol, MsgPack}
@@ -387,16 +388,16 @@ final class HttpServer(
         return
       }
       authenticate(ex) match {
-        case Left(status) => sendJson(ex, status, err("unauthorized")); return
+        case Left(status) => fail(ex, status, "unauthorized"); return
         case Right(tok) => currentToken.set(tok)
       }
       hit match {
-        case None => sendJson(ex, 404, err(s"no route: $method $path"))
+        case None => fail(ex, 404, s"no route: $method $path")
         case Some((r, c)) =>
           if (r.perm != Perm.Authenticated && tokenOf(ex).exists(!rbac.passesCoarse(_, r.perm.name)))
-            sendJson(ex, 403, err(s"Permission denied: ${r.perm.name} required"))
+            fail(ex, 403, s"Permission denied: ${r.perm.name} required")
           else if (r.perm == Perm.RbacAdmin && !rbac.enabled)
-            sendJson(ex, 403, err("RBAC is not enabled"))
+            fail(ex, 403, "RBAC is not enabled")
           else if (!r.gated) r.handler(ex, c)
           // reject-fast 503 with Retry-After when saturated; release on
           // ANY exit path so a thrown handler can't leak an in-flight slot
@@ -409,20 +410,20 @@ final class HttpServer(
                 org.slf4j.LoggerFactory.getLogger(classOf[HttpServer]).warn(
                   s"query gate fired (shed_total=${overloadGate.shedTotal.get}): $reason")
               ex.getResponseHeaders.set("Retry-After", "5")
-              sendJson(ex, 503, err(reason))
+              fail(ex, 503, reason)
             case None =>
               try r.handler(ex, c) finally overloadGate.release()
           }
       }
     } catch {
-      case e: IllegalArgumentException => sendJson(ex, 400, err(msg(e)))
+      case e: IllegalArgumentException => fail(ex, 400, msg(e))
       case e: Throwable =>
         // surfaced in the body when headers haven't gone out; logged
         // always — a mid-stream failure would otherwise vanish into a
         // truncated response with no server-side trace
         org.slf4j.LoggerFactory.getLogger(classOf[HttpServer])
           .warn(s"$method $path failed: ${msg(e)}")
-        sendJson(ex, 500, err(msg(e)))
+        fail(ex, 500, msg(e))
     } finally {
       ex.close()
       obs.record(statsKey, math.max(ex.getResponseCode, 0),
@@ -796,16 +797,16 @@ final class HttpServer(
 
   private def handleWriteMsgPack(ex: HttpExchange): Unit = {
     val payload = decompressed(readBody(ex))
-    if (payload.isEmpty) { sendJson(ex, 400, err("Empty payload")); return }
+    if (payload.isEmpty) { fail(ex, 400, "Empty payload"); return }
     val db = headerDb(ex)
     if (!catalog.isValidDatabaseName(db)) {
-      sendJson(ex, 400, err(s"invalid database name: $db")); return
+      fail(ex, 400, s"invalid database name: $db"); return
     }
     val batches =
       try MsgPack.decodePayload(payload)
       catch { case e: Throwable =>
         ingestError("msgpack")
-        sendJson(ex, 400, err("Invalid MessagePack payload: " + msg(e))); return
+        fail(ex, 400, "Invalid MessagePack payload: " + msg(e)); return
       }
     // the raw msgpack body replays deterministically (no request-scoped
     // decode parameters), so buffered mode journals it verbatim —
@@ -822,7 +823,7 @@ final class HttpServer(
       .orElse(params.get("db")).orElse(params.get("bucket"))
       .getOrElse("default")
     if (!catalog.isValidDatabaseName(db)) {
-      sendJson(ex, 400, err(s"invalid database name: $db")); return
+      fail(ex, 400, s"invalid database name: $db"); return
     }
     val precision = params.getOrElse("precision", "ns")
     val raw = readBody(ex) // byte counters record request PAYLOAD bytes
@@ -832,7 +833,7 @@ final class HttpServer(
       val detail = errors.headOption
         .map(e => s"line ${e.line}: ${e.message}").getOrElse("no points")
       ingestError("lp")
-      sendJson(ex, 400, err(s"no valid points ($detail)")); return
+      fail(ex, 400, s"no valid points ($detail)"); return
     }
     writeBatches(ex, db, ColumnarBatch.fromPoints(points), raw.length.toLong, "lp")
   }
@@ -867,7 +868,7 @@ final class HttpServer(
         batches.find(b => MeasName.findFirstIn(b.measurement).isEmpty) match {
           case Some(bad) =>
             ingestError(source)
-            sendJson(ex, 400, err(s"invalid measurement name: ${bad.measurement}"))
+            fail(ex, 400, s"invalid measurement name: ${bad.measurement}")
           case None =>
             replayableRaw match {
               case Some(raw) => ing.acceptRaw(db, raw, batches)
@@ -880,7 +881,7 @@ final class HttpServer(
         writeCore(db, batches) match {
           case Left(bad) =>
             ingestError(source)
-            sendJson(ex, 400, err(s"invalid measurement name: $bad"))
+            fail(ex, 400, s"invalid measurement name: $bad")
           case Right(_) =>
             ingested(source, batches.map(_.rowCount.toLong).sum, payloadBytes)
             ex.sendResponseHeaders(204, -1) // InfluxDB-compatible No Content
@@ -902,12 +903,12 @@ final class HttpServer(
   private def handleWriteTle(ex: HttpExchange): Unit = {
     val db = headerDb(ex)
     if (!catalog.isValidDatabaseName(db)) {
-      sendJson(ex, 400, err(s"invalid database name: $db")); return
+      fail(ex, 400, s"invalid database name: $db"); return
     }
     val meas = Option(ex.getRequestHeaders.getFirst("x-arc-measurement"))
       .filter(_.nonEmpty).getOrElse("satellite_tle")
     if (MeasName.findFirstIn(meas).isEmpty) {
-      sendJson(ex, 400, err(s"invalid measurement name: $meas")); return
+      fail(ex, 400, s"invalid measurement name: $meas"); return
     }
     if (!checkResource(ex, Seq((db, meas)), "write")) {
       ingestError("tle"); return
@@ -917,7 +918,7 @@ final class HttpServer(
     tleRows(db, meas, text) match {
       case Left(e) =>
         ingestError("tle")
-        sendJson(ex, 400, err(e))
+        fail(ex, 400, e)
       case Right(n) =>
         ingested("tle", n, raw.length.toLong)
         ex.sendResponseHeaders(204, -1)
@@ -947,22 +948,22 @@ final class HttpServer(
     val db = params.get("db").orElse(headerDbOpt(ex)).getOrElse("default")
     if (!catalog.isValidDatabaseName(db)) {
       ingestError("import")
-      sendJson(ex, 400, err(s"invalid database name: $db")); return
+      fail(ex, 400, s"invalid database name: $db"); return
     }
     val body = readBody(ex)
     val fileBytes = multipartFile(ex, body).getOrElse(body)
     if (fileBytes.isEmpty) {
       ingestError("import")
-      sendJson(ex, 400, err("empty upload")); return
+      fail(ex, 400, "empty upload"); return
     }
     def needMeasurement(): Option[String] = params.get("measurement") match {
       case Some(m) if MeasName.findFirstIn(m).nonEmpty => Some(m)
       case Some(m) =>
         ingestError("import")
-        sendJson(ex, 400, err(s"invalid measurement name: $m")); None
+        fail(ex, 400, s"invalid measurement name: $m"); None
       case None =>
         ingestError("import")
-        sendJson(ex, 400, err("measurement query param is required")); None
+        fail(ex, 400, "measurement query param is required"); None
     }
     def respond(rows: Long, meas: String): Unit = {
       invalidateView(db, meas)
@@ -1005,12 +1006,12 @@ final class HttpServer(
           val detail = perrs.headOption.map(e => s"line ${e.line}: ${e.message}")
             .getOrElse("no points")
           ingestError("import")
-          sendJson(ex, 400, err(s"no valid points ($detail)"))
+          fail(ex, 400, s"no valid points ($detail)")
         } else if (!writableImport(kept.map(_.measurement))) { ()
         } else writeCore(db, ColumnarBatch.fromPoints(kept)) match {
           case Left(bad) =>
             ingestError("import")
-            sendJson(ex, 400, err(s"invalid measurement name: $bad"))
+            fail(ex, 400, s"invalid measurement name: $bad")
           case Right(rows) =>
             ingested("import", rows, fileBytes.length.toLong)
             sendJson(ex, 200,
@@ -1020,12 +1021,12 @@ final class HttpServer(
         val meas = params.getOrElse("measurement", "satellite_tle")
         if (MeasName.findFirstIn(meas).isEmpty) {
           ingestError("import")
-          sendJson(ex, 400, err(s"invalid measurement name: $meas"))
+          fail(ex, 400, s"invalid measurement name: $meas")
         } else if (!writableImport(Seq(meas))) { ()
         } else tleRows(db, meas, new String(fileBytes, UTF_8)) match {
           case Left(e) =>
             ingestError("import")
-            sendJson(ex, 400, err(e))
+            fail(ex, 400, e)
           case Right(n) => respond(n, meas)
         }
     } catch {
@@ -1115,7 +1116,7 @@ final class HttpServer(
     mQueries.incrementAndGet()
     def reject(message: String): Unit = {
       mQueryErrors.incrementAndGet()
-      sendJson(ex, 400, err(message))
+      fail(ex, 400, message)
     }
     val params = queryParams(ex)
     val db = params.getOrElse("database", headerDb(ex))
@@ -1200,8 +1201,7 @@ final class HttpServer(
           }
         case None =>
           mQueryErrors.incrementAndGet()
-          sendJson(ex, 400,
-            err("could not resolve table references for permission check"))
+          fail(ex, 400, "could not resolve table references for permission check")
           return
       }
     }
@@ -1247,7 +1247,7 @@ final class HttpServer(
     val filter = queryParams(ex).get("database")
     filter.foreach { db =>
       if (!catalog.isValidDatabaseName(db)) {
-        sendJson(ex, 400, err(s"invalid database parameter: $db")); return
+        fail(ex, 400, s"invalid database parameter: $db"); return
       }
     }
     val dbs = filter.map(Seq(_)).getOrElse(catalog.listDatabases())
@@ -1284,7 +1284,7 @@ final class HttpServer(
     * measurement count). */
   private def handleGetDatabase(ex: HttpExchange, name: String): Unit = {
     if (!catalog.listDatabases().contains(name)) {
-      sendJson(ex, 404, err(s"Database '$name' not found")); return
+      fail(ex, 404, s"Database '$name' not found"); return
     }
     sendJson(ex, 200,
       s"""{"name":${q(name)},"measurement_count":${catalog.listTables(name).size}}""")
@@ -1292,9 +1292,9 @@ final class HttpServer(
 
   private def handleCreateDatabase(ex: HttpExchange): Unit =
     jsonField(readBody(ex), "name") match {
-      case None => sendJson(ex, 400, err("missing 'name'"))
+      case None => fail(ex, 400, "missing 'name'")
       case Some(name) if !catalog.isValidDatabaseName(name) =>
-        sendJson(ex, 400, err(s"invalid database name: $name"))
+        fail(ex, 400, s"invalid database name: $name")
       case Some(name) =>
         catalog.createDatabase(name)
         sendJson(ex, 201, s"""{"name":${q(name)},"measurement_count":0}""")
@@ -1302,7 +1302,7 @@ final class HttpServer(
 
   private def handleDeleteDatabase(ex: HttpExchange, name: String): Unit = {
     if (!catalog.listDatabases().contains(name)) {
-      sendJson(ex, 404, err(s"database not found: $name")); return
+      fail(ex, 404, s"database not found: $name"); return
     }
     catalog.deleteDatabase(name, confirm = true)
     // release the child session and every freshness stamp — a stale
@@ -1483,8 +1483,7 @@ final class HttpServer(
           .find(!_._1.allowed) match {
           case Some((_, (db, meas))) =>
             val res = if (meas.isEmpty || meas == "*") db else s"$db.$meas"
-            sendJson(ex, 403,
-              err(s"access denied: no $perm permission for $res"))
+            fail(ex, 403, s"access denied: no $perm permission for $res")
             false
           case None => true
         }
@@ -1631,6 +1630,20 @@ final class HttpServer(
 
   private[server] def err(m: String, ts: String = now()): String =
     s"""{"success":false,"error":${q(m)},"timestamp":${q(ts)}}"""
+
+  /** Answer `status` with the error envelope [[err]] builds. */
+  private[server] def fail(ex: HttpExchange, status: Int, m: String): Unit =
+    sendJson(ex, status, err(m))
+
+  /** The request body as JSON; an empty body reads as `{}`. */
+  private[server] def body(ex: HttpExchange): JsonNode = {
+    val raw = readBody(ex)
+    if (raw.isEmpty) mapper.createObjectNode() else mapper.readTree(raw)
+  }
+
+  /** Field `f` of `n` as non-empty text. */
+  private[server] def oText(n: JsonNode, f: String): Option[String] =
+    Option(n.get(f)).filterNot(_.isNull).map(_.asText).filter(_.nonEmpty)
 
   private[server] def sendJson(ex: HttpExchange, status: Int, body: String): Unit = {
     // idempotent: mid-stream failures land here after headers went out

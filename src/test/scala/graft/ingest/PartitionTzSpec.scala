@@ -42,7 +42,7 @@ class PartitionTzSpec extends SparkSpec {
   test("ingest + pruned time-range query agree under a non-UTC session") {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-    graft.plans.TimePartitionPruning.install(s2)
+    graft.plans.OptimizerRules.install(s2)
     val cat = new GraftCatalog(s2, tmpDir("tzprune"))
     val lp = (0 until 24).map(h => s"m,host=a v=$h.0 ${base + h * H}").mkString("\n")
     val (pts, _) = LineProtocol.parse(lp, "us")

@@ -39,6 +39,9 @@ import scala.jdk.CollectionConverters._
   * Every HTTP route is a row of the server's one route table, which
   * declares its permission; one dispatcher reads the exchange's method
   * and matches it.
+  *
+  * Optimizer rules reach a session through the one installer,
+  * `OptimizerRules.install`, so every session gets every rule in order.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -249,6 +252,15 @@ class SourceHygieneSpec extends AnyFunSuite {
       sites("def\\s+\\w+\\s*\\(\\s*method\\s*:\\s*String\\s*,\\s*path\\s*:\\s*String\\s*,\\s*\\w+\\s*:\\s*HttpExchange".r)
     assert(dispatchers.size == 1,
       s"HttpExchange-level dispatch at: ${dispatchers.mkString(", ")} — route through the one dispatcher")
+  }
+
+  test("experimental.extraOptimizations is assigned in exactly one src/main file") {
+    val assigning = mainSources.filter { p =>
+      "\\bextraOptimizations\\s*=(?!=)".r.findFirstIn(code(new String(Files.readAllBytes(p)))).nonEmpty
+    }
+    assert(assigning.map(_.getFileName.toString) == Seq("OptimizerRules.scala"),
+      s"extraOptimizations assigned in: ${assigning.mkString(", ")} — " +
+        "add the rule to OptimizerRules.rules instead")
   }
 
   test("every main in src/main is named in README.md's entry points") {

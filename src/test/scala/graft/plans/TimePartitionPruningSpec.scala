@@ -24,7 +24,7 @@ class TimePartitionPruningSpec extends SparkSpec {
   }
 
   test("time-range filter prunes hour partitions via inferred predicates") {
-    TimePartitionPruning.install(spark)
+    OptimizerRules.install(spark)
     val cat = new GraftCatalog(spark, tmpDir("prune"))
     // 48 hourly rows = 48 hour partitions
     val lp = (0 until 48).map(h => s"m,host=a v=$h.0 ${base + h * H}").mkString("\n")
@@ -43,7 +43,7 @@ class TimePartitionPruningSpec extends SparkSpec {
   }
 
   test("rule never pairs one table's time bound with another table's partition columns") {
-    TimePartitionPruning.install(spark)
+    OptimizerRules.install(spark)
     import spark.implicits._
     // measurement: a real catalog table (leaf carries time + partition
     // coords as relation attributes — the shape the rule fires on)
@@ -86,7 +86,7 @@ class TimePartitionPruningSpec extends SparkSpec {
   }
 
   test("rule never derives predicates through a Union (positional exprId reuse)") {
-    TimePartitionPruning.install(spark)
+    OptimizerRules.install(spark)
     import spark.implicits._
     // Union.output reuses the FIRST child's exprIds and is POSITIONAL,
     // so a conjunct derived from child A's leaf (honest hour-partition
@@ -120,7 +120,7 @@ class TimePartitionPruningSpec extends SparkSpec {
   }
 
   test("tiered union: derived partition bounds reach BOTH tiers' scans (r13 verdict #4)") {
-    TimePartitionPruning.install(spark)
+    OptimizerRules.install(spark)
     val cat = new GraftCatalog(spark, tmpDir("prune_tier_hot"))
     val coldRoot = tmpDir("prune_tier_cold")
     // 48 hourly partitions across 2 days
@@ -163,8 +163,8 @@ class TimePartitionPruningSpec extends SparkSpec {
   }
 
   test("rule leaves results identical and is idempotent") {
-    TimePartitionPruning.install(spark)
-    TimePartitionPruning.install(spark) // second install is a no-op
+    OptimizerRules.install(spark)
+    OptimizerRules.install(spark) // second install is a no-op
     assert(spark.experimental.extraOptimizations.count(_ eq TimePartitionPruning) == 1)
     val cat = new GraftCatalog(spark, tmpDir("prune2"))
     val lp = (0 until 5).map(h => s"m,host=a v=$h.0 ${base + h * H}").mkString("\n")

@@ -4,6 +4,7 @@ import graft.SparkSpec
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import scala.jdk.CollectionConverters._
 
 /** Walks every row of the server's route table over a live socket: each
   * route answers 401 without a token, 403 to a token without its
@@ -138,5 +139,22 @@ class RouteTableSpec extends SparkSpec {
       assert(body.get("timestamp").asText().nonEmpty)
     }
     assert(endpointKeys().contains("UNMATCHED"))
+  }
+
+  test("the auth and admin planes answer errors in the dispatcher's envelope") {
+    def envelope(r: HttpResponse[String]): (Int, Seq[String], String) = {
+      val b = mapper.readTree(r.body())
+      assert(!b.get("success").asBoolean() && b.get("timestamp").asText().nonEmpty, r.body())
+      (r.statusCode(), b.fieldNames().asScala.toSeq.sorted, b.get("error").asText())
+    }
+    val fields = Seq("error", "success", "timestamp")
+    assert(envelope(req("GET", "/nowhere", Some(tokens("none")))) ==
+      ((404, fields, "no route: GET /nowhere")))
+    assert(envelope(req("GET", "/api/v1/auth/tokens", Some(tokens("read")))) ==
+      ((403, fields, "Permission denied: admin required")))
+    assert(envelope(req("GET", "/api/v1/auth/tokens/999999", Some(tokens("admin")))) ==
+      ((404, fields, "Token not found")))
+    assert(envelope(req("POST", "/api/v1/retention/9/execute", Some(tokens("admin")))) ==
+      ((404, fields, "retention policy not found: 9")))
   }
 }
