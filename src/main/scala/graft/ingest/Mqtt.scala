@@ -1,7 +1,5 @@
 package graft.ingest
 
-import graft.catalog.GraftCatalog
-
 import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.net.Socket
 import java.nio.charset.StandardCharsets
@@ -118,32 +116,33 @@ object MqttCodec {
   }
 }
 
-/** MQTT subscriber source (reference: internal/mqtt/subscriber.go +
-  * subscription.go): connects over a raw socket, subscribes, decodes
-  * every PUBLISH payload — MessagePack (arc write shapes, via
-  * [[MsgPack.decodePayload]]) with Line Protocol fallback — buffers the
-  * resulting batches, and flushes them through the hour-partitioned
-  * writer on size/age (the reference's ArrowBuffer cadence).
+/** MQTT subscriber (reference: internal/mqtt/subscriber.go +
+  * subscription.go): a protocol client only. It connects over a raw
+  * socket, subscribes, and hands every PUBLISH payload to `deliver`,
+  * which owns decoding and storage. Its result sets the acknowledgement:
+  *  - `true`: the payload was stored; counted in `messagesReceived`.
+  *  - `false`: the payload was refused (it does not decode, or a name is
+  *    invalid); counted in `messagesFailed`. It is still PUBACK'd, so a
+  *    poison message is not redelivered.
+  *  - a throw: storage failed; counted in `messagesFailed`, logged, and
+  *    not PUBACK'd, as an HTTP write answers 500.
+  * PUBACK goes out only after `deliver` returns, so whatever durability
+  * `deliver` gives holds before the broker forgets the message.
   *
-  * Scale: one subscriber is a single-threaded network consumer feeding
-  * the shared writer; horizontal scale = one subscriber per topic/shard
-  * (the reference runs one per subscription), all appending to disjoint
-  * flush files — no coordination needed.
+  * Scale: one subscriber is a single-threaded network consumer; scale
+  * out with one subscriber per topic/shard (the reference runs one per
+  * subscription).
   */
 final class MqttSubscriber(
-    catalog: GraftCatalog,
-    db: String,
     host: String,
     port: Int,
     topics: Seq[String],
+    deliver: Array[Byte] => Boolean,
     clientId: String = "graft-subscriber",
     qos: Int = 1,
     keepAliveSec: Int = 30,
-    flushBatches: Int = 64,
-    flushMillis: Long = 5000L,
     username: Option[String] = None,
     password: Option[String] = None,
-    walDir: Option[java.io.File] = None,
     useTls: Boolean = false,
     socketFactory: Option[(String, Int) => Socket] = None,
     initialBackoffMs: Long = 500L,
@@ -151,33 +150,9 @@ final class MqttSubscriber(
 
   import MqttCodec._
 
-  /** With a WAL configured, un-checkpointed payloads from a crashed
-    * subscriber are replayed into parquet before this one connects
-    * (reference: the subscriber's ArrowBuffer sits on the shared WAL,
-    * internal/wal/recovery.go). */
-  val recoveredRows: Long = walDir match {
-    case None => 0L
-    case Some(dir) =>
-      val entries = Wal.readAll(dir)
-      var rows = 0L
-      entries.foreach { e =>
-        decodePayload(e.body).foreach { b =>
-          rows += b.rowCount
-          DirectParquetWriter.write(catalog, e.db, b)
-        }
-      }
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("wal_")).foreach(_.delete())
-      rows
-  }
-
-  private val wal = walDir.map(new Wal.Writer(_))
-
   @volatile private var socket: Socket = _
   @volatile private var out: DataOutputStream = _
   private val running = new AtomicBoolean(false)
-  private val buffer = mutable.ArrayBuffer.empty[ColumnarBatch]
-  @volatile private var lastFlushAt = System.currentTimeMillis()
 
   // hot-path counters (reference keeps the same stats, subscriber.go)
   @volatile var messagesReceived: Long = 0L
@@ -229,17 +204,15 @@ final class MqttSubscriber(
   }
 
   /** Owns the connection for the subscriber's lifetime: runs the read
-    * loop, and on a dropped connection flushes what is buffered, then
-    * reconnects + resubscribes with exponential backoff (reference:
-    * paho's auto-reconnect, internal/mqtt/subscriber.go). */
+    * loop, and on a dropped connection reconnects + resubscribes with
+    * exponential backoff (reference: paho's auto-reconnect,
+    * internal/mqtt/subscriber.go). */
   private def supervisorLoop(in0: DataInputStream): Unit = {
     var in = in0
     while (running.get()) {
       try readLoop(in)
       catch {
         case _: Exception if running.get() =>
-          // connection lost — nothing buffered should wait out the outage
-          try flush() catch { case _: Exception => () }
           try socket.close() catch { case _: Exception => () }
           var backoff = initialBackoffMs
           var connected = false
@@ -268,112 +241,28 @@ final class MqttSubscriber(
           case _: java.net.SocketTimeoutException =>
             writePacket(out, pingreq); null
         }
-      p match {
-        case null => ()
-        case pkt if pkt.ptype == PUBLISH =>
-          val pub = parsePublish(pkt)
-          // journal + buffer FIRST: once the broker sees PUBACK it will
-          // never redeliver, so the payload must already be durable
-          handlePayload(pub.payload)
-          if (pub.qos >= 1) writePacket(out, puback(pub.packetId))
-        case pkt if pkt.ptype == PINGRESP => ()
-        case _ => ()
-      }
-      maybeFlush()
-    }
-  }
-
-  private def decodePayload(payload: Array[Byte]): Seq[ColumnarBatch] =
-    try MsgPack.decodePayload(payload)
-    catch {
-      case _: Exception =>
-        val (points, errs) = LineProtocol.parse(
-          new String(payload, StandardCharsets.UTF_8), "ns")
-        if (points.isEmpty && errs.nonEmpty) Nil
-        else ColumnarBatch.fromPoints(points)
-    }
-
-  private def handlePayload(payload: Array[Byte]): Unit = {
-    val batches =
-      try decodePayload(payload)
-      catch { case _: Exception => Nil }
-    if (batches.nonEmpty) {
-      // journal + buffer under ONE lock, the same lock flush() drains and
-      // seals under: a sealed WAL segment therefore covers exactly the
-      // payloads drained from the buffer — an append can never slip
-      // between the drain and the seal and get checkpointed away while
-      // its batch is still memory-only
-      synchronized {
-        wal.foreach(_.append(db, payload))
-        buffer ++= batches
-      }
-      messagesReceived += 1
-    } else messagesFailed += 1
-  }
-
-  @volatile private var retryNotBefore = 0L
-
-  private def maybeFlush(): Unit = {
-    val now = System.currentTimeMillis()
-    val due = now >= retryNotBefore && synchronized {
-      buffer.nonEmpty && (buffer.length >= flushBatches ||
-        now - lastFlushAt >= flushMillis)
-    }
-    // a storage failure is NOT a connection failure: letting it escape
-    // into readLoop would make the supervisor close a healthy broker
-    // connection and reconnect in a loop. flush() restored the batches,
-    // so a later flush retries (after a cooldown — the size trigger would
-    // otherwise re-attempt the failing write on every packet); the
-    // connection keeps draining meanwhile.
-    if (due) {
-      try flush()
-      catch {
-        case e: Exception =>
-          retryNotBefore = System.currentTimeMillis() + flushMillis
-          org.slf4j.LoggerFactory.getLogger(getClass)
-            .warn(s"flush failed, batches retained for retry: ${e.getMessage}")
+      if (p != null && p.ptype == PUBLISH) {
+        val pub = parsePublish(p)
+        if (handled(pub.payload) && pub.qos >= 1) writePacket(out, puback(pub.packetId))
       }
     }
   }
 
-  // sealed WAL segments whose parquet write failed: not yet purgeable,
-  // but their payloads are back in the buffer — purged with the next
-  // successful flush so a restart never replays already-written data
-  private var unpurged: Seq[java.io.File] = Nil
-
-  /** Drain the buffer through the hour-partitioned writer — one write
-    * per measurement (batches union by name, matching batch ingest).
-    * The drain and the WAL seal happen atomically (same lock as append),
-    * and the sealed segments are purged only after the parquet write
-    * succeeds. If the write throws, the drained batches are restored to
-    * the buffer (front, preserving order) for the next flush — PUBACK'd
-    * data is never dropped on a storage error, WAL or not — and the
-    * sealed segments stay on disk until a later flush lands them. */
-  def flush(): Unit = {
-    val (pending, sealedSegments) = synchronized {
-      val p = buffer.toSeq; buffer.clear(); lastFlushAt = System.currentTimeMillis()
-      (p, wal.map(_.seal()).getOrElse(Nil))
-    }
+  /** Runs `deliver` and counts its outcome; false when storage failed,
+    * so the message goes un-acknowledged. A storage failure is not a
+    * connection failure: it must not reach the read loop, or the
+    * supervisor would drop a healthy broker connection. */
+  private def handled(payload: Array[Byte]): Boolean =
     try {
-      pending.groupBy(_.measurement).toSeq.sortBy(_._1).foreach { case (m, bs) =>
-        catalog.registerTags(db, m, bs.flatMap(_.tagColumns).distinct)
-        val df = bs.map(_.toDataFrame(catalog.spark))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-        HourPartitionedWriter.write(catalog, db, m, df)
-      }
+      if (deliver(payload)) messagesReceived += 1 else messagesFailed += 1
+      true
     } catch {
-      case e: Exception =>
-        synchronized {
-          pending ++=: buffer
-          unpurged = unpurged ++ sealedSegments
-        }
-        throw e
+      case e: Exception if running.get() =>
+        messagesFailed += 1
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"delivery failed, message not acknowledged: ${e.getMessage}")
+        false
     }
-    val purgeNow = synchronized {
-      val u = unpurged ++ sealedSegments; unpurged = Nil; u
-    }
-    wal.foreach(_.purge(purgeNow)) // flushed payloads durable in parquet
-  }
 
   def stop(): Unit = {
     if (!running.compareAndSet(true, false)) return
@@ -383,18 +272,5 @@ final class MqttSubscriber(
     } catch { case _: Exception => () }
     val t = supervisor
     if (t != null) { t.interrupt(); t.join(5000) }
-    // a failing final flush must not skip the WAL close: with a WAL the
-    // restored batches are journaled (sealed, unpurged) and replay on the
-    // next start; without one, the loss is logged rather than hidden
-    // behind a stop() exception
-    try flush()
-    catch {
-      case e: Exception =>
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"final flush failed on stop: ${e.getMessage}" +
-            (if (wal.isEmpty) " (no WAL — buffered rows lost)"
-             else " (journaled rows replay on next start)"))
-    }
-    wal.foreach(_.close())
   }
 }

@@ -225,6 +225,19 @@ object MsgPack {
     decodePayloadGeneric(bytes, nowMicros)
   }
 
+  /** A write payload whose format is not declared, as MQTT delivers it:
+    * MessagePack (any arc write shape), else Line Protocol at ns
+    * precision. Empty when neither yields a row. The buffered ingester
+    * replays a journaled payload through this same function, so a
+    * payload replays exactly as it was first decoded. */
+  def decodeOrLineProtocol(bytes: Array[Byte]): Seq[ColumnarBatch] =
+    try decodePayload(bytes)
+    catch {
+      case _: Exception =>
+        ColumnarBatch.fromPoints(
+          LineProtocol.parse(new String(bytes, StandardCharsets.UTF_8), "ns")._1)
+    }
+
   private def decodePayloadGeneric(bytes: Array[Byte],
       nowMicros: () => Long): Seq[ColumnarBatch] =
     decode(bytes) match {

@@ -460,12 +460,7 @@ final class DurableIngester(catalog: GraftCatalog, walDir: File,
 
   private def decodeBody(body: Array[Byte]): Seq[ColumnarBatch] =
     if (body.nonEmpty && BatchCodec.isFrame(body(0))) BatchCodec.decode(body)
-    else try MsgPack.decodePayload(body)
-    catch {
-      case _: Exception =>
-        val (points, _) = LineProtocol.parse(new String(body, "UTF-8"), "ns")
-        ColumnarBatch.fromPoints(points)
-    }
+    else MsgPack.decodeOrLineProtocol(body)
 
   /** Journal + buffer one write payload (msgpack or LP bytes). The
     * payload is on disk before this returns. */
@@ -480,9 +475,10 @@ final class DurableIngester(catalog: GraftCatalog, walDir: File,
   def acceptDecoded(db: String, batches: Seq[ColumnarBatch]): Int =
     journal(db, BatchCodec.encode(batches), batches)
 
-  /** Journal a raw payload the handler has ALREADY decoded into
-    * `batches`, when that payload replays deterministically on its own
-    * (msgpack — no request-scoped decode parameters): skips the
+  /** Journal a raw payload the caller has ALREADY decoded into
+    * `batches`, when replay's decoder ([[MsgPack.decodeOrLineProtocol]])
+    * turns it back into the same batches: an HTTP msgpack body or an
+    * MQTT payload, with no request-scoped decode parameters. Skips the
     * BatchCodec re-encode on the hottest accept path. */
   def acceptRaw(db: String, payload: Array[Byte],
       batches: Seq[ColumnarBatch]): Int =

@@ -464,8 +464,8 @@ object Compaction {
     }
     // abandoned flush-tmp trees: a failed HourPartitionedWriter.write
     // leaves its tmp tree in place for the caller's retry (every ingest
-    // path re-submits the batch: MQTT restores its buffer, streaming
-    // replays the micro-batch, bulk import surfaces the error). Nothing
+    // path re-submits the batch: a CQ re-runs its window from the
+    // watermark, bulk import surfaces the error). Nothing
     // ever re-reads the tree itself, so once it is clearly abandoned
     // (an hour old — in-flight flushes run seconds) it is swept here,
     // bounding the leak a persistently flaky store would otherwise grow.

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.HttpExchange
 import graft.catalog.GraftCatalog
-import graft.ingest.MqttSubscriber
+import graft.ingest.{MqttSubscriber, MsgPack}
 import graft.jobs.{Compaction, ContinuousQuery, CqState, IcebergExport, Retention,
   TargetedDelete, Tiering}
 import graft.query.QueryFacade
@@ -392,7 +392,7 @@ final class AdminApi(srv: HttpServer) {
     if (!catalog.isValidDatabaseName(db)) {
       fail(ex, 400, "database name contains invalid characters"); return
     }
-    if (srv.MeasName.findFirstIn(meas).isEmpty) {
+    if (!srv.validMeasurement(meas)) {
       fail(ex, 400, "measurement name contains invalid characters"); return
     }
     if (!catalog.listDatabases().contains(db)) {
@@ -475,7 +475,7 @@ final class AdminApi(srv: HttpServer) {
     node.put("database", db)
     oText(b, "measurement") match {
       case Some(m) =>
-        if (srv.MeasName.findFirstIn(m).isEmpty)
+        if (!srv.validMeasurement(m))
           return Left(s"invalid measurement name: $m")
         node.put("measurement", m)
       case None => node.putNull("measurement")
@@ -583,7 +583,7 @@ final class AdminApi(srv: HttpServer) {
       .getOrElse(return Left("source_measurement is required"))
     val dest = oText(b, "destination_measurement")
       .getOrElse(return Left("destination_measurement is required"))
-    if (srv.MeasName.findFirstIn(dest).isEmpty)
+    if (!srv.validMeasurement(dest))
       return Left("invalid destination_measurement: must start with a letter " +
         "and contain only alphanumerics, underscores, or hyphens")
     val query = oText(b, "query").getOrElse(return Left("query is required"))
@@ -1131,8 +1131,18 @@ final class AdminApi(srv: HttpServer) {
         }
     }
 
-  private def handleSubDelete(ex: HttpExchange, id: Long): Unit = {
+  private def stopSubscription(id: Long): Unit =
     mqttRuntime.remove(id).foreach(s => try s.stop() catch { case _: Throwable => () })
+
+  /** Disconnects every running subscriber; the server stops them before
+    * its buffered ingester's final flush. */
+  private[server] def stopSubscriptions(): Unit = mqttRuntime.keys.foreach { id =>
+    stopSubscription(id)
+    mqttStatus.put(id, "stopped")
+  }
+
+  private def handleSubDelete(ex: HttpExchange, id: Long): Unit = {
+    stopSubscription(id)
     mqttStatus.remove(id)
     handleRemove(ex, mqttStore, id.toString, "subscription")
   }
@@ -1159,15 +1169,21 @@ final class AdminApi(srv: HttpServer) {
       case None => fail(ex, 404, s"subscription not found: $id"); return
       case Some(r) => r
     }
-    def stopIt(): Unit =
-      mqttRuntime.remove(id).foreach(s => try s.stop() catch { case _: Throwable => () })
     def startIt(): Unit = {
       val topics = (0 until rec.get("topics").size()).map(rec.get("topics").get(_).asText)
-      val sub = new MqttSubscriber(catalog,
-        rec.get("database").asText,
+      val db = rec.get("database").asText
+      // a payload that does not decode is refused like a bad name: the
+      // subscriber still acknowledges it; a storage failure throws
+      def deliver(payload: Array[Byte]): Boolean = {
+        val batches = try MsgPack.decodeOrLineProtocol(payload)
+          catch { case _: Exception => Nil }
+        batches.nonEmpty && srv.writeCore(db, batches, Some(payload)).isRight
+      }
+      val sub = new MqttSubscriber(
         rec.get("broker_host").asText,
         rec.get("broker_port").asInt,
         topics,
+        deliver,
         clientId = rec.get("client_id").asText,
         qos = rec.get("qos").asInt)
       try {
@@ -1185,9 +1201,9 @@ final class AdminApi(srv: HttpServer) {
       case "start" =>
         if (subStatus(id) == "running") { fail(ex, 409, "already running"); return }
         startIt()
-      case "stop" => stopIt(); mqttStatus.put(id, "stopped")
-      case "pause" => stopIt(); mqttStatus.put(id, "paused")
-      case "restart" => stopIt(); startIt()
+      case "stop" => stopSubscription(id); mqttStatus.put(id, "stopped")
+      case "pause" => stopSubscription(id); mqttStatus.put(id, "paused")
+      case "restart" => stopSubscription(id); startIt()
     }
     ok(ex, 200,
       s"""{"success":true,"id":$id,"status":${q(subStatus(id))}}""")

@@ -266,6 +266,7 @@ final class HttpServer(
 
   def stop(): Unit = {
     admin.lifecycle.stop()
+    admin.stopSubscriptions() // before the final flush: no delivery after it
     server.stop(0); pool.shutdownNow(); obs.stop()
     try audit.close() catch { case _: Throwable => () } // final segment
     bufferedIngest.foreach { ing =>
@@ -793,7 +794,13 @@ final class HttpServer(
 
   // ---- writes ----------------------------------------------------------
 
-  private[server] val MeasName: Regex = "^[A-Za-z][A-Za-z0-9_-]*$".r
+  private val MeasName: Regex = "^[A-Za-z][A-Za-z0-9_-]*$".r
+
+  /** The measurement-name check: a name that passes is one path segment
+    * of letters, digits, `_` and `-`, so it cannot leave its database
+    * directory. */
+  private[server] def validMeasurement(m: String): Boolean =
+    MeasName.findFirstIn(m).nonEmpty
 
   private def handleWriteMsgPack(ex: HttpExchange): Unit = {
     val payload = decompressed(readBody(ex))
@@ -838,17 +845,30 @@ final class HttpServer(
     writeBatches(ex, db, ColumnarBatch.fromPoints(points), raw.length.toLong, "lp")
   }
 
-  /** Shared write core for every batch path: the MeasName gate, the
-    * parquet writes, and the view invalidation live in ONE place so the
-    * endpoints can't drift. Returns the invalid name, or rows written. */
-  private def writeCore(db: String,
-      batches: Seq[ColumnarBatch]): Either[String, Long] =
-    batches.find(b => MeasName.findFirstIn(b.measurement).isEmpty) match {
+  /** The one write core, shared by every batch write: HTTP msgpack and
+    * LP, LP import, and MQTT deliveries. It checks every batch's name
+    * once, then journals the batches into the buffered ingester when it
+    * is on (views refresh at its flush), or writes them to Parquet now
+    * and refreshes their views. `raw`, when given, is a payload that
+    * `MsgPack.decodeOrLineProtocol` turns back into `batches`; it is
+    * journaled verbatim instead of re-encoded. Returns the invalid name,
+    * or the rows accepted; a storage failure throws. */
+  private[server] def writeCore(db: String, batches: Seq[ColumnarBatch],
+      raw: Option[Array[Byte]] = None): Either[String, Long] =
+    batches.find(b => !validMeasurement(b.measurement)) match {
       case Some(bad) => Left(bad.measurement)
       case None =>
-        batches.foreach { b =>
-          DirectParquetWriter.write(catalog, db, b)
-          invalidateView(db, b.measurement) // stale listing: re-register lazily
+        bufferedIngest match {
+          case Some(ing) => // WAL before the ack, flush async
+            raw match {
+              case Some(r) => ing.acceptRaw(db, r, batches)
+              case None => ing.acceptDecoded(db, batches)
+            }
+          case None =>
+            batches.foreach { b =>
+              DirectParquetWriter.write(catalog, db, b)
+              invalidateView(db, b.measurement) // stale listing: re-register lazily
+            }
         }
         Right(batches.map(_.rowCount.toLong).sum)
     }
@@ -863,29 +883,13 @@ final class HttpServer(
         batches.map(_.measurement).distinct.map((db, _)), "write")) {
       ingestError(source); return
     }
-    bufferedIngest match {
-      case Some(ing) => // buffered accept: WAL before 204, flush async
-        batches.find(b => MeasName.findFirstIn(b.measurement).isEmpty) match {
-          case Some(bad) =>
-            ingestError(source)
-            fail(ex, 400, s"invalid measurement name: ${bad.measurement}")
-          case None =>
-            replayableRaw match {
-              case Some(raw) => ing.acceptRaw(db, raw, batches)
-              case None => ing.acceptDecoded(db, batches)
-            }
-            ingested(source, batches.map(_.rowCount.toLong).sum, payloadBytes)
-            ex.sendResponseHeaders(204, -1)
-        }
-      case None =>
-        writeCore(db, batches) match {
-          case Left(bad) =>
-            ingestError(source)
-            fail(ex, 400, s"invalid measurement name: $bad")
-          case Right(_) =>
-            ingested(source, batches.map(_.rowCount.toLong).sum, payloadBytes)
-            ex.sendResponseHeaders(204, -1) // InfluxDB-compatible No Content
-        }
+    writeCore(db, batches, replayableRaw) match {
+      case Left(bad) =>
+        ingestError(source)
+        fail(ex, 400, s"invalid measurement name: $bad")
+      case Right(rows) =>
+        ingested(source, rows, payloadBytes)
+        ex.sendResponseHeaders(204, -1) // InfluxDB-compatible No Content
     }
   }
 
@@ -907,7 +911,7 @@ final class HttpServer(
     }
     val meas = Option(ex.getRequestHeaders.getFirst("x-arc-measurement"))
       .filter(_.nonEmpty).getOrElse("satellite_tle")
-    if (MeasName.findFirstIn(meas).isEmpty) {
+    if (!validMeasurement(meas)) {
       fail(ex, 400, s"invalid measurement name: $meas"); return
     }
     if (!checkResource(ex, Seq((db, meas)), "write")) {
@@ -957,7 +961,7 @@ final class HttpServer(
       fail(ex, 400, "empty upload"); return
     }
     def needMeasurement(): Option[String] = params.get("measurement") match {
-      case Some(m) if MeasName.findFirstIn(m).nonEmpty => Some(m)
+      case Some(m) if validMeasurement(m) => Some(m)
       case Some(m) =>
         ingestError("import")
         fail(ex, 400, s"invalid measurement name: $m"); None
@@ -1019,7 +1023,7 @@ final class HttpServer(
         }
       case "tle" =>
         val meas = params.getOrElse("measurement", "satellite_tle")
-        if (MeasName.findFirstIn(meas).isEmpty) {
+        if (!validMeasurement(meas)) {
           ingestError("import")
           fail(ex, 400, s"invalid measurement name: $meas")
         } else if (!writableImport(Seq(meas))) { ()

@@ -8,10 +8,11 @@ import java.net.ServerSocket
 import java.util.concurrent.CountDownLatch
 import java.util.concurrent.TimeUnit
 
-/** MQTT 3.1.1 subscriber source (reference internal/mqtt/subscriber.go):
+/** MQTT 3.1.1 subscriber (reference internal/mqtt/subscriber.go):
   * raw-socket codec round-trip against an in-process broker stub —
   * CONNECT/SUBSCRIBE handshake, PUBLISH with msgpack AND line-protocol
-  * payloads, QoS 1 PUBACK, landing in event-time hour partitions.
+  * payloads handed to a `deliver` function that lands them in event-time
+  * hour partitions, and the QoS 1 PUBACK contract on its outcome.
   */
 class MqttSpec extends SparkSpec {
 
@@ -22,6 +23,8 @@ class MqttSpec extends SparkSpec {
     def port: Int = server.getLocalPort
     val subscribed = new CountDownLatch(1)
     val pubacks = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val acked = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    def ackedIds: Seq[Int] = acked.toArray.toSeq.map(_.asInstanceOf[Int])
     @volatile private var out: DataOutputStream = _
 
     private val t = new Thread(() => {
@@ -40,7 +43,9 @@ class MqttSpec extends SparkSpec {
               subscribed.countDown()
             case MqttCodec.PINGREQ =>
               MqttCodec.writePacket(out, MqttCodec.pingresp)
-            case MqttCodec.PUBACK => pubacks.incrementAndGet()
+            case MqttCodec.PUBACK =>
+              acked.add(((p.body(0) & 0xff) << 8) | (p.body(1) & 0xff))
+              pubacks.incrementAndGet()
             case _ => ()
           }
         }
@@ -72,6 +77,13 @@ class MqttSpec extends SparkSpec {
       b.array() ++ m.toSeq.flatMap { case (k, x) => (enc(k.toString) ++ enc(x)).toSeq }
   }
 
+  /** Decodes a payload and writes it straight to Parquet. */
+  private def toParquet(cat: GraftCatalog)(payload: Array[Byte]): Boolean = {
+    val batches = MsgPack.decodeOrLineProtocol(payload)
+    batches.foreach(DirectParquetWriter.write(cat, "default", _))
+    batches.nonEmpty
+  }
+
   private def awaitTrue(timeoutMs: Long)(cond: => Boolean): Boolean = {
     val deadline = System.currentTimeMillis() + timeoutMs
     while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
@@ -81,9 +93,8 @@ class MqttSpec extends SparkSpec {
   test("subscriber round-trips msgpack + LP publishes into hour partitions") {
     val cat = new GraftCatalog(spark, tmpDir("mqtt_cat"))
     val broker = new BrokerStub
-    val sub = new MqttSubscriber(cat, "default", "127.0.0.1", broker.port,
-      topics = Seq("sensors/#"), clientId = "spec", qos = 1,
-      flushBatches = 1000, flushMillis = Long.MaxValue) // manual flush
+    val sub = new MqttSubscriber("127.0.0.1", broker.port,
+      topics = Seq("sensors/#"), deliver = toParquet(cat), clientId = "spec", qos = 1)
     try {
       sub.start()
       assert(broker.subscribed.await(5, TimeUnit.SECONDS), "no SUBSCRIBE seen")
@@ -103,7 +114,6 @@ class MqttSpec extends SparkSpec {
       assert(awaitTrue(5000)(sub.messagesReceived == 2),
         s"messages=${sub.messagesReceived} failed=${sub.messagesFailed}")
       assert(awaitTrue(5000)(broker.pubacks.get() == 2), "QoS1 PUBACKs missing")
-      sub.flush()
 
       val cpu = cat.table("default", "cpu")
       assert(cpu.count() == 2)
@@ -116,30 +126,6 @@ class MqttSpec extends SparkSpec {
     } finally {
       sub.stop(); broker.close()
     }
-  }
-
-  test("WAL-journaled subscriber: crash before flush, next start replays") {
-    val cat = new GraftCatalog(spark, tmpDir("mqtt_wal_cat"))
-    val walDir = new java.io.File(tmpDir("mqtt_wal"))
-    val broker = new BrokerStub
-    val sub = new MqttSubscriber(cat, "default", "127.0.0.1", broker.port,
-      topics = Seq("t/#"), clientId = "spec-wal", qos = 1,
-      flushBatches = 1000, flushMillis = Long.MaxValue, walDir = Some(walDir))
-    try {
-      sub.start()
-      assert(broker.subscribed.await(5, TimeUnit.SECONDS))
-      val baseUs = 1717200000000000L
-      broker.publish("t/cpu",
-        s"cpu,host=a v=1.0 ${baseUs * 1000L}".getBytes("UTF-8"), qos = 1, pid = 3)
-      assert(awaitTrue(5000)(sub.messagesReceived == 1))
-      // crash: no flush/stop — the rows exist ONLY in the WAL
-      intercept[IllegalArgumentException] { cat.table("default", "cpu") }
-    } finally broker.close()
-
-    val sub2 = new MqttSubscriber(cat, "default", "127.0.0.1", 1,
-      topics = Seq("t/#"), walDir = Some(walDir)) // never started: ctor replays
-    assert(sub2.recoveredRows == 1)
-    assert(cat.table("default", "cpu").count() == 1)
   }
 
   /** Broker that accepts connections in a loop — lets a test kill the
@@ -189,13 +175,11 @@ class MqttSpec extends SparkSpec {
 
   test("reconnect: dropped broker connection resubscribes, no data loss") {
     val cat = new GraftCatalog(spark, tmpDir("mqtt_rc_cat"))
-    val walDir = new java.io.File(tmpDir("mqtt_rc_wal"))
     val broker = new ReconnectBroker
     // injectable factory — the same hook production TLS goes through
     val sockets = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sub = new MqttSubscriber(cat, "default", "127.0.0.1", broker.port,
-      topics = Seq("t/#"), clientId = "spec-rc", qos = 1,
-      flushBatches = 1000, flushMillis = Long.MaxValue, walDir = Some(walDir),
+    val sub = new MqttSubscriber("127.0.0.1", broker.port,
+      topics = Seq("t/#"), deliver = toParquet(cat), clientId = "spec-rc", qos = 1,
       socketFactory = Some((h, p) => {
         sockets.incrementAndGet(); new java.net.Socket(h, p)
       }),
@@ -214,12 +198,40 @@ class MqttSpec extends SparkSpec {
         s"cpu,host=b v=2.0 ${(baseUs + 3600L * 1000000L) * 1000L}"
           .getBytes("UTF-8"), pid = 2)
       assert(awaitTrue(5000)(sub.messagesReceived == 2))
-      sub.flush()
 
-      // msg1 was flushed by the supervisor at disconnect, msg2 just now
+      // each message was stored before the read loop moved on
       assert(cat.table("default", "cpu").count() == 2)
       assert(sub.reconnects == 1)
       assert(sockets.get() == 2)
+    } finally {
+      sub.stop(); broker.close()
+    }
+  }
+
+  test("PUBACK follows deliver: a refused payload is acknowledged, a storage failure is not") {
+    val broker = new BrokerStub
+    val sub = new MqttSubscriber("127.0.0.1", broker.port,
+      topics = Seq("t/#"), clientId = "spec-ack", qos = 1,
+      deliver = payload => new String(payload, "UTF-8") match {
+        case "ok" => true
+        case "refused" => false
+        case _ => throw new java.io.IOException("disk full")
+      })
+    try {
+      sub.start()
+      assert(broker.subscribed.await(5, TimeUnit.SECONDS))
+      broker.publish("t/a", "refused".getBytes("UTF-8"), qos = 1, pid = 1)
+      assert(awaitTrue(5000)(broker.pubacks.get() == 1), "a refused payload is acknowledged")
+      assert(sub.messagesFailed == 1 && sub.messagesReceived == 0)
+
+      broker.publish("t/a", "broken".getBytes("UTF-8"), qos = 1, pid = 2)
+      assert(awaitTrue(5000)(sub.messagesFailed == 2))
+      // the connection stays up: the next message is stored and acknowledged
+      broker.publish("t/a", "ok".getBytes("UTF-8"), qos = 1, pid = 3)
+      assert(awaitTrue(5000)(sub.messagesReceived == 1))
+      assert(awaitTrue(5000)(broker.pubacks.get() == 2))
+      assert(broker.ackedIds == Seq(1, 3), "the storage failure must not be acknowledged")
+      assert(sub.reconnects == 0)
     } finally {
       sub.stop(); broker.close()
     }

@@ -1,12 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.catalog.GraftCatalog
-import graft.streaming.IngestStream
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 class MultimodalSpec extends SparkSpec {
 
@@ -192,45 +187,5 @@ class MultimodalSpec extends SparkSpec {
     val rms = got.getSeq[Float](6)
     assert((0 to 3).forall(s => rms(s) < 0.01f), s"leading silence: $rms")
     assert((4 to 7).forall(s => rms(s) > 0.99f), s"trailing square wave: $rms")
-  }
-}
-
-class IngestStreamSpec extends SparkSpec {
-
-  test("streaming ingest lands micro-batches in hour partitions") {
-    val cat = new GraftCatalog(spark, tmpDir("stream_cat"))
-    val landing = tmpDir("landing")
-    val ckpt = tmpDir("ckpt")
-    val schema = StructType(Seq(
-      StructField("time", TimestampType),
-      StructField("host", StringType),
-      StructField("v", DoubleType)))
-
-    // drop a parquet batch into the landing dir (3 rows, 2 hours)
-    val base = 1717200000000000L
-    import spark.implicits._
-    Seq((base, "a", 1.0), (base + 3600L * 1000000 + 5, "b", 2.0),
-      (base + 7, "c", 3.0))
-      .toDF("us", "host", "v")
-      .select(timestamp_micros(col("us")).as("time"), col("host"), col("v"))
-      .coalesce(1).write.mode("append").parquet(landing)
-
-    val q = IngestStream.fromParquetLanding(cat, "default", "stream_m",
-      landing, schema, ckpt, Trigger.ProcessingTime("1 second"))
-    try {
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val parts = cat.listHourPartitions("default", "stream_m")
-    assert(parts.length == 2, parts.mkString(","))
-    assert(cat.table("default", "stream_m").count() == 3)
-    // second batch appends without reprocessing the first (checkpoint)
-    Seq((base + 9, "d", 4.0)).toDF("us", "host", "v")
-      .select(timestamp_micros(col("us")).as("time"), col("host"), col("v"))
-      .coalesce(1).write.mode("append").parquet(landing)
-    val q2 = IngestStream.fromParquetLanding(cat, "default", "stream_m",
-      landing, schema, ckpt, Trigger.ProcessingTime("1 second"))
-    try q2.processAllAvailable() finally q2.stop()
-    assert(cat.table("default", "stream_m").count() == 4)
   }
 }

@@ -42,6 +42,9 @@ import scala.jdk.CollectionConverters._
   *
   * Optimizer rules reach a session through the one installer,
   * `OptimizerRules.install`, so every session gets every rule in order.
+  *
+  * There is one buffered ingester: only `Wal.scala` opens a WAL writer
+  * or replays a WAL, and the MQTT client writes no Parquet of its own.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -261,6 +264,25 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(assigning.map(_.getFileName.toString) == Seq("OptimizerRules.scala"),
       s"extraOptimizations assigned in: ${assigning.mkString(", ")} — " +
         "add the rule to OptimizerRules.rules instead")
+  }
+
+  test("one buffered ingester: WALs open only in Wal.scala; the MQTT client writes no Parquet") {
+    val sources = mainSources.map(p => p -> code(new String(Files.readAllBytes(p))))
+    val wal = sources.flatMap { case (p, s) =>
+      "new\\s+Wal\\.Writer\\b|\\bWal\\.readAll\\b".r.findAllMatchIn(s)
+        .filter(_ => p.getFileName.toString != "Wal.scala")
+        .map(m => s"$p:${s.take(m.start).count(_ == '\n') + 1}")
+    }
+    assert(wal.isEmpty,
+      s"WAL opened or replayed outside Wal.scala at: ${wal.mkString(", ")} — " +
+        "journal through the server's DurableIngester")
+    val mqtt = Paths.get("src/main/scala/graft/ingest/Mqtt.scala")
+    val mqttCode = sources.collectFirst { case (p, s) if p == mqtt => s }
+    assert(mqttCode.nonEmpty, s"$mqtt missing")
+    val writers = "\\b(?:HourPartitionedWriter|DirectParquetWriter)\\b".r
+      .findAllIn(mqttCode.get).toSeq.distinct
+    assert(writers.isEmpty,
+      s"Mqtt.scala names ${writers.mkString(", ")} — deliver into the server's write core")
   }
 
   test("every main in src/main is named in README.md's entry points") {

@@ -25,19 +25,20 @@ class AdminRoutesSpec extends SparkSpec {
   private val client = HttpClient.newHttpClient()
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def send(method: String, path: String, body: Array[Byte]): HttpResponse[Array[Byte]] =
-    client.send(HttpRequest.newBuilder(URI.create(base + path))
+  private def send(method: String, path: String, body: Array[Byte],
+      at: String = base): HttpResponse[Array[Byte]] =
+    client.send(HttpRequest.newBuilder(URI.create(at + path))
       .method(method, HttpRequest.BodyPublishers.ofByteArray(body)).build(),
       HttpResponse.BodyHandlers.ofByteArray())
 
-  private def post(path: String, body: Array[Byte]): HttpResponse[Array[Byte]] =
-    send("POST", path, body)
+  private def post(path: String, body: Array[Byte], at: String = base): HttpResponse[Array[Byte]] =
+    send("POST", path, body, at)
   private def put(path: String, body: Array[Byte]): HttpResponse[Array[Byte]] =
     send("PUT", path, body)
   private def delete(path: String): HttpResponse[Array[Byte]] =
     send("DELETE", path, Array.emptyByteArray)
-  private def get(path: String): HttpResponse[Array[Byte]] =
-    client.send(HttpRequest.newBuilder(URI.create(base + path)).GET().build(),
+  private def get(path: String, at: String = base): HttpResponse[Array[Byte]] =
+    client.send(HttpRequest.newBuilder(URI.create(at + path)).GET().build(),
       HttpResponse.BodyHandlers.ofByteArray())
 
   private def json(r: HttpResponse[Array[Byte]]) = mapper.readTree(r.body())
@@ -410,11 +411,15 @@ class AdminRoutesSpec extends SparkSpec {
 
   // ---- MQTT -------------------------------------------------------------------
 
-  /** Minimal broker stub: answers the handshake, relays test PUBLISHes. */
+  /** Minimal broker stub: answers the handshake, relays test PUBLISHes,
+    * records the packet ids it sees PUBACK'd and when the client closes. */
   private final class BrokerStub {
     val server = new ServerSocket(0)
     def port: Int = server.getLocalPort
     val subscribed = new CountDownLatch(1)
+    val closed = new CountDownLatch(1)
+    private val acked = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    def ackedIds: Seq[Int] = acked.toArray(Array.empty[Integer]).toSeq.map(_.intValue)
     @volatile private var out: DataOutputStream = _
     private val t = new Thread(() => {
       try {
@@ -430,17 +435,39 @@ class AdminRoutesSpec extends SparkSpec {
               MqttCodec.writePacket(out, MqttCodec.suback(pid, Seq(1)))
               subscribed.countDown()
             case MqttCodec.PINGREQ => MqttCodec.writePacket(out, MqttCodec.pingresp)
+            case MqttCodec.PUBACK => acked.add(((p.body(0) & 0xff) << 8) | (p.body(1) & 0xff))
             case _ => ()
           }
         }
       } catch { case _: Exception => () }
+      finally closed.countDown()
     }, "admin-mqtt-broker-stub")
     t.setDaemon(true); t.start()
-    def publish(topic: String, payloadBytes: Array[Byte]): Unit = synchronized {
-      MqttCodec.writePacket(out, MqttCodec.publish(topic, payloadBytes, 1, 7))
+    def publish(topic: String, payloadBytes: Array[Byte], pid: Int = 7): Unit = synchronized {
+      MqttCodec.writePacket(out, MqttCodec.publish(topic, payloadBytes, 1, pid))
     }
     def close(): Unit = server.close()
   }
+
+  private def awaitTrue(cond: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + 5000000000L
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+    cond
+  }
+
+  /** Creates and starts a subscription on `broker`; returns its id. */
+  private def startSub(name: String, broker: BrokerStub, at: String = base): Long = {
+    val id = json(post("/api/v1/mqtt/subscriptions",
+      j("name" -> name, "broker_host" -> "127.0.0.1", "broker_port" -> broker.port,
+        "topics" -> Seq("t/#"), "database" -> "default", "qos" -> 1), at)).get("id").asLong()
+    assert(json(post(s"/api/v1/mqtt/subscriptions/$id/start", j(), at))
+      .get("status").asText() == "running")
+    assert(broker.subscribed.await(5, TimeUnit.SECONDS), "no SUBSCRIBE seen")
+    id
+  }
+
+  private def subStat(id: Long, field: String, at: String = base): Long =
+    json(get(s"/api/v1/mqtt/subscriptions/$id/stats", at)).get(field).asLong()
 
   test("mqtt subscriptions: CRUD + live broker round-trip into parquet") {
     val broker = new BrokerStub
@@ -498,6 +525,90 @@ class AdminRoutesSpec extends SparkSpec {
       assert(upd.get("topics").size() == 2)
       assert(delete(s"/api/v1/mqtt/subscriptions/$id").statusCode() == 200)
       assert(get(s"/api/v1/mqtt/subscriptions/$id").statusCode() == 404)
+    } finally broker.close()
+  }
+
+  test("mqtt: a PUBACK'd payload is queryable at once, and so is the next one") {
+    val broker = new BrokerStub
+    var id = -1L
+    try {
+      id = startSub("mq-visible", broker)
+      broker.publish("t/a", payload("mqvis", Seq(OldUs, OldUs + 1000000L)), pid = 1)
+      assert(awaitTrue(broker.ackedIds == Seq(1)), "no PUBACK")
+      assert(queryCount("SELECT count(*) FROM mqvis") == 2)
+      // the registered view must see a later delivery, not its old listing
+      broker.publish("t/a", payload("mqvis", Seq(OldUs + 2000000L, OldUs + 3000000L)), pid = 2)
+      assert(awaitTrue(broker.ackedIds == Seq(1, 2)), "no second PUBACK")
+      assert(queryCount("SELECT count(*) FROM mqvis") == 4)
+      assert(subStat(id, "messages_received") == 2)
+    } finally { if (id >= 0) delete(s"/api/v1/mqtt/subscriptions/$id"); broker.close() }
+  }
+
+  test("mqtt: a payload naming ../escape is refused and acknowledged; valid ones still land") {
+    val broker = new BrokerStub
+    var id = -1L
+    try {
+      id = startSub("mq-escape", broker)
+      broker.publish("t/a", payload("../escape", Seq(OldUs)), pid = 1)
+      assert(awaitTrue(broker.ackedIds == Seq(1)), "a refused payload is still acknowledged")
+      assert(subStat(id, "messages_failed") == 1)
+      assert(subStat(id, "messages_received") == 0)
+      broker.publish("t/a", payload("mqesc", Seq(OldUs, OldUs + 1000000L)), pid = 2)
+      assert(awaitTrue(broker.ackedIds == Seq(1, 2)))
+      assert(queryCount("SELECT count(*) FROM mqesc") == 2)
+      assert(!new java.io.File(root, "escape").exists(), "a write left the database directory")
+      assert(subStat(id, "messages_failed") == 1)
+    } finally { if (id >= 0) delete(s"/api/v1/mqtt/subscriptions/$id"); broker.close() }
+  }
+
+  test("mqtt: a storage failure is counted and not acknowledged") {
+    val root2 = tmpDir("graft_admin_mqfail")
+    // a plain file where the measurement's directory would go
+    new java.io.File(root2, "default").mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(root2, "default", "mqblocked"), Array[Byte](1))
+    val srv = new HttpServer(spark, root2)
+    val at = s"http://127.0.0.1:${srv.start()}"
+    val broker = new BrokerStub
+    try {
+      val id = startSub("mq-fail", broker, at)
+      broker.publish("t/a", payload("mqblocked", Seq(OldUs)), pid = 1)
+      assert(awaitTrue(subStat(id, "messages_failed", at) == 1), "storage failure not counted")
+      broker.publish("t/a", payload("mqok", Seq(OldUs)), pid = 2)
+      assert(awaitTrue(broker.ackedIds == Seq(2)), s"acked ${broker.ackedIds}")
+      assert(subStat(id, "messages_received", at) == 1)
+    } finally { srv.stop(); broker.close() }
+  }
+
+  test("mqtt with buffered ingest: the server's ingester holds the rows before PUBACK") {
+    val root2 = tmpDir("graft_admin_mqbuf")
+    val srv = new HttpServer(spark, root2)
+    srv.enableBufferedIngest(new java.io.File(tmpDir("graft_admin_mqbufwal")),
+      flushRows = Int.MaxValue, flushMillis = 3600000L)
+    val at = s"http://127.0.0.1:${srv.start()}"
+    val broker = new BrokerStub
+    try {
+      startSub("mq-buffered", broker, at)
+      broker.publish("t/a", payload("mqbuf", Seq(OldUs, OldUs + 1000000L)), pid = 1)
+      assert(awaitTrue(broker.ackedIds == Seq(1)), "no PUBACK")
+      assert(srv.bufferedIngest.get.pendingRows == 2,
+        "PUBACK'd rows must already be journaled in the server's ingester")
+      val f = json(post("/api/v1/write/line-protocol/flush", j(), at))
+      assert(f.get("rows_flushed").asLong() == 2L)
+    } finally { srv.stop(); broker.close() }
+    assert(spark.read.parquet(s"$root2/default/mqbuf").count() == 2L)
+  }
+
+  test("stop() disconnects every MQTT subscription") {
+    val srv = new HttpServer(spark, tmpDir("graft_admin_mqstop"))
+    val at = s"http://127.0.0.1:${srv.start()}"
+    val broker = new BrokerStub
+    try {
+      startSub("mq-stop", broker, at)
+      srv.stop()
+      assert(broker.closed.await(5, TimeUnit.SECONDS), "the broker connection outlived the server")
+      def mqttThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+        .filter(t => t.isAlive && t.getName.startsWith("graft-mqtt-"))
+      assert(awaitTrue(mqttThreads.isEmpty), s"left alive: ${mqttThreads.map(_.getName).mkString(", ")}")
     } finally broker.close()
   }
 
