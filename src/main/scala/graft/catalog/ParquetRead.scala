@@ -2,16 +2,25 @@ package graft.catalog
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.MessageType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.types.StructType
 
 import java.io.FileNotFoundException
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** The engine's one way to read Parquet: `spark.read.parquet` with the
-  * data schema read from the files' footers on the driver.
+  * data schema read from the files' footers on the driver, or, for an
+  * input small enough to need no Spark job at all, parquet-mr's column
+  * readers on the calling thread ([[columns]]).
   *
   * Without a schema Spark infers one in a Spark job
   * (`SchemaMergeUtils.mergeSchemasInParallel`), even for a single file
@@ -61,6 +70,72 @@ object ParquetRead {
       .grouped(math.max(1, FooterSchema.parallelDiscoveryThreshold(spark)))
       .map(chunk => spark.read.schema(schema).parquet(chunk: _*))
       .reduce(_ union _)
+  }
+
+  /** The columns of `schema`, a flat schema of INT64, DOUBLE, BOOLEAN
+    * and BINARY fields, read from the files of `footers` with parquet-mr
+    * on the calling thread, no Spark job: one array per field, the files'
+    * rows concatenated in `footers` order. INT64 reads as Long, DOUBLE
+    * as Double, BOOLEAN as Boolean and BINARY as a UTF-8 String; a null,
+    * or a field a file lacks, reads as null. Fields match the files'
+    * columns by exact name, and a file's columns outside `schema` are
+    * not decoded. Each file's footer is taken from `footers`, not read
+    * again. */
+  def columns(conf: Configuration, footers: Seq[Footer],
+      schema: MessageType): mutable.LinkedHashMap[String, Array[Any]] = {
+    val total = footers.iterator.flatMap(_.getParquetMetadata.getBlocks.asScala)
+      .map(_.getRowCount).sum
+    require(total <= Int.MaxValue, s"$total rows do not fit one array")
+    val out = mutable.LinkedHashMap.from(schema.getFields.asScala.map(f =>
+      f.getName -> new Array[Any](total.toInt)))
+    var base = 0
+    footers.foreach { f =>
+      val meta = f.getParquetMetadata
+      val fileSchema = meta.getFileMetaData.getSchema
+      val wanted = fileSchema.getColumns.asScala.toSeq
+        .filter(d => d.getPath.length == 1 && out.contains(d.getPath.head))
+      val in = HadoopInputFile.fromPath(f.getFile, conf)
+      val reader = ParquetFileReader.open(in, meta,
+        HadoopReadOptions.builder(conf).build(), in.newStream())
+      try {
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val n = pages.getRowCount.toInt
+          val store = new ColumnReadStoreImpl(pages, IgnoredRecord, fileSchema,
+            meta.getFileMetaData.getCreatedBy)
+          wanted.foreach { d =>
+            val values = out(d.getPath.head)
+            val r = store.getColumnReader(d)
+            val defined = d.getMaxDefinitionLevel
+            val read: () => Any = d.getPrimitiveType.getPrimitiveTypeName match {
+              case PrimitiveTypeName.INT64 => () => r.getLong
+              case PrimitiveTypeName.DOUBLE => () => r.getDouble
+              case PrimitiveTypeName.BOOLEAN => () => r.getBoolean
+              case PrimitiveTypeName.BINARY => () => r.getBinary.toStringUsingUTF8
+              case t => throw new IllegalArgumentException(s"column ${d.getPath.head}: $t")
+            }
+            var i = 0
+            while (i < n) {
+              if (r.getCurrentDefinitionLevel == defined) values(base + i) = read()
+              r.consume()
+              i += 1
+            }
+          }
+          base += n
+          pages = reader.readNextRowGroup()
+        }
+      } finally reader.close()
+    }
+    out
+  }
+
+  /** The record converter a column reader is built against; values are
+    * taken from the readers directly, never through it. */
+  private object IgnoredRecord extends GroupConverter {
+    private val value = new PrimitiveConverter {}
+    override def getConverter(fieldIndex: Int): Converter = value
+    override def start(): Unit = ()
+    override def end(): Unit = ()
   }
 
   /** The data schema Spark's inference gives the listed `files`: the

@@ -15,7 +15,9 @@ import scala.collection.mutable
   *  - all integer widths widen to int64, float32 widens to float64;
   *  - the `time` column is mandatory, must be integral, auto-generated
   *    (now-µs) when absent, unit auto-detected and normalized to µs;
-  *  - schema is inferred from the first non-null value per column;
+  *  - schema is inferred from the first non-null value per column; a
+  *    column with none stays in the batch but is not written
+  *    ([[ColumnarBatch.storedColumns]]);
   *  - strings are UTF-8 sanitized;
   *  - tag columns are plain string columns remembered in table metadata
   *    (they form the dedup key (tags..., time) at compaction).
@@ -27,6 +29,14 @@ final case class ColumnarBatch(
     dedupTime: Boolean = false) {
 
   def rowCount: Int = columns.headOption.map(_._2.length).getOrElse(0)
+
+  /** The columns a writer stores: all but a non-`time` column whose
+    * values are all null. Such a column has no type of its own; stored
+    * under an arbitrary one, it conflicted with the column's real type in
+    * the hour's other files, and the hour's merged read failed. Left out
+    * of the file, it reads as null. */
+  def storedColumns: mutable.LinkedHashMap[String, Array[Any]] =
+    columns.filter { case (name, vs) => name == "time" || vs.exists(_ != null) }
 
   /** Infer the Spark schema (reference rules) and build a DataFrame. */
   def toDataFrame(spark: SparkSession): DataFrame = {
@@ -126,7 +136,7 @@ object ColumnarBatch {
       case Some(other) =>
         throw new IllegalArgumentException(
           s"unsupported type for column '$name': ${other.getClass.getName}")
-      case None => StringType // all-null column: arbitrary; nulls dominate
+      case None => StringType // all-null column: arbitrary, and never stored (storedColumns)
     }
   }
 

@@ -24,13 +24,14 @@ import scala.collection.mutable
   * compaction). Spark's distributed writer (`HourPartitionedWriter`)
   * remains the path for large backfills; this one serves the
   * high-frequency small-flush ingest loop where per-job scheduling
-  * overhead would dominate.
+  * overhead would dominate. Compaction of a small hour writes its one
+  * output file through the same per-file code ([[writeFile]]).
   */
 object DirectParquetWriter {
 
-  private def schemaFor(batch: ColumnarBatch): MessageType = {
+  private def schemaFor(cols: collection.Map[String, Array[Any]]): MessageType = {
     val b = Types.buildMessage()
-    batch.columns.foreach { case (name, vs) =>
+    cols.foreach { case (name, vs) =>
       val field = ColumnarBatch.inferType(name, vs) match {
         case org.apache.spark.sql.types.TimestampType =>
           Types.optional(PrimitiveTypeName.INT64)
@@ -56,13 +57,45 @@ object DirectParquetWriter {
     require(batch.columns.contains("time"), "batch must carry 'time'")
     val meta = catalog.registerTags(db, batch.measurement, batch.tagColumns)
 
-    val n = batch.rowCount
-    val cols = batch.columns
+    val cols = batch.storedColumns
     val time = cols("time").map(_.asInstanceOf[Long])
+    val idx = sortRows(cols, meta.sortKeys, Array.tabulate(batch.rowCount)(identity))
 
-    // sort indices by (sortKeys, time) — flush-time multi-key sort
-    val sortKeyCols = meta.sortKeys.filter(cols.contains).map(cols)
-    val idx = Array.tabulate(n)(identity)
+    // split by event-time hour (already time-sorted within sort groups;
+    // group rows per hour then write each once)
+    val byHour = mutable.LinkedHashMap.empty[Long, mutable.ArrayBuffer[Int]]
+    idx.foreach { i =>
+      val h = Math.floorDiv(time(i), 3600000000L)
+      byHour.getOrElseUpdate(h, mutable.ArrayBuffer.empty) += i
+    }
+
+    val schema = schemaFor(cols)
+    val conf = catalog.spark.sparkContext.hadoopConfiguration
+    val flushUs = System.currentTimeMillis() * 1000L
+    // bloom filters on tag columns: the union of registered and
+    // batch-declared tags, so a batch that doesn't re-declare its tags
+    // (msgpack without a tag map) still blooms the table's known ones
+    val bloomColumns = (meta.tagColumns ++ batch.tagColumns).distinct
+
+    byHour.zipWithIndex.map { case ((hour, rows), seq) =>
+      val dt = java.time.LocalDateTime.ofEpochSecond(hour * 3600L, 0,
+        java.time.ZoneOffset.UTC)
+      val dir = catalog.partitionPath(db, batch.measurement,
+        dt.getYear, dt.getMonthValue, dt.getDayOfMonth, dt.getHour)
+      val file = new Path(dir,
+        HourPartitionedWriter.flushFileName(batch.measurement, flushUs, seq))
+      writeFile(conf, file, schema, cols, rows, bloomColumns)
+      file.toString
+    }.toSeq
+  }
+
+  /** `rows` stably sorted by (sortKeys present in `cols`, time): the
+    * multi-key order every flush and compacted file is stored in. `time`
+    * must hold no null. */
+  private[graft] def sortRows(cols: collection.Map[String, Array[Any]],
+      sortKeys: Seq[String], rows: Array[Int]): Array[Int] = {
+    val time = cols("time").map(_.asInstanceOf[Long])
+    val sortKeyCols = sortKeys.filter(cols.contains).map(cols)
     val ordering = new Ordering[Int] {
       def compare(a: Int, b: Int): Int = {
         var c = 0
@@ -74,77 +107,62 @@ object DirectParquetWriter {
         if (c == 0) java.lang.Long.compare(time(a), time(b)) else c
       }
     }
+    val idx = rows.clone()
     scala.util.Sorting.stableSort(idx)(ordering)
+    idx
+  }
 
-    // split by event-time hour (already time-sorted within sort groups;
-    // group rows per hour then write each once)
-    val byHour = mutable.LinkedHashMap.empty[Long, mutable.ArrayBuffer[Int]]
-    idx.foreach { i =>
-      val h = Math.floorDiv(time(i), 3600000000L)
-      byHour.getOrElseUpdate(h, mutable.ArrayBuffer.empty) += i
-    }
-
-    val schema = schemaFor(batch)
-    val conf = catalog.spark.sparkContext.hadoopConfiguration
-    val flushUs = System.currentTimeMillis() * 1000L
+  /** Write `rows` of `cols`, in that order, as the one ZSTD Parquet file
+    * `file`. `schema` has one primitive field per column of `cols`, in
+    * the same order: INT64 takes any integral value, DOUBLE any number,
+    * BOOLEAN a Boolean, and BINARY the value's string. Tag columns in
+    * `bloomColumns` get a bloom filter.
+    *
+    * The file is written under a DOT-prefixed name and renamed into
+    * place on close: readers (Spark's file index and DuckDB alike) skip
+    * `.`/`_` prefixes, so a concurrent query listing the directory
+    * mid-write never sees a half-written footer — the same
+    * visible-only-when-complete contract as HourPartitionedWriter's
+    * tmp-tree protocol (a reader racing the old in-place write died
+    * with CANNOT_READ_FILE_FOOTER; caught by the server's concurrency
+    * stress test). */
+  private[graft] def writeFile(conf: Configuration, file: Path, schema: MessageType,
+      cols: collection.Map[String, Array[Any]], rows: Iterable[Int],
+      bloomColumns: Seq[String]): Unit = {
     val names = cols.keys.toArray
-    val arrays = names.map(cols)
-    val types = names.map(nm => ColumnarBatch.inferType(nm, cols(nm)))
-
-    byHour.zipWithIndex.map { case ((hour, rows), seq) =>
-      val dt = java.time.LocalDateTime.ofEpochSecond(hour * 3600L, 0,
-        java.time.ZoneOffset.UTC)
-      val dir = catalog.partitionPath(db, batch.measurement,
-        dt.getYear, dt.getMonthValue, dt.getDayOfMonth, dt.getHour)
-      val file = new Path(dir,
-        HourPartitionedWriter.flushFileName(batch.measurement, flushUs, seq))
-      // write under a DOT-prefixed name, rename into place on close:
-      // readers (Spark's file index and DuckDB alike) skip `.`/`_`
-      // prefixes, so a concurrent query listing this hour mid-flush
-      // never sees a half-written footer — the same visible-only-when-
-      // complete contract as HourPartitionedWriter's tmp-tree protocol
-      // (a reader racing the old in-place write died with
-      // CANNOT_READ_FILE_FOOTER; caught by the server's concurrency
-      // stress test)
-      val tmp = new Path(dir, "." + file.getName + ".inprogress")
-      // direct RecordConsumer write — the example Group API built a heap
-      // object tree per row and did a name lookup per value; this path
-      // streams primitives straight into the column writers (~3× the
-      // rows/s at the same ZSTD level)
-      val support = new RowIndexWriteSupport(schema, names, types, arrays)
-      val builder = new RowIndexWriterBuilder(
-          org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf),
-          support)
-        .withConf(conf)
-        .withCompressionCodec(CompressionCodecName.ZSTD)
-      // bloom filters on tag columns — same file-skipping contract as the
-      // Spark writer and compaction paths. Union of registered and
-      // batch-declared tags: a batch that doesn't re-declare its tags
-      // (msgpack without a tag map) still blooms the table's known ones.
-      // The explicit NDV keeps the filter fixed-size — the adaptive
-      // default costs several hash inserts per value (see bloomOptions).
-      (meta.tagColumns ++ batch.tagColumns).distinct.filter(names.contains)
-        .foreach { c =>
-          builder.withBloomFilterEnabled(c, true)
-          builder.withBloomFilterNDV(c, HourPartitionedWriter.BloomNdv)
-        }
-      val fs = tmp.getFileSystem(conf)
-      try {
-        // build() inside the cleanup scope: it creates the tmp file and
-        // writes the magic before returning, so a codec/disk failure
-        // there must also delete the stranded dotfile
-        val writer = builder.build()
-        try rows.foreach(i => writer.write(i))
-        finally writer.close()
-        if (!fs.rename(tmp, file))
-          throw new java.io.IOException(s"rename $tmp -> $file failed")
-      } catch {
-        case e: Throwable =>
-          try fs.delete(tmp, false) catch { case _: Throwable => () }
-          throw e
-      }
-      file.toString
-    }.toSeq
+    val tmp = new Path(file.getParent, "." + file.getName + ".inprogress")
+    // direct RecordConsumer write — the example Group API built a heap
+    // object tree per row and did a name lookup per value; this path
+    // streams primitives straight into the column writers (~3× the
+    // rows/s at the same ZSTD level)
+    val support = new RowIndexWriteSupport(schema, names, names.map(cols))
+    val builder = new RowIndexWriterBuilder(
+        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf),
+        support)
+      .withConf(conf)
+      .withCompressionCodec(CompressionCodecName.ZSTD)
+    // same file-skipping contract as the Spark writer. The explicit NDV
+    // keeps the filter fixed-size — the adaptive default costs several
+    // hash inserts per value (see bloomOptions).
+    bloomColumns.distinct.filter(names.contains).foreach { c =>
+      builder.withBloomFilterEnabled(c, true)
+      builder.withBloomFilterNDV(c, HourPartitionedWriter.BloomNdv)
+    }
+    val fs = tmp.getFileSystem(conf)
+    try {
+      // build() inside the cleanup scope: it creates the tmp file and
+      // writes the magic before returning, so a codec/disk failure
+      // there must also delete the stranded dotfile
+      val writer = builder.build()
+      try rows.foreach(i => writer.write(i))
+      finally writer.close()
+      if (!fs.rename(tmp, file))
+        throw new java.io.IOException(s"rename $tmp -> $file failed")
+    } catch {
+      case e: Throwable =>
+        try fs.delete(tmp, false) catch { case _: Throwable => () }
+        throw e
+    }
   }
 
   /** WriteSupport whose "record" is a row INDEX into the batch's column
@@ -154,7 +172,6 @@ object DirectParquetWriter {
   private final class RowIndexWriteSupport(
       schema: MessageType,
       names: Array[String],
-      types: Array[org.apache.spark.sql.types.DataType],
       arrays: Array[Array[Any]]) extends WriteSupport[Int] {
 
     private var rc: RecordConsumer = _
@@ -168,20 +185,18 @@ object DirectParquetWriter {
       rc = consumer
       appenders = Array.tabulate(names.length) { c =>
         val vals = arrays(c)
-        types(c) match {
-          case org.apache.spark.sql.types.TimestampType =>
-            i => rc.addLong(vals(i).asInstanceOf[Long])
-          case org.apache.spark.sql.types.LongType =>
+        schema.getType(c).asPrimitiveType.getPrimitiveTypeName match {
+          case PrimitiveTypeName.INT64 =>
             i => vals(i) match {
               case l: Long => rc.addLong(l)
               case n: Number => rc.addLong(n.longValue())
             }
-          case org.apache.spark.sql.types.DoubleType =>
+          case PrimitiveTypeName.DOUBLE =>
             i => vals(i) match {
               case d: Double => rc.addDouble(d)
               case n: Number => rc.addDouble(n.doubleValue())
             }
-          case org.apache.spark.sql.types.BooleanType =>
+          case PrimitiveTypeName.BOOLEAN =>
             i => rc.addBoolean(vals(i).asInstanceOf[Boolean])
           case _ =>
             i => rc.addBinary(Binary.fromString(String.valueOf(vals(i))))

@@ -204,7 +204,7 @@ object HourPartitionedWriter {
     * registering tag columns in table metadata on first write. */
   def ingest(catalog: GraftCatalog, db: String, batch: ColumnarBatch): Unit = {
     catalog.registerTags(db, batch.measurement, batch.tagColumns)
-    val df = batch.toDataFrame(catalog.spark)
+    val df = batch.copy(columns = batch.storedColumns).toDataFrame(catalog.spark)
     write(catalog, db, batch.measurement, df)
   }
 }

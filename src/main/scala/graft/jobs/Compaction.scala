@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,9 +30,15 @@ import scala.jdk.CollectionConverters._
   *  - output: one sorted ZSTD file per partition, sources atomically
   *    replaced (write to _compact_tmp, then swap).
   *
-  * Scale: every compaction, hourly or daily, writes one file in one
-  * Spark job with no exchange, like the reference's one
-  * `COPY (SELECT … ORDER BY …)` per hour. The
+  * Scale: every compaction, hourly or daily, writes one file, like the
+  * reference's one in-process `COPY (SELECT … ORDER BY …)` per hour.
+  * An hour whose inputs fit the driver arm ([[onDriver]]: types the
+  * direct writer stores, and bytes and rows × columns × 8 B within
+  * `spark.sql.files.openCostInBytes`) is merged on the calling thread
+  * with no Spark job ([[compactHourOnDriver]]): for a few MB, the job's
+  * planning, stage, task serialization and commit protocol cost more
+  * than the merge. Every other hour, and every day, is one Spark job
+  * with no exchange ([[compactHourInSpark]], [[compactDay]]). The
   * read is coalesced to one partition BEFORE the dedup window, so the
   * window, the sort and the write run in one task. That job is the only
   * one: the read schema is merged on the driver from the input footers
@@ -45,13 +52,20 @@ import scala.jdk.CollectionConverters._
   * partition. Census at `local[4]` (CompactionPlanSpec, SCALE.md): a
   * 30-file hour or a 25-file day took 5 jobs / 5 stages / 11 tasks with
   * the old hash-exchange window and `orderBy(...).coalesce(1)`, 2 / 2 / 5
-  * with Spark's footer job for the schema, and takes 1 / 1 / 1 now; so
-  * does a 40-file hour.
+  * with Spark's footer job for the schema, and takes 1 / 1 / 1 on the
+  * Spark arm; so does a 40-file hour. A small hour takes 0 / 0 / 0.
+  * Both hourly arms end in the same manifest-journaled swap
+  * ([[swapIn]]), so recovery does not depend on the arm.
   */
 object Compaction {
 
+  /** One partition's outcome. `arm` names the arm that merged it,
+    * [[DriverArm]] or [[SparkArm]]; empty when nothing was merged. */
   final case class Result(partition: String, filesIn: Int, rowsIn: Long,
-      rowsOut: Long, compacted: Boolean)
+      rowsOut: Long, compacted: Boolean, arm: String = "")
+
+  val DriverArm = "driver"
+  val SparkArm = "spark"
 
   /** Row count from parquet footers — metadata only, no Spark job (the
     * reference counts the same way, dedup.go:261-271). Compaction runs
@@ -137,41 +151,160 @@ object Compaction {
       column: String): Option[(Double, Double)] =
     footerColumnRanges(readFooters(conf, files), Seq(column))(column)
 
+  /** Compact one hour partition into one file when it holds at least
+    * `minFiles` files. The input footers pick the arm: an hour that fits
+    * [[onDriver]] is merged by [[compactHourOnDriver]] with no Spark job,
+    * any other by [[compactHourInSpark]]. */
   def compactHour(catalog: GraftCatalog, db: String, m: String,
       partDir: Path, minFiles: Int = 2): Result = {
-    val spark = catalog.spark
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = partDir.getFileSystem(conf)
-    val files = parquetFiles(fs, partDir).sortBy(_.getName)
+    val conf = catalog.spark.sparkContext.hadoopConfiguration
+    val files = parquetFiles(partDir.getFileSystem(conf), partDir).sortBy(_.getName)
     if (files.length < minFiles)
       return Result(partDir.toString, files.length, 0, 0, compacted = false)
-
-    val meta = catalog.readMeta(db, m)
     val footers = readFooters(conf, files)
+    driverSchema(footers).filter(onDriver(catalog.spark, footers, _)) match {
+      case Some(schema) => compactHourOnDriver(catalog, db, m, partDir, footers, schema)
+      case None => compactHourInSpark(catalog, db, m, partDir, footers)
+    }
+  }
+
+  /** Whether the driver arm merges these inputs: [[driverSchema]] accepts
+    * their columns, and both the files' bytes and their rows × columns ×
+    * 8 B fit in `spark.sql.files.openCostInBytes`, the cutover below
+    * which [[graft.plans.SmallScanCoalesce]] reads a scan as one
+    * partition. Below it, a Spark job's planning, stage, task
+    * serialization and commit protocol cost more than the merge itself;
+    * the product bounds the heap the merge holds. */
+  private[jobs] def onDriver(spark: SparkSession, footers: Seq[Footer],
+      schema: MessageType): Boolean = {
+    val cutover = org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+      .openCostInBytes(spark)
+    val bytes = footers.iterator.flatMap(_.getParquetMetadata.getBlocks.asScala)
+      .map(_.getCompressedSize).sum
+    bytes <= cutover && BigInt(rowCount(footers)) * schema.getFieldCount * 8 <= cutover
+  }
+
+  /** The schema of the driver arm's output, when every input can be
+    * merged without Spark: each file is flat and stores `time` as
+    * UTC-adjusted INT64 TIMESTAMP(MICROS) with no null; each other column
+    * is a plain INT64, DOUBLE, BOOLEAN or UTF8 BINARY, the types the
+    * direct writer stores; and the files agree on each column's type and
+    * name case. The fields are every file's columns, optional, in order
+    * of first appearance, as Spark's merged read orders them. None sends
+    * the hour to the Spark arm, which repairs mixed-type `time`, widens
+    * disagreeing types and reads every other Parquet type. */
+  private[jobs] def driverSchema(footers: Seq[Footer]): Option[MessageType] = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation => L, Type, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    def storable(t: Type): Boolean = t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) && {
+      val p = t.asPrimitiveType
+      (p.getPrimitiveTypeName, p.getLogicalTypeAnnotation) match {
+        case (INT64, ts: L.TimestampLogicalTypeAnnotation) =>
+          t.getName == "time" && ts.isAdjustedToUTC && ts.getUnit == L.TimeUnit.MICROS
+        case (INT64 | DOUBLE | BOOLEAN, null) => t.getName != "time"
+        case (BINARY, _: L.StringLogicalTypeAnnotation) => t.getName != "time"
+        case _ => false
+      }
+    }
+    def timeHasNoNull(f: Footer): Boolean =
+      f.getParquetMetadata.getBlocks.asScala.forall(_.getColumns.asScala
+        .find(_.getPath.toDotString == "time")
+        .exists(c => c.getStatistics != null && c.getStatistics.isNumNullsSet &&
+          c.getStatistics.getNumNulls == 0))
+    val fields = footers.map(_.getParquetMetadata.getFileMetaData.getSchema.getFields.asScala.toSeq)
+    val all = fields.flatten
+    val ok = footers.nonEmpty &&
+      fields.forall(fs => fs.exists(_.getName == "time") && fs.forall(storable)) &&
+      footers.forall(timeHasNoNull) &&
+      all.groupBy(_.getName.toLowerCase(java.util.Locale.ROOT)).values.forall { same =>
+        same.map(t => (t.getName, t.asPrimitiveType.getPrimitiveTypeName,
+          t.getLogicalTypeAnnotation)).distinct.length == 1
+      }
+    Option.when(ok) {
+      val b = Types.buildMessage()
+      all.distinctBy(_.getName).foreach { t =>
+        b.addField(Types.optional(t.asPrimitiveType.getPrimitiveTypeName)
+          .as(t.getLogicalTypeAnnotation).named(t.getName))
+      }
+      b.named("graft")
+    }
+  }
+
+  /** The driver arm: read the files of `footers` with parquet-mr
+    * ([[ParquetRead.columns]]), keep one row per (tags..., time), the
+    * row of the file whose name sorts last, sort by (sortKeys, time) and
+    * write one bloom-filtered ZSTD file through the direct writer, all
+    * on the calling thread. No Spark job. `schema` is the inputs'
+    * [[driverSchema]]. */
+  private[graft] def compactHourOnDriver(catalog: GraftCatalog, db: String, m: String,
+      partDir: Path, footers: Seq[Footer], schema: MessageType): Result = {
+    val conf = catalog.spark.sparkContext.hadoopConfiguration
+    val meta = catalog.readMeta(db, m)
+    val cols = ParquetRead.columns(conf, footers, schema)
+    val all = Array.tabulate(cols("time").length)(identity)
+    val kept =
+      if (meta.tagColumns.isEmpty && !meta.dedupTime) all
+      else latestPerKey(cols, meta.tagColumns.filter(cols.contains) :+ "time", all)
+    val rows = graft.ingest.DirectParquetWriter.sortRows(cols, meta.sortKeys, kept)
+    swapIn(catalog, db, m, partDir, footers, DriverArm) { tmp =>
+      graft.ingest.DirectParquetWriter.writeFile(conf, new Path(tmp, "part-00000.parquet"),
+        schema, cols, rows, meta.tagColumns)
+    }
+  }
+
+  /** Of `rows`, the last row of each distinct value of `keys`, in input
+    * order. The driver arm concatenates its files in name order, so the
+    * last row of a key is the one of the newest file. */
+  private def latestPerKey(cols: collection.Map[String, Array[Any]], keys: Seq[String],
+      rows: Array[Int]): Array[Int] = {
+    val keyCols = keys.map(cols).toArray
+    val keyOf = rows.map(i => scala.collection.immutable.ArraySeq.unsafeWrapArray(
+      keyCols.map(_(i))))
+    val last = new java.util.HashMap[AnyRef, Int](rows.length * 2)
+    keyOf.zip(rows).foreach { case (k, i) => last.put(k, i) }
+    keyOf.zip(rows).collect { case (k, i) if last.get(k) == i => i }
+  }
+
+  /** The Spark arm: one Spark job reads the files of `footers`, repairs
+    * mixed-type `time`, keeps one row per (tags..., time) with a window
+    * and writes one sorted file. */
+  private[graft] def compactHourInSpark(catalog: GraftCatalog, db: String, m: String,
+      partDir: Path, footers: Seq[Footer]): Result = {
+    val spark = catalog.spark
+    val meta = catalog.readMeta(db, m)
     val deduped = readDeduped(spark, meta, footers)
-    val rowsIn = rowCount(footers)
     val sortCols = (meta.sortKeys.filter(deduped.columns.contains) :+ "time").map(col)
     val out = deduped.sortWithinPartitions(sortCols: _*)
+    swapIn(catalog, db, m, partDir, footers, SparkArm) { tmp =>
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      out.write.mode("overwrite").option("compression", "zstd")
+        .options(graft.ingest.HourPartitionedWriter.bloomOptions(
+          meta.tagColumns.filter(deduped.columns.contains)))
+        .parquet(tmp.toString)
+    }
+  }
 
-    // crash-safe swap, journaled in the per-table manifest (protocol in
-    // CompactionManifest's scaladoc): write tmp, record inputs + the
-    // ACTUAL tmp outputs, rename IN, delete sources, clear the entry.
-    // Any crash point is repaired deterministically by recover(): a
-    // crash before begin() leaves only untracked tmp garbage (removed
-    // on the next pass). The entry must list actual — not planned —
-    // outputs: a planned-but-never-created output would make recovery
-    // roll back a committed swap. Output uses the recency-ordered name
-    // scheme: it must sort OLDER than any flush that lands after this
-    // compaction.
+  /** The tail both hourly arms share: `write` puts one file into the
+    * hour's `_compact_tmp_` directory, which then replaces the inputs in
+    * the crash-safe swap journaled in the per-table manifest (protocol
+    * in CompactionManifest's scaladoc): record inputs + the ACTUAL tmp
+    * output, rename IN, delete sources, clear the entry. Any crash point
+    * is repaired deterministically by recover(): a crash before begin()
+    * leaves only untracked tmp garbage (removed on the next pass). The
+    * entry must list actual — not planned — outputs: a planned-but-never-
+    * created output would make recovery roll back a committed swap.
+    * Output uses the recency-ordered name scheme: it must sort OLDER than
+    * any flush that lands after this compaction. */
+  private def swapIn(catalog: GraftCatalog, db: String, m: String, partDir: Path,
+      footers: Seq[Footer], arm: String)(write: Path => Unit): Result = {
+    val conf = catalog.spark.sparkContext.hadoopConfiguration
+    val fs = partDir.getFileSystem(conf)
+    val files = footers.map(_.getFile)
     val tmp = new Path(partDir.getParent, s"_compact_tmp_${partDir.getName}")
     fs.delete(tmp, true)
     val compactUs = System.currentTimeMillis() * 1000L
     val tablePath = catalog.tablePath(db, m)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    out.write.mode("overwrite").option("compression", "zstd")
-      .options(graft.ingest.HourPartitionedWriter.bloomOptions(
-        meta.tagColumns.filter(deduped.columns.contains)))
-      .parquet(tmp.toString)
+    write(tmp)
     val newFiles = parquetFiles(fs, tmp)
     require(newFiles.length == 1, s"one-partition write produced ${newFiles.length} files")
     val rowsOut = footerRowCount(conf, newFiles)
@@ -180,7 +313,7 @@ object Compaction {
     CompactionManifest.begin(tablePath, conf, CompactionManifest.Entry(
       id = s"hourly:$partDir:$compactUs", tier = "hourly",
       partition = partDir.toString, tmpDir = tmp.toString,
-      inputs = files.map(_.toString).toSeq,
+      inputs = files.map(_.toString),
       outputs = Seq(finalPath.toString)))
     // failing loudly (not proceeding to delete inputs) keeps the
     // manifest entry in-flight, so recovery rolls the partial swap back
@@ -190,7 +323,7 @@ object Compaction {
     files.foreach(fs.delete(_, false))
     fs.delete(tmp, true)
     CompactionManifest.complete(tablePath, conf, s"hourly:$partDir:$compactUs")
-    Result(partDir.toString, files.length, rowsIn, rowsOut, compacted = true)
+    Result(partDir.toString, files.length, rowCount(footers), rowsOut, compacted = true, arm)
   }
 
   /** Daily compaction (Tier 2, reference internal/compaction/daily.go):
@@ -308,7 +441,7 @@ object Compaction {
       parent = parent.getParent
     }
     CompactionManifest.complete(tablePath, conf, s"daily:${y}-${mo}-${d}:$compactUs")
-    Result(dayDir.toString, files.length, rowsIn, rowsOut, compacted = true)
+    Result(dayDir.toString, files.length, rowsIn, rowsOut, compacted = true, SparkArm)
   }
 
   /** Run daily compaction over every qualifying day (reference defaults:
@@ -401,10 +534,11 @@ object Compaction {
     graft.ingest.TimestampUnits.toMicrosCol(v)
 
   /** Bounded driver-side fan-out: partitions compact independently, so
-    * their (small) Spark jobs run concurrently — Spark's scheduler
-    * interleaves them; a serial loop would leave the cluster idle
-    * between per-partition jobs. Manifest writes are serialized per
-    * table inside CompactionManifest. Delegates to [[BoundedParallel]]
+    * their merges run concurrently — driver-arm merges on the pool's
+    * threads, Spark jobs interleaved by Spark's scheduler; a serial loop
+    * would leave the cores idle between partitions. Manifest writes are serialized per
+    * table inside CompactionManifest, and concurrent swaps share one
+    * write (group commit). Delegates to [[BoundedParallel]]
     * (shared with bulk import). */
   private[jobs] def inParallel[A, B](items: Seq[A], width: Int = 8)(f: A => B): Seq[B] =
     BoundedParallel.run(items, width)(f)

@@ -85,21 +85,40 @@ object CompactionManifest {
     }.sortBy(-_._1)
   }
 
-  // per-table intra-JVM lock: partitions of one measurement compact
-  // concurrently (runHourly/runDaily fan out), and every swap does a
-  // read-modify-write of the same manifest file. One scheduler per
+  /** A change to a table's entries, waiting for the write that applies
+    * it; `failed` holds that write's error. */
+  private final class Change(val f: Seq[Entry] => Seq[Entry]) {
+    var done = false
+    var failed: Throwable = null
+  }
+
+  /** One table's changes waiting for a write, and the version this JVM
+    * wrote last with its entries: while that version is still the
+    * newest, the next write starts from these entries instead of
+    * reading the file back. Its monitor is the table's lock. */
+  private final class Journal {
+    val queue = new java.util.concurrent.ConcurrentLinkedQueue[Change]
+    var written: Option[(Long, Seq[Entry])] = None
+  }
+
+  // per-table intra-JVM lock and queue: partitions of one measurement
+  // compact concurrently (runHourly/runDaily fan out), and every swap does
+  // a read-modify-write of the same manifest file. One scheduler per
   // driver is the deployment model, so a JVM lock suffices (cross-driver
   // coordination would shard by table anyway).
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(tablePath: String): Object =
-    locks.computeIfAbsent(tablePath, _ => new Object)
+  private val journals =
+    new java.util.concurrent.ConcurrentHashMap[String, Journal]()
 
   /** Read the newest manifest version that parses; a truncated newest
     * version (POSIX crash mid-write) falls back to the one before it.
     * The legacy unversioned file is read only when no version exists. */
-  def load(tablePath: String, conf: Configuration): Seq[Entry] = {
-    val vs = versions(tablePath, conf)
+  def load(tablePath: String, conf: Configuration): Seq[Entry] =
+    newest(tablePath, conf, versions(tablePath, conf))
+
+  /** The entries of the newest of `vs` that parses, else of the legacy
+    * file. */
+  private def newest(tablePath: String, conf: Configuration,
+      vs: Seq[(Long, Path)]): Seq[Entry] = {
     val candidates =
       if (vs.nonEmpty) vs.map(_._2)
       else Seq(manifestPath(tablePath))
@@ -120,11 +139,17 @@ object CompactionManifest {
         while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
         new String(bytes.toByteArray, StandardCharsets.UTF_8)
       } finally in.close()
+    // fields are taken out by hand: json4s' reflective `extract` cost
+    // more than the rest of a read-modify-write, all of it under the
+    // table's lock
+    def str(o: JObject, k: String): String = o \ k match { case JString(v) => v }
+    def strs(o: JObject, k: String): Seq[String] =
+      o \ k match { case JArray(vs) => vs.map { case JString(v) => v } }
     try {
       val JArray(items) = JsonMethods.parse(text): @unchecked
       Some(items.collect { case o: JObject =>
-        implicit val fmt: Formats = DefaultFormats
-        o.extract[Entry]
+        Entry(str(o, "id"), str(o, "tier"), str(o, "partition"), str(o, "tmpDir"),
+          strs(o, "inputs"), strs(o, "outputs"))
       })
     } catch {
       // truncated by a crash mid-write (POSIX) or corrupted externally —
@@ -134,16 +159,44 @@ object CompactionManifest {
   }
 
   def begin(tablePath: String, conf: Configuration, entry: Entry): Unit =
-    lockFor(tablePath).synchronized {
-      write(tablePath, conf, load(tablePath, conf).filterNot(_.id == entry.id) :+ entry)
-    }
+    update(tablePath, conf)(es => es.filterNot(_.id == entry.id) :+ entry)
 
   def complete(tablePath: String, conf: Configuration, id: String): Unit =
-    lockFor(tablePath).synchronized {
-      write(tablePath, conf, load(tablePath, conf).filterNot(_.id == id))
-    }
+    update(tablePath, conf)(_.filterNot(_.id == id))
 
-  private def write(tablePath: String, conf: Configuration, entries: Seq[Entry]): Unit = {
+  /** Apply `f` to the table's entries and write the result as the next
+    * version before returning. Changes are group-committed: the thread
+    * that takes the table's lock applies every change queued by then in
+    * one read-modify-write, so concurrent swaps of one table share a
+    * manifest write instead of queueing for one each. A failed write
+    * fails every change it carried. */
+  private def update(tablePath: String, conf: Configuration)(f: Seq[Entry] => Seq[Entry]): Unit = {
+    val change = new Change(f)
+    val journal = journals.computeIfAbsent(tablePath, _ => new Journal)
+    journal.queue.add(change)
+    journal.synchronized {
+      if (!change.done) {
+        val batch = Iterator.continually(journal.queue.poll()).takeWhile(_ != null).toSeq
+        try {
+          val prior = versions(tablePath, conf)
+          val current = journal.written.collect {
+            case (seq, es) if prior.headOption.exists(_._1 == seq) => es
+          }.getOrElse(newest(tablePath, conf, prior))
+          val entries = batch.foldLeft(current)((es, c) => c.f(es))
+          journal.written = Some(write(tablePath, conf, prior, entries) -> entries)
+        } catch { case e: Throwable => batch.foreach(_.failed = e) }
+        batch.foreach(_.done = true)
+      }
+    }
+    if (change.failed != null)
+      throw new java.io.IOException(s"compaction manifest write failed: $tablePath",
+        change.failed)
+  }
+
+  /** Write `entries` as the version after `prior`'s newest; returns its
+    * sequence number. */
+  private def write(tablePath: String, conf: Configuration, prior: Seq[(Long, Path)],
+      entries: Seq[Entry]): Long = {
     val fs = new Path(tablePath).getFileSystem(conf)
     val json = JArray(entries.toList.map { e =>
       JObject(
@@ -157,7 +210,6 @@ object CompactionManifest {
     // object stores, parse-guarded against truncation on POSIX — then
     // prune older versions. A crash between the two steps leaves extra
     // versions behind; load() ignores them and the next write prunes.
-    val prior = versions(tablePath, conf)
     val seq = prior.headOption.map(_._1 + 1).getOrElse(1L)
     val out = fs.create(versionedPath(tablePath, seq), true)
     try out.write(JsonMethods.compact(JsonMethods.render(json))
@@ -172,6 +224,7 @@ object CompactionManifest {
     // resurrect stale entries after version files are pruned
     try fs.delete(manifestPath(tablePath), false)
     catch { case _: java.io.IOException => () }
+    seq
   }
 
   /** Complete or roll back one in-flight entry; returns what it did. */

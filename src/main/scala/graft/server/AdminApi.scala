@@ -829,7 +829,7 @@ final class AdminApi(srv: HttpServer) {
       val compacted = for (t <- tables; r <- t.hourly ++ t.daily if r.compacted)
         yield s"""{"database":${q(t.db)},"measurement":${q(t.measurement)},""" +
           s""""partition":${q(r.partition)},"files_in":${r.filesIn},""" +
-          s""""rows_in":${r.rowsIn},"rows_out":${r.rowsOut}}"""
+          s""""rows_in":${r.rowsIn},"rows_out":${r.rowsOut},"arm":${q(r.arm)}}"""
       compCompleted.incrementAndGet()
       val resp = s"""{"success":true,"job_id":$jobId,"tier":${q(tier)},""" +
         s""""compacted":${compacted.mkString("[", ",", "]")},""" +

@@ -1334,10 +1334,11 @@ final class HttpServer(
     * registration in one database never blocks queries to another. A
     * single measurement whose registration fails — e.g. a dash in the
     * name, which MeasName allows on the write path but Spark's view
-    * identifier parser rejects, or a directory with no data yet — is
-    * SKIPPED (no stamp, retried next request) rather than failing the
-    * whole database: only queries that actually reference it see a
-    * table-not-found. */
+    * identifier parser rejects, a directory with no data yet, or files
+    * whose schemas do not merge — is SKIPPED (no stamp, retried next
+    * request) rather than failing the whole database: only queries that
+    * actually reference it see a table-not-found. Its previous view is
+    * dropped, so no query answers from that view's stale file list. */
   private val regLocks = TrieMap.empty[String, Object]
   private[server] def ensureViews(db: String): Unit = {
     // listing runs per request (it discovers new measurements; a
@@ -1360,6 +1361,8 @@ final class HttpServer(
             viewState.put(s"$db/$m", v)
           } catch {
             case e: Throwable =>
+              viewState.remove(s"$db/$m")
+              dbCat.spark.catalog.dropTempView(m)
               org.slf4j.LoggerFactory.getLogger(classOf[HttpServer]).warn(
                 s"view registration failed for $db/$m (skipped): ${e.getMessage}")
           }

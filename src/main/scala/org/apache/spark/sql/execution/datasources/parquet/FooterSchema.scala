@@ -51,6 +51,11 @@ object FooterSchema {
   /** A name Spark's file listing skips (`_…` but not `k=v`, `.…`). */
   def skipped(name: String): Boolean = HadoopFSUtils.shouldFilterOutPathName(name)
 
+  /** `spark.sql.files.openCostInBytes` in this session: the size below
+    * which a scan is worth no more than one file's open. */
+  def openCostInBytes(spark: SparkSession): Long =
+    SessionStateHelper.getSqlConf(spark).filesOpenCostInBytes
+
   /** Above this many root paths Spark lists them in a Spark job. */
   def parallelDiscoveryThreshold(spark: SparkSession): Int =
     SessionStateHelper.getSqlConf(spark).parallelPartitionDiscoveryThreshold

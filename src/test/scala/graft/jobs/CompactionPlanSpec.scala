@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.SparkSpec
 import graft.catalog.{GraftCatalog, TableMeta}
-import graft.ingest.{ColumnarBatch, HourPartitionedWriter, LineProtocol}
+import graft.ingest.{ColumnarBatch, DirectParquetWriter, HourPartitionedWriter, LineProtocol}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
@@ -16,12 +16,13 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
-/** The plan shape of a single-file compaction: the whole hour (or day)
-  * is read, deduped, sorted and written in one job with no exchange, and
-  * that job is the only one. The read schema comes from the input
-  * footers the driver opens anyway, and an input list longer than
-  * Spark's parallel-listing threshold (32 paths) is listed on the driver
-  * too. */
+/** The job census of a single-file compaction. An hour small enough
+  * for the driver arm starts no Spark job. Every other hour, and every
+  * day, is read, deduped, sorted and written in one job with no
+  * exchange, and that job is the only one: the read schema comes from
+  * the input footers the driver opens anyway, and an input list longer
+  * than Spark's parallel-listing threshold (32 paths) is listed on the
+  * driver too. */
 class CompactionPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import CompactionPlanSpec.Census
 
@@ -96,6 +97,33 @@ class CompactionPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(exchanges.isEmpty, s"exchange in the write plan:\n${c.writes.head}")
   }
 
+  /** The parquet files of an hour, in name order, with their footers. */
+  private def footersOf(part: Path) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    Compaction.readFooters(conf,
+      Compaction.parquetFiles(part.getFileSystem(conf), part).sortBy(_.getName))
+  }
+
+  /** Runs `f` with `spark.sql.files.openCostInBytes`, the driver arm's
+    * cutover, set to `bytes`. */
+  private def withCutover[A](bytes: Long)(f: => A): A = {
+    val key = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try f finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** The dispatch sent `part` to the Spark arm: one job, one write. */
+  private def assertSparkArm(part: Path)(implicit cat: GraftCatalog): Unit = {
+    val (res, c) = census(Compaction.compactHour(cat, "default", "cpu", part))
+    assert(res.compacted && res.arm == Compaction.SparkArm, res)
+    info(s"${c.jobs} jobs / ${c.stages} stages / ${c.tasks} tasks")
+    assert(c.jobs == 1 && c.writes.length == 1, s"the Spark arm's one job expected: $c")
+  }
+
   /** Rows of the single output file in `dir`, in stored order. */
   private def storedRows(dir: Path): Seq[(String, String, Long, Double)] = {
     val files = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -118,8 +146,10 @@ class CompactionPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val dupTime = base + (3 * 20 + 5) * 1000000L
     lpIngest(cat, Seq(s"cpu,host=h1,region=r2 v=-29.0 $dupTime"))
     val part = cat.listHourPartitions("default", "cpu").head
-    val (res, c) = census(Compaction.compactHour(cat, "default", "cpu", part))
+    val (res, c) = census(
+      Compaction.compactHourInSpark(cat, "default", "cpu", part, footersOf(part)))
     assert(res.compacted && res.filesIn == 30 && res.rowsIn == 581 && res.rowsOut == 580, res)
+    assert(res.arm == Compaction.SparkArm)
     assertOneJobNoExchange(c)
     val rows = storedRows(part)
     assert(rows.length == 580)
@@ -132,10 +162,82 @@ class CompactionPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val cat = newCatalog()
     (0 until 40).foreach(i => flush(cat, base, i, 5))
     val part = cat.listHourPartitions("default", "cpu").head
-    val (res, c) = census(Compaction.compactHour(cat, "default", "cpu", part))
+    val (res, c) = census(
+      Compaction.compactHourInSpark(cat, "default", "cpu", part, footersOf(part)))
     assert(res.compacted && res.filesIn == 40 && res.rowsIn == 200 && res.rowsOut == 200, res)
     assertOneJobNoExchange(c)
     assert(storedRows(part).length == 200)
+  }
+
+  test("compactHour: a small hour merges on the driver with no Spark job, later write wins") {
+    val cat = newCatalog()
+    // a Spark-written flush, a direct flush, and a later direct flush
+    // that rewrites row 2 of the first (host=h2, region=r2)
+    flush(cat, base, 0, 20)
+    val (pts, _) = LineProtocol.parse((0 until 20).map { i =>
+      s"cpu,host=h${(1 + i) % 7},region=r${(3 + i) % 4} v=1.$i ${base + (20 + i) * 1000000L}"
+    }.mkString("\n"), "us")
+    ColumnarBatch.fromPoints(pts).foreach(DirectParquetWriter.write(cat, "default", _))
+    val dupTime = base + 2 * 1000000L
+    val (dup, _) = LineProtocol.parse(s"cpu,host=h2,region=r2 v=-2.0 $dupTime", "us")
+    ColumnarBatch.fromPoints(dup).foreach(DirectParquetWriter.write(cat, "default", _))
+    val part = cat.listHourPartitions("default", "cpu").head
+    val (res, c) = census(Compaction.compactHour(cat, "default", "cpu", part))
+    assert(res.compacted && res.filesIn == 3 && res.rowsIn == 41 && res.rowsOut == 40, res)
+    assert(res.arm == Compaction.DriverArm, res)
+    assert(c.jobs == 0 && c.stages == 0 && c.tasks == 0, s"no Spark job expected: $c")
+    val rows = storedRows(part)
+    assert(rows.length == 40)
+    assert(rows.filter(r => r._1 == "h2" && r._2 == "r2" && r._3 == dupTime).map(_._4) ==
+      Seq(-2.0), "the later write must win")
+    assertSortedByRegionTime(rows)
+  }
+
+  test("compactHour: an hour above the cutover runs the Spark arm") {
+    implicit val cat: GraftCatalog = newCatalog()
+    (0 until 30).foreach(i => flush(cat, base, i, 20))
+    val part = cat.listHourPartitions("default", "cpu").head
+    // 600 rows x 4 columns x 8 B = 19,200 B > 16 KB
+    withCutover(16 * 1024)(assertSparkArm(part))
+    assert(storedRows(part).length == 600)
+  }
+
+  test("compactHour: a file with mixed-type time runs the Spark arm") {
+    implicit val cat: GraftCatalog = newCatalog()
+    import spark.implicits._
+    flush(cat, base, 0, 5)
+    // time as string epoch seconds, the fixture normalizeTime repairs
+    val part = cat.listHourPartitions("default", "cpu").head
+    Seq(("h9", "r9", (base / 1000000L + 100).toString, 9.0)).toDF("host", "region", "time", "v")
+      .coalesce(1).write.mode("append").parquet(part.toString)
+    assertSparkArm(part)
+    assert(storedRows(part).length == 6)
+  }
+
+  test("compactHour: an INT32 or decimal column runs the Spark arm") {
+    import spark.implicits._
+    for ((name, extra) <- Seq(
+        "INT32" -> Seq((3, "h9", "r9", 9.0)).toDF("n", "host", "region", "v"),
+        "decimal" -> Seq((BigDecimal("1.25"), "h9", "r9", 9.0)).toDF("d", "host", "region", "v"))) {
+      implicit val cat: GraftCatalog = newCatalog()
+      flush(cat, base, 0, 5)
+      val part = cat.listHourPartitions("default", "cpu").head
+      extra.withColumn("time", org.apache.spark.sql.functions.timestamp_micros(
+          org.apache.spark.sql.functions.lit(base + 100L * 1000000L)))
+        .coalesce(1).write.mode("append").parquet(part.toString)
+      withClue(name)(assertSparkArm(part))
+      assert(storedRows(part).length == 6, name)
+    }
+  }
+
+  test("compactHour: inputs that disagree on a column's type run the Spark arm") {
+    implicit val cat: GraftCatalog = newCatalog()
+    // v is INT64 in the first file and DOUBLE in the second
+    lpIngest(cat, Seq(s"cpu,host=h0,region=r0 v=1i ${base + 1000000L}"))
+    lpIngest(cat, Seq(s"cpu,host=h1,region=r1 v=2.5 ${base + 2000000L}"))
+    val part = cat.listHourPartitions("default", "cpu").head
+    assertSparkArm(part)
+    assert(storedRows(part).map(_._4).sorted == Seq(1.0, 2.5))
   }
 
   test("compactDay: a day of hour files compacts in one exchange-free job, later write wins") {

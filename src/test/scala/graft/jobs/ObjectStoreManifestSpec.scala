@@ -153,6 +153,39 @@ class ObjectStoreManifestSpec extends SparkSpec {
     assert(CompactionManifest.load(table, conf).map(_.id) == Seq("e2"))
   }
 
+  test("concurrent begins and completes on one table all land") {
+    val table = tmpDir("osm_group")
+    fs(new Path(table)).mkdirs(new Path(table))
+    def entry(i: Int) = CompactionManifest.Entry(s"e$i", "hourly", s"$table/p$i",
+      s"$table/tmp$i", Seq(s"$table/in$i"), Seq(s"$table/out$i"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    def all(f: Int => Unit): Unit = (0 until 32)
+      .map(i => pool.submit(new Runnable { def run(): Unit = f(i) }))
+      .foreach(_.get())
+    try {
+      all(i => CompactionManifest.begin(table, conf, entry(i)))
+      assert(CompactionManifest.load(table, conf).map(_.id).toSet ==
+        (0 until 32).map(i => s"e$i").toSet)
+      all(i => CompactionManifest.complete(table, conf, s"e$i"))
+      assert(CompactionManifest.load(table, conf).isEmpty)
+    } finally pool.shutdown()
+    val left = fs(new Path(table)).listStatus(new Path(table))
+      .map(_.getPath.getName).filter(_.startsWith("_graft_compact_manifest"))
+    assert(left.length == 1, s"older versions must be pruned: ${left.toSeq}")
+  }
+
+  test("a newer version this JVM did not write is read back, not overwritten from memory") {
+    val table = tmpDir("osm_foreign")
+    fs(new Path(table)).mkdirs(new Path(table))
+    CompactionManifest.begin(table, conf, CompactionManifest.Entry(
+      "e1", "hourly", s"$table/p", s"$table/tmp", Seq(s"$table/in"), Seq(s"$table/out")))
+    writeText(new Path(table, "_graft_compact_manifest.0000000000007.json"),
+      """[{"id":"other","tier":"hourly","partition":"x","tmpDir":"y","inputs":[],"outputs":[]}]""")
+    CompactionManifest.begin(table, conf, CompactionManifest.Entry(
+      "e2", "hourly", s"$table/p2", s"$table/tmp2", Seq(s"$table/in2"), Seq(s"$table/out2")))
+    assert(CompactionManifest.load(table, conf).map(_.id) == Seq("other", "e2"))
+  }
+
   test("legacy unversioned manifest is still read, and superseded by a versioned write") {
     val table = tmpDir("osm_legacy")
     fs(new Path(table)).mkdirs(new Path(table))

@@ -23,7 +23,9 @@ import scala.jdk.CollectionConverters._
   * wave loop in `RowCodec`, so none of them can drift to its own.
   *
   * Parquet is read only through `ParquetRead`, which takes the schema
-  * from the footers on the driver instead of a Spark inference job.
+  * from the footers on the driver instead of a Spark inference job, and
+  * which also holds the parquet-mr column read that merges a small
+  * compaction on the driver with no Spark job at all.
   *
   * Every operator object in `graft.streaming` and `graft.operators` is
   * called from `src/main` outside its own file, so an operator whose

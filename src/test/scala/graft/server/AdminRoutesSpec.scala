@@ -330,6 +330,10 @@ class AdminRoutesSpec extends SparkSpec {
         "min_files" -> 2, "min_age_hours" -> 0)))
     assert(trig.get("success").asBoolean())
     assert(trig.get("count").asInt() >= 1)
+    // a small hour merges on the driver, and the response says so
+    val arms = (0 until trig.get("compacted").size())
+      .map(i => trig.get("compacted").get(i).get("arm").asText())
+    assert(arms.nonEmpty && arms.forall(_ == "driver"), trig.toString)
 
     // data intact, file count collapsed below the candidate bar
     assert(queryCount("SELECT count(*) FROM cmp") == 12)
@@ -341,7 +345,9 @@ class AdminRoutesSpec extends SparkSpec {
     val status = json(get("/api/v1/compaction/status"))
     assert(status.get("manager").get("total_completed").asLong() >= 1)
     assert(status.get("manager").get("active_jobs").asInt() == 0)
-    assert(json(get("/api/v1/compaction/history")).size() >= 1)
+    val history = json(get("/api/v1/compaction/history"))
+    assert(history.size() >= 1)
+    assert(history.get(history.size() - 1).get("compacted").get(0).get("arm").asText() == "driver")
     assert(json(get("/api/v1/compaction/jobs")).get("count").asInt() == 0)
   }
 

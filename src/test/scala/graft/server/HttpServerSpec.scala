@@ -522,6 +522,44 @@ class HttpServerSpec extends SparkSpec {
     assert(get("/api/v1/query/cpu?database=nosuchdb").statusCode() == 400)
   }
 
+  test("an all-null msgpack column does not hide a later write's rows") {
+    def payload(v: Seq[Any]): Array[Byte] = {
+      val out = new ByteArrayOutputStream()
+      val p = new MsgPackEncoder.Packer(out)
+      p.packMapHeader(2)
+      p.packString("m"); p.packString("nullcol")
+      p.packString("columns"); p.packMapHeader(2)
+      p.packString("time"); p.packArrayHeader(v.length)
+      v.indices.foreach(i => p.packLong(1700000000000000L + i * 1000000L))
+      p.packString("v"); p.packArrayHeader(v.length)
+      v.foreach {
+        case null => p.packNil()
+        case d: Double => p.packDouble(d)
+      }
+      out.toByteArray
+    }
+    assert(post("/api/v1/write/msgpack", payload(Seq(null, null))).statusCode() == 204)
+    assert(post("/api/v1/write/msgpack", payload(Seq(1.5, 2.5))).statusCode() == 204)
+    val r = json(post("/api/v1/query",
+      sqlBody("SELECT count(*) AS n, sum(v) AS s, count(v) AS nv FROM nullcol")))
+    assert(r.get("data").get(0).get(0).asLong() == 4, r.toString)
+    assert(r.get("data").get(0).get(1).asDouble() == 4.0 &&
+      r.get("data").get(0).get(2).asLong() == 2, r.toString)
+  }
+
+  test("a view whose files no longer merge fails its queries instead of serving stale rows") {
+    // v is a string in the first file and a double in the second: the
+    // refresh after the second write cannot merge the two schemas
+    assert(post("/write?db=default&precision=us",
+      "vconflict,host=a v=\"x\" 1700000000000000".getBytes(UTF_8)).statusCode() == 204)
+    val before = post("/api/v1/query", sqlBody("SELECT count(*) AS n FROM vconflict"))
+    assert(before.statusCode() == 200 && json(before).get("data").get(0).get(0).asLong() == 1)
+    assert(post("/write?db=default&precision=us",
+      "vconflict,host=a v=1.5 1700000001000000".getBytes(UTF_8)).statusCode() == 204)
+    val after = post("/api/v1/query", sqlBody("SELECT count(*) AS n FROM vconflict"))
+    assert(after.statusCode() != 200, new String(after.body(), UTF_8))
+  }
+
   test("query API is read-only: DDL/SET/INSERT blocked by AST, SELECT passes") {
     post("/api/v1/write/msgpack", cpuPayload(2, "rom"))
     // register the view, then try to drop it through the query API
